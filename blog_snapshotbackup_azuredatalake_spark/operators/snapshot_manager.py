@@ -10,14 +10,24 @@ Layout under ``backup_root``::
 
     <table>/snap_<id>/data/      full rows (snapshot 0) or delta rows
     <table>/snap_<id>/manifest/  (key, row_md5) parquet
-    <table>/snap_<id>/meta.json  {id, base, kind}
+    <table>/snap_<id>/meta.json  {id, base, kind, key, schema}
+
+``schema`` is the data schema as written (``_tombstone`` included for
+incremental and delta snapshots), so every read is schema-pinned and
+costs no inference job; only a ``meta.json`` written before the field
+existed falls back to inference. The transaction log is the source of
+truth for which snapshots exist: a directory it has no commit for is a
+dead writer's debris, skipped by new ids and reclaimed by ``vacuum``.
 
 Incremental snapshots are *differential*: each stores changed+added rows
-plus tombstones relative to the latest FULL snapshot, so restore is a
-single two-way merge (base + one delta, newest version per key winning
-via a row_number window) and retention can drop any intermediate delta
-without breaking later ones. All heavy operations are manifest
-hash-joins: row payloads move only when they actually changed.
+plus tombstones relative to the latest FULL snapshot, found by ONE
+``full_outer`` join of the hashed source against that snapshot's
+manifest, so row payloads move only when they actually changed. Restore
+of a delta is a single two-way merge (base + one delta, newest version
+per key winning via a row_number window) and retention can drop any
+intermediate delta without breaking later ones; restore of a full
+snapshot is a plain read. Tables are keyed: the key is unique and
+non-null, which the diff and the restore fold both assume.
 """
 
 from __future__ import annotations
@@ -28,6 +38,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from blog_snapshotbackup_azuredatalake_spark.scratch import scratch_dir
 from blog_snapshotbackup_azuredatalake_spark.functions.hashing import row_hash
@@ -40,26 +51,76 @@ class SnapshotManager:
         self.root = backup_root
         self.log = TransactionLog(backup_root)
 
-    # -- paths ------------------------------------------------------------
+    # -- paths and ids -----------------------------------------------------
     def _dir(self, table: str, snap_id: int) -> str:
         return f"{self.root}/{table}/snap_{snap_id:06d}"
 
     def _meta_path(self, table: str, snap_id: int) -> str:
         return f"{self._dir(table, snap_id)}/meta.json"
 
+    def _committed(self, table: str) -> dict[int, dict]:
+        """Snapshot id -> its add action, for every snapshot of `table`
+        live in the transaction log."""
+        return {
+            a["snap_id"]: a
+            for a in self.log.state().values()
+            if a.get("table") == table
+        }
+
     def snapshot_ids(self, table: str) -> list[int]:
+        """Committed snapshot ids of `table`, oldest first."""
+        return sorted(self._committed(table))
+
+    def _next_id(self, table: str, committed: dict[int, dict]) -> int:
+        """One past every committed id and every ``snap_*`` directory on
+        storage, so a new snapshot never lands in a dead writer's debris."""
         base = f"{self.root}/{table}"
-        if not os.path.isdir(base):
-            return []
-        return sorted(
-            int(d.split("_")[1])
-            for d in os.listdir(base)
-            if d.startswith("snap_")
-        )
+        names = os.listdir(base) if os.path.isdir(base) else []
+        on_disk = [int(d.split("_")[1]) for d in names if d.startswith("snap_")]
+        return max([*committed, *on_disk], default=-1) + 1
 
     def _read_meta(self, table: str, snap_id: int) -> dict:
         with open(self._meta_path(table, snap_id)) as f:
             return json.load(f)
+
+    def _read(self, table: str, meta: dict, part: str) -> DataFrame:
+        """Read a snapshot's ``data`` or ``manifest`` directory with the
+        schema its meta.json records (manifest: the key's type plus
+        ``row_md5``)."""
+        path = f"{self._dir(table, meta['id'])}/{part}"
+        if "schema" not in meta:  # written before schemas were recorded
+            return self.spark.read.parquet(path)
+        schema = StructType.fromJson(meta["schema"])
+        if part == "manifest":
+            schema = StructType(
+                [
+                    StructField("key", schema[meta["key"]].dataType),
+                    StructField("row_md5", StringType()),
+                ]
+            )
+        return self.spark.read.schema(schema).parquet(path)
+
+    def _publish(self, table: str, meta: dict, op: str, **add) -> None:
+        """Write meta.json, then commit the snapshot to the log. The
+        commit is the publish point: until it lands, the directory is
+        debris."""
+        os.makedirs(self._dir(table, meta["id"]), exist_ok=True)
+        with open(self._meta_path(table, meta["id"]), "w") as f:
+            json.dump(meta, f)
+        self.log.commit(
+            op,
+            [
+                {
+                    "add": {
+                        "path": f"{table}/snap_{meta['id']:06d}",
+                        "table": table,
+                        "snap_id": meta["id"],
+                        "kind": meta["kind"],
+                        **add,
+                    }
+                }
+            ],
+        )
 
     # -- manifest ---------------------------------------------------------
     @staticmethod
@@ -69,75 +130,70 @@ class SnapshotManager:
             F.col(key).alias("key"), row_hash(*cols).alias("row_md5")
         )
 
+    @staticmethod
+    def _diff(df: DataFrame, key: str, base: DataFrame) -> DataFrame:
+        """Changed and added rows of `df`, plus a tombstone for every key
+        of the `base` manifest that `df` no longer holds, from one
+        full_outer join."""
+        cur = df.withColumn("_md5", row_hash(*sorted(df.columns)))
+        base = base.select(
+            F.col("key").alias("_base_key"), F.col("row_md5").alias("_base_md5")
+        )
+        return (
+            cur.join(base, cur[key] == base["_base_key"], "full_outer")
+            # a key on one side only, or a changed row: both md5s are
+            # non-null where present, so null-safe inequality covers all
+            .filter(~cur["_md5"].eqNullSafe(base["_base_md5"]))
+            .select(
+                *[
+                    F.coalesce(cur[key], base["_base_key"]).alias(key)
+                    if c == key
+                    else cur[c]
+                    for c in df.columns
+                ],
+                cur["_md5"].isNull().alias("_tombstone"),
+            )
+        )
+
     # -- snapshot ---------------------------------------------------------
     def snapshot(
         self, df: DataFrame, table: str, key: str, force_full: bool = False
     ) -> int:
-        """Write the next snapshot: full copy if none exists (or
-        ``force_full`` starts a fresh differential chain), else a delta
-        against the latest FULL snapshot's manifest. Each snapshot is
-        also recorded as one atomic commit in the transaction log."""
-        ids = self.snapshot_ids(table)
-        snap_id = (ids[-1] + 1) if ids else 0
+        """Write the next snapshot: full copy if no full snapshot is
+        committed (or ``force_full`` starts a fresh differential chain),
+        else a delta against the latest FULL snapshot's manifest. Each
+        snapshot is also recorded as one atomic commit in the
+        transaction log."""
+        committed = self._committed(table)
+        snap_id = self._next_id(table, committed)
+        fulls = [i for i, a in committed.items() if a["kind"] == "full"]
         d = self._dir(table, snap_id)
-        if not ids or force_full:
-            df.write.mode("errorifexists").parquet(f"{d}/data")
-            self._manifest(df, key).write.parquet(f"{d}/manifest")
-            meta = {"id": snap_id, "base": None, "kind": "full", "key": key}
-        else:
-            base_id = max(
-                i for i in ids if self._read_meta(table, i)["kind"] == "full"
-            )
-            prev = self.spark.read.parquet(
-                f"{self._dir(table, base_id)}/manifest"
-            )
-            cur = self._manifest(df, key).cache()
-            # changed+added rows: manifest anti-join, then semi-join the
-            # payload — only rows that differ are read out of the source
-            changed_keys = cur.join(prev, ["key", "row_md5"], "left_anti")
-            delta = df.join(
-                changed_keys.select("key").withColumnRenamed("key", key),
-                key,
-                "left_semi",
-            ).withColumn("_tombstone", F.lit(False))
-            removed = (
-                prev.join(cur, "key", "left_anti")
-                .select(F.col("key").alias(key))
-                .withColumn("_tombstone", F.lit(True))
-            )
-            # align schemas: tombstones carry only the key
-            for c in df.columns:
-                if c != key:
-                    removed = removed.withColumn(
-                        c, F.lit(None).cast(dict(df.dtypes)[c])
-                    )
-            delta.unionByName(removed.select(delta.columns)).write.parquet(
-                f"{d}/data"
-            )
-            cur.write.parquet(f"{d}/manifest")
-            cur.unpersist()
+        if force_full or not fulls:
             meta = {
                 "id": snap_id,
-                "base": base_id,
+                "base": None,
+                "kind": "full",
+                "key": key,
+                "schema": df.schema.jsonValue(),
+            }
+            df.write.mode("errorifexists").parquet(f"{d}/data")
+            # hash the files just written: a source that is itself a
+            # restore fold (rebase) is evaluated once, not twice
+            written = self._read(table, meta, "data")
+            self._manifest(written, key).write.parquet(f"{d}/manifest")
+        else:
+            base = self._read_meta(table, max(fulls))
+            delta = self._diff(df, key, self._read(table, base, "manifest"))
+            meta = {
+                "id": snap_id,
+                "base": base["id"],
                 "kind": "incremental",
                 "key": key,
+                "schema": delta.schema.jsonValue(),
             }
-        os.makedirs(d, exist_ok=True)
-        with open(self._meta_path(table, snap_id), "w") as f:
-            json.dump(meta, f)
-        self.log.commit(
-            "snapshot",
-            [
-                {
-                    "add": {
-                        "path": f"{table}/snap_{snap_id:06d}",
-                        "table": table,
-                        "snap_id": snap_id,
-                        "kind": meta["kind"],
-                    }
-                }
-            ],
-        )
+            delta.write.mode("errorifexists").parquet(f"{d}/data")
+            self._manifest(df, key).write.parquet(f"{d}/manifest")
+        self._publish(table, meta, "snapshot")
         return snap_id
 
     # -- delta commit (the O(|changes|) CDC-apply path) --------------------
@@ -149,37 +205,32 @@ class SnapshotManager:
         (tombstone rows may leave non-key columns null). Unlike the
         differential ``snapshot()`` path — which diffs full table
         STATES and so costs O(|table|) per call — the delta's base is
-        the PREVIOUS snapshot (full or delta), so ``restore`` folds the
-        whole chain newest-version-per-key and ``rebase`` compacts long
-        chains back to one full snapshot. The manifest stored alongside
-        covers only the delta's live rows (a chain head's full manifest
-        is derivable by restore; storing one per delta would itself be
-        an O(|table|) write)."""
-        ids = self.snapshot_ids(table)
-        if not ids:
+        the PREVIOUS committed snapshot (full or delta), so ``restore``
+        folds the whole chain newest-version-per-key and ``rebase``
+        compacts long chains back to one full snapshot. The manifest
+        stored alongside covers only the delta's live rows (a chain
+        head's full manifest is derivable by restore; storing one per
+        delta would itself be an O(|table|) write)."""
+        committed = self._committed(table)
+        if not committed:
             raise ValueError("commit_delta needs an existing base snapshot")
-        snap_id = ids[-1] + 1
+        snap_id = self._next_id(table, committed)
         d = self._dir(table, snap_id)
+        meta = {
+            "id": snap_id,
+            "base": max(committed),
+            "kind": "delta",
+            "key": key,
+            "schema": changes.schema.jsonValue(),
+        }
         changes.write.mode("errorifexists").parquet(f"{d}/data")
-        live = changes.filter(~F.col("_tombstone")).drop("_tombstone")
-        self._manifest(live, key).write.parquet(f"{d}/manifest")
-        meta = {"id": snap_id, "base": ids[-1], "kind": "delta", "key": key}
-        os.makedirs(d, exist_ok=True)
-        with open(self._meta_path(table, snap_id), "w") as f:
-            json.dump(meta, f)
-        self.log.commit(
-            "snapshot",
-            [
-                {
-                    "add": {
-                        "path": f"{table}/snap_{snap_id:06d}",
-                        "table": table,
-                        "snap_id": snap_id,
-                        "kind": "delta",
-                    }
-                }
-            ],
+        live = (
+            self._read(table, meta, "data")
+            .filter(~F.col("_tombstone"))
+            .drop("_tombstone")
         )
+        self._manifest(live, key).write.parquet(f"{d}/manifest")
+        self._publish(table, meta, "snapshot")
         return snap_id
 
     def rebase(self, table: str) -> int:
@@ -195,7 +246,6 @@ class SnapshotManager:
         df = self.restore(table, head)
         return self.snapshot(df, table, key, force_full=True)
 
-    # -- restore ----------------------------------------------------------
     # -- clone ------------------------------------------------------------
     def clone(self, table: str, snap_id: int, new_table: str) -> int:
         """Delta-style SHALLOW CLONE: publish `new_table`'s snapshot 0
@@ -210,10 +260,7 @@ class SnapshotManager:
         at it is the same referential hazard Delta documents for
         shallow clones."""
         self._read_meta(table, snap_id)  # must exist
-        ids = self.snapshot_ids(new_table)
-        new_id = (ids[-1] + 1) if ids else 0
-        d = self._dir(new_table, new_id)
-        os.makedirs(d, exist_ok=True)
+        new_id = self._next_id(new_table, self._committed(new_table))
         meta = {
             "id": new_id,
             "base": None,
@@ -221,42 +268,30 @@ class SnapshotManager:
             "src_table": table,
             "src_snap": snap_id,
         }
-        with open(self._meta_path(new_table, new_id), "w") as f:
-            json.dump(meta, f)
-        self.log.commit(
-            "clone",
-            [
-                {
-                    "add": {
-                        "path": f"{new_table}/snap_{new_id:06d}",
-                        "table": new_table,
-                        "snap_id": new_id,
-                        "kind": "clone",
-                        "src": f"{table}/snap_{snap_id:06d}",
-                    }
-                }
-            ],
+        self._publish(
+            new_table, meta, "clone", src=f"{table}/snap_{snap_id:06d}"
         )
         return new_id
 
+    # -- restore ----------------------------------------------------------
     def restore(self, table: str, snap_id: int) -> DataFrame:
-        """Materialize the table state at `snap_id`: replay deltas onto
-        the base full snapshot, newest version per key winning; shallow
-        clones resolve through their pointer first."""
+        """Materialize the table state at `snap_id`: a full snapshot is
+        read as written; a delta is replayed onto its base full
+        snapshot, newest version per key winning; shallow clones
+        resolve through their pointer first."""
         meta = self._read_meta(table, snap_id)
         if meta.get("kind") == "clone":
             return self.restore(meta["src_table"], meta["src_snap"])
-        chain: list[dict] = []
-        cur: int | None = snap_id
-        while cur is not None:
-            meta = self._read_meta(table, cur)
-            chain.append(meta)
-            cur = meta["base"]
+        chain = [meta]
+        while chain[-1]["base"] is not None:
+            chain.append(self._read_meta(table, chain[-1]["base"]))
+        if len(chain) == 1:
+            return self._read(table, meta, "data")
         chain.reverse()  # base full snapshot first
         key = chain[0]["key"]
         parts = []
         for depth, meta in enumerate(chain):
-            df = self.spark.read.parquet(f"{self._dir(table, meta['id'])}/data")
+            df = self._read(table, meta, "data")
             if "_tombstone" not in df.columns:
                 df = df.withColumn("_tombstone", F.lit(False))
             parts.append(df.withColumn("_version", F.lit(depth)))
@@ -275,9 +310,9 @@ class SnapshotManager:
         """Compare live data against a snapshot via manifests: returns
         counts of matching / changed / missing / extra keys. Shuffles
         only (key, hash) pairs."""
-        key = self._read_meta(table, snap_id)["key"]
-        snap = self.spark.read.parquet(f"{self._dir(table, snap_id)}/manifest")
-        live = self._manifest(df, key)
+        meta = self._read_meta(table, snap_id)
+        snap = self._read(table, meta, "manifest")
+        live = self._manifest(df, meta["key"])
         j = live.alias("l").join(
             snap.alias("s"), F.col("l.key") == F.col("s.key"), "full_outer"
         )

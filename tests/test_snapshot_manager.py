@@ -300,3 +300,139 @@ from blog_snapshotbackup_azuredatalake_spark.operators import (
 def test_snapshot_manager_matches_oracle(spark, ddb, name):
     df = _sm.QUERIES[name](spark, SF_DIR)
     assert_matches_oracle(df, ddb, _sm.ORACLES[name])
+
+
+class _Crash(Exception):
+    """A writer dying at an injected point."""
+
+
+def _crash_after_data_write(monkeypatch):
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    real = DataFrameWriter.parquet
+
+    def parquet(self, path, *args, **kwargs):
+        real(self, path, *args, **kwargs)
+        if path.endswith("/data"):
+            raise _Crash(path)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+
+
+def _crash_before_log_commit(monkeypatch):
+    from blog_snapshotbackup_azuredatalake_spark.operators.txnlog import (
+        TransactionLog,
+    )
+
+    def commit(self, op, actions, read_version=None):
+        raise _Crash(op)
+
+    monkeypatch.setattr(TransactionLog, "commit", commit)
+
+
+def _slice_states(spark):
+    """Three days of an orders slice, and the change batch from day 1
+    to day 2 (updates, deletes, inserts) for commit_delta."""
+    k = F.col("o_orderkey")
+    v0 = load_table(spark, SF_DIR, "orders").filter(k % 10 == 0)
+    v1 = v0.withColumn(
+        "o_totalprice",
+        F.when(k % 20 == 0, F.col("o_totalprice") + 1.0)
+        .otherwise(F.col("o_totalprice")),
+    ).filter(k % 30 != 0)
+    upd = v1.filter((k % 70 == 0) & (k % 110 != 0)).withColumn(
+        "o_orderpriority", F.lit("9-DAY-TWO")
+    )
+    dels = v1.filter(k % 110 == 0)
+    ins = v1.filter(k % 90 == 0).withColumn("o_orderkey", k + 10_000_000)
+    changes = (
+        upd.unionByName(ins)
+        .withColumn("_tombstone", F.lit(False))
+        .unionByName(dels.withColumn("_tombstone", F.lit(True)))
+    )
+    v2 = (
+        v1.filter((k % 70 != 0) & (k % 110 != 0))
+        .unionByName(upd)
+        .unionByName(ins)
+    )
+    return v0, v1, v2, changes
+
+
+@pytest.mark.parametrize(
+    "crash", [_crash_after_data_write, _crash_before_log_commit]
+)
+def test_crashed_writer_leaves_only_debris(spark, mgr, monkeypatch, crash):
+    """A writer that dies before its log commit leaves a directory the
+    log does not know. The next snapshot() and commit_delta() must get
+    past it (new id, committed base), every committed version must
+    restore exactly, and vacuum must reclaim exactly that debris."""
+    v0, v1, v2, changes = _slice_states(spark)
+    key = "o_orderkey"
+    s0 = mgr.snapshot(v0, "t", key)
+    s1 = mgr.snapshot(v1, "t", key)
+    with monkeypatch.context() as m:
+        crash(m)
+        with pytest.raises(_Crash):
+            mgr.commit_delta(changes, "t", key)
+        with pytest.raises(_Crash):
+            mgr.snapshot(v2, "t", key)
+    debris = {
+        f"t/{d}" for d in os.listdir(f"{mgr.root}/t")
+    } - {f"t/snap_{i:06d}" for i in (s0, s1)}
+    assert len(debris) == 2
+
+    # chained onto the committed head, not onto the debris
+    s2 = mgr.commit_delta(changes, "t", key)
+    assert mgr._read_meta("t", s2)["base"] == s1
+    s3 = mgr.snapshot(v2, "t", key)
+    assert mgr._read_meta("t", s3)["base"] == s0
+    states = {s0: v0, s1: v1, s2: v2, s3: v2}
+    assert mgr.snapshot_ids("t") == sorted(states)
+    assert not debris & {f"t/snap_{i:06d}" for i in states}
+    want = {sid: _sorted_rows(df) for sid, df in states.items()}
+    for sid in states:
+        assert _sorted_rows(mgr.restore("t", sid)) == want[sid]
+
+    report = mgr.vacuum(min_age_seconds=0.0)
+    assert {r["path"] for r in report if r["deleted"]} == debris
+    for sid in states:
+        assert _sorted_rows(mgr.restore("t", sid)) == want[sid]
+
+
+def test_store_without_recorded_schema_reads_the_same(spark, tmp_path):
+    """meta.json written before schemas were recorded: restore, verify
+    and the next incremental snapshot fall back to schema inference and
+    give the same rows and report as a store that records them."""
+    import json
+    import shutil
+
+    v0, v1, v2, changes = _slice_states(spark)
+    key = "o_orderkey"
+    a = SnapshotManager(spark, str(tmp_path / "a"))
+    sids = [
+        a.snapshot(v0, "t", key),
+        a.snapshot(v1, "t", key),
+        a.commit_delta(changes, "t", key),
+    ]
+    shutil.copytree(a.root, tmp_path / "b")
+    b = SnapshotManager(spark, str(tmp_path / "b"))
+    for sid in sids:
+        path = b._meta_path("t", sid)
+        with open(path) as f:
+            meta = json.load(f)
+        assert meta.pop("schema")
+        with open(path, "w") as f:
+            json.dump(meta, f)
+
+    for sid, live in zip(sids, (v0, v1, v2)):
+        assert _sorted_rows(b.restore("t", sid)) == _sorted_rows(
+            a.restore("t", sid)
+        )
+        assert b.verify(live, "t", sid) == a.verify(live, "t", sid)
+    na, nb = a.snapshot(v2, "t", key), b.snapshot(v2, "t", key)
+    assert na == nb
+    for m in (a, b):
+        assert _sorted_rows(m.restore("t", na)) == _sorted_rows(v2)
+    assert _sorted_rows(
+        spark.read.parquet(f"{b._dir('t', nb)}/data")
+    ) == _sorted_rows(spark.read.parquet(f"{a._dir('t', na)}/data"))
