@@ -8,6 +8,7 @@ gate at sf0.01.
 
 from __future__ import annotations
 
+import importlib
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -20,133 +21,38 @@ def entry(spark: SparkSession) -> DataFrame:
     return analytics.q1_pricing_summary(spark, "/root/testdata/sf0.001")
 
 
+# Every module that contributes registry entries, in merge order. A module
+# that fails to import raises here rather than dropping its entries.
+_MODULES = (
+    "plans.analytics",
+    "plans.analytics_ext",
+    "plans.timeseries",
+    "operators.snapshot",
+    "operators.dedup",
+    "operators.similarity",
+    "operators.text",
+    "operators.multimodal",
+    "operators.curation",
+    "operators.scale",
+    "operators.clustering",
+    "plans.diagnostics",
+    "operators.snapshot_manager",
+    "operators.sketch",
+    "operators.pipeline",
+    "operators.graph",
+    "sources.sinks",
+    "operators.quality",
+    "sources.pysource",
+    "streaming.entries",
+    "streaming.joins",
+)
+
+
 def _registry() -> tuple[dict, dict]:
     queries: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
     oracles: dict[str, str] = {}
-    import blog_snapshotbackup_azuredatalake_spark.plans.analytics as analytics
-
-    modules = [analytics]
-    try:
-        import blog_snapshotbackup_azuredatalake_spark.plans.analytics_ext as analytics_ext
-
-        modules.append(analytics_ext)
-    except ImportError:
-        pass
-    try:
-        import blog_snapshotbackup_azuredatalake_spark.plans.timeseries as timeseries
-
-        modules.append(timeseries)
-    except ImportError:
-        pass
-    try:  # modules land incrementally; keep the contract importable always
-        import blog_snapshotbackup_azuredatalake_spark.operators.snapshot as snapshot
-
-        modules.append(snapshot)
-    except ImportError:
-        pass
-    try:
-        import blog_snapshotbackup_azuredatalake_spark.operators.dedup as dedup
-
-        modules.append(dedup)
-    except ImportError:
-        pass
-    try:
-        import blog_snapshotbackup_azuredatalake_spark.operators.similarity as similarity
-
-        modules.append(similarity)
-    except ImportError:
-        pass
-    try:
-        import blog_snapshotbackup_azuredatalake_spark.operators.text as text
-
-        modules.append(text)
-    except ImportError:
-        pass
-    try:
-        import blog_snapshotbackup_azuredatalake_spark.operators.multimodal as multimodal
-
-        modules.append(multimodal)
-    except ImportError:
-        pass
-    try:
-        import blog_snapshotbackup_azuredatalake_spark.operators.curation as curation
-
-        modules.append(curation)
-    except ImportError:
-        pass
-    try:
-        import blog_snapshotbackup_azuredatalake_spark.operators.scale as scale
-
-        modules.append(scale)
-    except ImportError:
-        pass
-    try:
-        import blog_snapshotbackup_azuredatalake_spark.operators.clustering as clustering
-
-        modules.append(clustering)
-    except ImportError:
-        pass
-    try:
-        import blog_snapshotbackup_azuredatalake_spark.plans.diagnostics as diagnostics
-
-        modules.append(diagnostics)
-    except ImportError:
-        pass
-    try:
-        import blog_snapshotbackup_azuredatalake_spark.operators.snapshot_manager as snapshot_manager
-
-        modules.append(snapshot_manager)
-    except ImportError:
-        pass
-    try:
-        import blog_snapshotbackup_azuredatalake_spark.operators.sketch as sketch
-
-        modules.append(sketch)
-    except ImportError:
-        pass
-    try:
-        import blog_snapshotbackup_azuredatalake_spark.operators.pipeline as pipeline
-
-        modules.append(pipeline)
-    except ImportError:
-        pass
-    try:
-        import blog_snapshotbackup_azuredatalake_spark.operators.graph as graph
-
-        modules.append(graph)
-    except ImportError:
-        pass
-    try:
-        import blog_snapshotbackup_azuredatalake_spark.sources.sinks as sinks
-
-        modules.append(sinks)
-    except ImportError:
-        pass
-    try:
-        import blog_snapshotbackup_azuredatalake_spark.operators.quality as quality
-
-        modules.append(quality)
-    except ImportError:
-        pass
-    try:
-        import blog_snapshotbackup_azuredatalake_spark.sources.pysource as pysource
-
-        modules.append(pysource)
-    except ImportError:
-        pass
-    try:
-        import blog_snapshotbackup_azuredatalake_spark.streaming.entries as stream_entries
-
-        modules.append(stream_entries)
-    except ImportError:
-        pass
-    try:
-        import blog_snapshotbackup_azuredatalake_spark.streaming.joins as stream_joins
-
-        modules.append(stream_joins)
-    except ImportError:
-        pass
-    for mod in modules:
+    for name in _MODULES:
+        mod = importlib.import_module(f"blog_snapshotbackup_azuredatalake_spark.{name}")
         queries.update(getattr(mod, "QUERIES", {}))
         oracles.update(getattr(mod, "ORACLES", {}))
     return queries, oracles

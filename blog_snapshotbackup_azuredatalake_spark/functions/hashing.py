@@ -8,8 +8,12 @@ explicit string encoding:
 - ``row_hash``: md5 hex of columns joined by the ASCII unit separator
   (chr(31)) — a byte no testdata column contains, so the encoding is
   injective for these schemas.
-- ``md5_int60``: first 15 hex chars of an md5 → non-negative int64
-  (60 bits). DuckDB equivalent: ``cast('0x'||substr(md5(x),1,15) as bigint)``.
+- ``hash60``: first 15 hex chars of an md5 hex digest → non-negative
+  int64 (60 bits). DuckDB equivalent (``sql_hash60``):
+  ``cast(concat('0x', substr(hex, 1, 15)) as bigint)``. This is the one
+  definition of the truncation; ``md5_int60`` and ``row_hash_int`` build
+  on it, and operators call it directly (``hash60(F.md5(c))`` hashes a
+  NULL ``c`` to NULL, where ``md5_int60`` hashes it as ``''``).
 
 Engine-internal hashing (salting, non-oracle buckets) may use the faster
 built-in ``xxhash64``; nothing comparable across engines does.
@@ -36,14 +40,19 @@ def row_hash(*cols: Column | str) -> Column:
     return F.md5(F.concat_ws(SEP, *[_str(c) for c in cols]))
 
 
+def hash60(hex_col: Column) -> Column:
+    """First 15 hex digits of an md5 hex digest as a 60-bit int64."""
+    return F.conv(F.substring(hex_col, 1, 15), 16, 10).cast("bigint")
+
+
 def md5_int60(c: Column | str) -> Column:
     """Deterministic 60-bit non-negative int64 from any column."""
-    return F.conv(F.substring(F.md5(_str(c)), 1, 15), 16, 10).cast("bigint")
+    return hash60(F.md5(_str(c)))
 
 
 def row_hash_int(*cols: Column | str) -> Column:
     """60-bit int64 content hash of a row (for bit_xor checksums)."""
-    return F.conv(F.substring(row_hash(*cols), 1, 15), 16, 10).cast("bigint")
+    return hash60(row_hash(*cols))
 
 
 def sql_row_hash(cols: list[str]) -> str:
@@ -52,6 +61,16 @@ def sql_row_hash(cols: list[str]) -> str:
     return f"md5(concat_ws(chr(31), {parts}))"
 
 
+def sql_hash60(hex_sql: str) -> str:
+    """DuckDB SQL mirroring ``hash60`` of a hex-digest expression."""
+    return f"cast(concat('0x', substr({hex_sql}, 1, 15)) as bigint)"
+
+
+def sql_row_hash_int(cols: list[str]) -> str:
+    """DuckDB SQL mirroring ``row_hash_int``."""
+    return sql_hash60(sql_row_hash(cols))
+
+
 def sql_md5_int60(expr: str) -> str:
-    """DuckDB SQL mirroring ``md5_int60`` of a string expression."""
-    return f"cast(concat('0x', substr(md5({expr}), 1, 15)) as bigint)"
+    """DuckDB SQL mirroring ``hash60(F.md5(expr))`` of a string expression."""
+    return sql_hash60(f"md5({expr})")

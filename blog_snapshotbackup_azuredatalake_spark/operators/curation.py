@@ -26,7 +26,16 @@ from pyspark.sql import functions as F
 from blog_snapshotbackup_azuredatalake_spark.functions.hints import (
     broadcast_if_bounded as bcast,
 )
-from blog_snapshotbackup_azuredatalake_spark.operators.dedup import _hash60
+from blog_snapshotbackup_azuredatalake_spark.functions.hashing import (
+    hash60,
+    sql_md5_int60,
+)
+from blog_snapshotbackup_azuredatalake_spark.functions.vectors import (
+    cosine_similarity,
+    cosine_with_norms,
+    l2_norm,
+    sql_cosine,
+)
 from blog_snapshotbackup_azuredatalake_spark.sources.catalog import load_table
 
 TRAIN_PCT = 80
@@ -45,7 +54,7 @@ def corpus_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     a pure function of the stable key — adding documents later never
     reshuffles existing assignments."""
     docs = load_table(spark, sf_dir, "documents")
-    slot = _hash60(F.col("doc_id").cast("string")) % 100
+    slot = hash60(F.md5(F.col("doc_id").cast("string"))) % 100
     split = (
         F.when(slot < TRAIN_PCT, F.lit("train"))
         .when(slot < TRAIN_PCT + VAL_PCT, F.lit("val"))
@@ -61,14 +70,14 @@ def corpus_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_DOC_SLOT_SQL = f"{sql_md5_int60('CAST(doc_id AS VARCHAR)')} % 100"
+
 _CORPUS_SPLIT_SQL = f"""
 WITH assigned AS (
   SELECT source, n_chars,
          CASE
-           WHEN CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))
-                AS BIGINT) % 100 < {TRAIN_PCT} THEN 'train'
-           WHEN CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))
-                AS BIGINT) % 100 < {TRAIN_PCT + VAL_PCT} THEN 'val'
+           WHEN {_DOC_SLOT_SQL} < {TRAIN_PCT} THEN 'train'
+           WHEN {_DOC_SLOT_SQL} < {TRAIN_PCT + VAL_PCT} THEN 'val'
            ELSE 'test'
          END AS split
   FROM documents
@@ -148,8 +157,6 @@ def emb_centroid_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     vec_id < N_CENTROIDS (a deterministic seed set — in a real pipeline,
     the previous Lloyd iteration's output). Centroids broadcast; the
     corpus scans once with no shuffle until the final stats group-by."""
-    from blog_snapshotbackup_azuredatalake_spark.operators.dedup import _dot_cos
-
     emb = load_table(spark, sf_dir, "embeddings")
     # MAP-ONLY argmax: the centroid seed set is tiny and driver-known,
     # so it becomes a literal struct array and each row picks its best
@@ -158,7 +165,7 @@ def emb_centroid_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     # no per-vector groupBy: the corpus meets its ONLY shuffle at the
     # k-row stats aggregation.
     # round 10 NEGATIVE A/B, kept as-was by measurement: the norm hoist
-    # that won 1.5–3.5× on the pair-join scorers (`_dot_cos_pre`)
+    # that won 1.5–3.5× on the pair-join scorers (`cosine_with_norms`)
     # REGRESSED here (sf60de min-of-3: 1.56 → 2.39 s, consistent across
     # runs). Mechanism: inside this centroid-literal lambda the
     # centroid norm is a fold over a FOLDABLE literal — ConstantFolding
@@ -190,7 +197,7 @@ def emb_centroid_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = F.transform(
         F.col("cents"),
         lambda c: F.struct(
-            _dot_cos(F.col("embedding"), c["c_emb"]).alias("cos"),
+            cosine_similarity(F.col("embedding"), c["c_emb"]).alias("cos"),
             c["neg_id"].alias("neg_id"),
         ),
     )
@@ -241,10 +248,6 @@ def emb_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb_centroid_assign (centroid literal rides into the scan, the
     corpus never shuffles for the argmax); the (centroid, label)
     count relation is k·|labels| rows, everything after is k-sized."""
-    from blog_snapshotbackup_azuredatalake_spark.operators.dedup import (
-        _dot_cos,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
     cents = sorted(
         emb.filter(F.col("vec_id") < N_CENTROIDS)
@@ -271,7 +274,7 @@ def emb_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = F.transform(
         F.col("cents"),
         lambda c: F.struct(
-            _dot_cos(F.col("embedding"), c["c_emb"]).alias("cos"),
+            cosine_similarity(F.col("embedding"), c["c_emb"]).alias("cos"),
             c["neg_id"].alias("neg_id"),
         ),
     )
@@ -339,15 +342,7 @@ FROM per p JOIN maj USING (centroid_id)
 GROUP BY p.centroid_id
 """.format(
     n_cent=N_CENTROIDS,
-    cos="""(
-  list_reduce(list_transform(range(1, 1 + len(e.embedding)),
-    i -> CAST(e.embedding[i] AS DOUBLE) * CAST(c.c_emb[i] AS DOUBLE)),
-    (x, y) -> x + y)
-  / (sqrt(list_reduce(list_transform(e.embedding,
-       v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE)), (x, y) -> x + y))
-   * sqrt(list_reduce(list_transform(c.c_emb,
-       v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE)), (x, y) -> x + y)))
-)""",
+    cos=sql_cosine("e.embedding", "c.c_emb"),
 )
 
 
@@ -372,15 +367,7 @@ SELECT centroid_id, COUNT(*) AS n_members,
        COUNT(DISTINCT label) AS n_labels
 FROM best GROUP BY centroid_id
 """.format(
-    cos="""(
-  list_reduce(list_transform(range(1, 1 + len(e.embedding)),
-    i -> CAST(e.embedding[i] AS DOUBLE) * CAST(c.c_emb[i] AS DOUBLE)),
-    (x, y) -> x + y)
-  / (sqrt(list_reduce(list_transform(e.embedding,
-       v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE)), (x, y) -> x + y))
-   * sqrt(list_reduce(list_transform(c.c_emb,
-       v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE)), (x, y) -> x + y)))
-)"""
+    cos=sql_cosine("e.embedding", "c.c_emb")
 )
 
 
@@ -396,10 +383,6 @@ def emb_silhouette_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
     literal-struct array (no crossJoin, no per-vector shuffle — the
     corpus meets its only shuffle at the k-row summary). Fixed-point
     floor sums keep the certificate bit-portable (SURVEY §4)."""
-    from blog_snapshotbackup_azuredatalake_spark.operators.dedup import (
-        _dot_cos,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
     cents = sorted(
         emb.filter(F.col("vec_id") < N_CENTROIDS)
@@ -427,7 +410,7 @@ def emb_silhouette_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.transform(
             F.col("cents"),
             lambda c: F.struct(
-                (-_dot_cos(F.col("embedding"), c["c_emb"])).alias("nc"),
+                (-cosine_similarity(F.col("embedding"), c["c_emb"])).alias("nc"),
                 c["cid"].alias("cid"),
             ),
         )
@@ -472,15 +455,7 @@ def emb_silhouette_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SIL_COS = """(
-  list_reduce(list_transform(range(1, 1 + len(e.embedding)),
-    i -> CAST(e.embedding[i] AS DOUBLE) * CAST(c.c_emb[i] AS DOUBLE)),
-    (x, y) -> x + y)
-  / (sqrt(list_reduce(list_transform(e.embedding,
-       v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE)), (x, y) -> x + y))
-   * sqrt(list_reduce(list_transform(c.c_emb,
-       v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE)), (x, y) -> x + y)))
-)"""
+_SIL_COS = sql_cosine("e.embedding", "c.c_emb")
 
 _EMB_SILHOUETTE_SQL = f"""
 WITH centroids AS (
@@ -589,12 +564,12 @@ GROUP BY source
 """
 
 from blog_snapshotbackup_azuredatalake_spark.operators.dedup import (  # noqa: E402
-    _SQL_GRAM_HASHES,
-    _SQL_TOKH,
+    SQL_GRAM_HASHES,
+    SQL_TOKH,
 )
 
 _DECONTAMINATE_SQL = _DECONTAMINATE_SQL.format(
-    tokh=_SQL_TOKH, gramh=_SQL_GRAM_HASHES
+    tokh=SQL_TOKH, gramh=SQL_GRAM_HASHES
 )
 
 
@@ -605,8 +580,8 @@ def corpus_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     appends, and re-partitioning, unlike rand()-based sampling. Returns
     per-source totals, kept counts, and the applied rate."""
     docs = load_table(spark, sf_dir, "documents")
-    rate = (_hash60(F.col("source")) % 60 + 20).cast("int")  # 20..79 pct
-    slot = _hash60(F.col("doc_id").cast("string")) % 100
+    rate = (hash60(F.md5(F.col("source"))) % 60 + 20).cast("int")  # 20..79 pct
+    slot = hash60(F.md5(F.col("doc_id").cast("string"))) % 100
     return (
         docs.select(
             "source",
@@ -621,14 +596,12 @@ def corpus_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_H60 = "CAST(concat('0x', substr(md5({x}), 1, 15)) AS BIGINT)"
-
 _SAMPLE_STRATIFIED_SQL = f"""
 SELECT source,
-       CAST({_H60.format(x="source")} % 60 + 20 AS INT) AS rate_pct,
+       CAST({sql_md5_int60("source")} % 60 + 20 AS INT) AS rate_pct,
        COUNT(*) AS n_docs,
-       CAST(SUM(CASE WHEN {_H60.format(x="CAST(doc_id AS VARCHAR)")} % 100
-                          < {_H60.format(x="source")} % 60 + 20
+       CAST(SUM(CASE WHEN {sql_md5_int60("CAST(doc_id AS VARCHAR)")} % 100
+                          < {sql_md5_int60("source")} % 60 + 20
                      THEN 1 ELSE 0 END) AS BIGINT) AS n_kept
 FROM documents
 GROUP BY source
@@ -697,7 +670,7 @@ def corpus_mix_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.col("n_docs").cast("double")
         ).cast("bigint"),
     )
-    slot = _hash60(F.col("doc_id").cast("string")) % MIX_SLOTS
+    slot = hash60(F.md5(F.col("doc_id").cast("string"))) % MIX_SLOTS
     return (
         docs.select("doc_id", "source", slot.alias("slot"))
         .join(F.broadcast(thr), "source")
@@ -733,7 +706,7 @@ thr2 AS (SELECT *,
                            / CAST(n_docs AS DOUBLE)) AS BIGINT) AS thresh
          FROM thr)
 SELECT t.source, t.n_docs, t.weight, t.target_n,
-       CAST(SUM(CASE WHEN {_H60.format(x="CAST(doc_id AS VARCHAR)")}
+       CAST(SUM(CASE WHEN {sql_md5_int60("CAST(doc_id AS VARCHAR)")}
                           % {MIX_SLOTS} < t.thresh
                      THEN 1 ELSE 0 END) AS BIGINT) AS n_kept
 FROM documents d JOIN thr2 t ON d.source = t.source
@@ -766,7 +739,7 @@ def doc_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select(
         "source",
         "doc_id",
-        (_hash60(F.col("doc_id").cast("string")) % PACK_SHARDS).alias("shard"),
+        (hash60(F.md5(F.col("doc_id").cast("string"))) % PACK_SHARDS).alias("shard"),
         F.size(F.split(F.col("text"), " ")).cast("bigint").alias("n_tok"),
     )
     w = (
@@ -805,7 +778,7 @@ def doc_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
 _DOC_PACK_SQL = f"""
 WITH toks AS (
   SELECT source, doc_id,
-         {_H60.format(x="CAST(doc_id AS VARCHAR)")} % {PACK_SHARDS} AS shard,
+         {sql_md5_int60("CAST(doc_id AS VARCHAR)")} % {PACK_SHARDS} AS shard,
          CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok
   FROM documents
 ), pos AS (
@@ -1065,7 +1038,7 @@ def corpus_quota_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "source",
         "doc_id",
-        _hash60(F.col("doc_id").cast("string")).alias("h"),
+        hash60(F.md5(F.col("doc_id").cast("string"))).alias("h"),
     )
     counts = docs.groupBy("source").agg(F.count(F.lit(1)).alias("n_docs"))
     w = Window.partitionBy("source").orderBy("h", "doc_id")
@@ -1088,10 +1061,10 @@ def corpus_quota_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
 _QUOTA_CAP_SQL = f"""
 WITH ranked AS (
   SELECT source, doc_id,
-         {_H60.format(x="CAST(doc_id AS VARCHAR)")} AS h,
+         {sql_md5_int60("CAST(doc_id AS VARCHAR)")} AS h,
          ROW_NUMBER() OVER (
            PARTITION BY source
-           ORDER BY {_H60.format(x="CAST(doc_id AS VARCHAR)")}, doc_id
+           ORDER BY {sql_md5_int60("CAST(doc_id AS VARCHAR)")}, doc_id
          ) AS rk
   FROM documents
 )
@@ -1180,7 +1153,7 @@ def corpus_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators it summarizes — no drift between documentation and
     pipeline."""
     docs = load_table(spark, sf_dir, "documents")
-    slot = _hash60(F.col("doc_id").cast("string")) % 100
+    slot = hash60(F.md5(F.col("doc_id").cast("string"))) % 100
     split = (
         F.when(slot < TRAIN_PCT, F.lit("train"))
         .when(slot < TRAIN_PCT + VAL_PCT, F.lit("val"))
@@ -1230,17 +1203,13 @@ def corpus_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _dataset_card_sql() -> str:
-    h = (
-        "CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))"
-        " AS BIGINT) % 100"
-    )
     return f"""
 WITH per_doc AS (
   SELECT doc_id, source, lang, n_chars,
          CAST(len(string_split(text, ' ')) AS BIGINT) AS n_toks,
          md5(text) AS content_md5,
-         CASE WHEN {h} < {TRAIN_PCT} THEN 'train'
-              WHEN {h} < {TRAIN_PCT + VAL_PCT} THEN 'val'
+         CASE WHEN {_DOC_SLOT_SQL} < {TRAIN_PCT} THEN 'train'
+              WHEN {_DOC_SLOT_SQL} < {TRAIN_PCT + VAL_PCT} THEN 'val'
               ELSE 'test' END AS split
   FROM documents
 ), dup AS (
@@ -1295,11 +1264,6 @@ def corpus_decontaminate_semantic(spark: SparkSession, sf_dir: str) -> DataFrame
     left-associative reduction DuckDB's list_reduce performs, so the
     comparison against {SEM_TAU} and the floor-quantized aggregate are
     bit-identical to the oracle."""
-    from blog_snapshotbackup_azuredatalake_spark.operators.dedup import (
-        _dot_cos_pre,
-        _norm,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
     bench = emb.filter(
         (F.col("vec_id") % SEM_BENCH_MOD == 0)
@@ -1308,16 +1272,16 @@ def corpus_decontaminate_semantic(spark: SparkSession, sf_dir: str) -> DataFrame
         F.col("vec_id").alias("b_id"),
         F.col("embedding").alias("b_emb"),
         # per-row norms hoisted below the pair join (round 10,
-        # `_dot_cos_pre`): this scorer folded 3 interpreted HOFs per
+        # `cosine_with_norms`): this scorer folded 3 interpreted HOFs per
         # (corpus row × bench vec) pair; both norms now fold once per
         # row, leaving only the dot per pair
-        _norm(F.col("embedding")).alias("b_nrm"),
+        l2_norm("embedding").alias("b_nrm"),
     )
     corpus = emb.filter(
         (F.col("vec_id") % SEM_BENCH_MOD != 0)
         | (F.col("vec_id") >= SEM_BENCH_MAX_ID)
     ).select(
-        "vec_id", "label", "embedding", _norm(F.col("embedding")).alias("nrm")
+        "vec_id", "label", "embedding", l2_norm("embedding").alias("nrm")
     )
     # guarded hint: the bench set is eval-suite-sized in deployment
     # but demo-derived here — past the bound the hint drops (the
@@ -1328,12 +1292,7 @@ def corpus_decontaminate_semantic(spark: SparkSession, sf_dir: str) -> DataFrame
         .select(
             "vec_id",
             "label",
-            _dot_cos_pre(
-                F.col("embedding"),
-                F.col("b_emb"),
-                F.col("nrm"),
-                F.col("b_nrm"),
-            ).alias("cos"),
+            cosine_with_norms("embedding", "b_emb", "nrm", "b_nrm").alias("cos"),
         )
         .groupBy("vec_id", "label")
         .agg(F.max("cos").alias("max_cos"))
@@ -1351,10 +1310,6 @@ def corpus_decontaminate_semantic(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 def _decontaminate_semantic_sql() -> str:
-    from blog_snapshotbackup_azuredatalake_spark.operators.dedup import (
-        _SQL_COS,
-    )
-
     return f"""
 WITH b AS (
   SELECT vec_id, embedding FROM embeddings
@@ -1363,7 +1318,7 @@ WITH b AS (
   SELECT vec_id, embedding, label FROM embeddings
   WHERE vec_id % {SEM_BENCH_MOD} <> 0 OR vec_id >= {SEM_BENCH_MAX_ID}
 ), per_vec AS (
-  SELECT a.vec_id, a.label, MAX({_SQL_COS}) AS max_cos
+  SELECT a.vec_id, a.label, MAX({sql_cosine("a.embedding", "b.embedding")}) AS max_cos
   FROM a, b GROUP BY a.vec_id, a.label
 )
 SELECT label, COUNT(*) AS n_corpus,
@@ -2047,7 +2002,7 @@ def corpus_shard_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SHARD_SHUFFLE_SQL = f"""
 WITH keyed AS (
   SELECT doc_id, source,
-         {_H60.format(x="CAST(doc_id AS VARCHAR)")} AS key
+         {sql_md5_int60("CAST(doc_id AS VARCHAR)")} AS key
   FROM documents
 ), sharded AS (
   SELECT doc_id, source, key, key % {SHUFFLE_SHARDS} AS shard
@@ -2174,12 +2129,12 @@ JOIN tot tb ON tb.source = joint.source_b
 
 def _source_overlap_sql() -> str:
     from blog_snapshotbackup_azuredatalake_spark.operators.dedup import (
-        _SQL_GRAM_HASHES,
-        _SQL_TOKH,
+        SQL_GRAM_HASHES,
+        SQL_TOKH,
     )
 
     return _SOURCE_OVERLAP_SQL.format(
-        grams=_SQL_GRAM_HASHES, tokh=_SQL_TOKH
+        grams=SQL_GRAM_HASHES, tokh=SQL_TOKH
     )
 
 
@@ -2216,8 +2171,6 @@ def corpus_importance_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast; the final draw is two-phase top-N — per-source windows
     prune to {RESAMPLE_N} rows each before one tiny global window, so
     no corpus-sized single-partition sort exists at any size."""
-    from blog_snapshotbackup_azuredatalake_spark.operators.dedup import _hash60
-
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "text"
     )
@@ -2231,7 +2184,7 @@ def corpus_importance_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id",
             "source",
-            (_hash60(F.col("tok")) % DSIR_BUCKETS).alias("bucket"),
+            (hash60(F.md5(F.col("tok"))) % DSIR_BUCKETS).alias("bucket"),
         )
         .groupBy("doc_id", "source", "bucket")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -2301,7 +2254,7 @@ def corpus_importance_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
 _IMPORTANCE_SQL = f"""
 WITH per_db AS (
   SELECT doc_id, source,
-         {_H60.format(x="tok")} % {DSIR_BUCKETS} AS bucket,
+         {sql_md5_int60("tok")} % {DSIR_BUCKETS} AS bucket,
          COUNT(*) AS c
   FROM (SELECT doc_id, source,
                unnest(string_split(lower(text), ' ')) AS tok

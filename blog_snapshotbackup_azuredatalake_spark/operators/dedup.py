@@ -30,6 +30,15 @@ import hashlib
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from blog_snapshotbackup_azuredatalake_spark.functions.hashing import (
+    hash60,
+    sql_md5_int60,
+)
+from blog_snapshotbackup_azuredatalake_spark.functions.vectors import (
+    cosine_with_norms,
+    l2_norm,
+    sql_cosine,
+)
 from blog_snapshotbackup_azuredatalake_spark.sources.catalog import load_table
 
 JACCARD_THRESHOLD = 0.5
@@ -75,13 +84,6 @@ _MINHASH_AB = _affine_consts("perm", MINHASH_PERMS)
 _SIMHASH_AB = _affine_consts("sim", 2)
 
 
-def _hash60(col: Column) -> Column:
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("bigint")
-
-
-_SQL_HASH60 = "CAST(concat('0x', substr(md5({x}), 1, 15)) AS BIGINT)"
-
-
 def grams_for(docs: DataFrame, keep: tuple[str, ...] = ()) -> DataFrame:
     """(doc_id, text, …) → (doc_id, *keep, sh: array<bigint>) — distinct
     token-5-gram fingerprints in [0, P31): md5-hash each token once,
@@ -94,7 +96,7 @@ def grams_for(docs: DataFrame, keep: tuple[str, ...] = ()) -> DataFrame:
     element_at, turning O(n) token hashing into O(n²) per document
     (measured 12× slower end-to-end at sf0.1)."""
     toks = F.transform(
-        F.split(F.col("text"), " "), lambda t: _hash60(t) % P31
+        F.split(F.col("text"), " "), lambda t: hash60(F.md5(t)) % P31
     )
     th = F.col("th")
 
@@ -117,11 +119,11 @@ def _docs_with_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
     return grams_for(load_table(spark, sf_dir, "documents"))
 
 
-_SQL_TOKH = "list_transform(string_split(text, ' '), t -> " + _SQL_HASH60.format(
-    x="t"
-) + " % 2147483647)"
+SQL_TOKH = (
+    f"list_transform(string_split(text, ' '), t -> {sql_md5_int60('t')} % {P31})"
+)
 
-_SQL_GRAM_HASHES = f"""list_distinct(list_transform(
+SQL_GRAM_HASHES = f"""list_distinct(list_transform(
     range(1, greatest(len(th) - 3, 1)),
     i -> ((((((((th[i] * {K_POLY} + th[i+1]) % {P31}) * {K_POLY} + th[i+2])
          % {P31}) * {K_POLY} + th[i+3]) % {P31}) * {K_POLY} + th[i+4]) % {P31})
@@ -143,8 +145,8 @@ _SQL_JACCARD = (
 def sql_sh_cte(src: str = "documents") -> str:
     """The gram-fingerprint CTE over any (doc_id, text) relation."""
     return f"""sh AS (
-  SELECT doc_id, {_SQL_GRAM_HASHES} AS sh
-  FROM (SELECT doc_id, {_SQL_TOKH} AS th FROM {src})
+  SELECT doc_id, {SQL_GRAM_HASHES} AS sh
+  FROM (SELECT doc_id, {SQL_TOKH} AS th FROM {src})
 )"""
 
 
@@ -836,10 +838,10 @@ WITH newsrc AS (SELECT doc_id, text FROM documents
                 WHERE doc_id % {INCR_BATCH_MOD} = 0),
 corpsrc AS (SELECT doc_id, text FROM documents
             WHERE doc_id % {INCR_BATCH_MOD} <> 0),
-shn AS (SELECT doc_id, {_SQL_GRAM_HASHES} AS sh
-        FROM (SELECT doc_id, {_SQL_TOKH} AS th FROM newsrc)),
-shc AS (SELECT doc_id, {_SQL_GRAM_HASHES} AS sh
-        FROM (SELECT doc_id, {_SQL_TOKH} AS th FROM corpsrc)),
+shn AS (SELECT doc_id, {SQL_GRAM_HASHES} AS sh
+        FROM (SELECT doc_id, {SQL_TOKH} AS th FROM newsrc)),
+shc AS (SELECT doc_id, {SQL_GRAM_HASHES} AS sh
+        FROM (SELECT doc_id, {SQL_TOKH} AS th FROM corpsrc)),
 mhn AS ({mh_cte('shn')}),
 mhc AS ({mh_cte('shc')}),
 bandsn AS ({band_cte('mhn')}),
@@ -1054,48 +1056,6 @@ def _sign_bucket(col: Column, dims: int) -> Column:
     )
 
 
-def _dot(a: Column, b: Column) -> Column:
-    """Left-to-right fold dot product — the numerator of _dot_cos,
-    exposed so pair-heavy plans can divide by PRECOMPUTED per-row norms
-    (same _norm expression, so the quotient is bit-identical) instead
-    of folding both norm arrays once per candidate pair."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def _norm(v: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            v, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")
-        )
-    )
-
-
-def _dot_cos(a: Column, b: Column) -> Column:
-    return _dot(a, b) / (_norm(a) * _norm(b))
-
-
-def _dot_cos_pre(a: Column, b: Column, na: Column, nb: Column) -> Column:
-    """``_dot_cos`` with PRE-COMPUTED norms: na/nb must be the ``_norm``
-    of a/b materialized as columns on each join side, so the quotient
-    divides the SAME doubles — bit-identical cosines. Why it exists
-    (round 10): in a pair scorer (corpus × broadcast query panel) the
-    inline form re-folds both norms once per PAIR; zip_with/aggregate
-    are CodegenFallback (interpreted, boxed per element), so 2/3 of the
-    per-pair fold work is recomputing row-constant values. Hoisting the
-    norms below the join evaluates them once per ROW: sf60de A/B
-    (scripts/cosine_hoist_probe.py, 1.2 M vectors) measured the
-    bruteforce shape 3.71 → 2.29 s min AND collapsed the warm-run
-    spread (3.7–13.1 → 2.3–3.1 s — less per-pair garbage). The probe
-    also rejected the unrolled-element_at dot (15.0 s, 4× WORSE: the
-    64-term chain blows past codegen limits into a worse interpreter),
-    so the lambda fold stays for the dot itself."""
-    return _dot(a, b) / (na * nb)
-
-
 def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding near-dup via canonical bucket anchors (the SemDeDup
     shape, Abbas et al. 2023): block on the sign pattern of the first
@@ -1126,16 +1086,13 @@ def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     anchors = emb.groupBy("bucket").agg(
         F.min("vec_id").alias("anchor_id"),
         F.min_by("embedding", "vec_id").alias("anchor_emb"),
-    ).withColumn("a_nrm", _norm(F.col("anchor_emb")))
+    ).withColumn("a_nrm", l2_norm("anchor_emb"))
     # anchor norm hoisted to the ≤ 2^{dims}-row broadcast side
-    # (round 10, `_dot_cos_pre`): every corpus row re-folded it; the
+    # (round 10, `cosine_with_norms`): every corpus row re-folded it; the
     # row's own norm stays inline — one pair per row, so inline IS
     # once-per-row
-    cos = _dot_cos_pre(
-        F.col("embedding"),
-        F.col("anchor_emb"),
-        _norm(F.col("embedding")),
-        F.col("a_nrm"),
+    cos = cosine_with_norms(
+        "embedding", "anchor_emb", l2_norm("embedding"), "a_nrm"
     )
     return (
         emb.join(F.broadcast(anchors), "bucket")
@@ -1150,24 +1107,6 @@ def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("is_dup"),
         )
     )
-
-
-def _sql_cos(a: str, b: str) -> str:
-    """Sequential left-fold cosine between list columns ``a`` and ``b``
-    — same association order as the Spark ``_dot_cos`` fold, so the
-    doubles are bit-identical across engines (SURVEY §4)."""
-    return f"""(
-  list_reduce(list_transform(range(1, 1 + len({a})),
-    i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)),
-    (x, y) -> x + y)
-  / (sqrt(list_reduce(list_transform({a},
-       v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE)), (x, y) -> x + y))
-   * sqrt(list_reduce(list_transform({b},
-       v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE)), (x, y) -> x + y)))
-)"""
-
-
-_SQL_COS = _sql_cos("a.embedding", "b.embedding")
 
 
 def _sql_sign_bucket(dims: int) -> str:
@@ -1193,7 +1132,7 @@ anchors AS (
 ),
 scored AS (
   SELECT e.vec_id, a.anchor_id,
-         {_sql_cos('e.embedding', 'a.anchor_emb')} AS cos
+         {sql_cosine('e.embedding', 'a.anchor_emb')} AS cos
   FROM emb e JOIN anchors a USING (bucket)
 )
 SELECT vec_id, anchor_id, cos,
@@ -1239,13 +1178,7 @@ def dedup_anchor_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the transform lambda references it (CollapseProject would inline
     # the norm fold per element otherwise — SURVEY §6); pair cosine is
     # then a single zip_with/aggregate fold instead of three.
-    norm = F.sqrt(
-        F.aggregate(
-            F.col("embedding"),
-            F.lit(0.0),
-            lambda acc, x: acc + x.cast("double") * x.cast("double"),
-        )
-    )
+    norm = l2_norm("embedding")
     sample = (
         load_table(spark, sf_dir, "embeddings")
         .filter(F.col("vec_id") < ANCHOR_CAL_N)
@@ -1415,7 +1348,7 @@ def _span_grams(docs: DataFrame) -> DataFrame:
     projection as ``grams_for`` (token-hash array bound before the gram
     lambda — the HOF-inlining trap in SURVEY §6)."""
     toks = F.transform(
-        F.split(F.col("text"), " "), lambda t: _hash60(t) % P31
+        F.split(F.col("text"), " "), lambda t: hash60(F.md5(t)) % P31
     )
     th = F.col("th")
 
@@ -1497,7 +1430,7 @@ def _span_gram_sql() -> str:
 
 
 _DEDUP_SUBSTRING_SQL = f"""
-WITH th_t AS (SELECT doc_id, source, {_SQL_TOKH} AS th FROM documents),
+WITH th_t AS (SELECT doc_id, source, {SQL_TOKH} AS th FROM documents),
 g_t AS (SELECT doc_id, source, {_span_gram_sql()} AS g FROM th_t),
 ex AS (SELECT doc_id, source, UNNEST(g) AS gram FROM g_t),
 rep AS (SELECT gram

@@ -34,6 +34,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from blog_snapshotbackup_azuredatalake_spark.functions.hashing import (
+    hash60,
+    sql_md5_int60,
+)
 from blog_snapshotbackup_azuredatalake_spark.operators.dedup import (
     sql_star_pair_ctes,
 )
@@ -285,11 +289,7 @@ def corpus_split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     comp = cc_labels_cached(spark, sf_dir)
 
     def split_of(col: F.Column) -> F.Column:
-        slot = (
-            F.conv(F.substring(F.md5(col.cast("string")), 1, 15), 16, 10)
-            .cast("bigint")
-            % 100
-        )
+        slot = hash60(F.md5(col.cast("string"))) % 100
         return (
             F.when(slot < TRAIN_PCT, F.lit("train"))
             .when(slot < TRAIN_PCT + VAL_PCT, F.lit("val"))
@@ -354,10 +354,7 @@ def _leakage_safe_sql() -> str:
     )
 
     def split_case(key: str) -> str:
-        h = (
-            f"CAST(concat('0x', substr(md5(CAST({key} AS VARCHAR)), 1, 15))"
-            " AS BIGINT) % 100"
-        )
+        h = f"{sql_md5_int60(f'CAST({key} AS VARCHAR)')} % 100"
         return (
             f"CASE WHEN {h} < {TRAIN_PCT} THEN 'train'"
             f" WHEN {h} < {TRAIN_PCT + VAL_PCT} THEN 'val'"
@@ -1048,14 +1045,7 @@ def graph_triangle_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e0 = copurchase_edges_cached(spark, sf_dir)
     keep = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat_ws("_", F.col("u"), F.col("v"))), 1, 15
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % TRI_SAMPLE_DEN
+        hash60(F.md5(F.concat_ws("_", F.col("u"), F.col("v")))) % TRI_SAMPLE_DEN
         == 0
     )
     es_key = _cache_key(spark, sf_dir, "tri_est_edges")
@@ -1152,8 +1142,7 @@ def graph_triangle_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
 _TRIANGLE_EST_SQL = f"""
 WITH {_COPURCHASE_SQL},
 es AS (SELECT u, v FROM e0
-       WHERE CAST(concat('0x', substr(md5(u || '_' || v), 1, 15))
-                  AS BIGINT) % {TRI_SAMPLE_DEN} = 0),
+       WHERE {sql_md5_int60("u || '_' || v")} % {TRI_SAMPLE_DEN} = 0),
 deg AS (SELECT node, COUNT(*) AS deg
         FROM (SELECT u AS node FROM es UNION ALL SELECT v FROM es)
         GROUP BY node),

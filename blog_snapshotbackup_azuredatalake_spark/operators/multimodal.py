@@ -26,6 +26,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from blog_snapshotbackup_azuredatalake_spark.functions.hashing import (
+    sql_md5_int60,
+)
 from blog_snapshotbackup_azuredatalake_spark.sources.catalog import load_table
 
 def _real_decoder():
@@ -711,8 +714,6 @@ def mm_cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_H60_SQL = "CAST(concat('0x', substr(md5({x}), 1, 15)) AS BIGINT)"
-
 _CDC_CHUNK_SQL = f"""
 WITH staged AS (
   SELECT doc_id, source,
@@ -848,8 +849,7 @@ def mm_shard_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
 _MM_SHARD_PACK_SQL = f"""
 WITH assets AS (
   SELECT doc_id, source,
-         CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))
-              AS BIGINT) % {MM_PACK_BLOCKS} AS block,
+         {sql_md5_int60("CAST(doc_id AS VARCHAR)")} % {MM_PACK_BLOCKS} AS block,
          {_PAYLOAD_BYTES} + octet_length(CAST(text AS BLOB)) AS asset_bytes
   FROM documents
 ), packed AS (

@@ -24,8 +24,11 @@ from blog_snapshotbackup_azuredatalake_spark.operators.curation import (
     TRAIN_PCT,
     VAL_PCT,
 )
+from blog_snapshotbackup_azuredatalake_spark.functions.hashing import (
+    hash60,
+    sql_md5_int60,
+)
 from blog_snapshotbackup_azuredatalake_spark.operators.dedup import (
-    _hash60,
     grams_for,
     sql_star_pair_ctes,
     star_pairs,
@@ -59,7 +62,7 @@ def curate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     unique_docs = kept.join(drops, "doc_id", "left_anti")
-    slot = _hash60(F.col("doc_id").cast("string")) % 100
+    slot = hash60(F.md5(F.col("doc_id").cast("string"))) % 100
     split = (
         F.when(slot < TRAIN_PCT, F.lit("train"))
         .when(slot < TRAIN_PCT + VAL_PCT, F.lit("val"))
@@ -80,6 +83,8 @@ def curate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_SLOT_SQL = f"{sql_md5_int60('CAST(doc_id AS VARCHAR)')} % 100"
+
 _CURATE_SQL = f"""
 WITH {sql_quality_ctes("(SELECT doc_id, text, source, n_chars FROM documents)")},
 kept AS (
@@ -94,10 +99,8 @@ unique_docs AS (
 assigned AS (
   SELECT source, n_chars, quality_score,
          CASE
-           WHEN CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))
-                AS BIGINT) % 100 < {TRAIN_PCT} THEN 'train'
-           WHEN CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))
-                AS BIGINT) % 100 < {TRAIN_PCT + VAL_PCT} THEN 'val'
+           WHEN {_SLOT_SQL} < {TRAIN_PCT} THEN 'train'
+           WHEN {_SLOT_SQL} < {TRAIN_PCT + VAL_PCT} THEN 'val'
            ELSE 'test'
          END AS split
   FROM unique_docs

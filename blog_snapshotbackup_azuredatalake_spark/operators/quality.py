@@ -31,6 +31,10 @@ from pyspark.sql import functions as F
 from blog_snapshotbackup_azuredatalake_spark.functions.hints import (
     broadcast_if_bounded as bcast,
 )
+from blog_snapshotbackup_azuredatalake_spark.functions.hashing import (
+    md5_int60,
+    sql_md5_int60,
+)
 from blog_snapshotbackup_azuredatalake_spark.sources.catalog import load_table
 
 _DQ_COLS = (
@@ -548,10 +552,6 @@ def snap_gdpr_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     inner join back to the subject set must be empty). customer purges
     by its own key, orders cascades via o_custkey (FK), events via
     user_id ∩ the subject key range."""
-    from blog_snapshotbackup_azuredatalake_spark.functions.hashing import (
-        md5_int60,
-    )
-
     subjects = (
         load_table(spark, sf_dir, "customer")
         .filter(F.col("c_custkey") % GDPR_MOD == GDPR_REM)
@@ -614,9 +614,7 @@ def _gdpr_sql() -> str:
     every o_custkey/user_id actually appears in customer, and an oracle
     must stay truthful on referentially-imperfect data too (round-2
     VERDICT item)."""
-    h = (
-        "CAST(concat('0x', substr(md5(CAST(k AS VARCHAR)), 1, 15)) AS BIGINT)"
-    )
+    h = sql_md5_int60("CAST(k AS VARCHAR)")
     subj = (
         f"SELECT c_custkey AS subject_key FROM customer "
         f"WHERE c_custkey % {GDPR_MOD} = {GDPR_REM}"

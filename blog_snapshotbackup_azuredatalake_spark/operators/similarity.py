@@ -19,10 +19,11 @@ Three plans for top-k cosine neighbors:
   more recall) without re-bucketing.
 
 Dot products run as zip_with/aggregate double folds — bit-identical to
-the DuckDB oracle's list_reduce fold (verified). These higher-order
-functions are CodegenFallback (interpreted), which is why every pair
-scorer hoists row-constant norms out of the per-pair expression
-(`_dot_cos_pre`, round 10).
+the DuckDB oracle's list_reduce fold (verified); both forms live in
+``functions/vectors.py``. These higher-order functions are
+CodegenFallback (interpreted), which is why every pair scorer hoists
+row-constant norms out of the per-pair expression (``cosine_with_norms``
+in ``functions/vectors.py``, round 10).
 """
 
 from __future__ import annotations
@@ -30,14 +31,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from blog_snapshotbackup_azuredatalake_spark.functions.hashing import (
+    hash60,
+    sql_md5_int60,
+)
+from blog_snapshotbackup_azuredatalake_spark.functions.vectors import (
+    cosine_similarity,
+    cosine_with_norms,
+    l2_norm,
+    sql_cosine,
+)
 from blog_snapshotbackup_azuredatalake_spark.operators.dedup import (
-    _dot_cos,
-    _dot_cos_pre,
-    _norm,
     _sign_bucket,
-    _sql_cos,
     _SQL_BUCKET,
-    _SQL_COS,
 )
 from blog_snapshotbackup_azuredatalake_spark.functions.skew import (
     two_phase_rank_dual,
@@ -118,7 +124,7 @@ def ann_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("cents", cents_lit)
         .select(
             F.col("embedding").alias("q_emb"),
-            _norm(F.col("embedding")).alias("q_nrm"),
+            l2_norm("embedding").alias("q_nrm"),
             F.explode(
                 F.slice(
                     F.array_sort(_cent_scored(F.col("embedding"))),
@@ -134,11 +140,8 @@ def ann_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("vec_id") != HYBRID_QUERY_ID)
         .select(
             "vec_id",
-            _dot_cos_pre(
-                F.col("q_emb"),
-                F.col("embedding"),
-                F.col("q_nrm"),
-                _norm(F.col("embedding")),
+            cosine_with_norms(
+                "q_emb", "embedding", "q_nrm", l2_norm("embedding")
             ).alias("cos"),
         )
     )
@@ -193,7 +196,7 @@ def _hybrid_rrf_sql() -> str:
         _bm25_sql,
     )
 
-    cos = _SQL_COS.replace("a.embedding", "q_emb")
+    cos = sql_cosine("q_emb", "b.embedding")
     # the vec list mirrors the Spark side's IVF shortlist: coarse
     # assign ≡ row_number over (l2², centroid_id), probe the query's
     # IVF_NPROBE nearest lists, exact cosine re-rank inside them
@@ -245,11 +248,11 @@ FROM fused QUALIFY rank <= {HYBRID_TOPK}
 def ann_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact top-k cosine neighbors for the first N_QUERIES vectors.
     Norms are hoisted to per-row columns on both sides of the pair
-    join (round 10, `_dot_cos_pre`): same folds, same quotient —
+    join (round 10, `cosine_with_norms`): same folds, same quotient —
     bit-identical — but evaluated once per row instead of once per
     pair (sf60de 3.71 → 2.29 s, warm spread collapsed)."""
     emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding", _norm(F.col("embedding")).alias("nrm")
+        "vec_id", "embedding", l2_norm("embedding").alias("nrm")
     )
     queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("q_id"),
@@ -262,12 +265,7 @@ def ann_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "q_id",
             "vec_id",
-            _dot_cos_pre(
-                F.col("q_emb"),
-                F.col("embedding"),
-                F.col("q_nrm"),
-                F.col("nrm"),
-            ).alias("cos"),
+            cosine_with_norms("q_emb", "embedding", "q_nrm", "nrm").alias("cos"),
         )
     )
     # round 10: left as a single window — Spark 4.1 plans this
@@ -287,7 +285,7 @@ WITH queries AS (
   SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings
   WHERE vec_id < {N_QUERIES}
 ), pairs AS (
-  SELECT q_id, b.vec_id AS vec_id, {_SQL_COS.replace("a.embedding", "q_emb").replace("b.embedding", "b.embedding")} AS cos
+  SELECT q_id, b.vec_id AS vec_id, {sql_cosine("q_emb", "b.embedding")} AS cos
   FROM queries JOIN embeddings b ON b.vec_id <> q_id
 )
 SELECT q_id, vec_id, cos, CAST(rnk AS INT) AS rnk
@@ -322,7 +320,7 @@ def ann_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("q_id"),
         F.col("embedding").alias("q_emb"),
         "bucket",
-        _norm(F.col("embedding")).alias("q_nrm"),
+        l2_norm("embedding").alias("q_nrm"),
     )
     flip = F.expr(
         "CASE WHEN i = 0 THEN bucket ELSE concat(substring(bucket, 1, i - 1),"
@@ -345,11 +343,8 @@ def ann_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "q_id",
             "vec_id",
-            _dot_cos_pre(
-                F.col("q_emb"),
-                F.col("embedding"),
-                F.col("q_nrm"),
-                _norm(F.col("embedding")),
+            cosine_with_norms(
+                "q_emb", "embedding", "q_nrm", l2_norm("embedding")
             ).alias("cos"),
         )
         # round 10: the `.distinct()` here was a NO-OP paying a full
@@ -393,7 +388,7 @@ WITH emb AS (
          END AS bucket
   FROM base_q, range(0, {LSH_DIMS + 1}) t(i)
 ), pairs AS (
-  SELECT DISTINCT q_id, b.vec_id AS vec_id, {_SQL_COS.replace("a.embedding", "q_emb").replace("b.embedding", "b.embedding")} AS cos
+  SELECT DISTINCT q_id, b.vec_id AS vec_id, {sql_cosine("q_emb", "b.embedding")} AS cos
   FROM queries JOIN emb b USING (bucket)
   WHERE b.vec_id <> q_id
 )
@@ -483,8 +478,8 @@ def _ivf_search(emb: DataFrame, centroids: DataFrame) -> DataFrame:
             "embedding",
             F.array_min(scored(F.col("embedding"))).alias("best"),
             # per-row norm hoisted below the probe join (round 10,
-            # `_dot_cos_pre`): folded once per row, not once per pair
-            _norm(F.col("embedding")).alias("nrm"),
+            # `cosine_with_norms`): folded once per row, not once per pair
+            l2_norm("embedding").alias("nrm"),
         )
         .select(
             "vec_id",
@@ -499,7 +494,7 @@ def _ivf_search(emb: DataFrame, centroids: DataFrame) -> DataFrame:
     queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("q_id"),
         F.col("embedding").alias("q_emb"),
-        _norm(F.col("embedding")).alias("q_nrm"),
+        l2_norm("embedding").alias("q_nrm"),
     )
     probes = (
         queries.withColumn("cents", cents_lit)
@@ -521,12 +516,7 @@ def _ivf_search(emb: DataFrame, centroids: DataFrame) -> DataFrame:
         .select(
             "q_id",
             "vec_id",
-            _dot_cos_pre(
-                F.col("q_emb"),
-                F.col("embedding"),
-                F.col("q_nrm"),
-                F.col("nrm"),
-            ).alias("cos"),
+            cosine_with_norms("q_emb", "embedding", "q_nrm", "nrm").alias("cos"),
         )
     )
     # round 10: left as a single window — Spark 4.1 plans this
@@ -573,7 +563,7 @@ WITH cent AS (
   WHERE pr <= {IVF_NPROBE}
 ), pairs AS (
   SELECT q_id, b.vec_id AS vec_id,
-         {_SQL_COS.replace("a.embedding", "q_emb").replace("b.embedding", "b.embedding")} AS cos
+         {sql_cosine("q_emb", "b.embedding")} AS cos
   FROM probes JOIN assigned b USING (list_id)
   WHERE b.vec_id <> q_id
 )
@@ -646,8 +636,8 @@ def ann_filtered_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             "label",
             F.array_min(scored(F.col("embedding"))).alias("best"),
             # per-row norm hoisted below the probe join (round 10,
-            # `_dot_cos_pre`): folded once per row, not once per pair
-            _norm(F.col("embedding")).alias("nrm"),
+            # `cosine_with_norms`): folded once per row, not once per pair
+            l2_norm("embedding").alias("nrm"),
         )
         .select(
             "vec_id",
@@ -660,7 +650,7 @@ def ann_filtered_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("q_id"),
         F.col("embedding").alias("q_emb"),
-        _norm(F.col("embedding")).alias("q_nrm"),
+        l2_norm("embedding").alias("q_nrm"),
     )
     probes = (
         queries.withColumn("cents", cents_lit)
@@ -686,12 +676,7 @@ def ann_filtered_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             "q_id",
             "vec_id",
             "label",
-            _dot_cos_pre(
-                F.col("q_emb"),
-                F.col("embedding"),
-                F.col("q_nrm"),
-                F.col("nrm"),
-            ).alias("cos"),
+            cosine_with_norms("q_emb", "embedding", "q_nrm", "nrm").alias("cos"),
         )
     )
     # round 10: single window kept — WindowGroupLimit(Partial) already
@@ -737,7 +722,7 @@ WITH cent AS (
   WHERE pr <= {FILTER_NPROBE}
 ), pairs AS (
   SELECT q_id, b.vec_id AS vec_id, b.label AS label,
-         {_SQL_COS.replace("a.embedding", "q_emb")} AS cos
+         {sql_cosine("q_emb", "b.embedding")} AS cos
   FROM probes JOIN assigned b USING (list_id)
   WHERE b.vec_id <> q_id AND b.label = {FILTER_LABEL}
 )
@@ -1074,14 +1059,13 @@ patted AS (
 ),
 emb AS (
   SELECT vec_id, embedding, pat,
-         CAST(concat('0x', substr(md5(CAST(vec_id AS VARCHAR)), 1, 15))
-              AS BIGINT)
+         {sql_md5_int60("CAST(vec_id AS VARCHAR)")}
            % ((COUNT(*) OVER (PARTITION BY pat) + {KNN_BUCKET_CAP} - 1)
               // {KNN_BUCKET_CAP}) AS sub
   FROM patted
 ),
 pairs AS (
-  SELECT a.vec_id AS src, b.vec_id AS dst, {_SQL_COS} AS cos
+  SELECT a.vec_id AS src, b.vec_id AS dst, {sql_cosine("a.embedding", "b.embedding")} AS cos
   FROM emb a JOIN emb b USING (pat, sub)
   WHERE a.vec_id <> b.vec_id
 ),
@@ -1142,8 +1126,8 @@ def ann_knn_graph_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         "embedding",
         # per-row norm hoisted below the pair join (round 10,
-        # `_dot_cos_pre`): folded once per row, not once per pair
-        _norm(F.col("embedding")).alias("nrm"),
+        # `cosine_with_norms`): folded once per row, not once per pair
+        l2_norm("embedding").alias("nrm"),
     )
     panel = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("q_id"),
@@ -1156,12 +1140,7 @@ def ann_knn_graph_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "q_id",
             "vec_id",
-            _dot_cos_pre(
-                F.col("q_emb"),
-                F.col("embedding"),
-                F.col("q_nrm"),
-                F.col("nrm"),
-            ).alias("cos"),
+            cosine_with_norms("q_emb", "embedding", "q_nrm", "nrm").alias("cos"),
         )
     )
     w = Window.partitionBy("q_id").orderBy(
@@ -1237,7 +1216,7 @@ rk AS (
          ROW_NUMBER() OVER (PARTITION BY q_id
                             ORDER BY cos DESC, vec_id) AS rn
   FROM (SELECT q_id, b.vec_id,
-               {_sql_cos("q_emb", "b.embedding")} AS cos
+               {sql_cosine("q_emb", "b.embedding")} AS cos
         FROM q JOIN embeddings b ON b.vec_id <> q_id)
 ),
 ex AS (
@@ -1626,13 +1605,13 @@ def ann_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             "list_id"
         ),
         # per-row norm hoisted below the probe join (round 10,
-        # `_dot_cos_pre`): folded once per row, not once per pair
-        _norm(F.col("embedding")).alias("nrm"),
+        # `cosine_with_norms`): folded once per row, not once per pair
+        l2_norm("embedding").alias("nrm"),
     )
     queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("q_id"),
         F.col("embedding").alias("q_emb"),
-        _norm(F.col("embedding")).alias("q_nrm"),
+        l2_norm("embedding").alias("q_nrm"),
     )
     probes = (
         queries.withColumn("cents", cents_lit)
@@ -1661,12 +1640,7 @@ def ann_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             "q_id",
             "vec_id",
             "p",
-            _dot_cos_pre(
-                F.col("q_emb"),
-                F.col("embedding"),
-                F.col("q_nrm"),
-                F.col("nrm"),
-            ).alias("cos"),
+            cosine_with_norms("q_emb", "embedding", "q_nrm", "nrm").alias("cos"),
         )
     )
     grid = spark.createDataFrame(
@@ -1751,7 +1725,7 @@ WITH cent AS (
   WHERE pr <= {max(NPROBE_GRID)}
 ), pairs AS (
   SELECT q_id, b.vec_id AS vec_id, p,
-         {_SQL_COS.replace("a.embedding", "q_emb")} AS cos
+         {sql_cosine("q_emb", "b.embedding")} AS cos
   FROM probes JOIN assigned b USING (list_id)
   WHERE b.vec_id <> q_id
 ), grid(nprobe) AS (VALUES {grid_rows}),
@@ -2544,7 +2518,7 @@ def emb_truncation_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     per search."""
     # both the full-dim and the truncated norms — AND the truncated
     # slice itself — are hoisted to per-row columns below the pair join
-    # (round 10, `_dot_cos_pre`): same folds over the same (sliced)
+    # (round 10, `cosine_with_norms`): same folds over the same (sliced)
     # arrays — bit-identical — evaluated/allocated once per row instead
     # of once per pair; this entry folded FOUR norms and cut TWO array
     # slices per pair inline
@@ -2552,8 +2526,8 @@ def emb_truncation_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         "embedding",
         F.slice(F.col("embedding"), 1, TRUNC_DIMS).alias("temb"),
-        _norm(F.col("embedding")).alias("nrm"),
-        _norm(F.slice(F.col("embedding"), 1, TRUNC_DIMS)).alias("tnrm"),
+        l2_norm("embedding").alias("nrm"),
+        l2_norm(F.slice(F.col("embedding"), 1, TRUNC_DIMS)).alias("tnrm"),
     )
     queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("q_id"),
@@ -2568,18 +2542,8 @@ def emb_truncation_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "q_id",
             "vec_id",
-            _dot_cos_pre(
-                F.col("q_emb"),
-                F.col("embedding"),
-                F.col("q_nrm"),
-                F.col("nrm"),
-            ).alias("cf"),
-            _dot_cos_pre(
-                F.col("qt_emb"),
-                F.col("temb"),
-                F.col("q_tnrm"),
-                F.col("tnrm"),
-            ).alias("ct"),
+            cosine_with_norms("q_emb", "embedding", "q_nrm", "nrm").alias("cf"),
+            cosine_with_norms("qt_emb", "temb", "q_tnrm", "tnrm").alias("ct"),
         )
     )
     # both top-k picks in one pass over one salted exchange (round 10)
@@ -2607,26 +2571,14 @@ def emb_truncation_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _trunc_cos_sql(d: int) -> str:
-    return f"""(
-  list_reduce(list_transform(range(1, {d + 1}),
-    i -> CAST(q_emb[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)),
-    (x, y) -> x + y)
-  / (sqrt(list_reduce(list_transform(q_emb[1:{d}],
-       v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE)), (x, y) -> x + y))
-   * sqrt(list_reduce(list_transform(b.embedding[1:{d}],
-       v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE)), (x, y) -> x + y)))
-)"""
-
-
 _TRUNC_AUDIT_SQL = f"""
 WITH queries AS (
   SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings
   WHERE vec_id < {N_QUERIES}
 ), scored AS (
   SELECT q_id, b.vec_id AS vec_id,
-         {_SQL_COS.replace("a.embedding", "q_emb")} AS cf,
-         {_trunc_cos_sql(TRUNC_DIMS)} AS ct
+         {sql_cosine("q_emb", "b.embedding")} AS cf,
+         {sql_cosine(f"q_emb[1:{TRUNC_DIMS}]", f"b.embedding[1:{TRUNC_DIMS}]")} AS ct
   FROM queries JOIN embeddings b ON b.vec_id <> q_id
 ), ranked AS (
   SELECT q_id, vec_id,
@@ -2789,8 +2741,8 @@ def emb_binary_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(_pack_bits_expr("embedding", 0)).alias("b_lo"),
         F.expr(_pack_bits_expr("embedding", _HAM_HALF)).alias("b_hi"),
         # per-row norm hoisted below the pair join (round 10,
-        # `_dot_cos_pre`): folded once per row, not once per pair
-        _norm(F.col("embedding")).alias("nrm"),
+        # `cosine_with_norms`): folded once per row, not once per pair
+        l2_norm("embedding").alias("nrm"),
     )
     queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("q_id"),
@@ -2805,12 +2757,7 @@ def emb_binary_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "q_id",
             "vec_id",
-            _dot_cos_pre(
-                F.col("q_emb"),
-                F.col("embedding"),
-                F.col("q_nrm"),
-                F.col("nrm"),
-            ).alias("cos"),
+            cosine_with_norms("q_emb", "embedding", "q_nrm", "nrm").alias("cos"),
             F.expr(
                 "bit_count(b_lo ^ q_lo) + bit_count(b_hi ^ q_hi)"
             ).alias("ham"),
@@ -2856,7 +2803,7 @@ WITH emb AS (
   FROM emb WHERE vec_id < {N_QUERIES}
 ), scored AS (
   SELECT q_id, b.vec_id AS vec_id,
-         {_SQL_COS.replace("a.embedding", "q_emb")} AS cos,
+         {sql_cosine("q_emb", "b.embedding")} AS cos,
          bit_count(xor(b.b_lo, q_lo)) + bit_count(xor(b.b_hi, q_hi)) AS ham
   FROM queries JOIN emb b ON b.vec_id <> q_id
 ), ranked AS (
@@ -2930,7 +2877,7 @@ def emb_quantize_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("rembedding"),
     )
     # per-row norms (exact AND reconstructed) hoisted below the pair
-    # join (round 10, `_dot_cos_pre`): this entry folded FOUR norms per
+    # join (round 10, `cosine_with_norms`): this entry folded FOUR norms per
     # pair inline — including a norm over the derived rembedding, whose
     # reconstruction transform the fold re-walked per pair — so the
     # hoist removes 2/3 of its interpreted per-pair work. Separate
@@ -2940,13 +2887,13 @@ def emb_quantize_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         "embedding",
         "rembedding",
-        _norm(F.col("embedding")).alias("e_nrm"),
-        _norm(F.col("rembedding")).alias("r_nrm"),
+        l2_norm("embedding").alias("e_nrm"),
+        l2_norm("rembedding").alias("r_nrm"),
     )
     queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("q_id"),
         F.col("embedding").alias("q_emb"),
-        _norm(F.col("embedding")).alias("q_nrm"),
+        l2_norm("embedding").alias("q_nrm"),
     )
     scored = (
         recon.crossJoin(F.broadcast(queries))
@@ -2954,18 +2901,8 @@ def emb_quantize_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "q_id",
             "vec_id",
-            _dot_cos_pre(
-                F.col("q_emb"),
-                F.col("embedding"),
-                F.col("q_nrm"),
-                F.col("e_nrm"),
-            ).alias("cx"),
-            _dot_cos_pre(
-                F.col("q_emb"),
-                F.col("rembedding"),
-                F.col("q_nrm"),
-                F.col("r_nrm"),
-            ).alias("cr"),
+            cosine_with_norms("q_emb", "embedding", "q_nrm", "e_nrm").alias("cx"),
+            cosine_with_norms("q_emb", "rembedding", "q_nrm", "r_nrm").alias("cr"),
         )
     )
     # round 10: the two_phase_rank_dual rewrite its siblings took
@@ -3026,16 +2963,8 @@ queries AS (
 ),
 scored AS (
   SELECT q_id, b.vec_id AS vec_id,
-         {_SQL_COS.replace("a.embedding", "q_emb")} AS cx,
-         (
-  list_reduce(list_transform(range(1, 1 + len(q_emb)),
-    i -> CAST(q_emb[i] AS DOUBLE) * r.rembedding[i]),
-    (x, y) -> x + y)
-  / (sqrt(list_reduce(list_transform(q_emb,
-       v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE)), (x, y) -> x + y))
-   * sqrt(list_reduce(list_transform(r.rembedding,
-       v -> v * v), (x, y) -> x + y)))
-) AS cr
+         {sql_cosine("q_emb", "b.embedding")} AS cx,
+         {sql_cosine("q_emb", "r.rembedding")} AS cr
   FROM queries
   JOIN embeddings b ON b.vec_id <> q_id
   JOIN recon r ON r.vec_id = b.vec_id
@@ -3138,7 +3067,7 @@ def ann_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("q_id"),
         F.col("embedding").alias("q_emb"),
         "bucket",
-        _norm(F.col("embedding")).alias("q_nrm"),
+        l2_norm("embedding").alias("q_nrm"),
     )
     flip = F.expr(
         "CASE WHEN i = 0 THEN bucket ELSE concat(substring(bucket, 1, i - 1),"
@@ -3158,11 +3087,8 @@ def ann_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "q_id",
             "vec_id",
-            _dot_cos_pre(
-                F.col("q_emb"),
-                F.col("embedding"),
-                F.col("q_nrm"),
-                _norm(F.col("embedding")),
+            cosine_with_norms(
+                "q_emb", "embedding", "q_nrm", l2_norm("embedding")
             ).alias("cos"),
         )
         # round 10: `.distinct()` removed — same no-op-dedup argument
@@ -3191,7 +3117,7 @@ WITH emb AS (
          END AS bucket
   FROM base_q, range(0, {LSH_DIMS + 1}) t(i)
 ), pairs AS (
-  SELECT DISTINCT q_id, b.vec_id AS vec_id, {_SQL_COS.replace("a.embedding", "q_emb").replace("b.embedding", "b.embedding")} AS cos
+  SELECT DISTINCT q_id, b.vec_id AS vec_id, {sql_cosine("q_emb", "b.embedding")} AS cos
   FROM queries JOIN emb b USING (bucket)
   WHERE b.vec_id <> q_id
 )
@@ -3217,8 +3143,8 @@ def _mmr_shortlist(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         "embedding",
         # per-row norm hoisted below the pair join (round 10,
-        # `_dot_cos_pre`): folded once per row, not once per pair
-        _norm(F.col("embedding")).alias("nrm"),
+        # `cosine_with_norms`): folded once per row, not once per pair
+        l2_norm("embedding").alias("nrm"),
     )
     queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("q_id"),
@@ -3233,12 +3159,7 @@ def _mmr_shortlist(spark: SparkSession, sf_dir: str) -> DataFrame:
             "q_emb",
             "vec_id",
             "embedding",
-            _dot_cos_pre(
-                F.col("q_emb"),
-                F.col("embedding"),
-                F.col("q_nrm"),
-                F.col("nrm"),
-            ).alias("rel"),
+            cosine_with_norms("q_emb", "embedding", "q_nrm", "nrm").alias("rel"),
         )
     )
     w = Window.partitionBy("q_id").orderBy(F.col("rel").desc(), F.col("vec_id"))
@@ -3333,8 +3254,8 @@ def emb_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
         "embedding",
         "label",
         # per-row norm hoisted below the pair join (round 10,
-        # `_dot_cos_pre`): folded once per row, not once per pair
-        _norm(F.col("embedding")).alias("nrm"),
+        # `cosine_with_norms`): folded once per row, not once per pair
+        l2_norm("embedding").alias("nrm"),
     )
     queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("q_id"),
@@ -3350,12 +3271,7 @@ def emb_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
             "q_label",
             "vec_id",
             "label",
-            _dot_cos_pre(
-                F.col("q_emb"),
-                F.col("embedding"),
-                F.col("q_nrm"),
-                F.col("nrm"),
-            ).alias("cos"),
+            cosine_with_norms("q_emb", "embedding", "q_nrm", "nrm").alias("cos"),
         )
     )
     # round 10: `pairs` used to feed the negatives window AND a
@@ -3402,7 +3318,7 @@ WITH queries AS (
   FROM embeddings WHERE vec_id < {N_QUERIES}
 ), pairs AS (
   SELECT q_id, q_label, b.vec_id AS vec_id, b.label AS label,
-         {_SQL_COS.replace("a.embedding", "q_emb")} AS cos
+         {sql_cosine("q_emb", "b.embedding")} AS cos
   FROM queries JOIN embeddings b ON b.vec_id <> q_id
 ), pos AS (
   SELECT q_id, MAX(cos) AS cos_pos FROM pairs
@@ -3446,13 +3362,12 @@ def emb_pair_cosine_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     size at any SF. Pairing is lead() over the capped md5 order
     (consecutive ranks — md5 order decorrelates ids, so pairs are
     effectively random); cosine is the shared bit-identical double
-    fold (`_dot_cos` ↔ `_sql_cos`)."""
+    fold (`cosine_similarity` ↔ `sql_cosine`)."""
     vecs = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
     gated = vecs.filter(
-        F.conv(F.substring(F.md5(F.col("vec_id").cast("string")), 1, 15),
-               16, 10).cast("bigint") % CAL_PAIR_MOD == 0
+        hash60(F.md5(F.col("vec_id").cast("string"))) % CAL_PAIR_MOD == 0
     ).select(
         "vec_id",
         "embedding",
@@ -3491,7 +3406,7 @@ def emb_pair_cosine_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lead("vec_id").over(Window.orderBy("rn")).alias("b_id"),
         F.lead("embedding").over(Window.orderBy("rn")).alias("b_emb"),
     ).filter((F.col("rn") % 2 == 1) & F.col("b_id").isNotNull())
-    cos = _dot_cos(F.col("embedding"), F.col("b_emb"))
+    cos = cosine_similarity(F.col("embedding"), F.col("b_emb"))
     bucketed = paired.select(
         F.least(
             F.floor((cos + 1.0) / 0.1).cast("int"),
@@ -3513,8 +3428,7 @@ _CAL_PAIR_SQL = f"""
 WITH gated AS (
   SELECT vec_id, embedding, md5(CAST(vec_id AS VARCHAR)) AS h
   FROM embeddings
-  WHERE CAST(concat('0x', substr(md5(CAST(vec_id AS VARCHAR)), 1, 15))
-             AS BIGINT) % {CAL_PAIR_MOD} = 0
+  WHERE {sql_md5_int60("CAST(vec_id AS VARCHAR)")} % {CAL_PAIR_MOD} = 0
 ), sample AS (
   SELECT vec_id, embedding,
          ROW_NUMBER() OVER (ORDER BY h, vec_id) AS rn
@@ -3527,7 +3441,7 @@ WITH gated AS (
   FROM sample
   QUALIFY rn % 2 = 1 AND b_id IS NOT NULL
 ), buckets AS (
-  SELECT LEAST(CAST(FLOOR(({_sql_cos("a_emb", "b_emb")} + 1.0) / 0.1)
+  SELECT LEAST(CAST(FLOOR(({sql_cosine("a_emb", "b_emb")} + 1.0) / 0.1)
                     AS INT), {CAL_COS_BUCKETS - 1}) AS bucket
   FROM paired
 )

@@ -26,6 +26,10 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from blog_snapshotbackup_azuredatalake_spark.functions.hashing import (
+    hash60,
+    sql_md5_int60,
+)
 from blog_snapshotbackup_azuredatalake_spark.sources.catalog import load_table
 
 M_BUCKETS = 256  # 2^8 registers
@@ -272,14 +276,7 @@ CMS_TOPK = 10
 
 
 def _cms_bucket(j: int, v) -> "F.Column":
-    return (
-        F.conv(
-            F.substring(F.md5(F.concat_ws(":", F.lit(str(j)), v)), 1, 15),
-            16,
-            10,
-        ).cast("bigint")
-        % CMS_WIDTH
-    )
+    return hash60(F.md5(F.concat_ws(":", F.lit(str(j)), v))) % CMS_WIDTH
 
 
 def sketch_cms_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -359,10 +356,8 @@ def cms_rank_heavy_hitters(cells: DataFrame, ev: DataFrame) -> DataFrame:
 
 def _cms_sql() -> str:
     def bucket(j: int, v: str) -> str:
-        return (
-            f"CAST(concat('0x', substr(md5(concat('{j}', ':', {v})), 1, 15))"
-            f" AS BIGINT) % {CMS_WIDTH}"
-        )
+        key = f"concat('{j}', ':', {v})"
+        return f"{sql_md5_int60(key)} % {CMS_WIDTH}"
 
     cell_selects = "\nUNION ALL\n".join(
         f"SELECT {j} AS j, {bucket(j, 'v')} AS bucket FROM ev"
@@ -545,17 +540,7 @@ def sketch_kmv_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
     def side(t: str) -> DataFrame:
         return (
             ev.filter(F.col("event_type") == t)
-            .select(
-                F.conv(
-                    F.substring(
-                        F.md5(F.col("user_id").cast("string")), 1, 15
-                    ),
-                    16,
-                    10,
-                )
-                .cast("bigint")
-                .alias("h")
-            )
+            .select(hash60(F.md5(F.col("user_id").cast("string"))).alias("h"))
             .distinct()
         )
 
@@ -612,7 +597,7 @@ def sketch_kmv_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _kmv_sql() -> str:
-    h = "CAST(concat('0x', substr(md5(CAST(user_id AS VARCHAR)), 1, 15)) AS BIGINT)"
+    h = sql_md5_int60("CAST(user_id AS VARCHAR)")
     return f"""
 WITH a AS (SELECT DISTINCT {h} AS h FROM events WHERE event_type = 'click'),
 b AS (SELECT DISTINCT {h} AS h FROM events WHERE event_type = 'purchase'),

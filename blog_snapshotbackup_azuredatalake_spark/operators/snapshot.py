@@ -21,7 +21,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from blog_snapshotbackup_azuredatalake_spark.functions.hashing import SEP, row_hash_int
+from blog_snapshotbackup_azuredatalake_spark.functions.hashing import (
+    hash60,
+    row_hash,
+    row_hash_int,
+    sql_hash60,
+    sql_md5_int60,
+    sql_row_hash,
+    sql_row_hash_int,
+)
 from blog_snapshotbackup_azuredatalake_spark.sources.catalog import (
     load_events_range,
     load_table,
@@ -40,7 +48,7 @@ _ORDERS_COLS = [
     "o_orderpriority",
 ]
 
-_ORDERS_COLS_SQL = [
+ORDERS_COLS_SQL = [
     "o_orderkey",
     "o_custkey",
     "o_orderstatus",
@@ -50,24 +58,10 @@ _ORDERS_COLS_SQL = [
 ]
 
 
-def _orders_hash_expr() -> F.Column:
-    cols = [F.expr(c).cast("string") for c in _ORDERS_COLS]
-    return F.md5(F.concat_ws(SEP, *[F.coalesce(c, F.lit("")) for c in cols]))
-
-
-_ORDERS_HASH_SQL = (
-    "md5(concat_ws(chr(31), "
-    + ", ".join(f"coalesce(cast({c} as varchar), '')" for c in _ORDERS_COLS_SQL)
-    + "))"
-)
-
-
-def _hash60(col: F.Column) -> F.Column:
-    return F.conv(F.substring(col, 1, 15), 16, 10).cast("bigint")
-
-
-def _hash60_sql(expr: str) -> str:
-    return f"cast(concat('0x', substr({expr}, 1, 15)) as bigint)"
+def orders_cols() -> list[F.Column]:
+    """The `orders` row encoding as columns, for ``row_hash`` and
+    ``row_hash_int``; ``ORDERS_COLS_SQL`` is its DuckDB mirror."""
+    return [F.expr(c) for c in _ORDERS_COLS]
 
 
 # ---------------------------------------------------------------------------
@@ -81,12 +75,12 @@ def snap_row_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     writing is embarrassingly parallel)."""
     orders = load_table(spark, sf_dir, "orders")
     return orders.select(
-        F.col("o_orderkey"), _orders_hash_expr().alias("row_md5")
+        F.col("o_orderkey"), row_hash(*orders_cols()).alias("row_md5")
     )
 
 
 _SNAP_ROW_MANIFEST_SQL = f"""
-SELECT o_orderkey, {_ORDERS_HASH_SQL} AS row_md5 FROM orders
+SELECT o_orderkey, {sql_row_hash(ORDERS_COLS_SQL)} AS row_md5 FROM orders
 """
 
 
@@ -115,8 +109,7 @@ def snap_table_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _checksum_sql(name: str, cols: list[str]) -> str:
-    enc = ", ".join(f"coalesce(cast({c} as varchar), '')" for c in cols)
-    h = _hash60_sql(f"md5(concat_ws(chr(31), {enc}))")
+    h = sql_row_hash_int(cols)
     return f"""
 SELECT '{name}' AS table_name, COUNT(*) AS n_rows,
        BIT_XOR(h) AS xor_checksum, MIN(h) AS min_hash, MAX(h) AS max_hash
@@ -197,10 +190,10 @@ def snap_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     by full-outer-joining the two manifests and comparing row hashes.
     Only (key, hash) pairs shuffle — the payload never moves."""
     a = load_table(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("key"), _orders_hash_expr().alias("hash_a")
+        F.col("o_orderkey").alias("key"), row_hash(*orders_cols()).alias("hash_a")
     )
     b = _perturbed_orders(spark, sf_dir).select(
-        F.col("o_orderkey").alias("key"), _orders_hash_expr().alias("hash_b")
+        F.col("o_orderkey").alias("key"), row_hash(*orders_cols()).alias("hash_b")
     )
     joined = a.join(b, "key", "full_outer")
     return (
@@ -215,12 +208,11 @@ def snap_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PERTURBED_HASH_SQL = _ORDERS_HASH_SQL  # same column list applies
 
 _SNAP_DIFF_SQL = f"""
 WITH b_rows AS ({_PERTURBED_SQL}),
-a_man AS (SELECT o_orderkey AS key, {_ORDERS_HASH_SQL} AS hash_a FROM orders),
-b_man AS (SELECT o_orderkey AS key, {_PERTURBED_HASH_SQL} AS hash_b FROM b_rows)
+a_man AS (SELECT o_orderkey AS key, {sql_row_hash(ORDERS_COLS_SQL)} AS hash_a FROM orders),
+b_man AS (SELECT o_orderkey AS key, {sql_row_hash(ORDERS_COLS_SQL)} AS hash_b FROM b_rows)
 SELECT key AS o_orderkey,
        CASE WHEN hash_a IS NULL THEN 'added'
             WHEN hash_b IS NULL THEN 'removed'
@@ -235,10 +227,10 @@ def snap_incr_antijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash) is not yet in the backup — a left-anti hash join on manifests.
     Re-running after a partial failure re-selects only what's missing."""
     backup = load_table(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("key"), _orders_hash_expr().alias("h")
+        F.col("o_orderkey").alias("key"), row_hash(*orders_cols()).alias("h")
     )
     source = _perturbed_orders(spark, sf_dir).select(
-        F.col("o_orderkey").alias("key"), _orders_hash_expr().alias("h")
+        F.col("o_orderkey").alias("key"), row_hash(*orders_cols()).alias("h")
     )
     pending = source.join(backup, ["key", "h"], "left_anti")
     return pending.select(F.col("key").alias("o_orderkey"))
@@ -246,8 +238,8 @@ def snap_incr_antijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SNAP_INCR_ANTIJOIN_SQL = f"""
 WITH b_rows AS ({_PERTURBED_SQL}),
-backup AS (SELECT o_orderkey AS key, {_ORDERS_HASH_SQL} AS h FROM orders),
-source AS (SELECT o_orderkey AS key, {_PERTURBED_HASH_SQL} AS h FROM b_rows)
+backup AS (SELECT o_orderkey AS key, {sql_row_hash(ORDERS_COLS_SQL)} AS h FROM orders),
+source AS (SELECT o_orderkey AS key, {sql_row_hash(ORDERS_COLS_SQL)} AS h FROM b_rows)
 SELECT key AS o_orderkey FROM source
 WHERE NOT EXISTS (SELECT 1 FROM backup
                   WHERE backup.key = source.key AND backup.h = source.h)
@@ -350,7 +342,7 @@ def snap_partition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SNAP_PARTITION_STATS_SQL = f"""
 WITH rows_h AS (
   SELECT CAST(date_trunc('month', l_shipdate) AS DATE) AS ship_month,
-         {_hash60_sql("md5(concat_ws(chr(31), coalesce(cast(l_orderkey as varchar), ''), coalesce(cast(l_linenumber as varchar), ''), coalesce(cast(l_partkey as varchar), ''), coalesce(cast(l_suppkey as varchar), '')))")} AS h
+         {sql_row_hash_int(["l_orderkey", "l_linenumber", "l_partkey", "l_suppkey"])} AS h
   FROM lineitem
 )
 SELECT ship_month, COUNT(*) AS n_rows, BIT_XOR(h) AS xor_checksum,
@@ -363,10 +355,7 @@ BLOOM_BITS = 65536  # 63-bit words (shift ≤ 62: DuckDB checks 1<<63) ≈ 8 KB 
 
 
 def _bloom_pos(key: F.Column, tag: str) -> F.Column:
-    return (
-        _hash60(F.md5(F.concat(key.cast("string"), F.lit(tag))))
-        % BLOOM_BITS
-    )
+    return hash60(F.md5(F.concat(key.cast("string"), F.lit(tag)))) % BLOOM_BITS
 
 
 def snap_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -449,7 +438,7 @@ def snap_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _BLOOM_POS_SQL = (
-    lambda tag: _hash60_sql(f"md5(concat(CAST(key AS VARCHAR), '{tag}'))")
+    lambda tag: sql_md5_int60(f"concat(CAST(key AS VARCHAR), '{tag}')")
     + f" % {BLOOM_BITS}"
 )
 
@@ -510,8 +499,8 @@ def snap_apply_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # certificate summary) and the upsert batch two — lazy checkpoints
     # materialize each once instead of re-deriving per subtree
     tgt = _perturbed_orders(spark, sf_dir).localCheckpoint(eager=False)
-    bm = base.select("o_orderkey", _orders_hash_expr().alias("h"))
-    tm = tgt.withColumn("h", _orders_hash_expr())
+    bm = base.select("o_orderkey", row_hash(*orders_cols()).alias("h"))
+    tm = tgt.withColumn("h", row_hash(*orders_cols()))
     upserts = (
         tm.join(bm, ["o_orderkey", "h"], "left_anti")
         .drop("h")
@@ -526,7 +515,7 @@ def snap_apply_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def _summ(df: DataFrame, tag: str) -> DataFrame:
-        return df.select(_hash60(_orders_hash_expr()).alias("h")).agg(
+        return df.select(row_hash_int(*orders_cols()).alias("h")).agg(
             F.count(F.lit(1)).alias(f"n_{tag}"),
             F.expr("bit_xor(h)").alias(f"xor_{tag}"),
         )
@@ -551,12 +540,10 @@ def snap_apply_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_H60_ROW_SQL = _hash60_sql(_ORDERS_HASH_SQL)
-
 _SNAP_APPLY_INCR_SQL = f"""
 WITH b_rows AS ({_PERTURBED_SQL}),
-bm AS (SELECT o_orderkey, {_ORDERS_HASH_SQL} AS h FROM orders),
-tm AS (SELECT *, {_PERTURBED_HASH_SQL} AS h FROM b_rows),
+bm AS (SELECT o_orderkey, {sql_row_hash(ORDERS_COLS_SQL)} AS h FROM orders),
+tm AS (SELECT *, {sql_row_hash(ORDERS_COLS_SQL)} AS h FROM b_rows),
 upserts AS (SELECT * EXCLUDE (h) FROM tm
             WHERE NOT EXISTS (SELECT 1 FROM bm
                               WHERE bm.o_orderkey = tm.o_orderkey
@@ -568,9 +555,9 @@ touched AS (SELECT o_orderkey FROM upserts
 merged AS (SELECT * FROM orders
            WHERE o_orderkey NOT IN (SELECT o_orderkey FROM touched)
            UNION ALL SELECT * FROM upserts),
-ms AS (SELECT COUNT(*) AS n_merged, BIT_XOR({_H60_ROW_SQL}) AS xor_merged
+ms AS (SELECT COUNT(*) AS n_merged, BIT_XOR({sql_row_hash_int(ORDERS_COLS_SQL)}) AS xor_merged
        FROM merged),
-ts AS (SELECT COUNT(*) AS n_target, BIT_XOR({_H60_ROW_SQL}) AS xor_target
+ts AS (SELECT COUNT(*) AS n_target, BIT_XOR({sql_row_hash_int(ORDERS_COLS_SQL)}) AS xor_target
        FROM b_rows),
 us AS (SELECT COUNT(*) AS n_upserts FROM upserts),
 ds AS (SELECT COUNT(*) AS n_deletes FROM deletes)
@@ -600,12 +587,12 @@ def snap_verify_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     it pushes to the manifest scan, and a backup laid out bucketed-by-
     key (sources/sinks.copy_table_bucketed) prunes whole buckets."""
     src = load_table(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("key"), _orders_hash_expr().alias("h_src")
+        F.col("o_orderkey").alias("key"), row_hash(*orders_cols()).alias("h_src")
     )
     bkp = _perturbed_orders(spark, sf_dir).select(
-        F.col("o_orderkey").alias("key"), _orders_hash_expr().alias("h_bkp")
+        F.col("o_orderkey").alias("key"), row_hash(*orders_cols()).alias("h_bkp")
     )
-    in_sample = _hash60(F.md5(F.col("key").cast("string"))) % 100 < SAMPLE_SLOTS
+    in_sample = hash60(F.md5(F.col("key").cast("string"))) % 100 < SAMPLE_SLOTS
     joined = src.filter(in_sample).join(
         bkp.filter(in_sample), "key", "full_outer"
     )
@@ -642,13 +629,13 @@ def snap_verify_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _SAMPLE_PRED = (
-    f"{_hash60_sql('md5(CAST(key AS VARCHAR))')} % 100 < {SAMPLE_SLOTS}"
+    f"{sql_md5_int60('CAST(key AS VARCHAR)')} % 100 < {SAMPLE_SLOTS}"
 )
 
 _SNAP_VERIFY_SAMPLED_SQL = f"""
 WITH b_rows AS ({_PERTURBED_SQL}),
-src AS (SELECT o_orderkey AS key, {_ORDERS_HASH_SQL} AS h_src FROM orders),
-bkp AS (SELECT o_orderkey AS key, {_PERTURBED_HASH_SQL} AS h_bkp FROM b_rows),
+src AS (SELECT o_orderkey AS key, {sql_row_hash(ORDERS_COLS_SQL)} AS h_src FROM orders),
+bkp AS (SELECT o_orderkey AS key, {sql_row_hash(ORDERS_COLS_SQL)} AS h_bkp FROM b_rows),
 j AS (SELECT * FROM (SELECT * FROM src WHERE {_SAMPLE_PRED}) s
       FULL OUTER JOIN (SELECT * FROM bkp WHERE {_SAMPLE_PRED}) b
       USING (key)),
@@ -708,8 +695,8 @@ def _change_batch(prev: DataFrame, curr: DataFrame, version: int) -> DataFrame:
     snapshot states — upserts are current rows whose (key, hash) is not
     in the previous manifest, deletes are previous keys gone from the
     current state (payload columns ride along but are ignored)."""
-    pm = prev.select("o_orderkey", _orders_hash_expr().alias("h"))
-    cm = curr.withColumn("h", _orders_hash_expr())
+    pm = prev.select("o_orderkey", row_hash(*orders_cols()).alias("h"))
+    cm = curr.withColumn("h", row_hash(*orders_cols()))
     upserts = (
         cm.join(pm, ["o_orderkey", "h"], "left_anti")
         .drop("h")
@@ -760,7 +747,7 @@ def snap_chain_rebase(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).unionByName(survivors)
 
     def _summ(df: DataFrame, tag: str) -> DataFrame:
-        return df.select(_hash60(_orders_hash_expr()).alias("h")).agg(
+        return df.select(row_hash_int(*orders_cols()).alias("h")).agg(
             F.count(F.lit(1)).alias(f"n_{tag}"),
             F.expr("bit_xor(h)").alias(f"xor_{tag}"),
         )
@@ -803,10 +790,10 @@ v2 AS (
   FROM (SELECT * FROM v1 WHERE o_orderkey % 103 = 11
         ORDER BY o_orderkey LIMIT 30)
 ),
-pm0 AS (SELECT o_orderkey, {_ORDERS_HASH_SQL} AS h FROM orders),
-cm1 AS (SELECT *, {_ORDERS_HASH_SQL} AS h FROM v1),
+pm0 AS (SELECT o_orderkey, {sql_row_hash(ORDERS_COLS_SQL)} AS h FROM orders),
+cm1 AS (SELECT *, {sql_row_hash(ORDERS_COLS_SQL)} AS h FROM v1),
 pm1 AS (SELECT o_orderkey, h FROM cm1),
-cm2 AS (SELECT *, {_ORDERS_HASH_SQL} AS h FROM v2),
+cm2 AS (SELECT *, {sql_row_hash(ORDERS_COLS_SQL)} AS h FROM v2),
 b1 AS (
   SELECT 1 AS version, o_orderkey, o_custkey, o_orderstatus, o_totalprice,
          o_orderdate, o_orderpriority, FALSE AS is_delete
@@ -849,10 +836,10 @@ bs AS (SELECT CAST(SUM(CASE WHEN is_delete THEN 0 ELSE 1 END) AS BIGINT)
               COUNT(DISTINCT version) AS n_batches
        FROM batches),
 rs AS (SELECT COUNT(*) AS n_rebased,
-              BIT_XOR({_hash60_sql(_ORDERS_HASH_SQL)}) AS xor_rebased
+              BIT_XOR({sql_row_hash_int(ORDERS_COLS_SQL)}) AS xor_rebased
        FROM rebased),
 ts AS (SELECT COUNT(*) AS n_target,
-              BIT_XOR({_hash60_sql(_ORDERS_HASH_SQL)}) AS xor_target
+              BIT_XOR({sql_row_hash_int(ORDERS_COLS_SQL)}) AS xor_target
        FROM v2)
 SELECT CAST(n_batches AS INT) AS n_batches, n_upserts, n_deletes,
        n_rebased, n_target, xor_rebased, xor_target,
@@ -931,8 +918,8 @@ def snap_verify_merkle(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def tree(df: DataFrame) -> DataFrame:
         keyed = df.select(
-            _hash60(F.md5(F.col("o_orderkey").cast("string"))).alias("hk"),
-            _hash60(_orders_hash_expr()).alias("h60"),
+            hash60(F.md5(F.col("o_orderkey").cast("string"))).alias("hk"),
+            row_hash_int(*orders_cols()).alias("h60"),
         )
         return _merkle_levels(keyed)
 
@@ -971,8 +958,8 @@ def snap_verify_merkle(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _merkle_sql(src_expr: str, hash_expr: str, tag: str) -> str:
     """CTE chain building one side's Merkle tree (mirrors _merkle_levels)."""
     depth = MERKLE_LEAVES.bit_length() - 1
-    h60 = _hash60_sql(hash_expr)
-    hk = _hash60_sql("md5(CAST(o_orderkey AS VARCHAR))")
+    h60 = sql_hash60(hash_expr)
+    hk = sql_md5_int60("CAST(o_orderkey AS VARCHAR)")
     ctes = [
         f"""{tag}_l{depth} AS (
   SELECT {depth} AS level, CAST({hk} % {MERKLE_LEAVES} AS BIGINT) AS idx,
@@ -1000,8 +987,8 @@ def _merkle_sql(src_expr: str, hash_expr: str, tag: str) -> str:
 
 _SNAP_MERKLE_SQL = f"""
 WITH b_rows AS ({_PERTURBED_SQL}),
-{_merkle_sql("orders", _ORDERS_HASH_SQL, "s")},
-{_merkle_sql("b_rows", _ORDERS_HASH_SQL, "b")}
+{_merkle_sql("orders", sql_row_hash(ORDERS_COLS_SQL), "s")},
+{_merkle_sql("b_rows", sql_row_hash(ORDERS_COLS_SQL), "b")}
 SELECT CAST(level AS INT) AS level, idx,
        s.n_rows AS n_src, b.n_rows AS n_bkp,
        s.digest AS digest_src, b.digest AS digest_bkp,
@@ -1027,8 +1014,8 @@ def _cdc_pair(prev: DataFrame, curr: DataFrame, version: int) -> DataFrame:
     vocabulary). Classification joins carry (key, 16-byte row hash)
     manifests only; payload rows are semi-joined out for touched keys —
     quiet days move almost nothing."""
-    a = prev.withColumn("_h", _orders_hash_expr())
-    b = curr.withColumn("_h", _orders_hash_expr())
+    a = prev.withColumn("_h", row_hash(*orders_cols()))
+    b = curr.withColumn("_h", row_hash(*orders_cols()))
     ins = (
         b.join(a.select("o_orderkey"), "o_orderkey", "left_anti")
         .select(*_CDC_COLS)
@@ -1188,9 +1175,9 @@ def _cdc_pair_sql(prev: str, curr: str, version: int) -> str:
 _SNAP_CDC_SQL = f"""
 WITH v1 AS ({_PERTURBED_SQL}),
 v2 AS ({_PERTURBED_V2_SQL}),
-a0 AS (SELECT *, {_ORDERS_HASH_SQL} AS h FROM orders),
-a1 AS (SELECT *, {_ORDERS_HASH_SQL} AS h FROM v1),
-a2 AS (SELECT *, {_ORDERS_HASH_SQL} AS h FROM v2)
+a0 AS (SELECT *, {sql_row_hash(ORDERS_COLS_SQL)} AS h FROM orders),
+a1 AS (SELECT *, {sql_row_hash(ORDERS_COLS_SQL)} AS h FROM v1),
+a2 AS (SELECT *, {sql_row_hash(ORDERS_COLS_SQL)} AS h FROM v2)
 {_cdc_pair_sql("a0", "a1", 1)}
 UNION ALL
 {_cdc_pair_sql("a1", "a2", 2)}
@@ -1200,9 +1187,9 @@ UNION ALL
 _SNAP_IVM_SQL = f"""
 WITH v1 AS ({_PERTURBED_SQL}),
 v2 AS ({_PERTURBED_V2_SQL}),
-a0 AS (SELECT *, {_ORDERS_HASH_SQL} AS h FROM orders),
-a1 AS (SELECT *, {_ORDERS_HASH_SQL} AS h FROM v1),
-a2 AS (SELECT *, {_ORDERS_HASH_SQL} AS h FROM v2),
+a0 AS (SELECT *, {sql_row_hash(ORDERS_COLS_SQL)} AS h FROM orders),
+a1 AS (SELECT *, {sql_row_hash(ORDERS_COLS_SQL)} AS h FROM v1),
+a2 AS (SELECT *, {sql_row_hash(ORDERS_COLS_SQL)} AS h FROM v2),
 feed AS (
 {_cdc_pair_sql("a0", "a1", 1)}
 UNION ALL
@@ -1271,7 +1258,7 @@ def snap_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
         s = df.select(
             F.lit(ver).alias("version"),
             F.col("o_orderkey").alias("key"),
-            _orders_hash_expr().alias("h"),
+            row_hash(*orders_cols()).alias("h"),
         )
         states = s if states is None else states.unionByName(s)
     w = Window.partitionBy("key").orderBy("version")
@@ -1322,12 +1309,12 @@ _SCD2_SQL = f"""
 WITH v1 AS ({_PERTURBED_SQL}),
 v2 AS ({_PERTURBED_V2_SQL}),
 states AS (
-  SELECT 0 AS version, o_orderkey AS key, {_ORDERS_HASH_SQL} AS h
+  SELECT 0 AS version, o_orderkey AS key, {sql_row_hash(ORDERS_COLS_SQL)} AS h
   FROM orders
   UNION ALL
-  SELECT 1, o_orderkey, {_ORDERS_HASH_SQL} FROM v1
+  SELECT 1, o_orderkey, {sql_row_hash(ORDERS_COLS_SQL)} FROM v1
   UNION ALL
-  SELECT 2, o_orderkey, {_ORDERS_HASH_SQL} FROM v2
+  SELECT 2, o_orderkey, {sql_row_hash(ORDERS_COLS_SQL)} FROM v2
 ), marked AS (
   SELECT key, version,
          CAST(h <> COALESCE(LAG(h) OVER w, '')
@@ -1506,7 +1493,7 @@ def snap_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return merged.select(
-        "o_orderkey", "action", _orders_hash_expr().alias("row_md5")
+        "o_orderkey", "action", row_hash(*orders_cols()).alias("row_md5")
     )
 
 
@@ -1542,7 +1529,7 @@ WITH changes AS (
   FROM orders t FULL OUTER JOIN changes c ON t.o_orderkey = c.o_orderkey
   WHERE c.op IS NULL OR c.op = 'upsert'
 )
-SELECT o_orderkey, action, {_ORDERS_HASH_SQL} AS row_md5 FROM merged
+SELECT o_orderkey, action, {sql_row_hash(ORDERS_COLS_SQL)} AS row_md5 FROM merged
 """
 
 
@@ -1607,15 +1594,15 @@ def snap_branch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     as snap_table_checksum."""
     base = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("key"),
-        _hash60(_orders_hash_expr()).alias("h0"),
+        row_hash_int(*orders_cols()).alias("h0"),
     )
     br_a = _perturbed_orders(spark, sf_dir).select(
         F.col("o_orderkey").alias("key"),
-        _hash60(_orders_hash_expr()).alias("ha"),
+        row_hash_int(*orders_cols()).alias("ha"),
     )
     br_b = _branch_b_orders(spark, sf_dir).select(
         F.col("o_orderkey").alias("key"),
-        _hash60(_orders_hash_expr()).alias("hb"),
+        row_hash_int(*orders_cols()).alias("hb"),
     )
     j = (
         base.withColumn("in0", F.lit(True))
@@ -1665,14 +1652,12 @@ def snap_branch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_H60_BASE = _hash60_sql(_ORDERS_HASH_SQL)
-
 _SNAP_BRANCH_MERGE_SQL = f"""
 WITH a_rows AS ({_PERTURBED_SQL}),
 b_rows AS ({_BRANCH_B_SQL}),
-m0 AS (SELECT o_orderkey AS key, {_H60_BASE} AS h0, TRUE AS in0 FROM orders),
-ma AS (SELECT o_orderkey AS key, {_H60_BASE} AS ha, TRUE AS ina FROM a_rows),
-mb AS (SELECT o_orderkey AS key, {_H60_BASE} AS hb, TRUE AS inb FROM b_rows),
+m0 AS (SELECT o_orderkey AS key, {sql_row_hash_int(ORDERS_COLS_SQL)} AS h0, TRUE AS in0 FROM orders),
+ma AS (SELECT o_orderkey AS key, {sql_row_hash_int(ORDERS_COLS_SQL)} AS ha, TRUE AS ina FROM a_rows),
+mb AS (SELECT o_orderkey AS key, {sql_row_hash_int(ORDERS_COLS_SQL)} AS hb, TRUE AS inb FROM b_rows),
 j AS (
   SELECT COALESCE(m0.key, ma.key, mb.key) AS key, h0, ha, hb, in0, ina, inb
   FROM m0 FULL OUTER JOIN ma ON m0.key = ma.key
@@ -1905,21 +1890,15 @@ def snap_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_linenumber",
     )
     gate = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        "|",
-                        F.col("l_orderkey").cast("string"),
-                        F.col("l_linenumber").cast("string"),
-                    )
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("bigint")
+        hash60(
+            F.md5(
+                F.concat_ws(
+                    "|",
+                    F.col("l_orderkey").cast("string"),
+                    F.col("l_linenumber").cast("string"),
+                )
+            )
+        )
         % DV_DELETE_MOD
         == 0
     )
@@ -1957,9 +1936,7 @@ _DV_SQL = f"""
 WITH li AS (
   SELECT CAST(l_orderkey // {DV_FILE_SPAN} AS BIGINT) AS file_id,
          l_orderkey, l_linenumber,
-         CAST(concat('0x', substr(md5(concat_ws('|',
-              CAST(l_orderkey AS VARCHAR),
-              CAST(l_linenumber AS VARCHAR))), 1, 15)) AS BIGINT)
+         {sql_md5_int60("concat_ws('|', CAST(l_orderkey AS VARCHAR), CAST(l_linenumber AS VARCHAR))")}
            % {DV_DELETE_MOD} = 0 AS deleted
   FROM lineitem
 )

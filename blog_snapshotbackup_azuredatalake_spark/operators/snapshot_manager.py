@@ -41,7 +41,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
 from blog_snapshotbackup_azuredatalake_spark.scratch import scratch_dir
-from blog_snapshotbackup_azuredatalake_spark.functions.hashing import row_hash
+from blog_snapshotbackup_azuredatalake_spark.functions.hashing import (
+    row_hash,
+    row_hash_int,
+    sql_row_hash_int,
+)
 from blog_snapshotbackup_azuredatalake_spark.operators.txnlog import TransactionLog
 
 
@@ -341,7 +345,9 @@ class SnapshotManager:
     # -- retention --------------------------------------------------------
     def purge(self, table: str, keep_last: int) -> list[int]:
         """Delete snapshots beyond the newest `keep_last`, never removing
-        a full snapshot an incremental still depends on."""
+        a full snapshot an incremental still depends on. The log commit
+        unpublishes them before any directory is deleted, so a purge that
+        dies mid-delete leaves only debris that `vacuum` reclaims."""
         import shutil
 
         ids = self.snapshot_ids(table)
@@ -353,8 +359,6 @@ class SnapshotManager:
                 keep.add(cur)
                 cur = self._read_meta(table, cur)["base"]
         purged = [i for i in ids if i not in keep]
-        for sid in purged:
-            shutil.rmtree(self._dir(table, sid))
         if purged:
             self.log.commit(
                 "purge",
@@ -369,6 +373,8 @@ class SnapshotManager:
                     for sid in purged
                 ],
             )
+        for sid in purged:
+            shutil.rmtree(self._dir(table, sid))
         return purged
 
     # -- housekeeping ------------------------------------------------------
@@ -737,10 +743,9 @@ def snap_restore_drill(spark: SparkSession, sf_dir: str) -> DataFrame:
     restore that drops a tombstone or resurrects a deleted key flips
     BOTH the fingerprint columns and the match flag."""
     from blog_snapshotbackup_azuredatalake_spark.operators.snapshot import (
-        _hash60,
-        _orders_hash_expr,
         _perturbed_orders,
         _perturbed_orders_v2,
+        orders_cols,
     )
     from blog_snapshotbackup_azuredatalake_spark.sources.catalog import (
         load_table,
@@ -756,7 +761,7 @@ def snap_restore_drill(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def fingerprint(df: DataFrame):
         row = (
-            df.select(_hash60(_orders_hash_expr()).alias("h"))
+            df.select(row_hash_int(*orders_cols()).alias("h"))
             .agg(
                 F.count(F.lit(1)).alias("n"),
                 F.expr("bit_xor(h)").alias("x"),
@@ -786,13 +791,12 @@ def snap_restore_drill(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _restore_drill_sql() -> str:
     from blog_snapshotbackup_azuredatalake_spark.operators.snapshot import (
-        _hash60_sql,
-        _ORDERS_HASH_SQL,
         _PERTURBED_SQL,
         _PERTURBED_V2_SQL,
+        ORDERS_COLS_SQL,
     )
 
-    h = _hash60_sql(_ORDERS_HASH_SQL)
+    h = sql_row_hash_int(ORDERS_COLS_SQL)
     selects = []
     # chain layout by construction: v0 full, v1/v2 deltas against v0
     for ver, (src, chain_len) in enumerate(

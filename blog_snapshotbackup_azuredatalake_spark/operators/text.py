@@ -19,6 +19,10 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from blog_snapshotbackup_azuredatalake_spark.functions.hashing import (
+    hash60,
+    sql_md5_int60,
+)
 from blog_snapshotbackup_azuredatalake_spark.functions.skew import (
     two_phase_rank,
 )
@@ -318,24 +322,18 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = F.size("toks")
     shingle_hashes = F.transform(
         F.sequence(F.lit(0), n - 5),
-        lambda i: F.conv(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        " ",
-                        F.element_at("toks", i + 1),
-                        F.element_at("toks", i + 2),
-                        F.element_at("toks", i + 3),
-                        F.element_at("toks", i + 4),
-                        F.element_at("toks", i + 5),
-                    )
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("bigint"),
+        lambda i: hash60(
+            F.md5(
+                F.concat_ws(
+                    " ",
+                    F.element_at("toks", i + 1),
+                    F.element_at("toks", i + 2),
+                    F.element_at("toks", i + 3),
+                    F.element_at("toks", i + 4),
+                    F.element_at("toks", i + 5),
+                )
+            )
+        ),
     )
     return with_toks.select(
         "doc_id",
@@ -345,7 +343,8 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_FINGERPRINT_SQL = """
+_SHINGLE_SQL = "concat_ws(' ', toks[i], toks[i+1], toks[i+2], toks[i+3], toks[i+4])"
+_FINGERPRINT_SQL = f"""
 WITH toked AS (
   SELECT doc_id, md5(text) AS content_md5,
          string_split(text, ' ') AS toks
@@ -354,9 +353,7 @@ WITH toked AS (
 SELECT doc_id, content_md5,
        CAST(len(toks) - 4 AS BIGINT) AS n_shingles,
        list_min(list_transform(range(1, len(toks) - 3),
-         i -> CAST(concat('0x', substr(md5(
-                concat_ws(' ', toks[i], toks[i+1], toks[i+2],
-                          toks[i+3], toks[i+4])), 1, 15)) AS BIGINT)))
+         i -> {sql_md5_int60(_SHINGLE_SQL)}))
          AS winnow_min_hash
 FROM toked
 """
@@ -408,7 +405,7 @@ def text_redact_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
         _PHONE_RE,
         "<PHONE>",
     )
-    h60 = F.conv(F.substring(F.md5(redacted), 1, 15), 16, 10).cast("bigint")
+    h60 = hash60(F.md5(redacted))
     per_doc = staged.select(
         "source",
         n_emails.alias("n_emails"),
@@ -425,6 +422,10 @@ def text_redact_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_REDACTED_SQL = (
+    f"regexp_replace(regexp_replace(ptext, '{_EMAIL_RE}', '<EMAIL>', 'g'),"
+    f" '{_PHONE_RE}', '<PHONE>', 'g')"
+)
 _REDACT_SQL = f"""
 WITH staged AS (
   SELECT doc_id, source,
@@ -443,11 +444,7 @@ WITH staged AS (
            AS n_emails,
          CAST(len(regexp_extract_all(ptext, '{_PHONE_RE}')) AS BIGINT)
            AS n_phones,
-         CAST(concat('0x', substr(md5(
-             regexp_replace(regexp_replace(ptext, '{_EMAIL_RE}', '<EMAIL>',
-                                           'g'),
-                            '{_PHONE_RE}', '<PHONE>', 'g')), 1, 15))
-           AS BIGINT) AS h
+         {sql_md5_int60(_REDACTED_SQL)} AS h
   FROM staged
 )
 SELECT source, COUNT(*) AS n_docs,
@@ -1459,11 +1456,11 @@ FROM per_doc GROUP BY source
 
 def _gram_novelty_sql() -> str:
     from blog_snapshotbackup_azuredatalake_spark.operators.dedup import (
-        _SQL_GRAM_HASHES,
-        _SQL_TOKH,
+        SQL_GRAM_HASHES,
+        SQL_TOKH,
     )
 
-    return _GRAM_NOVELTY_SQL_T.format(grams=_SQL_GRAM_HASHES, tokh=_SQL_TOKH)
+    return _GRAM_NOVELTY_SQL_T.format(grams=SQL_GRAM_HASHES, tokh=SQL_TOKH)
 
 
 # ---------------------------------------------------------------------------
@@ -1570,13 +1567,13 @@ FROM per_doc GROUP BY source
 
 def _boilerplate_sql() -> str:
     from blog_snapshotbackup_azuredatalake_spark.operators.dedup import (
-        _SQL_GRAM_HASHES,
-        _SQL_TOKH,
+        SQL_GRAM_HASHES,
+        SQL_TOKH,
     )
 
     return _BOILER_SQL_T.format(
-        grams=_SQL_GRAM_HASHES,
-        tokh=_SQL_TOKH,
+        grams=SQL_GRAM_HASHES,
+        tokh=SQL_TOKH,
         min_df=BOILER_MIN_DF,
         divisor=BOILER_DF_DIVISOR,
     )
@@ -1983,8 +1980,7 @@ _CLS_SQL = f"""
 WITH scored AS (
   SELECT source,
          list_sum(list_transform(string_split(text, ' '),
-           t -> CAST(concat('0x', substr(md5(t), 1, 15)) AS BIGINT)
-                % {CLS_WEIGHT_MOD}))
+           t -> {sql_md5_int60("t")} % {CLS_WEIGHT_MOD}))
            // len(string_split(text, ' ')) AS milli_score
   FROM documents
 )

@@ -2,11 +2,12 @@
 ADLS" re-expressed as a storage-agnostic writer (local path in tests,
 ``abfss://`` in production; Spark's writers don't care).
 
-``copy_table`` is the primitive the backup loop uses for the full-copy
-leg (SnapshotManager handles the incremental leg): partition layout for
-downstream pruning, bounded file sizes so a 100 TB copy lands as
-right-sized parquet instead of one file per shuffle partition, and an
-optional verification manifest written next to the data.
+``copy_table`` is a standalone bulk copy for one-off exports and
+migrations: partition layout for downstream pruning, bounded file sizes
+so a 100 TB copy lands as right-sized parquet instead of one file per
+shuffle partition, and an optional verification manifest written next
+to the data. It is not part of the backup loop: SnapshotManager writes
+both its full and its incremental snapshots itself.
 """
 
 from __future__ import annotations
@@ -319,10 +320,10 @@ def snap_format_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _format_roundtrip_sql() -> str:
     from blog_snapshotbackup_azuredatalake_spark.functions.hashing import (
-        sql_row_hash,
+        sql_row_hash_int,
     )
 
-    h = f"cast(concat('0x', substr({sql_row_hash(_RT_COLS)}, 1, 15)) as bigint)"
+    h = sql_row_hash_int(_RT_COLS)
     return f"""
 WITH base AS (
   SELECT COUNT(*) AS n_rows, bit_xor(h) AS xor_checksum

@@ -1,7 +1,7 @@
 """Round-10 probe: decompose the per-pair cosine cost in the ANN scan
 family.
 
-Every pair-scored entry computes `_dot_cos(q_emb, embedding)` per
+Every pair-scored entry computed `cosine_similarity(q_emb, embedding)` per
 (corpus row, query) pair: one zip_with+aggregate dot PLUS two
 aggregate norm folds — all HigherOrderFunction expressions, which are
 CodegenFallback (interpreted, boxed per element) in Spark 4.x. With a
@@ -12,11 +12,11 @@ recomputation of row-constant values.
 Variants (bruteforce top-k shape, full entry: score -> rank window ->
 filter <= k -> noop):
 
-  A current    _dot_cos per pair
+  A current    cosine_similarity per pair
   B hoisted    per-row norms precomputed on BOTH sides of the
-               crossJoin (same _norm expression -> identical doubles;
+               crossJoin (same l2_norm expression -> identical doubles;
                the quotient divides the same two values -> cosine
-               bit-identical), _dot per pair
+               bit-identical), dot_product per pair
   C unrolled   B + dot unrolled over the constant 64 dims as
                element_at products summed in the SAME left-to-right
                fold order (0.0 + t1 + t2 + ...), which whole-stage
@@ -55,10 +55,10 @@ def main() -> None:
 
     from pyspark.sql import functions as F, Window
 
-    from blog_snapshotbackup_azuredatalake_spark.operators.dedup import (
-        _dot,
-        _dot_cos,
-        _norm,
+    from blog_snapshotbackup_azuredatalake_spark.functions.vectors import (
+        cosine_similarity,
+        dot_product,
+        l2_norm,
     )
     from blog_snapshotbackup_azuredatalake_spark.operators.similarity import (
         N_QUERIES,
@@ -96,7 +96,7 @@ def main() -> None:
             .select(
                 "q_id",
                 "vec_id",
-                _dot_cos(F.col("q_emb"), F.col("embedding")).alias("cos"),
+                cosine_similarity("q_emb", "embedding").alias("cos"),
             )
         )
 
@@ -105,10 +105,10 @@ def main() -> None:
         emb = emb.select(
             "vec_id",
             "embedding",
-            _norm(F.col("embedding")).alias("e_nrm"),
+            l2_norm("embedding").alias("e_nrm"),
         )
         queries = queries.select(
-            "q_id", "q_emb", _norm(F.col("q_emb")).alias("q_nrm")
+            "q_id", "q_emb", l2_norm("q_emb").alias("q_nrm")
         )
         return (
             emb.crossJoin(F.broadcast(queries))
@@ -117,7 +117,7 @@ def main() -> None:
                 "q_id",
                 "vec_id",
                 (
-                    _dot(F.col("q_emb"), F.col("embedding"))
+                    dot_product("q_emb", "embedding")
                     / (F.col("q_nrm") * F.col("e_nrm"))
                 ).alias("cos"),
             )
@@ -128,10 +128,10 @@ def main() -> None:
         emb = emb.select(
             "vec_id",
             "embedding",
-            _norm(F.col("embedding")).alias("e_nrm"),
+            l2_norm("embedding").alias("e_nrm"),
         )
         queries = queries.select(
-            "q_id", "q_emb", _norm(F.col("q_emb")).alias("q_nrm")
+            "q_id", "q_emb", l2_norm("q_emb").alias("q_nrm")
         )
         return (
             emb.crossJoin(F.broadcast(queries))

@@ -1,13 +1,14 @@
 """Dump ``.explain("formatted")`` for a list of registered query keys.
 
-Round-10 optimization tooling: the judge cannot run Spark, so every
-plan claim in OPTIMIZATION_r10.md is backed by committed
-``plans/r10/<key>_{before,after}.txt`` files produced by this script.
+Plan claims are backed by committed ``plans/<dir>/<key>_{before,after}.txt``
+files produced by this script (round 10's are in ``plans/r10/``).
 
-    python scripts/explain_dump.py before emb_pq_adc ann_topk_ivfpq ...
-    python scripts/explain_dump.py after  emb_pq_adc ...
+    python scripts/explain_dump.py plans/r10 before emb_pq_adc ann_topk_ivfpq ...
+    python scripts/explain_dump.py plans/r10 after  emb_pq_adc ...
 
-Writes plans/r10/<key>_<tag>.txt for each key. Plans are built (not
+Writes OUT_DIR/<key>_<tag>.txt for each key; a relative OUT_DIR is taken
+from the repo root. For a "before" dump of an older commit, run this script
+from a checkout of that commit. Plans are built (not
 executed) — safe to run without contaminating timed measurements, but
 the guard still refuses while another Spark JVM is alive.
 """
@@ -24,8 +25,9 @@ from _guard import assert_no_spark_jvm  # noqa: E402
 
 
 def main() -> None:
-    tag = sys.argv[1]
-    keys = sys.argv[2:]
+    if len(sys.argv) < 4:
+        sys.exit("usage: explain_dump.py OUT_DIR TAG KEY [KEY ...]")
+    out, tag, keys = sys.argv[1], sys.argv[2], sys.argv[3:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     assert_no_spark_jvm()
 
@@ -37,7 +39,7 @@ def main() -> None:
     spark = get_session("explain_dump")
     spark.sparkContext.setLogLevel("ERROR")
     qs = entrymod.queries()
-    outdir = os.path.join(repo, "plans", "r10")
+    outdir = os.path.join(repo, out)
     os.makedirs(outdir, exist_ok=True)
     import contextlib
     import io

@@ -39,9 +39,11 @@ def main() -> None:
     from blog_snapshotbackup_azuredatalake_spark.functions.hints import (
         broadcast_if_bounded,
     )
+    from blog_snapshotbackup_azuredatalake_spark.functions.vectors import (
+        dot_product,
+        l2_norm,
+    )
     from blog_snapshotbackup_azuredatalake_spark.operators.dedup import (
-        _dot,
-        _norm,
         _sign_bucket,
     )
     from blog_snapshotbackup_azuredatalake_spark.operators.similarity import (
@@ -63,7 +65,7 @@ def main() -> None:
         "vec_id",
         "embedding",
         _sign_bucket(F.col("embedding"), dims).alias("pat"),
-        _norm(F.col("embedding")).alias("nrm"),
+        l2_norm("embedding").alias("nrm"),
     )
     oversize = (
         patted.groupBy("pat")
@@ -98,7 +100,7 @@ def main() -> None:
         F.col("x.vec_id").alias("src"),
         F.col("y.vec_id").alias("dst"),
         (
-            _dot(F.col("x.embedding"), F.col("y.embedding"))
+            dot_product("x.embedding", "y.embedding")
             / (F.col("x.nrm") * F.col("y.nrm"))
         ).alias("cos"),
     )

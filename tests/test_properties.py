@@ -25,13 +25,18 @@ from pyspark.sql.types import (
 
 from blog_snapshotbackup_azuredatalake_spark.functions.hashing import (
     SEP,
+    hash60,
     md5_int60,
     row_hash,
+    sql_hash60,
     sql_md5_int60,
 )
 from blog_snapshotbackup_azuredatalake_spark.functions.vectors import (
     cosine_similarity,
+    cosine_with_norms,
     dot_product,
+    l2_norm,
+    sql_cosine,
 )
 
 # no control chars (SEP itself excluded by design contract), ASCII-ish
@@ -68,12 +73,17 @@ def test_md5_int60_matches_duckdb(spark, s):
     df = spark.createDataFrame(
         [(s,)], StructType([StructField("x", StringType())])
     )
-    got = df.select(md5_int60("x").alias("h")).collect()[0]["h"]
+    row = df.select(
+        md5_int60("x").alias("h"), hash60(F.md5("x")).alias("h60")
+    ).collect()[0]
     want = duckdb.execute(
-        f"SELECT {sql_md5_int60('?')} AS h", [s]
-    ).fetchone()[0]
-    assert got == want
-    assert 0 <= got < 2**60
+        f"SELECT {sql_md5_int60('?')} AS h, {sql_hash60('md5(?)')} AS h60",
+        [s, s],
+    ).fetchone()
+    assert (row["h"], row["h60"]) == want
+    # the 60-bit truncation the operators run, against Python's md5
+    assert row["h60"] == int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
+    assert 0 <= row["h"] < 2**60
 
 
 def _nonzero(v):  # zero-norm → ANSI divide-by-zero; real embeddings aren't
@@ -105,6 +115,7 @@ def test_dot_and_cosine_match_python(spark, ab):
     row = df.select(
         dot_product("a", "b").alias("dot"),
         cosine_similarity("a", "b").alias("cos"),
+        cosine_with_norms("a", "b", l2_norm("a"), l2_norm("b")).alias("pre"),
     ).collect()[0]
     # identical fold: left-to-right double accumulation over float32 values
     import struct
@@ -118,6 +129,15 @@ def test_dot_and_cosine_match_python(spark, ab):
     nb = math.sqrt(sum(f32(y) * f32(y) for y in b))
     if na * nb != 0.0:
         assert row["cos"] == dot / (na * nb)
+        # the hoisted-norm form the pair scorers run is the same double
+        assert row["pre"] == row["cos"]
+        # and so is the DuckDB oracle's fold over the same float32 lists
+        ddb_cos = duckdb.execute(
+            f"SELECT {sql_cosine('a', 'b')} FROM "
+            "(SELECT CAST(? AS FLOAT[]) AS a, CAST(? AS FLOAT[]) AS b)",
+            [a, b],
+        ).fetchone()[0]
+        assert ddb_cos == row["cos"]
 
 
 def test_grams_of_short_docs_are_empty(spark):
@@ -130,7 +150,7 @@ def test_grams_of_short_docs_are_empty(spark):
     )
     # reuse the expression pipeline on an ad-hoc frame
     toks = F.transform(
-        F.split(F.col("text"), " "), lambda t: dedup._hash60(t) % dedup.P31
+        F.split(F.col("text"), " "), lambda t: hash60(F.md5(t)) % dedup.P31
     )
     staged = df.select(toks.alias("th"))
     th = F.col("th")

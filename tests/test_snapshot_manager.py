@@ -262,10 +262,12 @@ def test_restore_drill_detects_tampering(spark, tmp_path):
     # the direct state — the failure mode the drill exists to catch
     import shutil
 
+    from blog_snapshotbackup_azuredatalake_spark.functions.hashing import (
+        row_hash_int,
+    )
     from blog_snapshotbackup_azuredatalake_spark.operators.snapshot import (
-        _hash60,
-        _orders_hash_expr,
         _perturbed_orders,
+        orders_cols,
     )
 
     keyed = F.col("o_orderkey") % 10 == 0
@@ -283,7 +285,7 @@ def test_restore_drill_detects_tampering(spark, tmp_path):
 
     def fp(df):
         return tuple(
-            df.select(_hash60(_orders_hash_expr()).alias("h"))
+            df.select(row_hash_int(*orders_cols()).alias("h"))
             .agg(F.count(F.lit(1)), F.expr("bit_xor(h)"))
             .collect()[0]
         )
@@ -397,6 +399,50 @@ def test_crashed_writer_leaves_only_debris(spark, mgr, monkeypatch, crash):
     assert {r["path"] for r in report if r["deleted"]} == debris
     for sid in states:
         assert _sorted_rows(mgr.restore("t", sid)) == want[sid]
+
+
+def test_crashed_purge_leaves_only_debris(spark, mgr, monkeypatch):
+    """A purge that dies between deleting two snapshot directories must
+    not leave the log listing a deleted snapshot: every listed snapshot
+    restores exactly, the next purge succeeds, and vacuum reclaims
+    exactly the directory the crashed purge left behind."""
+    import shutil
+
+    v0, v1, v2, _ = _slice_states(spark)
+    key = "o_orderkey"
+    s0 = mgr.snapshot(v0, "t", key)
+    s1 = mgr.snapshot(v1, "t", key)
+    s2 = mgr.snapshot(v2, "t", key, force_full=True)
+    s3 = mgr.snapshot(v1, "t", key)
+    want = {
+        sid: _sorted_rows(df)
+        for sid, df in {s0: v0, s1: v1, s2: v2, s3: v1}.items()
+    }
+    real_rmtree = shutil.rmtree
+    calls = []
+
+    def rmtree(path, *args, **kwargs):
+        calls.append(path)
+        if len(calls) == 2:
+            raise _Crash(path)
+        real_rmtree(path, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(shutil, "rmtree", rmtree)
+        with pytest.raises(_Crash):
+            mgr.purge("t", keep_last=1)  # s3 and its base s2 are kept
+    assert mgr.snapshot_ids("t") == [s2, s3]
+    for sid in (s2, s3):
+        assert _sorted_rows(mgr.restore("t", sid)) == want[sid]
+
+    s4 = mgr.snapshot(v2, "t", key, force_full=True)
+    assert mgr.purge("t", keep_last=1) == [s2, s3]
+    assert mgr.snapshot_ids("t") == [s4]
+    report = mgr.vacuum(min_age_seconds=0.0)
+    assert {r["path"] for r in report if r["deleted"]} == {
+        f"t/snap_{s1:06d}"
+    }
+    assert _sorted_rows(mgr.restore("t", s4)) == want[s2]
 
 
 def test_store_without_recorded_schema_reads_the_same(spark, tmp_path):

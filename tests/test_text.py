@@ -126,8 +126,8 @@ def test_repetition_flags_planted_boilerplate(spark, tmp_path):
 
 def test_gram_novelty_conservation(spark, ddb):
     from blog_snapshotbackup_azuredatalake_spark.operators.dedup import (
-        _SQL_GRAM_HASHES,
-        _SQL_TOKH,
+        SQL_GRAM_HASHES,
+        SQL_TOKH,
     )
 
     rows = text.text_gram_novelty(spark, SF_DIR).collect()
@@ -135,9 +135,9 @@ def test_gram_novelty_conservation(spark, ddb):
     # the novel mass across sources equals the corpus' distinct grams
     n_distinct = ddb.execute(
         "SELECT COUNT(DISTINCT gram) FROM (SELECT unnest("
-        + _SQL_GRAM_HASHES
+        + SQL_GRAM_HASHES
         + ") AS gram FROM (SELECT doc_id, "
-        + _SQL_TOKH
+        + SQL_TOKH
         + " AS th FROM documents))"
     ).fetchone()[0]
     assert sum(r["novel_grams"] for r in rows) == n_distinct
