@@ -59,9 +59,10 @@ def cosine_with_norms(
     are CodegenFallback (interpreted, boxed per element), so 2/3 of the
     per-pair fold work is recomputing row-constant values. Hoisting the
     norms below the join evaluates them once per ROW: sf60de A/B
-    (scripts/cosine_hoist_probe.py, 1.2 M vectors) measured the
-    bruteforce shape 3.71 → 2.29 s min AND collapsed the warm-run
-    spread (3.7–13.1 → 2.3–3.1 s — less per-pair garbage). The probe
+    (SCALING.md, "Round 10, session 3 — per-pair interpreted-fold
+    sweep", 1.2 M vectors) measured the bruteforce shape 3.71 → 2.29 s
+    min AND collapsed the warm-run spread (3.7–13.1 → 2.3–3.1 s — less
+    per-pair garbage). The probe
     also rejected the unrolled-element_at dot (15.0 s, 4× WORSE: the
     64-term chain blows past codegen limits into a worse interpreter),
     so the lambda fold stays for the dot itself."""

@@ -30,6 +30,7 @@ import hashlib
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from blog_snapshotbackup_azuredatalake_spark import substrate
 from blog_snapshotbackup_azuredatalake_spark.functions.hashing import (
     hash60,
     sql_md5_int60,
@@ -572,41 +573,12 @@ def capped_minhash_pairs(docs: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Seven entries (minhash / lsh_calibration / incremental / cluster_cc /
 # cluster_sizes / keep_best / split_leakage_safe) consume the same
-# grams → band-index → verified-pairs → CC-labels chain; each used to
-# rebuild it privately, so a suite run paid the shingle+minhash pass
-# up to 7× and the CC fixpoint loop 4× (~37 s of the sf0.1 bench was
-# repeated work — the same disease the graph suite was cured of with
-# _GRAPH_CACHE). Build-if-absent keyed (applicationId, sf_dir):
-# entries stay standalone, the first caller materializes, the rest
-# reuse. Entries must NOT unpersist a cached base — the cache owns
-# lifetime; call dedup_cache_clear() for explicit teardown.
+# grams → band-index → verified-pairs → CC-labels chain, built once per
+# session through the package substrate cache (substrate.py).
 
-_DEDUP_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
-def _dedup_cache_key(spark: SparkSession, sf_dir: str, name: str):
-    return (spark.sparkContext.applicationId, str(sf_dir), name)
-
-
-def dedup_cache_clear() -> None:
-    """Drop every cached dedup substrate relation. persist()-backed
-    entries (grams, mh_bands) are unpersisted — that frees their
-    cache-manager blocks immediately. localCheckpoint-backed entries
-    (minhash_pairs, star_pairs, cc_labels) have NO cache-manager entry
-    — unpersist would be a silent no-op — so their executor blocks are
-    reclaimed by the ContextCleaner once this registry drops the last
-    reference and Python GC runs (triggered here so teardown is
-    prompt, not eventual)."""
-    import gc
-
-    for df in _DEDUP_CACHE.values():
-        try:
-            if df.storageLevel.useMemory or df.storageLevel.useDisk:
-                df.unpersist()
-        except Exception:
-            pass  # session may already be gone
-    _DEDUP_CACHE.clear()
-    gc.collect()  # lets the ContextCleaner release checkpoint RDD blocks
+# names the benchmark harness (perfbench/) reads
+_DEDUP_CACHE = substrate.CACHE
+dedup_cache_clear = substrate.clear
 
 
 def grams_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -616,17 +588,12 @@ def grams_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     The materialization barrier also keeps CollapseProject from
     re-inlining the token-hash array into the gram lambda when the
     relation feeds a join (§6 trap — measured O(tokens²·md5))."""
-    key = _dedup_cache_key(spark, sf_dir, "grams")
-    df = _DEDUP_CACHE.get(key)
-    if df is None:
-        from pyspark import StorageLevel
-
-        df = _docs_with_grams(spark, sf_dir).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        df.count()
-        _DEDUP_CACHE[key] = df
-    return df
+    return substrate.cached(
+        spark,
+        sf_dir,
+        "grams",
+        lambda: substrate.persisted(_docs_with_grams(spark, sf_dir)),
+    )
 
 
 def mh_bands_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -635,17 +602,12 @@ def mh_bands_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     subset consumers (dedup_incremental's new/corpus split) FILTER
     this one index instead of re-banding their slices. 8 small rows
     per doc: columnar persist."""
-    key = _dedup_cache_key(spark, sf_dir, "mh_bands")
-    df = _DEDUP_CACHE.get(key)
-    if df is None:
-        from pyspark import StorageLevel
-
-        df = mh_bands(grams_cached(spark, sf_dir)).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        df.count()
-        _DEDUP_CACHE[key] = df
-    return df
+    return substrate.cached(
+        spark,
+        sf_dir,
+        "mh_bands",
+        lambda: substrate.persisted(mh_bands(grams_cached(spark, sf_dir))),
+    )
 
 
 def minhash_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -654,27 +616,25 @@ def minhash_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     report is ≤ MATCH_CAP rows per doc BY CONSTRUCTION, so
     localCheckpoint (row-blocks) is the right materialization and it
     cuts the band-window lineage for downstream consumers."""
-    key = _dedup_cache_key(spark, sf_dir, "minhash_pairs")
-    df = _DEDUP_CACHE.get(key)
-    if df is None:
+
+    def build() -> DataFrame:
         cand = _successor_cands(
             mh_bands_cached(spark, sf_dir), ["band_id", "band_hash"]
         )
         verified = _verify_jaccard(cand, grams_cached(spark, sf_dir))
-        df = _cap_per_doc(
+        return _cap_per_doc(
             verified, [F.desc("jaccard"), F.asc("doc_b")]
         ).localCheckpoint(eager=True)
-        _DEDUP_CACHE[key] = df
-    return df
+
+    return substrate.cached(spark, sf_dir, "minhash_pairs", build)
 
 
 def star_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Build-if-absent verified STAR edges (doc_a, doc_b, jaccard) —
     see star_pairs; the CC feed. ≤ 1 edge per (doc, band) BY
     CONSTRUCTION: localCheckpoint to cut lineage under the CC loop."""
-    key = _dedup_cache_key(spark, sf_dir, "star_pairs")
-    df = _DEDUP_CACHE.get(key)
-    if df is None:
+
+    def build() -> DataFrame:
         bands = mh_bands_cached(spark, sf_dir)
         anch = bands.groupBy("band_id", "band_hash").agg(
             F.min("doc_id").alias("doc_a")
@@ -685,11 +645,11 @@ def star_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("doc_a", F.col("doc_id").alias("doc_b"))
             .distinct()
         )
-        df = _verify_jaccard(
+        return _verify_jaccard(
             cand, grams_cached(spark, sf_dir)
         ).localCheckpoint(eager=True)
-        _DEDUP_CACHE[key] = df
-    return df
+
+    return substrate.cached(spark, sf_dir, "star_pairs", build)
 
 
 def cc_labels_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -697,29 +657,19 @@ def cc_labels_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the near-dup STAR-edge graph (star_pairs_cached — bucket
     connectivity at linear edge count) — the fold consumed by
     cluster_cc / cluster_sizes / keep_best / split_leakage_safe /
-    near_dup_inflation. connected_components already returns a
-    checkpointed node-sized frame; the cache just stores it. The CC
-    iteration budget is env-tunable (SPARK_GRAFT_CC_MAX_ITERS) so a
-    legitimately deep pair graph has a recovery path that isn't
-    editing library code."""
-    import os
+    near_dup_inflation. connected_components (MAX_CC_ITERS rounds)
+    already returns a checkpointed node-sized frame; the cache just
+    stores it."""
+    from blog_snapshotbackup_azuredatalake_spark.operators.graph import (
+        connected_components,
+    )
 
-    key = _dedup_cache_key(spark, sf_dir, "cc_labels")
-    df = _DEDUP_CACHE.get(key)
-    if df is None:
-        from blog_snapshotbackup_azuredatalake_spark.operators.graph import (
-            MAX_CC_ITERS,
-            connected_components,
-        )
-
-        max_iters = int(
-            os.environ.get("SPARK_GRAFT_CC_MAX_ITERS", MAX_CC_ITERS)
-        )
-        df = connected_components(
-            star_pairs_cached(spark, sf_dir), max_iters=max_iters
-        )
-        _DEDUP_CACHE[key] = df
-    return df
+    return substrate.cached(
+        spark,
+        sf_dir,
+        "cc_labels",
+        lambda: connected_components(star_pairs_cached(spark, sf_dir)),
+    )
 
 
 def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from blog_snapshotbackup_azuredatalake_spark import substrate
 from blog_snapshotbackup_azuredatalake_spark.functions.hashing import (
     hash60,
     sql_md5_int60,
@@ -134,13 +135,12 @@ def connected_components(pairs: DataFrame, max_iters: int = MAX_CC_ITERS) -> Dat
         # with pointer jumping each round roughly doubles reach, so
         # max_iters=20 covers component diameters past 2^20; running
         # out anyway means something pathological — loud-fail rather
-        # than return a silently split census. max_iters is plumbed
-        # through cc_labels_cached via SPARK_GRAFT_CC_MAX_ITERS.
+        # than return a silently split census.
         raise RuntimeError(
             "connected_components did not converge within "
             f"{max_iters} rounds (label sum still decreasing); "
-            "raise max_iters (env SPARK_GRAFT_CC_MAX_ITERS for the "
-            "dedup substrate cache) — the result would be a wrong census"
+            "raise max_iters (MAX_CC_ITERS for the substrate-cached "
+            "callers) — the result would be a wrong census"
         )
     return labels
 
@@ -755,30 +755,13 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 # session-scoped substrate cache: the graph suite shares its bases
 # ---------------------------------------------------------------------------
 # Six entries consume the co-purchase edge base and two more consume
-# the kNN edge list; each used to rebuild + re-persist them privately,
-# so a suite run paid the lineitem self-join 6× — graph_modularity
-# alone paid it twice (once itself, once inside its internal LPA run).
-# Entries stay standalone via build-if-absent: the first caller in a
-# session builds and materializes, the rest reuse. Keyed by
-# (applicationId, sf_dir) so fresh sessions and different SFs rebuild.
-# Entries must NOT unpersist a cached base — the cache owns lifetime;
-# call graph_cache_clear() for explicit teardown.
+# the kNN edge list; graph_modularity also reuses the LPA labels. Each
+# base is built once per session through the package substrate cache
+# (substrate.py).
 
-_GRAPH_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
-def _cache_key(spark: SparkSession, sf_dir: str, name: str):
-    return (spark.sparkContext.applicationId, str(sf_dir), name)
-
-
-def graph_cache_clear() -> None:
-    """Unpersist and drop every cached substrate relation."""
-    for df in _GRAPH_CACHE.values():
-        try:
-            df.unpersist()
-        except Exception:
-            pass  # session may already be gone
-    _GRAPH_CACHE.clear()
+# names the benchmark harness (perfbench/) reads
+_GRAPH_CACHE = substrate.CACHE
+graph_cache_clear = substrate.clear
 
 
 def copurchase_edges_cached(
@@ -788,17 +771,12 @@ def copurchase_edges_cached(
     (persist MEMORY_AND_DISK + count — compressed, spillable, lineage
     kept; the §6 recipe. localCheckpoint row-blocks OOM'd at 120 M
     edges on relations of exactly this shape)."""
-    key = _cache_key(spark, sf_dir, "copurchase_edges")
-    df = _GRAPH_CACHE.get(key)
-    if df is None:
-        from pyspark import StorageLevel
-
-        df = _copurchase_edges(spark, sf_dir).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        df.count()
-        _GRAPH_CACHE[key] = df
-    return df
+    return substrate.cached(
+        spark,
+        sf_dir,
+        "copurchase_edges",
+        lambda: substrate.persisted(_copurchase_edges(spark, sf_dir)),
+    )
 
 
 def knn_graph_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -809,16 +787,16 @@ def knn_graph_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph its sibling entry had just computed — the round-7 sf10 suite
     measured the rebuild at 66 of its 88 s. n·k rows, node-scale:
     localCheckpoint."""
-    key = _cache_key(spark, sf_dir, "knn_graph_full")
-    df = _GRAPH_CACHE.get(key)
-    if df is None:
-        from blog_snapshotbackup_azuredatalake_spark.operators.similarity import (  # noqa: E501
-            ann_knn_graph,
-        )
+    from blog_snapshotbackup_azuredatalake_spark.operators.similarity import (  # noqa: E501
+        ann_knn_graph,
+    )
 
-        df = ann_knn_graph(spark, sf_dir).localCheckpoint(eager=True)
-        _GRAPH_CACHE[key] = df
-    return df
+    return substrate.cached(
+        spark,
+        sf_dir,
+        "knn_graph_full",
+        lambda: ann_knn_graph(spark, sf_dir).localCheckpoint(eager=True),
+    )
 
 
 def knn_edges_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -827,12 +805,12 @@ def knn_edges_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     rebuilt (full LSH bucketing + top-k) by each. A projection of the
     checkpointed full graph (knn_graph_cached), so no second
     materialization is needed."""
-    key = _cache_key(spark, sf_dir, "knn_edges")
-    df = _GRAPH_CACHE.get(key)
-    if df is None:
-        df = knn_graph_cached(spark, sf_dir).select("src", "dst")
-        _GRAPH_CACHE[key] = df
-    return df
+    return substrate.cached(
+        spark,
+        sf_dir,
+        "knn_edges",
+        lambda: knn_graph_cached(spark, sf_dir).select("src", "dst"),
+    )
 
 
 # adjacency broadcast budget for the triangle intersect plan. The
@@ -848,6 +826,93 @@ def knn_edges_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (§6 broadcast-audit rule).
 TRI_ADJ_MAX_BYTES = 1 << 30
 TRI_ADJ_MAX_ROWS = (1 << 31) - 2  # JVM limit() is int-bounded
+
+
+def _oriented_intersect(
+    spark: SparkSession, sf_dir: str, edges: DataFrame, name: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The degree-oriented adjacency-intersect plan over an undirected
+    (u, v) edge base, shared by the exact and the sampled triangle
+    census. Returns (deg, o, common): node degrees, the oriented edges
+    (src → dst, lower (degree, id) endpoint first) and one row per
+    oriented edge with c = |N⁺(src) ∩ N⁺(dst)|. o and the adjacency
+    are edge-scale persists owned by the substrate cache (keys
+    ``{name}_oriented`` / ``{name}_adjacency``), so repeat calls in one
+    session — bench.py's min-of-2 never clears the cache — reuse ONE
+    materialization instead of stacking duplicate persisted edge-sized
+    relations in storage."""
+    from pyspark import StorageLevel
+
+    from blog_snapshotbackup_azuredatalake_spark.functions.hints import (
+        would_broadcast,
+    )
+
+    deg = (
+        edges.select(F.col("u").alias("node"))
+        .unionByName(edges.select(F.col("v").alias("node")))
+        .groupBy("node")
+        .agg(F.count(F.lit(1)).alias("deg"))
+    )
+
+    def orient() -> DataFrame:
+        du = deg.select(
+            F.col("node").alias("u"), F.col("deg").alias("deg_u")
+        )
+        dv = deg.select(
+            F.col("node").alias("v"), F.col("deg").alias("deg_v")
+        )
+        lower_first = (F.col("deg_u") < F.col("deg_v")) | (
+            (F.col("deg_u") == F.col("deg_v")) & (F.col("u") < F.col("v"))
+        )
+        return substrate.persisted(
+            edges.join(du, "u")
+            .join(dv, "v")
+            .select(
+                F.when(lower_first, F.col("u"))
+                .otherwise(F.col("v"))
+                .alias("src"),
+                F.when(lower_first, F.col("v"))
+                .otherwise(F.col("u"))
+                .alias("dst"),
+            ),
+            StorageLevel.MEMORY_AND_DISK_DESER,
+        )
+
+    o = substrate.cached(spark, sf_dir, f"{name}_oriented", orient)
+    # node-sized rows, m payload — the broadcast probe hits the cache
+    adj = substrate.cached(
+        spark,
+        sf_dir,
+        f"{name}_adjacency",
+        lambda: substrate.persisted(
+            o.groupBy("src").agg(
+                F.sort_array(F.collect_list("dst")).alias("nbrs")
+            ),
+            StorageLevel.MEMORY_AND_DISK_DESER,
+        ),
+    )
+    # ONE probe decides for both projections (each probe scans adj;
+    # two separate byte probes over a 120M-entry adjacency measurably
+    # doubled the pre-join cost at sf10)
+    hint = (
+        F.broadcast
+        if would_broadcast(
+            adj, max_rows=TRI_ADJ_MAX_ROWS, max_bytes=TRI_ADJ_MAX_BYTES
+        )
+        # past the budget: explicit shuffle-hash, never sort-merge —
+        # an SMJ here would sort the 2m-row edge stream (§6 recipe)
+        else (lambda d: d.hint("shuffle_hash"))
+    )
+    nu = hint(adj.select("src", F.col("nbrs").alias("nu")))
+    nv = hint(
+        adj.select(F.col("src").alias("dst"), F.col("nbrs").alias("nv"))
+    )
+    common = (
+        o.join(nu, "src")
+        .join(nv, "dst")
+        .select(F.size(F.array_intersect("nu", "nv")).alias("c"))
+    )
+    return deg, o, common
 
 
 def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -874,77 +939,9 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     no enumeration needed for a count). Edge-sized relations cached
     COLUMNAR per the §6 recipe."""
     e0 = copurchase_edges_cached(spark, sf_dir)
-    deg = (
-        e0.select(F.col("u").alias("node"))
-        .unionByName(e0.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
-    # o and adj are edge-scale persists: owned by _GRAPH_CACHE (build-
-    # if-absent) so repeat calls in one session — bench.py's min-of-2
-    # never calls graph_cache_clear — reuse ONE materialization instead
-    # of stacking duplicate persisted edge-sized relations in storage
-    o_key = _cache_key(spark, sf_dir, "tri_oriented")
-    adj_key = _cache_key(spark, sf_dir, "tri_adjacency")
-    o = _GRAPH_CACHE.get(o_key)
-    if o is None:
-        du = deg.select(
-            F.col("node").alias("u"), F.col("deg").alias("deg_u")
-        )
-        dv = deg.select(
-            F.col("node").alias("v"), F.col("deg").alias("deg_v")
-        )
-        lower_first = (F.col("deg_u") < F.col("deg_v")) | (
-            (F.col("deg_u") == F.col("deg_v")) & (F.col("u") < F.col("v"))
-        )
-        o = (
-            e0.join(du, "u")
-            .join(dv, "v")
-            .select(
-                F.when(lower_first, F.col("u"))
-                .otherwise(F.col("v"))
-                .alias("src"),
-                F.when(lower_first, F.col("v"))
-                .otherwise(F.col("u"))
-                .alias("dst"),
-            )
-            .persist()
-        )
-        o.count()  # materialize columnar — o is edge-sized (§6 recipe)
-        _GRAPH_CACHE[o_key] = o
-    adj = _GRAPH_CACHE.get(adj_key)
-    if adj is None:
-        adj = o.groupBy("src").agg(
-            F.sort_array(F.collect_list("dst")).alias("nbrs")
-        ).persist()
-        adj.count()  # node-sized rows, m payload — probe hits cache
-        _GRAPH_CACHE[adj_key] = adj
-    # ONE probe decides for both projections (each probe scans adj;
-    # two separate byte probes over a 120M-entry adjacency measurably
-    # doubled the pre-join cost at sf10)
-    from blog_snapshotbackup_azuredatalake_spark.functions.hints import (
-        would_broadcast,
-    )
-
-    hint = (
-        F.broadcast
-        if would_broadcast(
-            adj, max_rows=TRI_ADJ_MAX_ROWS, max_bytes=TRI_ADJ_MAX_BYTES
-        )
-        # past the budget: explicit shuffle-hash, never sort-merge —
-        # an SMJ here would sort the 2m-row edge stream (§6 recipe)
-        else (lambda d: d.hint("shuffle_hash"))
-    )
-    nu = hint(adj.select("src", F.col("nbrs").alias("nu")))
-    nv = hint(
-        adj.select(F.col("src").alias("dst"), F.col("nbrs").alias("nv"))
-    )
-    wedge_agg = (
-        o.join(nu, "src")
-        .join(nv, "dst")
-        .select(F.size(F.array_intersect("nu", "nv")).alias("c"))
-        .groupBy()
-        .agg(F.coalesce(F.sum("c"), F.lit(0)).alias("n_triangles"))
+    deg, o, common = _oriented_intersect(spark, sf_dir, e0, "tri")
+    wedge_agg = common.groupBy().agg(
+        F.coalesce(F.sum("c"), F.lit(0)).alias("n_triangles")
     )
     odeg_agg = (
         o.groupBy("src")
@@ -1040,84 +1037,23 @@ def graph_triangle_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     subgraph, and report T̂ = T_s · {TRI_SAMPLE_DEN}³. Every triangle
     survives sampling with p³, so E[T̂] = T; the entry carries the
     sampled count alongside the estimate so the scale-up factor is
-    auditable. Sampled-edge relations ride the session graph cache."""
-    from pyspark import StorageLevel
-
+    auditable. Sampled-edge relations ride the session substrate cache."""
     e0 = copurchase_edges_cached(spark, sf_dir)
     keep = (
         hash60(F.md5(F.concat_ws("_", F.col("u"), F.col("v")))) % TRI_SAMPLE_DEN
         == 0
     )
-    es_key = _cache_key(spark, sf_dir, "tri_est_edges")
-    es = _GRAPH_CACHE.get(es_key)
-    if es is None:
-        es = e0.filter(keep).persist(StorageLevel.MEMORY_AND_DISK)
-        es.count()
-        _GRAPH_CACHE[es_key] = es
-    deg = (
-        es.select(F.col("u").alias("node"))
-        .unionByName(es.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("deg"))
+    es = substrate.cached(
+        spark,
+        sf_dir,
+        "tri_est_edges",
+        lambda: substrate.persisted(e0.filter(keep)),
     )
-    du = deg.select(F.col("node").alias("u"), F.col("deg").alias("deg_u"))
-    dv = deg.select(F.col("node").alias("v"), F.col("deg").alias("deg_v"))
-    lower_first = (F.col("deg_u") < F.col("deg_v")) | (
-        (F.col("deg_u") == F.col("deg_v")) & (F.col("u") < F.col("v"))
-    )
-    adj_key = _cache_key(spark, sf_dir, "tri_est_adjacency")
-    adj = _GRAPH_CACHE.get(adj_key)
-    o_key = _cache_key(spark, sf_dir, "tri_est_oriented")
-    o = _GRAPH_CACHE.get(o_key)
-    if o is None:
-        o = (
-            es.join(du, "u")
-            .join(dv, "v")
-            .select(
-                F.when(lower_first, F.col("u"))
-                .otherwise(F.col("v"))
-                .alias("src"),
-                F.when(lower_first, F.col("v"))
-                .otherwise(F.col("u"))
-                .alias("dst"),
-            )
-            .persist()
-        )
-        o.count()
-        _GRAPH_CACHE[o_key] = o
-    if adj is None:
-        adj = (
-            o.groupBy("src")
-            .agg(F.sort_array(F.collect_list("dst")).alias("nbrs"))
-            .persist()
-        )
-        adj.count()
-        _GRAPH_CACHE[adj_key] = adj
-    from blog_snapshotbackup_azuredatalake_spark.functions.hints import (
-        would_broadcast,
-    )
-
-    hint = (
-        F.broadcast
-        if would_broadcast(
-            adj, max_rows=TRI_ADJ_MAX_ROWS, max_bytes=TRI_ADJ_MAX_BYTES
-        )
-        else (lambda d: d.hint("shuffle_hash"))
-    )
-    nu = hint(adj.select("src", F.col("nbrs").alias("nu")))
-    nv = hint(
-        adj.select(F.col("src").alias("dst"), F.col("nbrs").alias("nv"))
-    )
-    tri_s = (
-        o.join(nu, "src")
-        .join(nv, "dst")
-        .select(F.size(F.array_intersect("nu", "nv")).alias("c"))
-        .groupBy()
-        .agg(
-            F.coalesce(F.sum("c"), F.lit(0))
-            .cast("bigint")
-            .alias("n_triangles_sampled")
-        )
+    _, _, common = _oriented_intersect(spark, sf_dir, es, "tri_est")
+    tri_s = common.groupBy().agg(
+        F.coalesce(F.sum("c"), F.lit(0))
+        .cast("bigint")
+        .alias("n_triangles_sampled")
     )
     counts = (
         e0.groupBy()
@@ -1420,12 +1356,9 @@ def lpa_labels_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     by graph_community_lpa and graph_modularity (which previously
     re-ran the full propagation internally). Node-sized, so the
     per-round localCheckpoint of the last round IS the cache."""
-    key = _cache_key(spark, sf_dir, "lpa_labels")
-    df = _GRAPH_CACHE.get(key)
-    if df is None:
-        df = _lpa_label_relation(spark, sf_dir)
-        _GRAPH_CACHE[key] = df
-    return df
+    return substrate.cached(
+        spark, sf_dir, "lpa_labels", lambda: _lpa_label_relation(spark, sf_dir)
+    )
 
 
 def _lpa_label_relation(spark: SparkSession, sf_dir: str) -> DataFrame:

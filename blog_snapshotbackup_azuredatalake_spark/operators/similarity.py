@@ -878,10 +878,10 @@ def ann_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate pairs to ≤ n·{KNN_BUCKET_CAP} AT ANY n by construction,
     trading only recall WITHIN capped mega-buckets, whose members are
     near-interchangeable as neighbors. Round-8 instrumentation
-    (scripts/knn_width_probe.py, SCALING.md) measured the bound live:
-    at 600 k→1.2 M vectors the pattern space saturates at ~1.6–1.8 k
-    patterns, EVERY pattern is oversize at 1.2 M, and candidate pairs
-    grow 186.6 M→389.6 M — 2.09× for 2× n, pair-alpha 1.06. (The
+    (SCALING.md, "Round 8: ann_knn_graph width-step DECIDED") measured
+    the bound live: at 600 k→1.2 M vectors the pattern space
+    saturates at ~1.6–1.8 k patterns, EVERY pattern is oversize at
+    1.2 M, and candidate pairs grow 186.6 M→389.6 M — 2.09× for 2× n, pair-alpha 1.06. (The
     round-7 "trigger the width step earlier" idea is REFUTED by the
     same probe: one extra pattern bit removes only ~4% of pairs,
     because the saturated mega-patterns, not expected occupancy, carry

@@ -2,7 +2,8 @@
 
 import pytest
 
-from blog_snapshotbackup_azuredatalake_spark.operators import dedup, similarity
+from blog_snapshotbackup_azuredatalake_spark import substrate
+from blog_snapshotbackup_azuredatalake_spark.operators import dedup, graph, similarity
 from tests.conftest import SF_DIR, assert_matches_oracle
 
 
@@ -349,27 +350,38 @@ def test_nprobe_curve_monotone(spark):
 
 def test_dedup_substrate_cache_reuse_and_teardown(spark):
     """The near-dup family shares one build-if-absent substrate chain
-    (grams → bands → pairs → CC labels); teardown unpersists and a
-    rebuilt substrate yields the identical pair set."""
-    dedup.dedup_cache_clear()
-    first = sorted(
-        (r["doc_a"], r["doc_b"])
-        for r in dedup.minhash_pairs_cached(spark, SF_DIR).collect()
-    )
-    # the chain registered its entries, keyed by (app, sf_dir, name)
-    names = {k[2] for k in dedup._DEDUP_CACHE}
+    (grams → bands → pairs → CC labels) and the graph family its own
+    bases, in ONE session cache: one clear() tears both down and the
+    rebuilt substrates yield identical rows."""
+    substrate.clear()
+
+    def build():
+        pairs = sorted(
+            (r["doc_a"], r["doc_b"])
+            for r in dedup.minhash_pairs_cached(spark, SF_DIR).collect()
+        )
+        labels = sorted(
+            tuple(r) for r in graph.lpa_labels_cached(spark, SF_DIR).collect()
+        )
+        return pairs, labels
+
+    first = build()
+    # both chains registered their entries, keyed by (app, sf_dir, name)
+    names = {k[2] for k in substrate.CACHE}
     assert {"grams", "mh_bands", "minhash_pairs"} <= names
+    assert {"copurchase_edges", "lpa_labels"} <= names
     # a second call returns the SAME cached frame (no rebuild)
-    assert dedup.minhash_pairs_cached(spark, SF_DIR) is dedup._DEDUP_CACHE[
-        dedup._dedup_cache_key(spark, SF_DIR, "minhash_pairs")
+    assert dedup.minhash_pairs_cached(spark, SF_DIR) is substrate.CACHE[
+        substrate.key(spark, SF_DIR, "minhash_pairs")
     ]
+    assert graph.lpa_labels_cached(spark, SF_DIR) is substrate.CACHE[
+        substrate.key(spark, SF_DIR, "lpa_labels")
+    ]
+    # the family names are the one cache and the one clear
+    assert dedup._DEDUP_CACHE is graph._GRAPH_CACHE is substrate.CACHE
     dedup.dedup_cache_clear()
-    assert not dedup._DEDUP_CACHE
-    again = sorted(
-        (r["doc_a"], r["doc_b"])
-        for r in dedup.minhash_pairs_cached(spark, SF_DIR).collect()
-    )
-    assert first == again
+    assert not substrate.CACHE
+    assert first == build()
 
 
 def test_cc_labels_cached_consistent_with_pairs(spark):

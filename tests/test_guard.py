@@ -53,13 +53,17 @@ def test_env_tag_mode(monkeypatch, capsys):
 
 
 def test_every_scale_runner_calls_guard():
-    runners = [
+    runners = {
         f
         for f in os.listdir(SCRIPTS)
-        if f.endswith("_scale.py")
-        or f in ("isolated_remeasure.py", "minhash_decompose.py")
-    ]
-    assert len(runners) >= 9
+        if f.endswith("_scale.py") or f == "isolated_remeasure.py"
+    }
+    assert runners == {
+        "family_scale.py",
+        "isolated_remeasure.py",
+        "knn_recall_scale.py",
+        "streaming_scale.py",
+    }
     for f in runners:
         src = open(os.path.join(SCRIPTS, f)).read()
         assert "assert_no_spark_jvm()" in src, f"{f} missing guard call"
