@@ -2,9 +2,10 @@
 
 The one definition of the cosine fold, in Spark (``dot_product``,
 ``l2_norm``, ``cosine_similarity``, ``cosine_with_norms``) and in DuckDB
-(``sql_cosine``). Both fold left to right in double regardless of the
-array element type, so the two engines agree bit-for-bit on float32
-inputs.
+(``sql_cosine``), of the squared-L2 fold (``l2_sq``/``sql_l2_sq``), and
+of the sign-pattern LSH bucket (``sign_bucket``/``sql_sign_bucket``).
+The folds run left to right in double regardless of the array element
+type, so the two engines agree bit-for-bit on float32 inputs.
 
 ``F.zip_with`` + ``F.aggregate`` avoid any Python round-trip per row,
 but note they are CodegenFallback in Spark 4.x (interpreted lambda
@@ -67,6 +68,52 @@ def cosine_with_norms(
     64-term chain blows past codegen limits into a worse interpreter),
     so the lambda fold stays for the dot itself."""
     return dot_product(a, b) / (_col(na) * _col(nb))
+
+
+def l2_sq(a: Column | str, b: Column | str) -> Column:
+    """Σ (aᵢ-bᵢ)² as a left-to-right double fold — the distance every
+    IVF/k-means centroid argmin and every L2 re-rank scores with."""
+    return F.aggregate(
+        F.zip_with(
+            _col(a),
+            _col(b),
+            lambda x, y: (x.cast("double") - y.cast("double"))
+            * (x.cast("double") - y.cast("double")),
+        ),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
+def sign_bucket(col: Column | str, dims: int) -> Column:
+    """Sign pattern of the first ``dims`` elements as a '0'/'1' string —
+    the random-hyperplane LSH bucket with the axes as hyperplanes."""
+    return F.concat_ws(
+        "",
+        *[
+            F.when(F.element_at(_col(col), i + 1) >= 0, F.lit("1")).otherwise(
+                F.lit("0")
+            )
+            for i in range(dims)
+        ],
+    )
+
+
+def sql_sign_bucket(dims: int | str) -> str:
+    """DuckDB mirror of ``sign_bucket`` over the ``embedding`` column;
+    ``dims`` may be a SQL expression, e.g. a scalar subquery."""
+    return (
+        f"list_aggregate(list_transform(embedding[1:{dims}],"
+        " x -> CASE WHEN x >= 0 THEN '1' ELSE '0' END), 'string_agg', '')"
+    )
+
+
+def sql_l2_sq(a: str, b: str) -> str:
+    """DuckDB SQL mirroring ``l2_sq`` — same association order."""
+    return f"""list_reduce(list_transform(range(1, 1 + len({a})),
+  i -> (CAST({a}[i] AS DOUBLE) - CAST({b}[i] AS DOUBLE))
+     * (CAST({a}[i] AS DOUBLE) - CAST({b}[i] AS DOUBLE))),
+  (x, y) -> x + y)"""
 
 
 def sql_cosine(a: str, b: str) -> str:

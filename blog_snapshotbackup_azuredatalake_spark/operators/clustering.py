@@ -19,6 +19,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from blog_snapshotbackup_azuredatalake_spark.functions.centroids import (
+    Centroids,
+)
 from blog_snapshotbackup_azuredatalake_spark.sources.catalog import load_table
 
 K = 8
@@ -26,52 +29,18 @@ ITERATIONS = 3
 
 
 def _assign(emb: DataFrame, centroids: DataFrame) -> DataFrame:
-    """Nearest centroid by squared L2 — MAP-ONLY. The centroid set is
-    k×d and driver-known by contract, so it rides into the plan as a
-    literal struct array and every row takes its argmin in place
-    (lexicographic struct min ≡ min over (d2, centroid_id)). The
-    crossJoin+groupBy alternative re-shuffles the whole corpus by
-    vec_id just to collapse 16 candidate rows that were born in the
-    same task — at 100 TB that exchange IS the cost of the iteration.
-    The per-dim fold keeps the oracle's list_reduce association order,
-    so assignments stay bit-identical."""
-    cents = sorted(centroids.collect(), key=lambda r: r["centroid_id"])
-    # one literal array<struct> bound as a column (constant-folded once;
-    # inlining the k×d literal tree per consumer bloats planning/eval)
-    cents_lit = F.array(
-        *[
-            F.struct(
-                F.lit(int(c["centroid_id"]))
-                .cast("bigint")
-                .alias("centroid_id"),
-                F.array(*[F.lit(float(v)) for v in c["c_emb"]]).alias(
-                    "c_emb"
-                ),
-            )
-            for c in cents
-        ]
-    )
-    scored = F.transform(
-        F.col("cents"),
-        lambda c: F.struct(
-            F.aggregate(
-                F.zip_with(
-                    F.col("embedding"),
-                    c["c_emb"],
-                    lambda x, y: (x.cast("double") - y)
-                    * (x.cast("double") - y),
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ).alias("d2"),
-            c["centroid_id"].alias("centroid_id"),
-        ),
-    )
+    """Nearest centroid by squared L2 — MAP-ONLY (the k×d centroid set
+    is driver-known by contract; see ``functions/centroids.py``)."""
+    cents = Centroids(centroids)
     # two-step select: `best` must be a bound column before its fields
     # are projected, or the whole argmin array is re-evaluated per field
     return (
-        emb.withColumn("cents", cents_lit)
-        .select("vec_id", "embedding", F.array_min(scored).alias("best"))
+        cents.bind(emb)
+        .select(
+            "vec_id",
+            "embedding",
+            cents.nearest(F.col("embedding")).alias("best"),
+        )
         .select(
             "vec_id",
             F.col("best.centroid_id").alias("centroid_id"),
@@ -151,8 +120,8 @@ def emb_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Never materializes the d×d covariance: each iteration computes
     y = C·v as one corpus pass — per-row projection s = xᵀv against the
-    bound literal v (map-only, same trick as ``_assign``), then a
-    posexplode reduce to d cells of Σ x·s. Driver work is O(d) per
+    bound literal v (map-only, the ``functions/centroids.py`` trick),
+    then a posexplode reduce to d cells of Σ x·s. Driver work is O(d) per
     iteration; corpus work is one scan — so 8 iterations over 100 TB
     are 8 scans with d-cell shuffles, no vector ever re-shuffled.
     Decimal-exact sums make the result independent of partition layout

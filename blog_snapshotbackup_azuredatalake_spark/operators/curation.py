@@ -30,8 +30,13 @@ from blog_snapshotbackup_azuredatalake_spark.functions.hashing import (
     hash60,
     sql_md5_int60,
 )
+from blog_snapshotbackup_azuredatalake_spark.functions.centroids import (
+    Centroids,
+    neg_cosine,
+    sql_centroid_ctes,
+    sql_neg_cosine,
+)
 from blog_snapshotbackup_azuredatalake_spark.functions.vectors import (
-    cosine_similarity,
     cosine_with_norms,
     l2_norm,
     sql_cosine,
@@ -158,11 +163,10 @@ def emb_centroid_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     the previous Lloyd iteration's output). Centroids broadcast; the
     corpus scans once with no shuffle until the final stats group-by."""
     emb = load_table(spark, sf_dir, "embeddings")
-    # MAP-ONLY argmax: the centroid seed set is tiny and driver-known,
-    # so it becomes a literal struct array and each row picks its best
-    # centroid in place — struct max over (cos, -centroid_id) ≡ the
-    # oracle's ROW_NUMBER ORDER BY cos DESC, centroid_id. No crossJoin,
-    # no per-vector groupBy: the corpus meets its ONLY shuffle at the
+    # MAP-ONLY argmax (functions/centroids.py): each row picks its best
+    # centroid in place as the argmin of (-cos, centroid_id) ≡ the
+    # oracle's ORDER BY cos DESC, centroid_id. No crossJoin, no
+    # per-vector groupBy: the corpus meets its ONLY shuffle at the
     # k-row stats aggregation.
     # round 10 NEGATIVE A/B, kept as-was by measurement: the norm hoist
     # that won 1.5–3.5× on the pair-join scorers (`cosine_with_norms`)
@@ -175,40 +179,17 @@ def emb_centroid_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     # removing runtime folds. Same negative result shape as
     # ann_nprobe_curve's counting-subtree revert: read what the
     # optimizer already folded before hoisting it by hand.
-    cents = sorted(
-        emb.filter(F.col("vec_id") < N_CENTROIDS)
-        .select(F.col("vec_id").alias("centroid_id"), "embedding")
-        .collect(),
-        key=lambda r: r["centroid_id"],
-    )
-    cents_lit = F.array(
-        *[
-            F.struct(
-                (-F.lit(int(c["centroid_id"])))
-                .cast("bigint")
-                .alias("neg_id"),
-                F.array(*[F.lit(float(v)) for v in c["embedding"]]).alias(
-                    "c_emb"
-                ),
-            )
-            for c in cents
-        ]
-    )
-    scored = F.transform(
-        F.col("cents"),
-        lambda c: F.struct(
-            cosine_similarity(F.col("embedding"), c["c_emb"]).alias("cos"),
-            c["neg_id"].alias("neg_id"),
-        ),
-    )
+    cents = Centroids.first(emb, N_CENTROIDS, neg_cosine)
     best = (
-        emb.withColumn("cents", cents_lit)
-        .select("vec_id", "label", F.array_max(scored).alias("best"))
+        cents.bind(emb)
+        .select(
+            "vec_id", "label", cents.nearest(F.col("embedding")).alias("best")
+        )
         .select(
             "vec_id",
             "label",
-            (-F.col("best.neg_id")).alias("centroid_id"),
-            F.col("best.cos").alias("best_cos"),
+            F.col("best.centroid_id").alias("centroid_id"),
+            (-F.col("best.d2")).alias("best_cos"),
         )
     )
     return best.groupBy("centroid_id").agg(
@@ -244,46 +225,18 @@ def emb_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     label impurity FP·(n² − Σcnt²) div n² — integer-exact (never
     Shannon entropy: log() isn't bit-portable, §4). High-impurity
     clusters mark label noise or genuinely mixed regions — the
-    relabel/split decision as data. Same map-only assignment as
-    emb_centroid_assign (centroid literal rides into the scan, the
+    relabel/split decision as data. Same map-only nearest-centroid
+    assignment as emb_centroid_assign (``functions/centroids.py``: the
     corpus never shuffles for the argmax); the (centroid, label)
     count relation is k·|labels| rows, everything after is k-sized."""
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = sorted(
-        emb.filter(F.col("vec_id") < N_CENTROIDS)
-        .select(F.col("vec_id").alias("centroid_id"), "embedding")
-        .collect(),
-        key=lambda r: r["centroid_id"],
-    )
     # norm hoist NOT applied — same centroid-literal negative A/B as
     # emb_centroid_assign (ConstantFolding already pre-folds the
     # literal's norm; see that entry's comment)
-    cents_lit = F.array(
-        *[
-            F.struct(
-                (-F.lit(int(c["centroid_id"])))
-                .cast("bigint")
-                .alias("neg_id"),
-                F.array(*[F.lit(float(v)) for v in c["embedding"]]).alias(
-                    "c_emb"
-                ),
-            )
-            for c in cents
-        ]
-    )
-    scored = F.transform(
-        F.col("cents"),
-        lambda c: F.struct(
-            cosine_similarity(F.col("embedding"), c["c_emb"]).alias("cos"),
-            c["neg_id"].alias("neg_id"),
-        ),
-    )
-    assigned = (
-        emb.withColumn("cents", cents_lit)
-        .select(
-            "label",
-            (-F.array_max(scored)["neg_id"]).alias("centroid_id"),
-        )
+    cents = Centroids.first(emb, N_CENTROIDS, neg_cosine)
+    assigned = cents.bind(emb).select(
+        "label",
+        cents.nearest(F.col("embedding"))["centroid_id"].alias("centroid_id"),
     )
     per = assigned.groupBy("centroid_id", "label").agg(
         F.count(F.lit(1)).alias("cnt")
@@ -306,21 +259,9 @@ def emb_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _EMB_PURITY_SQL = f"""
-WITH centroids AS (
-  SELECT vec_id AS centroid_id, embedding AS c_emb FROM embeddings
-  WHERE vec_id < {{n_cent}}
-), scored AS (
-  SELECT e.vec_id, e.label, c.centroid_id, {{cos}} AS cos
-  FROM embeddings e CROSS JOIN centroids c
-), best AS (
-  SELECT vec_id, label, centroid_id
-  FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id, label
-                                     ORDER BY cos DESC, centroid_id) AS rn
-        FROM scored)
-  WHERE rn = 1
-), per AS (
-  SELECT centroid_id, label, COUNT(*) AS cnt
-  FROM best GROUP BY centroid_id, label
+WITH {sql_centroid_ctes(N_CENTROIDS, fold=sql_neg_cosine)}, per AS (
+  SELECT list_id AS centroid_id, label, COUNT(*) AS cnt
+  FROM assigned GROUP BY list_id, label
 ), maj AS (
   SELECT centroid_id, label AS majority_label
   FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY centroid_id
@@ -340,35 +281,19 @@ SELECT p.centroid_id,
                       // (SUM(cnt) * SUM(cnt)) END AS BIGINT) AS impurity_fp
 FROM per p JOIN maj USING (centroid_id)
 GROUP BY p.centroid_id
-""".format(
-    n_cent=N_CENTROIDS,
-    cos=sql_cosine("e.embedding", "c.c_emb"),
-)
+"""
 
 
 _EMB_CENTROID_SQL = f"""
-WITH centroids AS (
-  SELECT vec_id AS centroid_id, embedding AS c_emb FROM embeddings
-  WHERE vec_id < {N_CENTROIDS}
-), scored AS (
-  SELECT e.vec_id, e.label, c.centroid_id,
-         {{cos}} AS cos
-  FROM embeddings e CROSS JOIN centroids c
-), best AS (
-  SELECT vec_id, label, centroid_id, cos AS best_cos
-  FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id, label
-                                     ORDER BY cos DESC, centroid_id) AS rn
-        FROM scored)
-  WHERE rn = 1
+WITH {sql_centroid_ctes(N_CENTROIDS, fold=sql_neg_cosine)}, best AS (
+  SELECT vec_id, label, list_id AS centroid_id, -d AS best_cos FROM assigned
 )
 SELECT centroid_id, COUNT(*) AS n_members,
        CAST(SUM(CAST(floor(best_cos * 1073741824) AS BIGINT)) AS DOUBLE)
          / 1073741824.0 AS sum_cos,
        COUNT(DISTINCT label) AS n_labels
 FROM best GROUP BY centroid_id
-""".format(
-    cos=sql_cosine("e.embedding", "c.c_emb")
-)
+"""
 
 
 def emb_silhouette_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -384,45 +309,18 @@ def emb_silhouette_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus meets its only shuffle at the k-row summary). Fixed-point
     floor sums keep the certificate bit-portable (SURVEY §4)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = sorted(
-        emb.filter(F.col("vec_id") < N_CENTROIDS)
-        .select(F.col("vec_id").alias("centroid_id"), "embedding")
-        .collect(),
-        key=lambda r: r["centroid_id"],
-    )
     # norm hoist NOT applied — measured a wash here (sf60de 1.93 →
     # 1.89 s) for the same centroid-literal reason as
     # emb_centroid_assign's regression (see that entry's comment)
-    cents_lit = F.array(
-        *[
-            F.struct(
-                F.lit(int(c["centroid_id"])).cast("bigint").alias("cid"),
-                F.array(*[F.lit(float(v)) for v in c["embedding"]]).alias(
-                    "c_emb"
-                ),
-            )
-            for c in cents
-        ]
-    )
-    # sort ascending on (-cos, cid) ≡ the oracle's ORDER BY cos DESC,
-    # centroid_id — negation is exact, so the order is bit-identical
-    scored = F.sort_array(
-        F.transform(
-            F.col("cents"),
-            lambda c: F.struct(
-                (-cosine_similarity(F.col("embedding"), c["c_emb"])).alias("nc"),
-                c["cid"].alias("cid"),
-            ),
-        )
-    )
+    cents = Centroids.first(emb, N_CENTROIDS, neg_cosine)
     top2 = (
-        emb.withColumn("cents", cents_lit)
-        .select("vec_id", scored.alias("s2"))
+        cents.bind(emb)
+        .select("vec_id", cents.probes(F.col("embedding"), 2).alias("s2"))
         .select(
             "vec_id",
-            F.col("s2")[0]["cid"].alias("centroid_id"),
-            (-F.col("s2")[0]["nc"]).alias("c1"),
-            (-F.col("s2")[1]["nc"]).alias("c2"),
+            F.col("s2")[0]["centroid_id"].alias("centroid_id"),
+            (-F.col("s2")[0]["d2"]).alias("c1"),
+            (-F.col("s2")[1]["d2"]).alias("c2"),
         )
     )
     sil = top2.select(
@@ -455,26 +353,13 @@ def emb_silhouette_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SIL_COS = sql_cosine("e.embedding", "c.c_emb")
-
 _EMB_SILHOUETTE_SQL = f"""
-WITH centroids AS (
-  SELECT vec_id AS centroid_id, embedding AS c_emb FROM embeddings
-  WHERE vec_id < {N_CENTROIDS}
-), scored AS (
-  SELECT e.vec_id, c.centroid_id, {_SIL_COS} AS cos
-  FROM embeddings e CROSS JOIN centroids c
-), ranked AS (
-  SELECT vec_id, centroid_id, cos,
-         ROW_NUMBER() OVER (PARTITION BY vec_id
-                            ORDER BY cos DESC, centroid_id) AS rn
-  FROM scored
-), top2 AS (
-  SELECT vec_id,
-         MAX(CASE WHEN rn = 1 THEN centroid_id END) AS centroid_id,
-         MAX(CASE WHEN rn = 1 THEN cos END) AS c1,
-         MAX(CASE WHEN rn = 2 THEN cos END) AS c2
-  FROM ranked WHERE rn <= 2 GROUP BY vec_id
+WITH {sql_centroid_ctes(N_CENTROIDS, "TRUE", 2, sql_neg_cosine)}, top2 AS (
+  SELECT q_id AS vec_id,
+         MAX(CASE WHEN p = 1 THEN list_id END) AS centroid_id,
+         MAX(CASE WHEN p = 1 THEN -d END) AS c1,
+         MAX(CASE WHEN p = 2 THEN -d END) AS c2
+  FROM probes GROUP BY q_id
 ), sil AS (
   SELECT centroid_id,
          ((1.0 - c2) - (1.0 - c1))

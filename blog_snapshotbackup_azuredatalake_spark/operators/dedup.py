@@ -38,7 +38,9 @@ from blog_snapshotbackup_azuredatalake_spark.functions.hashing import (
 from blog_snapshotbackup_azuredatalake_spark.functions.vectors import (
     cosine_with_norms,
     l2_norm,
+    sign_bucket,
     sql_cosine,
+    sql_sign_bucket,
 )
 from blog_snapshotbackup_azuredatalake_spark.sources.catalog import load_table
 
@@ -52,11 +54,11 @@ SIMHASH_BITS = 32
 SIMHASH_BANDS = 4  # 4 bands of 8 bits ⇒ hamming ≤ 3 always shares a band
 HAMMING_THRESHOLD = 3
 EMB_COS_THRESHOLD = 0.3
-EMB_SIGN_DIMS = 8
-# anchor blocking uses more sign dims than the (retired) pair-emission
-# blocking: the anchor relation is bounded BY CONSTRUCTION at 2^dims
-# rows (the broadcast-hint audit rule, SURVEY §6), so a finer pattern
-# costs nothing and resolves clusters that collide at 8 dims.
+# anchor blocking uses more sign dims than the (retired) 8-dim
+# pair-emission blocking: the anchor relation is bounded BY
+# CONSTRUCTION at 2^dims rows (the broadcast-hint audit rule, SURVEY
+# §6), so a finer pattern costs nothing and resolves clusters that
+# collide at 8 dims.
 EMB_ANCHOR_DIMS = 16
 # pair-report cap, twice: each doc meets only its MATCH_CAP doc_id-order
 # SUCCESSORS per bucket (candidate generation is linear in bucket size —
@@ -994,18 +996,6 @@ FROM sim s LEFT JOIN best b USING (doc_id)
 # ---------------------------------------------------------------------------
 
 
-def _sign_bucket(col: Column, dims: int) -> Column:
-    return F.concat_ws(
-        "",
-        *[
-            F.when(F.element_at(col, i + 1) >= 0, F.lit("1")).otherwise(
-                F.lit("0")
-            )
-            for i in range(dims)
-        ],
-    )
-
-
 def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding near-dup via canonical bucket anchors (the SemDeDup
     shape, Abbas et al. 2023): block on the sign pattern of the first
@@ -1031,7 +1021,7 @@ def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id",
         "embedding",
-        _sign_bucket(F.col("embedding"), EMB_ANCHOR_DIMS).alias("bucket"),
+        sign_bucket(F.col("embedding"), EMB_ANCHOR_DIMS).alias("bucket"),
     )
     anchors = emb.groupBy("bucket").agg(
         F.min("vec_id").alias("anchor_id"),
@@ -1059,21 +1049,10 @@ def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_sign_bucket(dims: int) -> str:
-    return (
-        "list_aggregate(list_transform(embedding[1:"
-        + str(dims)
-        + "], x -> CASE WHEN x >= 0 THEN '1' ELSE '0' END),"
-        " 'string_agg', '')"
-    )
-
-
-_SQL_BUCKET = _sql_sign_bucket(EMB_SIGN_DIMS)
-
 _DEDUP_EMBEDDING_SQL = f"""
 WITH emb AS (
   SELECT vec_id, embedding,
-         {_sql_sign_bucket(EMB_ANCHOR_DIMS)} AS bucket FROM embeddings
+         {sql_sign_bucket(EMB_ANCHOR_DIMS)} AS bucket FROM embeddings
 ),
 anchors AS (
   SELECT bucket, arg_min(vec_id, vec_id) AS anchor_id,
@@ -1135,7 +1114,7 @@ def dedup_anchor_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id",
             "embedding",
-            _sign_bucket(F.col("embedding"), EMB_ANCHOR_DIMS).alias(
+            sign_bucket(F.col("embedding"), EMB_ANCHOR_DIMS).alias(
                 "bucket"
             ),
             norm.alias("nrm"),
@@ -1252,7 +1231,7 @@ WITH sample AS (
   SELECT vec_id, bucket,
          list_transform(embedding, v -> CAST(v AS DOUBLE) / nrm) AS nv
   FROM (SELECT vec_id, embedding,
-               {_sql_sign_bucket(EMB_ANCHOR_DIMS)} AS bucket,
+               {sql_sign_bucket(EMB_ANCHOR_DIMS)} AS bucket,
                sqrt(list_reduce(list_transform(embedding,
                  v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE)),
                  (x, y) -> x + y)) AS nrm

@@ -11,8 +11,9 @@ Three plans for top-k cosine neighbors:
   cost Σ bucket² — linear-ish in corpus size. Recall is traded for
   that, as usual with ANN.
 - ``ann_topk_ivf`` — IVF coarse+fine: assign every corpus vector to its
-  nearest of NLIST coarse centroids (one broadcast join + map-side
-  min_by, no corpus shuffle), then each query probes its NPROBE nearest
+  nearest of NLIST coarse centroids (a map-only argmin against the
+  literal centroid set, ``functions/centroids.py`` — no corpus
+  shuffle), then each query probes its NPROBE nearest
   lists and re-ranks exactly within them. Candidate cost is
   |Q|·NPROBE/NLIST of the corpus — the standard inverted-file ANN
   trade, and unlike the sign-LSH it degrades gracefully (more probes →
@@ -35,15 +36,19 @@ from blog_snapshotbackup_azuredatalake_spark.functions.hashing import (
     hash60,
     sql_md5_int60,
 )
+from blog_snapshotbackup_azuredatalake_spark.functions.centroids import (
+    Centroids,
+    sql_centroid_ctes,
+)
 from blog_snapshotbackup_azuredatalake_spark.functions.vectors import (
     cosine_similarity,
     cosine_with_norms,
     l2_norm,
+    l2_sq,
+    sign_bucket,
     sql_cosine,
-)
-from blog_snapshotbackup_azuredatalake_spark.operators.dedup import (
-    _sign_bucket,
-    _SQL_BUCKET,
+    sql_l2_sq,
+    sql_sign_bucket,
 )
 from blog_snapshotbackup_azuredatalake_spark.functions.skew import (
     two_phase_rank_dual,
@@ -94,18 +99,13 @@ def ann_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
-    centroids = emb.filter(F.col("vec_id") < IVF_NLIST).select(
-        F.col("vec_id").alias("centroid_id"),
-        F.col("embedding").alias("c_emb"),
-    )
-    cents = sorted(centroids.collect(), key=lambda r: r["centroid_id"])
-    cents_lit = _cents_lit_of(cents)
+    cents = Centroids.first(emb, IVF_NLIST)
     assigned = (
-        emb.withColumn("cents", cents_lit)
+        cents.bind(emb)
         .select(
             "vec_id",
             "embedding",
-            F.array_min(_cent_scored(F.col("embedding"))).alias("best"),
+            cents.nearest(F.col("embedding")).alias("best"),
         )
         .select(
             "vec_id",
@@ -120,18 +120,13 @@ def ann_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cost more rows than it saves (the ann_topk_lsh selective-join
     # argument).
     probes = (
-        emb.filter(F.col("vec_id") == HYBRID_QUERY_ID)
-        .withColumn("cents", cents_lit)
+        cents.bind(emb.filter(F.col("vec_id") == HYBRID_QUERY_ID))
         .select(
             F.col("embedding").alias("q_emb"),
             l2_norm("embedding").alias("q_nrm"),
-            F.explode(
-                F.slice(
-                    F.array_sort(_cent_scored(F.col("embedding"))),
-                    1,
-                    IVF_NPROBE,
-                )
-            ).alias("pr"),
+            F.explode(cents.probes(F.col("embedding"), IVF_NPROBE)).alias(
+                "pr"
+            ),
         )
         .select("q_emb", "q_nrm", F.col("pr.centroid_id").alias("list_id"))
     )
@@ -198,32 +193,14 @@ def _hybrid_rrf_sql() -> str:
 
     cos = sql_cosine("q_emb", "b.embedding")
     # the vec list mirrors the Spark side's IVF shortlist: coarse
-    # assign ≡ row_number over (l2², centroid_id), probe the query's
-    # IVF_NPROBE nearest lists, exact cosine re-rank inside them
+    # assign, probe the query's IVF_NPROBE nearest lists, exact cosine
+    # re-rank inside them
+    ivf = sql_centroid_ctes(
+        IVF_NLIST, f"q.vec_id = {HYBRID_QUERY_ID}", IVF_NPROBE
+    )
     return f"""
 WITH lex AS ({_bm25_sql()}),
-cent AS (
-  SELECT vec_id AS centroid_id, embedding AS c_emb FROM embeddings
-  WHERE vec_id < {IVF_NLIST}
-), assigned AS (
-  SELECT vec_id, embedding, centroid_id AS list_id
-  FROM (SELECT e.vec_id, e.embedding, c.centroid_id,
-               ROW_NUMBER() OVER (
-                 PARTITION BY e.vec_id
-                 ORDER BY {_SQL_L2SQ.format(a="e.embedding", b="c.c_emb")},
-                          c.centroid_id) AS rn
-        FROM embeddings e CROSS JOIN cent c)
-  WHERE rn = 1
-), probes AS (
-  SELECT q_emb, list_id
-  FROM (SELECT q.embedding AS q_emb, c.centroid_id AS list_id,
-               ROW_NUMBER() OVER (
-                 ORDER BY {_SQL_L2SQ.format(a="q.embedding", b="c.c_emb")},
-                          c.centroid_id) AS pr
-        FROM embeddings q CROSS JOIN cent c
-        WHERE q.vec_id = {HYBRID_QUERY_ID})
-  WHERE pr <= {IVF_NPROBE}
-), pairs AS (SELECT b.vec_id AS doc_id, {cos} AS cos
+{ivf}, pairs AS (SELECT b.vec_id AS doc_id, {cos} AS cos
              FROM probes JOIN assigned b USING (list_id)
              WHERE b.vec_id <> {HYBRID_QUERY_ID}),
 vec AS (SELECT doc_id,
@@ -314,7 +291,7 @@ def ann_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id",
         "embedding",
-        _sign_bucket(F.col("embedding"), LSH_DIMS).alias("bucket"),
+        sign_bucket(F.col("embedding"), LSH_DIMS).alias("bucket"),
     )
     base_q = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("q_id"),
@@ -369,11 +346,9 @@ def ann_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_LSH_BUCKET = _SQL_BUCKET.replace(f"[1:{8}]", f"[1:{LSH_DIMS}]")
-
 _ANN_LSH_SQL = f"""
 WITH emb AS (
-  SELECT vec_id, embedding, {_LSH_BUCKET} AS bucket FROM embeddings
+  SELECT vec_id, embedding, {sql_sign_bucket(LSH_DIMS)} AS bucket FROM embeddings
 ), base_q AS (
   SELECT vec_id AS q_id, embedding AS q_emb, bucket FROM emb
   WHERE vec_id < {N_QUERIES}
@@ -400,83 +375,27 @@ WHERE rnk <= {TOP_K}
 """
 
 
-def _l2sq(a, b):
-    """Σ (aᵢ-bᵢ)² as a double fold — same association order as the
-    oracle's list_reduce, so assignments are bit-identical."""
-    return F.aggregate(
-        F.zip_with(
-            a, b, lambda x, y: (x.cast("double") - y.cast("double"))
-            * (x.cast("double") - y.cast("double"))
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN: NLIST deterministic coarse centroids (the first NLIST
-    corpus vectors), corpus assigned to its nearest list via a broadcast
-    join + map-side min_by (the corpus never shuffles), queries probe
-    their IVF_NPROBE nearest lists and re-rank exactly inside them."""
+    corpus vectors), corpus assigned to its nearest list by the map-only
+    nearest-centroid primitive (``functions/centroids.py``; the corpus
+    never shuffles), queries probe their IVF_NPROBE nearest lists and
+    re-rank exactly inside them."""
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    centroids = emb.filter(F.col("vec_id") < IVF_NLIST).select(
-        F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("c_emb")
-    )
-    return _ivf_search(emb, centroids)
+    return _ivf_search(emb, Centroids.first(emb, IVF_NLIST))
 
 
-def _cents_lit_of(cents: list) -> F.Column:
-    """nlist×d centroid rows (sorted by centroid_id) → ONE literal
-    array<struct<centroid_id, c_emb>> column — constant-folded once,
-    referenced by name (inlining the 1k-node literal tree into every
-    consumer measurably bloats planning/eval)."""
-    return F.array(
-        *[
-            F.struct(
-                F.lit(int(c["centroid_id"]))
-                .cast("bigint")
-                .alias("centroid_id"),
-                F.array(*[F.lit(float(v)) for v in c["c_emb"]]).alias(
-                    "c_emb"
-                ),
-            )
-            for c in cents
-        ]
-    )
-
-
-def _cent_scored(emb_col: F.Column) -> F.Column:
-    """Per-centroid (d2, centroid_id) structs against the `cents`
-    literal column; struct min/sort ≡ ORDER BY d2, centroid_id."""
-    return F.transform(
-        F.col("cents"),
-        lambda c: F.struct(
-            _l2sq(emb_col, c["c_emb"]).alias("d2"),
-            c["centroid_id"].alias("centroid_id"),
-        ),
-    )
-
-
-def _ivf_search(emb: DataFrame, centroids: DataFrame) -> DataFrame:
-    """Probe-and-rerank against any (centroid_id, c_emb) coarse list
-    set; the IVF plan shape is independent of how the lists were
-    built."""
-    # coarse assignment is MAP-ONLY: the nlist×d centroid set is tiny
-    # and driver-known, so it becomes a literal struct array and each
-    # corpus row takes argmin in place (struct min ≡ min over
-    # (d2, centroid_id), matching the oracle's row_number order). The
-    # crossJoin+groupBy shape would re-shuffle the corpus by vec_id —
-    # the corpus now reaches the bucket join with NO exchange at all.
-    cents = sorted(centroids.collect(), key=lambda r: r["centroid_id"])
-    cents_lit = _cents_lit_of(cents)
-    scored = _cent_scored
-
+def _ivf_search(emb: DataFrame, cents: Centroids) -> DataFrame:
+    """Probe-and-rerank against any coarse list set; the IVF plan shape
+    is independent of how the lists were built."""
+    # coarse assignment is MAP-ONLY (functions/centroids.py): the
+    # corpus reaches the bucket join with NO exchange at all
     assigned = (
-        emb.withColumn("cents", cents_lit)
+        cents.bind(emb)
         .select(
             "vec_id",
             "embedding",
-            F.array_min(scored(F.col("embedding"))).alias("best"),
+            cents.nearest(F.col("embedding")).alias("best"),
             # per-row norm hoisted below the probe join (round 10,
             # `cosine_with_norms`): folded once per row, not once per pair
             l2_norm("embedding").alias("nrm"),
@@ -488,23 +407,20 @@ def _ivf_search(emb: DataFrame, centroids: DataFrame) -> DataFrame:
             "nrm",
         )
     )
-    # probe selection is map-only too: sort the same struct array
-    # (lexicographic ≡ ORDER BY d2, centroid_id) and explode the first
-    # nprobe entries — no crossJoin, no window
+    # probe selection is map-only too: explode the first nprobe
+    # entries of the sorted struct array — no crossJoin, no window
     queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("q_id"),
         F.col("embedding").alias("q_emb"),
         l2_norm("embedding").alias("q_nrm"),
     )
     probes = (
-        queries.withColumn("cents", cents_lit)
+        cents.bind(queries)
         .select(
             "q_id",
             "q_emb",
             "q_nrm",
-            F.explode(
-                F.slice(F.array_sort(scored(F.col("q_emb"))), 1, IVF_NPROBE)
-            ).alias("pr"),
+            F.explode(cents.probes(F.col("q_emb"), IVF_NPROBE)).alias("pr"),
         )
         .select(
             "q_id", "q_emb", "q_nrm", F.col("pr.centroid_id").alias("list_id")
@@ -531,37 +447,11 @@ def _ivf_search(emb: DataFrame, centroids: DataFrame) -> DataFrame:
     )
 
 
-_SQL_L2SQ = """list_reduce(list_transform(range(1, 1 + len({a})),
-  i -> (CAST({a}[i] AS DOUBLE) - CAST({b}[i] AS DOUBLE))
-     * (CAST({a}[i] AS DOUBLE) - CAST({b}[i] AS DOUBLE))),
-  (x, y) -> x + y)"""
+# the oracle's coarse assign + the N_QUERIES queries' probe lists
+_IVF_CTES = sql_centroid_ctes(IVF_NLIST, f"q.vec_id < {N_QUERIES}", IVF_NPROBE)
 
 _ANN_IVF_SQL = f"""
-WITH cent AS (
-  SELECT vec_id AS centroid_id, embedding AS c_emb FROM embeddings
-  WHERE vec_id < {IVF_NLIST}
-), assigned AS (
-  -- row_number over (d2, centroid_id) ≡ Spark's min_by(cid, struct(d2, cid))
-  SELECT vec_id, embedding, centroid_id AS list_id
-  FROM (SELECT e.vec_id, e.embedding, c.centroid_id,
-               ROW_NUMBER() OVER (
-                 PARTITION BY e.vec_id
-                 ORDER BY {_SQL_L2SQ.format(a="e.embedding", b="c.c_emb")},
-                          c.centroid_id) AS rn
-        FROM embeddings e CROSS JOIN cent c)
-  WHERE rn = 1
-), probes AS (
-  SELECT q_id, q_emb, list_id
-  FROM (SELECT q.vec_id AS q_id, q.embedding AS q_emb,
-               c.centroid_id AS list_id,
-               ROW_NUMBER() OVER (
-                 PARTITION BY q.vec_id
-                 ORDER BY {_SQL_L2SQ.format(a="q.embedding", b="c.c_emb")},
-                          c.centroid_id) AS pr
-        FROM embeddings q CROSS JOIN cent c
-        WHERE q.vec_id < {N_QUERIES})
-  WHERE pr <= {IVF_NPROBE}
-), pairs AS (
+WITH {_IVF_CTES}, pairs AS (
   SELECT q_id, b.vec_id AS vec_id,
          {sql_cosine("q_emb", "b.embedding")} AS cos
   FROM probes JOIN assigned b USING (list_id)
@@ -593,48 +483,21 @@ def ann_filtered_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate), the predicate is applied to candidates INSIDE the
     probed lists (post-filtering), and {FILTER_NPROBE} lists are probed
     — double the unfiltered {IVF_NPROBE} — to recover the candidate
-    mass the filter removes. Same map-only coarse-assign as
-    `ann_topk_ivf` (literal centroid array, corpus never shuffles
-    before the bucket join); the predicate reaches the scan as a
-    pushable filter on the probe side."""
+    mass the filter removes. Map-only coarse assign and probe
+    (`functions/centroids.py`: the corpus never shuffles before the
+    bucket join); the predicate reaches the scan as a pushable filter
+    on the probe side."""
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding", F.col("label").cast("int").alias("label")
     )
-    centroids = emb.filter(F.col("vec_id") < IVF_NLIST).select(
-        F.col("vec_id").alias("centroid_id"),
-        F.col("embedding").alias("c_emb"),
-    )
-    cents = sorted(centroids.collect(), key=lambda r: r["centroid_id"])
-    cents_lit = F.array(
-        *[
-            F.struct(
-                F.lit(int(c["centroid_id"]))
-                .cast("bigint")
-                .alias("centroid_id"),
-                F.array(*[F.lit(float(v)) for v in c["c_emb"]]).alias(
-                    "c_emb"
-                ),
-            )
-            for c in cents
-        ]
-    )
-
-    def scored(emb_col):
-        return F.transform(
-            F.col("cents"),
-            lambda c: F.struct(
-                _l2sq(emb_col, c["c_emb"]).alias("d2"),
-                c["centroid_id"].alias("centroid_id"),
-            ),
-        )
-
+    cents = Centroids.first(emb, IVF_NLIST)
     assigned = (
-        emb.withColumn("cents", cents_lit)
+        cents.bind(emb)
         .select(
             "vec_id",
             "embedding",
             "label",
-            F.array_min(scored(F.col("embedding"))).alias("best"),
+            cents.nearest(F.col("embedding")).alias("best"),
             # per-row norm hoisted below the probe join (round 10,
             # `cosine_with_norms`): folded once per row, not once per pair
             l2_norm("embedding").alias("nrm"),
@@ -653,16 +516,14 @@ def ann_filtered_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         l2_norm("embedding").alias("q_nrm"),
     )
     probes = (
-        queries.withColumn("cents", cents_lit)
+        cents.bind(queries)
         .select(
             "q_id",
             "q_emb",
             "q_nrm",
-            F.explode(
-                F.slice(
-                    F.array_sort(scored(F.col("q_emb"))), 1, FILTER_NPROBE
-                )
-            ).alias("pr"),
+            F.explode(cents.probes(F.col("q_emb"), FILTER_NPROBE)).alias(
+                "pr"
+            ),
         )
         .select(
             "q_id", "q_emb", "q_nrm", F.col("pr.centroid_id").alias("list_id")
@@ -696,31 +557,8 @@ def ann_filtered_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _ANN_FILTERED_SQL = f"""
-WITH cent AS (
-  SELECT vec_id AS centroid_id, embedding AS c_emb FROM embeddings
-  WHERE vec_id < {IVF_NLIST}
-), assigned AS (
-  SELECT vec_id, embedding, label, centroid_id AS list_id
-  FROM (SELECT e.vec_id, e.embedding, CAST(e.label AS INT) AS label,
-               c.centroid_id,
-               ROW_NUMBER() OVER (
-                 PARTITION BY e.vec_id
-                 ORDER BY {_SQL_L2SQ.format(a="e.embedding", b="c.c_emb")},
-                          c.centroid_id) AS rn
-        FROM embeddings e CROSS JOIN cent c)
-  WHERE rn = 1
-), probes AS (
-  SELECT q_id, q_emb, list_id
-  FROM (SELECT q.vec_id AS q_id, q.embedding AS q_emb,
-               c.centroid_id AS list_id,
-               ROW_NUMBER() OVER (
-                 PARTITION BY q.vec_id
-                 ORDER BY {_SQL_L2SQ.format(a="q.embedding", b="c.c_emb")},
-                          c.centroid_id) AS pr
-        FROM embeddings q CROSS JOIN cent c
-        WHERE q.vec_id < {N_QUERIES})
-  WHERE pr <= {FILTER_NPROBE}
-), pairs AS (
+WITH {sql_centroid_ctes(IVF_NLIST, f"q.vec_id < {N_QUERIES}", FILTER_NPROBE)},
+pairs AS (
   SELECT q_id, b.vec_id AS vec_id, b.label AS label,
          {sql_cosine("q_emb", "b.embedding")} AS cos
   FROM probes JOIN assigned b USING (list_id)
@@ -773,7 +611,7 @@ def ann_topk_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     for _ in range(IVF_TRAIN_ITERS):
         centroids = _recompute(spark, _assign(train, centroids))
-    return _ivf_search(emb, centroids)
+    return _ivf_search(emb, Centroids(centroids))
 
 
 def ann_topk_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -937,7 +775,7 @@ def ann_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     patted = base.select(
         "vec_id",
         "embedding",
-        _sign_bucket(F.col("embedding"), dims).alias("pat"),
+        sign_bucket(F.col("embedding"), dims).alias("pat"),
     )
     # Oversize-pattern counts via groupBy (map-side combine -- skew-safe:
     # a 10M-row mega-bucket partial-aggregates to one cell per map task,
@@ -1040,11 +878,6 @@ def _knn_cell_topk(pdf):
     )
 
 
-_SQL_BUCKET_K = (
-    "list_aggregate(list_transform(embedding[1:(SELECT dims FROM nd)],"
-    " x -> CASE WHEN x >= 0 THEN '1' ELSE '0' END), 'string_agg', '')"
-)
-
 # the capped-LSH graph as a reusable CTE chain — the graph entry and
 # the recall audit share it verbatim, so the two oracles can never
 # drift apart
@@ -1055,7 +888,7 @@ _KNN_GRAPH_CTES = f"""nd AS (
   FROM embeddings
 ),
 patted AS (
-  SELECT vec_id, embedding, {_SQL_BUCKET_K} AS pat FROM embeddings
+  SELECT vec_id, embedding, {sql_sign_bucket("(SELECT dims FROM nd)")} AS pat FROM embeddings
 ),
 emb AS (
   SELECT vec_id, embedding, pat,
@@ -1367,7 +1200,8 @@ def emb_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     structure — PQ's worst case).
 
     Spark shape: encoding is MAP-ONLY (per-subspace argmin against the
-    literal-bound codebook, the ``_assign`` trick — the corpus is never
+    literal-bound codebook, the ``functions/centroids.py`` trick — the
+    corpus is never
     shuffled to get coded); query ADC tables are fixed-point BIGINTs
     (floor(d²·2²⁰)) bound as literals, so the scan's per-pair sum is
     integer-exact, order-independent, and engine-portable. Shuffles
@@ -1428,7 +1262,7 @@ def emb_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
             "q_id",
             "vec_id",
             "adc_fp",
-            _l2sq(F.col("q_emb"), F.col("embedding")).alias("d2"),
+            l2_sq(F.col("q_emb"), F.col("embedding")).alias("d2"),
         )
     )
     w = Window.partitionBy("q_id").orderBy("d2", "vec_id")
@@ -1455,12 +1289,12 @@ WITH sub AS (
     SELECT v.vec_id, v.s, c.j,
            ROW_NUMBER() OVER (
              PARTITION BY v.vec_id, v.s
-             ORDER BY {_SQL_L2SQ.format(a="v.sv", b="c.sv")}, c.j) AS rn
+             ORDER BY {sql_l2_sq("v.sv", "c.sv")}, c.j) AS rn
     FROM sub v JOIN cbi c ON v.s = c.s)
   WHERE rn = 1
 ), qtab AS (
   SELECT q.vec_id AS q_id, q.s, c.j,
-         CAST(floor({_SQL_L2SQ.format(a="q.sv", b="c.sv")} * {PQ_FP})
+         CAST(floor({sql_l2_sq("q.sv", "c.sv")} * {PQ_FP})
               AS BIGINT) AS dfp
   FROM sub q JOIN cbi c ON q.s = c.s
   WHERE q.vec_id < {N_QUERIES}
@@ -1477,7 +1311,7 @@ WITH sub AS (
   WHERE srnk <= {PQ_SHORTLIST}
 ), reranked AS (
   SELECT s.q_id, s.vec_id, CAST(s.adc_fp AS BIGINT) AS adc_fp,
-         {_SQL_L2SQ.format(a='q.embedding', b='b.embedding')} AS d2
+         {sql_l2_sq("q.embedding", "b.embedding")} AS d2
   FROM shortlist s
   JOIN embeddings b ON b.vec_id = s.vec_id
   JOIN embeddings q ON q.vec_id = s.q_id
@@ -1507,23 +1341,13 @@ def ann_index_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     risk (queries probing it drown in candidates while starved lists
     contribute none). All ratios are integer fixed-point (BIGINT `div`,
     exact in both engines); the plan is the map-only coarse assignment
-    followed by a {IVF_NLIST}-cell count — nothing corpus-sized
+    (``functions/centroids.py``) followed by a {IVF_NLIST}-cell count — nothing corpus-sized
     shuffles, and the one-row total rides the certificate-merge
     crossJoin."""
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    cents = sorted(
-        emb.filter(F.col("vec_id") < IVF_NLIST)
-        .select(
-            F.col("vec_id").alias("centroid_id"),
-            F.col("embedding").alias("c_emb"),
-        )
-        .collect(),
-        key=lambda r: r["centroid_id"],
-    )
-    assigned = emb.withColumn("cents", _cents_lit_of(cents)).select(
-        F.array_min(_cent_scored(F.col("embedding")))["centroid_id"].alias(
-            "list_id"
-        )
+    cents = Centroids.first(emb, IVF_NLIST)
+    assigned = cents.bind(emb).select(
+        cents.nearest(F.col("embedding"))["centroid_id"].alias("list_id")
     )
     lists = assigned.groupBy("list_id").agg(
         F.count(F.lit(1)).alias("n_vectors")
@@ -1546,19 +1370,7 @@ def ann_index_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _INDEX_BALANCE_SQL = f"""
-WITH cent AS (
-  SELECT vec_id AS centroid_id, embedding AS c_emb FROM embeddings
-  WHERE vec_id < {IVF_NLIST}
-), assigned AS (
-  SELECT vec_id, centroid_id AS list_id
-  FROM (SELECT e.vec_id, c.centroid_id,
-               ROW_NUMBER() OVER (
-                 PARTITION BY e.vec_id
-                 ORDER BY {_SQL_L2SQ.format(a="e.embedding", b="c.c_emb")},
-                          c.centroid_id) AS rn
-        FROM embeddings e CROSS JOIN cent c)
-  WHERE rn = 1
-), lists AS (
+WITH {sql_centroid_ctes(IVF_NLIST)}, lists AS (
   SELECT list_id, COUNT(*) AS n_vectors FROM assigned GROUP BY list_id
 ), total AS (SELECT SUM(n_vectors) AS total FROM lists)
 SELECT list_id, n_vectors,
@@ -1588,22 +1400,17 @@ def ann_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation (computed at the LARGEST budget) serves every curve point
     via a {len(NPROBE_GRID)}-row broadcast values join, one window per
     (query, budget), and a join against the exact baseline. Corpus-side
-    work is the same map-only assign + broadcast probe join as
-    ann_topk_ivf — at max(grid) probes — regardless of grid size;
+    work is the map-only nearest-centroid assign and probe list
+    (``functions/centroids.py``) + broadcast probe join — at max(grid)
+    probes — regardless of grid size;
     integer fixed-point recall (n_hit·2²⁰ div k)."""
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    centroids = emb.filter(F.col("vec_id") < IVF_NLIST).select(
-        F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("c_emb")
-    )
-    cents = sorted(centroids.collect(), key=lambda r: r["centroid_id"])
-    cents_lit = _cents_lit_of(cents)
+    cents = Centroids.first(emb, IVF_NLIST)
     max_probe = max(NPROBE_GRID)
-    assigned = emb.withColumn("cents", cents_lit).select(
+    assigned = cents.bind(emb).select(
         "vec_id",
         "embedding",
-        F.array_min(_cent_scored(F.col("embedding")))["centroid_id"].alias(
-            "list_id"
-        ),
+        cents.nearest(F.col("embedding"))["centroid_id"].alias("list_id"),
         # per-row norm hoisted below the probe join (round 10,
         # `cosine_with_norms`): folded once per row, not once per pair
         l2_norm("embedding").alias("nrm"),
@@ -1614,16 +1421,14 @@ def ann_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         l2_norm("embedding").alias("q_nrm"),
     )
     probes = (
-        queries.withColumn("cents", cents_lit)
+        cents.bind(queries)
         .select(
             "q_id",
             "q_emb",
             "q_nrm",
-            F.posexplode(
-                F.slice(
-                    F.array_sort(_cent_scored(F.col("q_emb"))), 1, max_probe
-                )
-            ).alias("p0", "pr"),
+            F.posexplode(cents.probes(F.col("q_emb"), max_probe)).alias(
+                "p0", "pr"
+            ),
         )
         .select(
             "q_id",
@@ -1699,31 +1504,11 @@ def ann_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _nprobe_curve_sql() -> str:
     grid_rows = ", ".join(f"({v})" for v in NPROBE_GRID)
+    ivf = sql_centroid_ctes(
+        IVF_NLIST, f"q.vec_id < {N_QUERIES}", max(NPROBE_GRID)
+    )
     return f"""
-WITH cent AS (
-  SELECT vec_id AS centroid_id, embedding AS c_emb FROM embeddings
-  WHERE vec_id < {IVF_NLIST}
-), assigned AS (
-  SELECT vec_id, embedding, centroid_id AS list_id
-  FROM (SELECT e.vec_id, e.embedding, c.centroid_id,
-               ROW_NUMBER() OVER (
-                 PARTITION BY e.vec_id
-                 ORDER BY {_SQL_L2SQ.format(a="e.embedding", b="c.c_emb")},
-                          c.centroid_id) AS rn
-        FROM embeddings e CROSS JOIN cent c)
-  WHERE rn = 1
-), probes AS (
-  SELECT q_id, q_emb, CAST(pr AS INT) AS p, list_id
-  FROM (SELECT q.vec_id AS q_id, q.embedding AS q_emb,
-               c.centroid_id AS list_id,
-               ROW_NUMBER() OVER (
-                 PARTITION BY q.vec_id
-                 ORDER BY {_SQL_L2SQ.format(a="q.embedding", b="c.c_emb")},
-                          c.centroid_id) AS pr
-        FROM embeddings q CROSS JOIN cent c
-        WHERE q.vec_id < {N_QUERIES})
-  WHERE pr <= {max(NPROBE_GRID)}
-), pairs AS (
+WITH {ivf}, pairs AS (
   SELECT q_id, b.vec_id AS vec_id, p,
          {sql_cosine("q_emb", "b.embedding")} AS cos
   FROM probes JOIN assigned b USING (list_id)
@@ -1764,7 +1549,8 @@ def ann_ivf_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental IVF index maintenance — the vector-store upsert loop
     (the ANN analog of ``dedup_incremental``): a newly-arrived batch
     (vec_id % {UPSERT_MOD} == 0 plays it) is coarse-assigned with the
-    SAME map-only literal-centroid argmin the index was built with, and
+    SAME map-only nearest-centroid argmin the index was built with
+    (``functions/centroids.py``), and
     the operator emits the per-list merge plan: size before, vectors
     added, size after, fixed-point growth, and the rebalance flag
     (n_after above 2× fair share ⇒ that list wants a split / the
@@ -1775,20 +1561,10 @@ def ann_ivf_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     but {IVF_NLIST}-cell count tables. Integer `div` arithmetic keeps
     every ratio engine-exact."""
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    cents = sorted(
-        emb.filter(F.col("vec_id") < IVF_NLIST)
-        .select(
-            F.col("vec_id").alias("centroid_id"),
-            F.col("embedding").alias("c_emb"),
-        )
-        .collect(),
-        key=lambda r: r["centroid_id"],
-    )
-    assigned = emb.withColumn("cents", _cents_lit_of(cents)).select(
+    cents = Centroids.first(emb, IVF_NLIST)
+    assigned = cents.bind(emb).select(
         "vec_id",
-        F.array_min(_cent_scored(F.col("embedding")))["centroid_id"].alias(
-            "list_id"
-        ),
+        cents.nearest(F.col("embedding"))["centroid_id"].alias("list_id"),
     )
     is_new = F.col("vec_id") % UPSERT_MOD == 0
     lists = assigned.groupBy("list_id").agg(
@@ -1819,19 +1595,7 @@ def ann_ivf_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _IVF_UPSERT_SQL = f"""
-WITH cent AS (
-  SELECT vec_id AS centroid_id, embedding AS c_emb FROM embeddings
-  WHERE vec_id < {IVF_NLIST}
-), assigned AS (
-  SELECT vec_id, centroid_id AS list_id
-  FROM (SELECT e.vec_id, c.centroid_id,
-               ROW_NUMBER() OVER (
-                 PARTITION BY e.vec_id
-                 ORDER BY {_SQL_L2SQ.format(a="e.embedding", b="c.c_emb")},
-                          c.centroid_id) AS rn
-        FROM embeddings e CROSS JOIN cent c)
-  WHERE rn = 1
-), lists AS (
+WITH {sql_centroid_ctes(IVF_NLIST)}, lists AS (
   SELECT list_id,
          CAST(SUM(CASE WHEN vec_id % {UPSERT_MOD} <> 0 THEN 1 ELSE 0 END)
               AS BIGINT) AS n_before,
@@ -1947,7 +1711,7 @@ WITH sub AS (
   FROM sub WHERE vec_id < {PQ_K}
 ), errs AS (
   SELECT v.vec_id, v.s,
-         CAST(floor(MIN({_SQL_L2SQ.format(a="v.sv", b="c.sv")})
+         CAST(floor(MIN({sql_l2_sq("v.sv", "c.sv")})
                     * {PQERR_FP}) AS BIGINT) AS err_fp
   FROM sub v JOIN cbi c ON v.s = c.s
   GROUP BY v.vec_id, v.s
@@ -1997,16 +1761,7 @@ def ann_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     BIGINT (order-independent, engine-portable); shuffles touch only
     the per-query shortlist windows."""
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    cents = sorted(
-        emb.filter(F.col("vec_id") < IVF_NLIST)
-        .select(
-            F.col("vec_id").alias("centroid_id"),
-            F.col("embedding").alias("c_emb"),
-        )
-        .collect(),
-        key=lambda r: r["centroid_id"],
-    )
-    cents_lit = _cents_lit_of(cents)
+    cents = Centroids.first(emb, IVF_NLIST)
     cb, ks = _pq_codebook(emb)
     q_rows = emb.filter(F.col("vec_id") < N_QUERIES).collect()
     qtabs = _pq_query_tables(q_rows, cb, ks)
@@ -2024,12 +1779,10 @@ def ann_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     # It is also semantically the faiss-faithful artifact: the
     # PQ-coded index is MATERIALIZED once at build time, then scanned.
     coded = (
-        emb.withColumn("cents", cents_lit)
+        cents.bind(emb)
         .select(
             "vec_id",
-            F.array_min(_cent_scored(F.col("embedding")))[
-                "centroid_id"
-            ].alias("list_id"),
+            cents.nearest(F.col("embedding"))["centroid_id"].alias("list_id"),
             F.expr(_pq_encode_sql(cb, ks)).alias("codes"),
         )
         .localCheckpoint(eager=False)
@@ -2038,14 +1791,10 @@ def ann_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
     )
     probes = (
-        queries.withColumn("cents", cents_lit)
+        cents.bind(queries)
         .select(
             "q_id",
-            F.explode(
-                F.slice(
-                    F.array_sort(_cent_scored(F.col("q_emb"))), 1, IVF_NPROBE
-                )
-            ).alias("pr"),
+            F.explode(cents.probes(F.col("q_emb"), IVF_NPROBE)).alias("pr"),
         )
         .select("q_id", F.col("pr.centroid_id").alias("list_id"))
     )
@@ -2072,7 +1821,7 @@ def ann_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
             "q_id",
             "vec_id",
             "adc_fp",
-            _l2sq(F.col("q_emb"), F.col("embedding")).alias("d2"),
+            l2_sq(F.col("q_emb"), F.col("embedding")).alias("d2"),
         )
     )
     w = Window.partitionBy("q_id").orderBy("d2", "vec_id")
@@ -2087,29 +1836,7 @@ def ann_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _IVFPQ_SQL = f"""
-WITH cent AS (
-  SELECT vec_id AS centroid_id, embedding AS c_emb FROM embeddings
-  WHERE vec_id < {IVF_NLIST}
-), assigned AS (
-  SELECT vec_id, centroid_id AS list_id
-  FROM (SELECT e.vec_id, c.centroid_id,
-               ROW_NUMBER() OVER (
-                 PARTITION BY e.vec_id
-                 ORDER BY {_SQL_L2SQ.format(a="e.embedding", b="c.c_emb")},
-                          c.centroid_id) AS rn
-        FROM embeddings e CROSS JOIN cent c)
-  WHERE rn = 1
-), probes AS (
-  SELECT q_id, list_id
-  FROM (SELECT q.vec_id AS q_id, c.centroid_id AS list_id,
-               ROW_NUMBER() OVER (
-                 PARTITION BY q.vec_id
-                 ORDER BY {_SQL_L2SQ.format(a="q.embedding", b="c.c_emb")},
-                          c.centroid_id) AS pr
-        FROM embeddings q CROSS JOIN cent c
-        WHERE q.vec_id < {N_QUERIES})
-  WHERE pr <= {IVF_NPROBE}
-), sub AS (
+WITH {_IVF_CTES}, sub AS (
   SELECT vec_id, s,
          embedding[s * {PQ_SUBDIM} + 1 : s * {PQ_SUBDIM} + {PQ_SUBDIM}] AS sv
   FROM embeddings, UNNEST(range(0, {PQ_M})) AS r(s)
@@ -2121,12 +1848,12 @@ WITH cent AS (
     SELECT v.vec_id, v.s, c.j,
            ROW_NUMBER() OVER (
              PARTITION BY v.vec_id, v.s
-             ORDER BY {_SQL_L2SQ.format(a="v.sv", b="c.sv")}, c.j) AS rn
+             ORDER BY {sql_l2_sq("v.sv", "c.sv")}, c.j) AS rn
     FROM sub v JOIN cbi c ON v.s = c.s)
   WHERE rn = 1
 ), qtab AS (
   SELECT q.vec_id AS q_id, q.s, c.j,
-         CAST(floor({_SQL_L2SQ.format(a="q.sv", b="c.sv")} * {PQ_FP})
+         CAST(floor({sql_l2_sq("q.sv", "c.sv")} * {PQ_FP})
               AS BIGINT) AS dfp
   FROM sub q JOIN cbi c ON q.s = c.s
   WHERE q.vec_id < {N_QUERIES}
@@ -2146,7 +1873,7 @@ WITH cent AS (
   WHERE srnk <= {PQ_SHORTLIST}
 ), reranked AS (
   SELECT s.q_id, s.vec_id, CAST(s.adc_fp AS BIGINT) AS adc_fp,
-         {_SQL_L2SQ.format(a='q.embedding', b='b.embedding')} AS d2
+         {sql_l2_sq("q.embedding", "b.embedding")} AS d2
   FROM shortlist s
   JOIN embeddings b ON b.vec_id = s.vec_id
   JOIN embeddings q ON q.vec_id = s.q_id
@@ -2181,17 +1908,11 @@ def ann_topk_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic bit-for-bit); fixed-point BIGINT ADC scores keep the
     scan order-independent and engine-portable."""
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    cents = sorted(
-        emb.filter(F.col("vec_id") < IVF_NLIST)
-        .select(
-            F.col("vec_id").alias("centroid_id"),
-            F.col("embedding").alias("c_emb"),
-        )
-        .collect(),
-        key=lambda r: r["centroid_id"],
-    )
-    cents_lit = _cents_lit_of(cents)
-    cmap = {int(c["centroid_id"]): [float(x) for x in c["c_emb"]] for c in cents}
+    cents = Centroids.first(emb, IVF_NLIST)
+    cmap = {
+        int(c["centroid_id"]): [float(x) for x in c["c_emb"]]
+        for c in cents.rows
+    }
     # The positional element_at(_cbc, list_id + 1) below is only correct
     # while centroid ids are exactly the dense vec_ids 0..IVF_NLIST-1
     # (the oracle joins BY ID); enforce the assumption instead of
@@ -2209,13 +1930,11 @@ def ann_topk_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
     resid = (
-        emb.withColumn("cents", cents_lit)
+        cents.bind(emb)
         .select(
             "vec_id",
             "embedding",
-            F.array_min(_cent_scored(F.col("embedding")))[
-                "centroid_id"
-            ].alias("list_id"),
+            cents.nearest(F.col("embedding"))["centroid_id"].alias("list_id"),
         )
         .withColumn("_cbc", cbyid)
         .select(
@@ -2306,7 +2025,7 @@ def ann_topk_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
             "q_id",
             "vec_id",
             "adc_fp",
-            _l2sq(F.col("q_emb"), F.col("embedding")).alias("d2"),
+            l2_sq(F.col("q_emb"), F.col("embedding")).alias("d2"),
         )
     )
     w = Window.partitionBy("q_id").orderBy("d2", "vec_id")
@@ -2326,19 +2045,7 @@ _SQL_RESID = (
 )
 
 _IVFPQ_RESIDUAL_SQL = f"""
-WITH cent AS (
-  SELECT vec_id AS centroid_id, embedding AS c_emb FROM embeddings
-  WHERE vec_id < {IVF_NLIST}
-), assigned AS (
-  SELECT vec_id, centroid_id AS list_id
-  FROM (SELECT e.vec_id, c.centroid_id,
-               ROW_NUMBER() OVER (
-                 PARTITION BY e.vec_id
-                 ORDER BY {_SQL_L2SQ.format(a="e.embedding", b="c.c_emb")},
-                          c.centroid_id) AS rn
-        FROM embeddings e CROSS JOIN cent c)
-  WHERE rn = 1
-), resid AS (
+WITH {_IVF_CTES}, resid AS (
   SELECT e.vec_id, a.list_id,
          {_SQL_RESID.format(v="e.embedding", c="c.c_emb")} AS r
   FROM embeddings e
@@ -2356,19 +2063,9 @@ WITH cent AS (
     SELECT v.vec_id, v.list_id, v.s, c.j,
            ROW_NUMBER() OVER (
              PARTITION BY v.vec_id, v.s
-             ORDER BY {_SQL_L2SQ.format(a="v.sv", b="c.sv")}, c.j) AS rn
+             ORDER BY {sql_l2_sq("v.sv", "c.sv")}, c.j) AS rn
     FROM sub v JOIN cbi c ON v.s = c.s)
   WHERE rn = 1
-), probes AS (
-  SELECT q_id, list_id
-  FROM (SELECT q.vec_id AS q_id, c.centroid_id AS list_id,
-               ROW_NUMBER() OVER (
-                 PARTITION BY q.vec_id
-                 ORDER BY {_SQL_L2SQ.format(a="q.embedding", b="c.c_emb")},
-                          c.centroid_id) AS pr
-        FROM embeddings q CROSS JOIN cent c
-        WHERE q.vec_id < {N_QUERIES})
-  WHERE pr <= {IVF_NPROBE}
 ), qres AS (
   SELECT p.q_id, p.list_id,
          {_SQL_RESID.format(v="q.embedding", c="c.c_emb")} AS r
@@ -2381,7 +2078,7 @@ WITH cent AS (
   FROM qres, UNNEST(range(0, {PQ_M})) AS t(s)
 ), qtab AS (
   SELECT q.q_id, q.list_id, q.s, c.j,
-         CAST(floor({_SQL_L2SQ.format(a="q.sv", b="c.sv")} * {PQ_FP})
+         CAST(floor({sql_l2_sq("q.sv", "c.sv")} * {PQ_FP})
               AS BIGINT) AS dfp
   FROM qsub q JOIN cbi c ON q.s = c.s
 ), adc AS (
@@ -2398,7 +2095,7 @@ WITH cent AS (
   WHERE srnk <= {PQ_SHORTLIST}
 ), reranked AS (
   SELECT s.q_id, s.vec_id, CAST(s.adc_fp AS BIGINT) AS adc_fp,
-         {_SQL_L2SQ.format(a='q.embedding', b='b.embedding')} AS d2
+         {sql_l2_sq("q.embedding", "b.embedding")} AS d2
   FROM shortlist s
   JOIN embeddings b ON b.vec_id = s.vec_id
   JOIN embeddings q ON q.vec_id = s.q_id
@@ -2448,7 +2145,7 @@ def ann_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "q_id",
             "vec_id",
-            _l2sq(F.col("q_emb"), F.col("embedding")).alias("d2"),
+            l2_sq(F.col("q_emb"), F.col("embedding")).alias("d2"),
         )
     )
     w = Window.partitionBy("q_id").orderBy("d2", "vec_id")
@@ -2488,7 +2185,7 @@ ex AS (
   FROM (SELECT q_id, b.vec_id,
                ROW_NUMBER() OVER (
                  PARTITION BY q_id
-                 ORDER BY {_SQL_L2SQ.format(a="q_emb", b="b.embedding")},
+                 ORDER BY {sql_l2_sq("q_emb", "b.embedding")},
                           b.vec_id) AS rn
         FROM exq JOIN embeddings b ON b.vec_id <> q_id)
   WHERE rn <= {TOP_K}
@@ -3061,7 +2758,7 @@ def ann_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id",
         "embedding",
-        _sign_bucket(F.col("embedding"), LSH_DIMS).alias("bucket"),
+        sign_bucket(F.col("embedding"), LSH_DIMS).alias("bucket"),
     )
     base_q = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("q_id"),
@@ -3103,7 +2800,7 @@ def ann_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _ANN_RANGE_SQL = f"""
 WITH emb AS (
-  SELECT vec_id, embedding, {_LSH_BUCKET} AS bucket FROM embeddings
+  SELECT vec_id, embedding, {sql_sign_bucket(LSH_DIMS)} AS bucket FROM embeddings
 ), base_q AS (
   SELECT vec_id AS q_id, embedding AS q_emb, bucket FROM emb
   WHERE vec_id < {N_QUERIES}

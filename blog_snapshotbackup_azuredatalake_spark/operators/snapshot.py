@@ -184,6 +184,19 @@ _PERTURBED_SQL = """
         ORDER BY o_orderkey LIMIT 50)
 """
 
+_PERTURBED_V2_SQL = """
+  SELECT o_orderkey, o_custkey, o_orderstatus,
+         CASE WHEN o_orderkey % 93 = 0 THEN o_totalprice + 25.0
+              ELSE o_totalprice END AS o_totalprice,
+         o_orderdate, o_orderpriority
+  FROM v1 WHERE o_orderkey % 83 <> 1
+  UNION ALL
+  SELECT o_orderkey + 200000000, o_custkey, o_orderstatus, o_totalprice,
+         o_orderdate, o_orderpriority
+  FROM (SELECT * FROM v1 WHERE o_orderkey % 103 = 11
+        ORDER BY o_orderkey LIMIT 30)
+"""
+
 
 def snap_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Snapshot diff A→B: classify every key as added / removed / changed
@@ -778,18 +791,7 @@ def snap_chain_rebase(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SNAP_CHAIN_REBASE_SQL = f"""
 WITH v1 AS ({_PERTURBED_SQL}),
-v2 AS (
-  SELECT o_orderkey, o_custkey, o_orderstatus,
-         CASE WHEN o_orderkey % 93 = 0 THEN o_totalprice + 25.0
-              ELSE o_totalprice END AS o_totalprice,
-         o_orderdate, o_orderpriority
-  FROM v1 WHERE o_orderkey % 83 <> 1
-  UNION ALL
-  SELECT o_orderkey + 200000000, o_custkey, o_orderstatus, o_totalprice,
-         o_orderdate, o_orderpriority
-  FROM (SELECT * FROM v1 WHERE o_orderkey % 103 = 11
-        ORDER BY o_orderkey LIMIT 30)
-),
+v2 AS ({_PERTURBED_V2_SQL}),
 pm0 AS (SELECT o_orderkey, {sql_row_hash(ORDERS_COLS_SQL)} AS h FROM orders),
 cm1 AS (SELECT *, {sql_row_hash(ORDERS_COLS_SQL)} AS h FROM v1),
 pm1 AS (SELECT o_orderkey, h FROM cm1),
@@ -1134,20 +1136,6 @@ def snap_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("rev_m") == F.col("rev_direct"))
         ).alias("is_consistent"),
     )
-
-
-_PERTURBED_V2_SQL = """
-  SELECT o_orderkey, o_custkey, o_orderstatus,
-         CASE WHEN o_orderkey % 93 = 0 THEN o_totalprice + 25.0
-              ELSE o_totalprice END AS o_totalprice,
-         o_orderdate, o_orderpriority
-  FROM v1 WHERE o_orderkey % 83 <> 1
-  UNION ALL
-  SELECT o_orderkey + 200000000, o_custkey, o_orderstatus, o_totalprice,
-         o_orderdate, o_orderpriority
-  FROM (SELECT * FROM v1 WHERE o_orderkey % 103 = 11
-        ORDER BY o_orderkey LIMIT 30)
-"""
 
 
 def _cdc_pair_sql(prev: str, curr: str, version: int) -> str:

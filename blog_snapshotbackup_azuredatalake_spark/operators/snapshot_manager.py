@@ -313,9 +313,17 @@ class SnapshotManager:
     def verify(self, df: DataFrame, table: str, snap_id: int) -> dict:
         """Compare live data against a snapshot via manifests: returns
         counts of matching / changed / missing / extra keys. Shuffles
-        only (key, hash) pairs."""
+        only (key, hash) pairs. A clone verifies against the snapshot it
+        points at; a chained delta stores the manifest of its own live
+        rows only, so it verifies against the manifest of its restored
+        state."""
         meta = self._read_meta(table, snap_id)
-        snap = self._read(table, meta, "manifest")
+        if meta["kind"] == "clone":
+            return self.verify(df, meta["src_table"], meta["src_snap"])
+        if meta["kind"] == "delta":
+            snap = self._manifest(self.restore(table, snap_id), meta["key"])
+        else:
+            snap = self._read(table, meta, "manifest")
         live = self._manifest(df, meta["key"])
         j = live.alias("l").join(
             snap.alias("s"), F.col("l.key") == F.col("s.key"), "full_outer"

@@ -50,11 +50,13 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     import __spark_entry__ as entrymod
+    from blog_snapshotbackup_azuredatalake_spark.functions.vectors import (
+        sign_bucket,
+    )
     from blog_snapshotbackup_azuredatalake_spark.operators.similarity import (
         KNN_BUCKET_CAP,
         N_QUERIES,
         _knn_graph_dims,
-        _sign_bucket,
     )
     from blog_snapshotbackup_azuredatalake_spark.session import get_session
     from blog_snapshotbackup_azuredatalake_spark.sources.catalog import (
@@ -79,7 +81,7 @@ def main() -> None:
     n = emb.count()
     dims = _knn_graph_dims(n)
     patted = emb.select(
-        "vec_id", _sign_bucket(F.col("embedding"), dims).alias("pat")
+        "vec_id", sign_bucket(F.col("embedding"), dims).alias("pat")
     )
     occ = patted.groupBy("pat").agg(F.count(F.lit(1)).alias("occ"))
     diag = (

@@ -17,10 +17,12 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from blog_snapshotbackup_azuredatalake_spark.functions.vectors import (
+    sign_bucket,
+)
 from blog_snapshotbackup_azuredatalake_spark.operators.similarity import (
     LSH_DIMS,
     N_QUERIES,
-    _sign_bucket,
 )
 from blog_snapshotbackup_azuredatalake_spark.sources.catalog import load_table
 
@@ -32,7 +34,7 @@ def _probe_rows(spark):
     emb = load_table(spark, SF_DIR, "embeddings").select(
         "vec_id",
         "embedding",
-        _sign_bucket(F.col("embedding"), LSH_DIMS).alias("bucket"),
+        sign_bucket(F.col("embedding"), LSH_DIMS).alias("bucket"),
     )
     base_q = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("q_id"), "bucket"
@@ -76,7 +78,7 @@ def test_lsh_join_multiplicity_at_most_one(spark):
     changed row multiplicity."""
     emb = load_table(spark, SF_DIR, "embeddings").select(
         "vec_id",
-        _sign_bucket(F.col("embedding"), LSH_DIMS).alias("bucket"),
+        sign_bucket(F.col("embedding"), LSH_DIMS).alias("bucket"),
     )
     joined = emb.join(F.broadcast(_probe_rows(spark)), "bucket").filter(
         F.col("vec_id") != F.col("q_id")

@@ -93,19 +93,61 @@ def test_gram_projection_is_two_step(spark):
     assert sh_blocks and all("split(text" not in b for b in sh_blocks)
 
 
-def test_ivf_centroids_broadcast_corpus_never_shuffles_for_assign(spark):
+def _plan_nodes(node):
+    yield node
+    children = node.children()
+    for i in range(children.size()):
+        yield from _plan_nodes(children.apply(i))
+
+
+def test_ivf_centroids_broadcast_corpus_never_shuffles_for_assign(
+    spark, monkeypatch
+):
+    import __spark_entry__ as entrymod
     from blog_snapshotbackup_azuredatalake_spark.operators import similarity
 
     plan = _plan(similarity.ann_topk_ivf(spark, SF_DIR))
     # the probe join must be a broadcast hash join, the corpus must
-    # never sort-merge, and coarse assignment is MAP-ONLY (literal
-    # centroid array argmin) — no crossJoin/BNLJ anywhere, and the
-    # corpus branch (the scan feeding the probe join's streamed side)
-    # reaches it without any Exchange
+    # never sort-merge, and no crossJoin/BNLJ anywhere
     assert "BroadcastHashJoin" in plan, plan[:800]
     assert "SortMergeJoin" not in plan, plan[:800]
     assert "BroadcastNestedLoopJoin" not in plan, plan[:800]
     assert "array_min" in plan
+
+    # every entry the nearest-centroid primitive serves searches MAP-ONLY
+    # (literal centroid array argmin / sorted probe list): the operator
+    # that evaluates array_min/array_sort reads straight from the scan —
+    # no join, crossJoin or exchange below it. The localCheckpoint
+    # barriers are lifted so the coded-index assign stays in the plan.
+    monkeypatch.setattr(
+        type(spark.range(1)), "localCheckpoint", lambda self, eager=True: self
+    )
+    qs = entrymod.queries()
+    for name in (
+        "ann_hybrid_rrf", "ann_topk_ivf", "ann_topk_ivf_trained",
+        "ann_filtered_search", "ann_index_balance", "ann_nprobe_curve",
+        "ann_ivf_upsert", "ann_topk_ivfpq", "ann_topk_ivfpq_residual",
+        "emb_kmeans", "emb_centroid_assign", "emb_cluster_purity",
+        "emb_silhouette_lite",
+    ):
+        root = qs[name](spark, SF_DIR)._jdf.queryExecution()
+        root = root.executedPlan().executedPlan()  # inside AdaptiveSparkPlan
+        searches = [
+            n
+            for n in _plan_nodes(root)
+            if any(
+                f in n.expressions().toString()
+                for f in ("array_min(", "array_sort(")
+            )
+        ]
+        assert searches, name
+        for n in searches:
+            below = [m.nodeName() for m in _plan_nodes(n)][1:]
+            assert not any(
+                bad in m
+                for m in below
+                for bad in ("Join", "CartesianProduct", "Exchange")
+            ), (name, below)
 
 
 def test_q21_decorrelation_produced_no_nested_loop(spark):

@@ -31,13 +31,22 @@ from blog_snapshotbackup_azuredatalake_spark.functions.hashing import (
     sql_hash60,
     sql_md5_int60,
 )
+from blog_snapshotbackup_azuredatalake_spark.functions.centroids import (
+    Centroids,
+    neg_cosine,
+    sql_centroid_ctes,
+    sql_neg_cosine,
+)
 from blog_snapshotbackup_azuredatalake_spark.functions.vectors import (
     cosine_similarity,
     cosine_with_norms,
     dot_product,
     l2_norm,
+    l2_sq,
     sql_cosine,
+    sql_l2_sq,
 )
+from blog_snapshotbackup_azuredatalake_spark.operators.similarity import _pq_l2
 
 # no control chars (SEP itself excluded by design contract), ASCII-ish
 _txt = st.text(
@@ -116,6 +125,7 @@ def test_dot_and_cosine_match_python(spark, ab):
         dot_product("a", "b").alias("dot"),
         cosine_similarity("a", "b").alias("cos"),
         cosine_with_norms("a", "b", l2_norm("a"), l2_norm("b")).alias("pre"),
+        l2_sq("a", "b").alias("l2"),
     ).collect()[0]
     # identical fold: left-to-right double accumulation over float32 values
     import struct
@@ -125,6 +135,16 @@ def test_dot_and_cosine_match_python(spark, ab):
     for x, y in zip(a, b):
         dot += f32(x) * f32(y)
     assert row["dot"] == dot
+    # the squared-L2 fold: Spark, DuckDB and the driver-side Python
+    # mirror the residual-IVFPQ probes use are the same double
+    l2 = _pq_l2([f32(x) for x in a], [f32(y) for y in b])
+    assert row["l2"] == l2
+    ddb_l2 = duckdb.execute(
+        f"SELECT {sql_l2_sq('a', 'b')} FROM "
+        "(SELECT CAST(? AS FLOAT[]) AS a, CAST(? AS FLOAT[]) AS b)",
+        [a, b],
+    ).fetchone()[0]
+    assert ddb_l2 == l2
     na = math.sqrt(sum(f32(x) * f32(x) for x in a))
     nb = math.sqrt(sum(f32(y) * f32(y) for y in b))
     if na * nb != 0.0:
@@ -138,6 +158,53 @@ def test_dot_and_cosine_match_python(spark, ab):
             [a, b],
         ).fetchone()[0]
         assert ddb_cos == row["cos"]
+
+
+@pytest.mark.parametrize(
+    "fold,sql_fold", [(l2_sq, sql_l2_sq), (neg_cosine, sql_neg_cosine)]
+)
+def test_centroid_ties_go_to_the_lower_id(spark, fold, sql_fold):
+    """Seeds 0 and 1 are the same vector: every row nearer to it than to
+    seed 2 assigns to centroid 0 and probes 0 before 1, with the same
+    distances, in both engines."""
+    rows = [
+        (0, [1.0, 0.0]),
+        (1, [1.0, 0.0]),
+        (2, [0.0, 1.0]),
+        (3, [0.9, 0.1]),
+        (4, [0.2, 0.7]),
+    ]
+    emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
+    cents = Centroids.first(emb, 3, fold)
+    got = sorted(
+        (r["vec_id"], r["best"], [tuple(p) for p in r["probes"]])
+        for r in cents.bind(emb)
+        .select(
+            "vec_id",
+            cents.nearest(F.col("embedding"))["centroid_id"].alias("best"),
+            cents.probes(F.col("embedding"), 3).alias("probes"),
+        )
+        .collect()
+    )
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE embeddings AS SELECT v.* FROM (VALUES "
+        + ", ".join(f"({i}, {e}::FLOAT[])" for i, e in rows)
+        + ") v(vec_id, embedding)"
+    )
+    want = con.execute(
+        f"""WITH {sql_centroid_ctes(3, "TRUE", 3, sql_fold)}
+        SELECT a.vec_id, a.list_id,
+               list({{'d': p.d, 'id': p.list_id}} ORDER BY p.p)
+        FROM assigned a JOIN probes p ON p.q_id = a.vec_id
+        GROUP BY a.vec_id, a.list_id ORDER BY a.vec_id"""
+    ).fetchall()
+    assert got == [(i, best, [tuple(p.values()) for p in ps])
+                   for i, best, ps in want]
+    assert [(i, best) for i, best, _ in got] == [
+        (0, 0), (1, 0), (2, 2), (3, 0), (4, 2)
+    ]
+    assert [c for _, c in got[3][2]] == [0, 1, 2]
 
 
 def test_grams_of_short_docs_are_empty(spark):

@@ -482,3 +482,34 @@ def test_store_without_recorded_schema_reads_the_same(spark, tmp_path):
     assert _sorted_rows(
         spark.read.parquet(f"{b._dir('t', nb)}/data")
     ) == _sorted_rows(spark.read.parquet(f"{a._dir('t', na)}/data"))
+
+
+def test_verify_resolves_deltas_and_clones(spark, mgr):
+    """A commit_delta() snapshot stores the manifest of its own live rows
+    only, and a clone stores no manifest at all: verify() compares an
+    intact table against their restored state, and still reports a
+    tampered row."""
+    v0, v1, v2, changes = _slice_states(spark)
+    key = "o_orderkey"
+    mgr.snapshot(v0, "t", key)
+    mgr.snapshot(v1, "t", key)
+    sid = mgr.commit_delta(changes, "t", key)
+    cid = mgr.clone("t", sid, "t_dev")
+    k = v2.agg(F.min(key)).collect()[0][0]
+    tampered = v2.withColumn(
+        "o_totalprice",
+        F.when(F.col(key) == k, F.col("o_totalprice") + 1.0).otherwise(
+            F.col("o_totalprice")
+        ),
+    )
+    for table, snap_id in (("t", sid), ("t_dev", cid)):
+        intact = mgr.verify(v2, table, snap_id)
+        assert intact["ok"], intact
+        assert intact["matching"] == v2.count()
+        rep = mgr.verify(tampered, table, snap_id)
+        assert not rep["ok"]
+        assert (rep["changed"], rep["missing_live"], rep["extra_live"]) == (
+            1,
+            0,
+            0,
+        )
