@@ -2,14 +2,15 @@
 
 Where ``operators.snapshot`` exposes the *plans* (manifest/diff/verify as
 oracle-checkable queries), this class performs the actual storage
-operations the reference's backup scripts do — against any Hadoop-FS
-compatible URI (local path in tests, ``abfss://`` on ADLS in production;
-Spark's writers are storage-agnostic).
+operations the reference's backup scripts do. The store is POSIX-only
+for now: the log, ``meta.json``, purge and vacuum use local-filesystem
+calls, so only Spark's own reads and writes would work on an ``abfss://``
+URI (ROADMAP item 3).
 
 Layout under ``backup_root``::
 
-    <table>/snap_<id>/data/      full rows (snapshot 0) or delta rows
-    <table>/snap_<id>/manifest/  (key, row_md5) parquet
+    <table>/snap_<id>/data/      full rows (full snapshot) or delta rows
+    <table>/snap_<id>/manifest/  (key, row_md5) parquet, full snapshots only
     <table>/snap_<id>/meta.json  {id, base, kind, key, schema}
 
 ``schema`` is the data schema as written (``_tombstone`` included for
@@ -18,6 +19,24 @@ costs no inference job; only a ``meta.json`` written before the field
 existed falls back to inference. The transaction log is the source of
 truth for which snapshots exist: a directory it has no commit for is a
 dead writer's debris, skipped by new ids and reclaimed by ``vacuum``.
+
+Each snapshot's log ``add`` action also carries what the write observed
+in the pass it already ran (``Dataset.observe``, no extra job):
+
+- ``snapshot()``: ``rows`` and ``xor60`` of the table state it captured,
+  ``duration_s``, and for an incremental snapshot ``delta_rows`` (rows in
+  its ``data/``, tombstones included) and ``tombstones``. ``(rows,
+  xor60)`` is the state digest: the row count and the ``bit_xor`` of the
+  60-bit row hashes (``hash60`` of the manifest's ``row_md5``), the
+  fingerprint ``snap_restore_drill`` certifies by. ``verify()`` checks a
+  live table against it with one aggregate.
+- ``commit_delta()``: ``rows`` and ``tombstones`` of its change batch,
+  and ``duration_s``.
+
+A stat is absent when Spark reported no metrics for it (the optimizer
+drops the observer of an input it proves empty, such as an empty source
+of an incremental snapshot), and in stores written before stats were
+recorded; without a digest ``verify()`` runs the manifest join.
 
 Incremental snapshots are *differential*: each stores changed+added rows
 plus tombstones relative to the latest FULL snapshot, found by ONE
@@ -36,17 +55,38 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
 from blog_snapshotbackup_azuredatalake_spark.scratch import scratch_dir
 from blog_snapshotbackup_azuredatalake_spark.functions.hashing import (
+    hash60,
     row_hash,
     row_hash_int,
     sql_row_hash_int,
 )
 from blog_snapshotbackup_azuredatalake_spark.operators.txnlog import TransactionLog
+
+
+def _digest(md5: Column) -> list[Column]:
+    """Aggregates of the state digest over rows whose row hash is `md5`."""
+    return [
+        F.count(F.lit(1)).alias("rows"),
+        F.bit_xor(hash60(md5)).alias("xor60"),
+    ]
+
+
+def _observed(obs: Observation) -> dict:
+    """The integer metrics `obs` collected in the action just run; empty
+    when Spark pruned the observed input (the optimizer drops a join side
+    it proves empty, observer included). Over no rows an aggregate is
+    NULL, recorded as 0, the identity of both count and xor."""
+    try:
+        return {k: int(v or 0) for k, v in obs.get.items()}
+    except Py4JJavaError:
+        return {}
 
 
 class SnapshotManager:
@@ -105,9 +145,9 @@ class SnapshotManager:
         return self.spark.read.schema(schema).parquet(path)
 
     def _publish(self, table: str, meta: dict, op: str, **add) -> None:
-        """Write meta.json, then commit the snapshot to the log. The
-        commit is the publish point: until it lands, the directory is
-        debris."""
+        """Write meta.json, then commit the snapshot to the log with the
+        extra fields `add` (stats, digest, clone pointer). The commit is
+        the publish point: until it lands, the directory is debris."""
         os.makedirs(self._dir(table, meta["id"]), exist_ok=True)
         with open(self._meta_path(table, meta["id"]), "w") as f:
             json.dump(meta, f)
@@ -135,11 +175,15 @@ class SnapshotManager:
         )
 
     @staticmethod
-    def _diff(df: DataFrame, key: str, base: DataFrame) -> DataFrame:
+    def _diff(
+        df: DataFrame, key: str, base: DataFrame, digest: Observation
+    ) -> DataFrame:
         """Changed and added rows of `df`, plus a tombstone for every key
         of the `base` manifest that `df` no longer holds, from one
-        full_outer join."""
+        full_outer join. `digest` observes the state digest of `df` on
+        the hashes the join compares."""
         cur = df.withColumn("_md5", row_hash(*sorted(df.columns)))
+        cur = cur.observe(digest, *_digest(cur["_md5"]))
         base = base.select(
             F.col("key").alias("_base_key"), F.col("row_md5").alias("_base_md5")
         )
@@ -167,11 +211,15 @@ class SnapshotManager:
         committed (or ``force_full`` starts a fresh differential chain),
         else a delta against the latest FULL snapshot's manifest. Each
         snapshot is also recorded as one atomic commit in the
-        transaction log."""
+        transaction log, whose add action carries the state digest and
+        the write's stats (module docstring); an incremental snapshot
+        writes no manifest."""
+        t0 = time.perf_counter()
         committed = self._committed(table)
         snap_id = self._next_id(table, committed)
         fulls = [i for i, a in committed.items() if a["kind"] == "full"]
         d = self._dir(table, snap_id)
+        digest = Observation("digest")
         if force_full or not fulls:
             meta = {
                 "id": snap_id,
@@ -184,10 +232,20 @@ class SnapshotManager:
             # hash the files just written: a source that is itself a
             # restore fold (rebase) is evaluated once, not twice
             written = self._read(table, meta, "data")
-            self._manifest(written, key).write.parquet(f"{d}/manifest")
+            manifest = self._manifest(written, key)
+            manifest = manifest.observe(digest, *_digest(manifest["row_md5"]))
+            manifest.write.parquet(f"{d}/manifest")
+            stats = _observed(digest)
         else:
             base = self._read_meta(table, max(fulls))
-            delta = self._diff(df, key, self._read(table, base, "manifest"))
+            changes = Observation("changes")
+            delta = self._diff(
+                df, key, self._read(table, base, "manifest"), digest
+            ).observe(
+                changes,
+                F.count(F.lit(1)).alias("delta_rows"),
+                F.count_if("_tombstone").alias("tombstones"),
+            )
             meta = {
                 "id": snap_id,
                 "base": base["id"],
@@ -196,8 +254,9 @@ class SnapshotManager:
                 "schema": delta.schema.jsonValue(),
             }
             delta.write.mode("errorifexists").parquet(f"{d}/data")
-            self._manifest(df, key).write.parquet(f"{d}/manifest")
-        self._publish(table, meta, "snapshot")
+            stats = {**_observed(digest), **_observed(changes)}
+        stats["duration_s"] = round(time.perf_counter() - t0, 3)
+        self._publish(table, meta, "snapshot", **stats)
         return snap_id
 
     # -- delta commit (the O(|changes|) CDC-apply path) --------------------
@@ -211,10 +270,12 @@ class SnapshotManager:
         STATES and so costs O(|table|) per call — the delta's base is
         the PREVIOUS committed snapshot (full or delta), so ``restore``
         folds the whole chain newest-version-per-key and ``rebase``
-        compacts long chains back to one full snapshot. The manifest
-        stored alongside covers only the delta's live rows (a chain
-        head's full manifest is derivable by restore; storing one per
-        delta would itself be an O(|table|) write)."""
+        compacts long chains back to one full snapshot. It writes no
+        manifest and records no state digest (either would cost an
+        O(|table|) pass), so ``verify()`` of a delta joins the manifest of
+        its restore. The add action records the batch's ``rows`` and
+        ``tombstones``, observed on the data write."""
+        t0 = time.perf_counter()
         committed = self._committed(table)
         if not committed:
             raise ValueError("commit_delta needs an existing base snapshot")
@@ -227,14 +288,15 @@ class SnapshotManager:
             "key": key,
             "schema": changes.schema.jsonValue(),
         }
-        changes.write.mode("errorifexists").parquet(f"{d}/data")
-        live = (
-            self._read(table, meta, "data")
-            .filter(~F.col("_tombstone"))
-            .drop("_tombstone")
-        )
-        self._manifest(live, key).write.parquet(f"{d}/manifest")
-        self._publish(table, meta, "snapshot")
+        batch = Observation("batch")
+        changes.observe(
+            batch,
+            F.count(F.lit(1)).alias("rows"),
+            F.count_if("_tombstone").alias("tombstones"),
+        ).write.mode("errorifexists").parquet(f"{d}/data")
+        stats = _observed(batch)
+        stats["duration_s"] = round(time.perf_counter() - t0, 3)
+        self._publish(table, meta, "snapshot", **stats)
         return snap_id
 
     def rebase(self, table: str) -> int:
@@ -311,42 +373,51 @@ class SnapshotManager:
 
     # -- verify -----------------------------------------------------------
     def verify(self, df: DataFrame, table: str, snap_id: int) -> dict:
-        """Compare live data against a snapshot via manifests: returns
-        counts of matching / changed / missing / extra keys. Shuffles
-        only (key, hash) pairs. A clone verifies against the snapshot it
-        points at; a chained delta stores the manifest of its own live
-        rows only, so it verifies against the manifest of its restored
-        state."""
+        """Compare live data against a snapshot: returns integer counts
+        of matching / changed / missing / extra keys, and ``ok``.
+
+        When the snapshot's add action records a state digest, one
+        global aggregate digests `df`; if its (row count, 60-bit xor of
+        row hashes) equals the recorded pair, the table is reported
+        intact (``matching`` = rows, zeros, ``ok``). That verdict rests
+        on the row count plus a 60-bit xor: a change that leaves both
+        unchanged (a hash collision) would pass. Any other outcome, or a
+        snapshot with no digest (a delta, or a store written before
+        digests), runs the exact comparison, a ``full_outer`` join of
+        (key, row_md5) manifests: a full snapshot's stored manifest, or
+        for any other kind the manifest of its restore. A clone verifies
+        against the snapshot it points at."""
         meta = self._read_meta(table, snap_id)
         if meta["kind"] == "clone":
             return self.verify(df, meta["src_table"], meta["src_snap"])
-        if meta["kind"] == "delta":
-            snap = self._manifest(self.restore(table, snap_id), meta["key"])
-        else:
-            snap = self._read(table, meta, "manifest")
+        add = self._committed(table).get(snap_id, {})
         live = self._manifest(df, meta["key"])
+        if "xor60" in add:
+            got = live.agg(*_digest(live["row_md5"])).collect()[0]
+            if (got["rows"], got["xor60"] or 0) == (add["rows"], add["xor60"]):
+                return {
+                    "matching": add["rows"],
+                    "changed": 0,
+                    "missing_live": 0,
+                    "extra_live": 0,
+                    "ok": True,
+                }
+        if meta["kind"] == "full":
+            snap = self._read(table, meta, "manifest")
+        else:
+            snap = self._manifest(self.restore(table, snap_id), meta["key"])
+        l_md5, s_md5 = F.col("l.row_md5"), F.col("s.row_md5")
         j = live.alias("l").join(
             snap.alias("s"), F.col("l.key") == F.col("s.key"), "full_outer"
         )
-        agg = j.agg(
-            F.sum(
-                (F.col("l.row_md5") == F.col("s.row_md5")).cast("long")
-            ).alias("matching"),
-            F.sum(
-                (
-                    F.col("l.row_md5").isNotNull()
-                    & F.col("s.row_md5").isNotNull()
-                    & (F.col("l.row_md5") != F.col("s.row_md5"))
-                ).cast("long")
-            ).alias("changed"),
-            F.sum(F.col("l.key").isNull().cast("long")).alias("missing_live"),
-            F.sum(F.col("s.key").isNull().cast("long")).alias("extra_live"),
-        ).collect()[0]
-        out = agg.asDict()
-        out["ok"] = (
-            (out["changed"] or 0) == 0
-            and (out["missing_live"] or 0) == 0
-            and (out["extra_live"] or 0) == 0
+        out = j.agg(
+            F.count_if(l_md5 == s_md5).alias("matching"),
+            F.count_if(l_md5 != s_md5).alias("changed"),
+            F.count_if(F.col("l.key").isNull()).alias("missing_live"),
+            F.count_if(F.col("s.key").isNull()).alias("extra_live"),
+        ).collect()[0].asDict()
+        out["ok"] = not (
+            out["changed"] or out["missing_live"] or out["extra_live"]
         )
         return out
 

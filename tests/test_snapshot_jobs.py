@@ -1,11 +1,17 @@
 """Job budget of the SnapshotManager calls on the backup loop's hot path.
 
 Spark's fixed cost per job dominates these calls at small and medium
-scale, so the number of jobs each call launches is pinned here: an
-incremental snapshot is one manifest write plus one full_outer diff
-plan (two shuffle map stages and the delta write), a verify is one
-manifest join plus its aggregate, and restoring a full snapshot is a
-plain schema-pinned read that plans without a job and without a fold.
+scale, so the number of jobs each call launches is pinned here:
+
+- an incremental snapshot is one full_outer diff plan (two shuffle map
+  stages and the delta write); it writes no manifest, and its digest
+  and stats are observed in that pass;
+- a commit_delta is the write of its change batch, stats observed;
+- verifying an intact table against a recorded digest, of a full or
+  an incremental snapshot, is one global aggregate (its shuffle map
+  stage and the final stage);
+- restoring a full snapshot is a plain schema-pinned read that plans
+  without a job and without a fold.
 """
 import uuid
 
@@ -18,8 +24,10 @@ from blog_snapshotbackup_azuredatalake_spark.operators.snapshot_manager import (
 from blog_snapshotbackup_azuredatalake_spark.sources.catalog import load_table
 from tests.conftest import SF_DIR
 
-INCREMENTAL_SNAPSHOT_JOBS = 4
-VERIFY_JOBS = 4
+INCREMENTAL_SNAPSHOT_JOBS = 3
+VERIFY_JOBS = 2
+FULL_VERIFY_JOBS = 2
+COMMIT_DELTA_JOBS = 1
 
 
 def _jobs(spark, fn):
@@ -47,11 +55,11 @@ def store(spark, tmp_path):
     ).filter(F.col("o_orderkey") % 13 != 0)
     mgr = SnapshotManager(spark, str(tmp_path / "store"))
     full = mgr.snapshot(orders, "orders", "o_orderkey")
-    return mgr, full, day1
+    return mgr, full, orders, day1
 
 
 def test_incremental_snapshot_and_verify_job_budget(spark, store):
-    mgr, _, day1 = store
+    mgr, _, _, day1 = store
     sid, n_snapshot = _jobs(
         spark, lambda: mgr.snapshot(day1, "orders", "o_orderkey")
     )
@@ -62,8 +70,29 @@ def test_incremental_snapshot_and_verify_job_budget(spark, store):
     assert n_verify == VERIFY_JOBS
 
 
+def test_full_verify_job_budget(spark, store):
+    mgr, full, orders, _ = store
+    report, n_verify = _jobs(spark, lambda: mgr.verify(orders, "orders", full))
+    assert report["ok"]
+    assert n_verify == FULL_VERIFY_JOBS
+
+
+def test_commit_delta_job_budget(spark, store):
+    mgr, _, orders, _ = store
+    changes = (
+        orders.filter(F.col("o_orderkey") % 7 == 0)
+        .withColumn("o_totalprice", F.col("o_totalprice") + 1.0)
+        .withColumn("_tombstone", F.col("o_orderkey") % 14 == 0)
+    )
+    sid, n_commit = _jobs(
+        spark, lambda: mgr.commit_delta(changes, "orders", "o_orderkey")
+    )
+    assert mgr._read_meta("orders", sid)["kind"] == "delta"
+    assert n_commit == COMMIT_DELTA_JOBS
+
+
 def test_full_restore_is_a_plain_read(spark, store):
-    mgr, full, _ = store
+    mgr, full, _, _ = store
     df, n_plan = _jobs(spark, lambda: mgr.restore("orders", full))
     assert n_plan == 0
     assert "Window" not in df._jdf.queryExecution().toString()

@@ -485,10 +485,9 @@ def test_store_without_recorded_schema_reads_the_same(spark, tmp_path):
 
 
 def test_verify_resolves_deltas_and_clones(spark, mgr):
-    """A commit_delta() snapshot stores the manifest of its own live rows
-    only, and a clone stores no manifest at all: verify() compares an
-    intact table against their restored state, and still reports a
-    tampered row."""
+    """A commit_delta() snapshot and a clone store no manifest and no
+    digest: verify() compares an intact table against their restored
+    state, and still reports a tampered row."""
     v0, v1, v2, changes = _slice_states(spark)
     key = "o_orderkey"
     mgr.snapshot(v0, "t", key)
@@ -513,3 +512,140 @@ def test_verify_resolves_deltas_and_clones(spark, mgr):
             0,
             0,
         )
+
+
+def _without_digests(mgr, root):
+    """A copy of `mgr`'s store whose add actions carry no state digest,
+    as in a store written before digests were recorded."""
+    import json
+    import shutil
+
+    shutil.copytree(mgr.root, root)
+    log_dir = os.path.join(root, "_txn_log")
+    for name in os.listdir(log_dir):
+        path = os.path.join(log_dir, name)
+        with open(path) as f:
+            lines = [json.loads(ln) for ln in f if ln.strip()]
+        for a in lines[1:]:
+            for field in ("rows", "xor60"):
+                a.get("add", {}).pop(field, None)
+        with open(path, "w") as f:
+            f.writelines(json.dumps(ln) + "\n" for ln in lines)
+    return SnapshotManager(mgr.spark, str(root))
+
+
+@pytest.mark.parametrize("kind", ["full", "incremental"])
+def test_digest_verify_matches_exact_join(spark, tmp_path, kind):
+    """verify() against a recorded digest returns the dict the exact
+    manifest join returns, for an intact table and for each kind of
+    tampering, a swap of two keys' payloads included (a digest that
+    ignored the key would miss it)."""
+    v0, v1, _, _ = _slice_states(spark)
+    key = "o_orderkey"
+    k = F.col(key)
+    a = SnapshotManager(spark, str(tmp_path / "a"))
+    sid = a.snapshot(v0, "t", key)
+    state = v0
+    if kind == "incremental":
+        sid, state = a.snapshot(v1, "t", key), v1
+    assert a._read_meta("t", sid)["kind"] == kind
+    assert "xor60" in a._committed("t")[sid]
+    b = _without_digests(a, tmp_path / "b")
+    assert "xor60" not in b._committed("t")[sid]
+    assert _sorted_rows(b.restore("t", sid)) == _sorted_rows(state)
+
+    k1, k2 = (r[0] for r in state.select(key).orderBy(key).limit(2).collect())
+    cases = {
+        "intact": (state, (0, 0, 0)),
+        "changed": (
+            state.withColumn(
+                "o_totalprice",
+                F.when(k == k1, F.col("o_totalprice") + 1.0).otherwise(
+                    F.col("o_totalprice")
+                ),
+            ),
+            (1, 0, 0),
+        ),
+        "missing": (state.filter(k != k1), (0, 1, 0)),
+        "extra": (
+            state.unionByName(
+                state.filter(k == k1).withColumn(key, k + 1_000_000_000)
+            ),
+            (0, 0, 1),
+        ),
+        "swap": (
+            state.filter(~k.isin(k1, k2)).unionByName(
+                state.filter(k.isin(k1, k2)).withColumn(
+                    key, F.when(k == k1, F.lit(k2)).otherwise(F.lit(k1))
+                )
+            ),
+            (2, 0, 0),
+        ),
+    }
+    for name, (live, bad) in cases.items():
+        got = a.verify(live, "t", sid)
+        assert got == b.verify(live, "t", sid), name
+        assert (got["changed"], got["missing_live"], got["extra_live"]) == bad
+        assert got["ok"] == (bad == (0, 0, 0)), name
+
+
+def test_verify_counts_are_ints_on_an_empty_table(spark, tmp_path):
+    """An empty table verifies as intact with integer zero counts on
+    the digest path and on the exact join, for a full snapshot and for
+    an incremental one (where Spark drops the observer of the empty
+    source, so no digest is recorded)."""
+    v0, _, _, _ = _slice_states(spark)
+    key = "o_orderkey"
+    empty = v0.filter(F.lit(False))
+    a = SnapshotManager(spark, str(tmp_path / "a"))
+    full = a.snapshot(empty, "t", key)
+    a.snapshot(v0, "u", key)
+    inc = a.snapshot(empty, "u", key)
+    b = _without_digests(a, tmp_path / "b")
+    want = {
+        "matching": 0,
+        "changed": 0,
+        "missing_live": 0,
+        "extra_live": 0,
+        "ok": True,
+    }
+    for m in (a, b):
+        for table, sid in (("t", full), ("u", inc)):
+            got = m.verify(empty, table, sid)
+            assert got == want
+            assert all(type(v) is int for k, v in got.items() if k != "ok")
+
+
+def test_add_actions_record_write_stats(spark, mgr):
+    """The log's add actions carry the per-commit record, observed on
+    the frames the writes already ran: the state digest and rows of a
+    snapshot, an incremental's delta rows and tombstones, and a
+    commit_delta batch's rows and tombstones. Only full snapshots keep
+    a manifest."""
+    from blog_snapshotbackup_azuredatalake_spark.functions.hashing import (
+        row_hash_int,
+    )
+
+    v0, v1, _, changes = _slice_states(spark)
+    key = "o_orderkey"
+    s0 = mgr.snapshot(v0, "t", key)
+    s1 = mgr.snapshot(v1, "t", key)
+    s2 = mgr.commit_delta(changes, "t", key)
+    add = mgr._committed("t")
+    for sid, state in ((s0, v0), (s1, v1)):
+        n, x = (
+            state.select(row_hash_int(*sorted(state.columns)).alias("h"))
+            .agg(F.count(F.lit(1)), F.expr("bit_xor(h)"))
+            .collect()[0]
+        )
+        assert (add[sid]["rows"], add[sid]["xor60"]) == (n, x)
+    assert "delta_rows" not in add[s0] and "tombstones" not in add[s0]
+    data = spark.read.parquet(f"{mgr._dir('t', s1)}/data")
+    assert add[s1]["delta_rows"] == data.count()
+    assert add[s1]["tombstones"] == data.filter("_tombstone").count() > 0
+    assert add[s2]["rows"] == changes.count()
+    assert add[s2]["tombstones"] == changes.filter("_tombstone").count() > 0
+    assert "xor60" not in add[s2]
+    assert all(add[sid]["duration_s"] > 0 for sid in (s0, s1, s2))
+    manifests = [os.path.isdir(f"{mgr._dir('t', s)}/manifest") for s in (s0, s1, s2)]
+    assert manifests == [True, False, False]
