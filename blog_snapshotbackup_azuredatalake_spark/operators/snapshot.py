@@ -39,6 +39,8 @@ from blog_snapshotbackup_azuredatalake_spark.sources.catalog import (
 # portable row encodings for the `orders` table (the manifest example table)
 # ---------------------------------------------------------------------------
 
+# the `orders` row encoding as Spark SQL expressions, for ``row_hash`` and
+# ``row_hash_int``, and its DuckDB mirror
 _ORDERS_COLS = [
     "o_orderkey",
     "o_custkey",
@@ -47,21 +49,7 @@ _ORDERS_COLS = [
     "cast(o_orderdate as string)",
     "o_orderpriority",
 ]
-
-ORDERS_COLS_SQL = [
-    "o_orderkey",
-    "o_custkey",
-    "o_orderstatus",
-    "cast(cast(o_totalprice as decimal(12,2)) as varchar)",
-    "cast(o_orderdate as varchar)",
-    "o_orderpriority",
-]
-
-
-def orders_cols() -> list[F.Column]:
-    """The `orders` row encoding as columns, for ``row_hash`` and
-    ``row_hash_int``; ``ORDERS_COLS_SQL`` is its DuckDB mirror."""
-    return [F.expr(c) for c in _ORDERS_COLS]
+ORDERS_COLS_SQL = [c.replace(" as string)", " as varchar)") for c in _ORDERS_COLS]
 
 
 # ---------------------------------------------------------------------------
@@ -75,7 +63,7 @@ def snap_row_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     writing is embarrassingly parallel)."""
     orders = load_table(spark, sf_dir, "orders")
     return orders.select(
-        F.col("o_orderkey"), row_hash(*orders_cols()).alias("row_md5")
+        F.col("o_orderkey"), row_hash(*_ORDERS_COLS).alias("row_md5")
     )
 
 
@@ -203,10 +191,10 @@ def snap_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     by full-outer-joining the two manifests and comparing row hashes.
     Only (key, hash) pairs shuffle — the payload never moves."""
     a = load_table(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("key"), row_hash(*orders_cols()).alias("hash_a")
+        F.col("o_orderkey").alias("key"), row_hash(*_ORDERS_COLS).alias("hash_a")
     )
     b = _perturbed_orders(spark, sf_dir).select(
-        F.col("o_orderkey").alias("key"), row_hash(*orders_cols()).alias("hash_b")
+        F.col("o_orderkey").alias("key"), row_hash(*_ORDERS_COLS).alias("hash_b")
     )
     joined = a.join(b, "key", "full_outer")
     return (
@@ -240,10 +228,10 @@ def snap_incr_antijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash) is not yet in the backup — a left-anti hash join on manifests.
     Re-running after a partial failure re-selects only what's missing."""
     backup = load_table(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("key"), row_hash(*orders_cols()).alias("h")
+        F.col("o_orderkey").alias("key"), row_hash(*_ORDERS_COLS).alias("h")
     )
     source = _perturbed_orders(spark, sf_dir).select(
-        F.col("o_orderkey").alias("key"), row_hash(*orders_cols()).alias("h")
+        F.col("o_orderkey").alias("key"), row_hash(*_ORDERS_COLS).alias("h")
     )
     pending = source.join(backup, ["key", "h"], "left_anti")
     return pending.select(F.col("key").alias("o_orderkey"))
@@ -512,8 +500,8 @@ def snap_apply_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # certificate summary) and the upsert batch two — lazy checkpoints
     # materialize each once instead of re-deriving per subtree
     tgt = _perturbed_orders(spark, sf_dir).localCheckpoint(eager=False)
-    bm = base.select("o_orderkey", row_hash(*orders_cols()).alias("h"))
-    tm = tgt.withColumn("h", row_hash(*orders_cols()))
+    bm = base.select("o_orderkey", row_hash(*_ORDERS_COLS).alias("h"))
+    tm = tgt.withColumn("h", row_hash(*_ORDERS_COLS))
     upserts = (
         tm.join(bm, ["o_orderkey", "h"], "left_anti")
         .drop("h")
@@ -528,7 +516,7 @@ def snap_apply_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def _summ(df: DataFrame, tag: str) -> DataFrame:
-        return df.select(row_hash_int(*orders_cols()).alias("h")).agg(
+        return df.select(row_hash_int(*_ORDERS_COLS).alias("h")).agg(
             F.count(F.lit(1)).alias(f"n_{tag}"),
             F.expr("bit_xor(h)").alias(f"xor_{tag}"),
         )
@@ -600,10 +588,10 @@ def snap_verify_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     it pushes to the manifest scan, and a backup laid out bucketed-by-
     key (sources/sinks.copy_table_bucketed) prunes whole buckets."""
     src = load_table(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("key"), row_hash(*orders_cols()).alias("h_src")
+        F.col("o_orderkey").alias("key"), row_hash(*_ORDERS_COLS).alias("h_src")
     )
     bkp = _perturbed_orders(spark, sf_dir).select(
-        F.col("o_orderkey").alias("key"), row_hash(*orders_cols()).alias("h_bkp")
+        F.col("o_orderkey").alias("key"), row_hash(*_ORDERS_COLS).alias("h_bkp")
     )
     in_sample = hash60(F.md5(F.col("key").cast("string"))) % 100 < SAMPLE_SLOTS
     joined = src.filter(in_sample).join(
@@ -708,8 +696,8 @@ def _change_batch(prev: DataFrame, curr: DataFrame, version: int) -> DataFrame:
     snapshot states — upserts are current rows whose (key, hash) is not
     in the previous manifest, deletes are previous keys gone from the
     current state (payload columns ride along but are ignored)."""
-    pm = prev.select("o_orderkey", row_hash(*orders_cols()).alias("h"))
-    cm = curr.withColumn("h", row_hash(*orders_cols()))
+    pm = prev.select("o_orderkey", row_hash(*_ORDERS_COLS).alias("h"))
+    cm = curr.withColumn("h", row_hash(*_ORDERS_COLS))
     upserts = (
         cm.join(pm, ["o_orderkey", "h"], "left_anti")
         .drop("h")
@@ -760,7 +748,7 @@ def snap_chain_rebase(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).unionByName(survivors)
 
     def _summ(df: DataFrame, tag: str) -> DataFrame:
-        return df.select(row_hash_int(*orders_cols()).alias("h")).agg(
+        return df.select(row_hash_int(*_ORDERS_COLS).alias("h")).agg(
             F.count(F.lit(1)).alias(f"n_{tag}"),
             F.expr("bit_xor(h)").alias(f"xor_{tag}"),
         )
@@ -921,7 +909,7 @@ def snap_verify_merkle(spark: SparkSession, sf_dir: str) -> DataFrame:
     def tree(df: DataFrame) -> DataFrame:
         keyed = df.select(
             hash60(F.md5(F.col("o_orderkey").cast("string"))).alias("hk"),
-            row_hash_int(*orders_cols()).alias("h60"),
+            row_hash_int(*_ORDERS_COLS).alias("h60"),
         )
         return _merkle_levels(keyed)
 
@@ -1016,8 +1004,8 @@ def _cdc_pair(prev: DataFrame, curr: DataFrame, version: int) -> DataFrame:
     vocabulary). Classification joins carry (key, 16-byte row hash)
     manifests only; payload rows are semi-joined out for touched keys —
     quiet days move almost nothing."""
-    a = prev.withColumn("_h", row_hash(*orders_cols()))
-    b = curr.withColumn("_h", row_hash(*orders_cols()))
+    a = prev.withColumn("_h", row_hash(*_ORDERS_COLS))
+    b = curr.withColumn("_h", row_hash(*_ORDERS_COLS))
     ins = (
         b.join(a.select("o_orderkey"), "o_orderkey", "left_anti")
         .select(*_CDC_COLS)
@@ -1246,7 +1234,7 @@ def snap_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
         s = df.select(
             F.lit(ver).alias("version"),
             F.col("o_orderkey").alias("key"),
-            row_hash(*orders_cols()).alias("h"),
+            row_hash(*_ORDERS_COLS).alias("h"),
         )
         states = s if states is None else states.unionByName(s)
     w = Window.partitionBy("key").orderBy("version")
@@ -1481,7 +1469,7 @@ def snap_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return merged.select(
-        "o_orderkey", "action", row_hash(*orders_cols()).alias("row_md5")
+        "o_orderkey", "action", row_hash(*_ORDERS_COLS).alias("row_md5")
     )
 
 
@@ -1582,15 +1570,15 @@ def snap_branch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     as snap_table_checksum."""
     base = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("key"),
-        row_hash_int(*orders_cols()).alias("h0"),
+        row_hash_int(*_ORDERS_COLS).alias("h0"),
     )
     br_a = _perturbed_orders(spark, sf_dir).select(
         F.col("o_orderkey").alias("key"),
-        row_hash_int(*orders_cols()).alias("ha"),
+        row_hash_int(*_ORDERS_COLS).alias("ha"),
     )
     br_b = _branch_b_orders(spark, sf_dir).select(
         F.col("o_orderkey").alias("key"),
-        row_hash_int(*orders_cols()).alias("hb"),
+        row_hash_int(*_ORDERS_COLS).alias("hb"),
     )
     j = (
         base.withColumn("in0", F.lit(True))

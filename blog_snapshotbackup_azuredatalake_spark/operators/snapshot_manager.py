@@ -9,16 +9,23 @@ URI (ROADMAP item 3).
 
 Layout under ``backup_root``::
 
-    <table>/snap_<id>/data/      full rows (full snapshot) or delta rows
-    <table>/snap_<id>/manifest/  (key, row_md5) parquet, full snapshots only
+    <table>/snap_<id>/data/      full rows plus _row_md5, or delta rows
     <table>/snap_<id>/meta.json  {id, base, kind, key, schema}
 
-``schema`` is the data schema as written (``_tombstone`` included for
-incremental and delta snapshots), so every read is schema-pinned and
-costs no inference job; only a ``meta.json`` written before the field
-existed falls back to inference. The transaction log is the source of
-truth for which snapshots exist: a directory it has no commit for is a
-dead writer's debris, skipped by new ids and reclaimed by ``vacuum``.
+A full snapshot stores each row's ``row_hash`` (md5 hex of its sorted
+columns) as ``_row_md5``, written with the rows in one pass: ``_diff``
+and the exact ``verify()`` read ``(key, _row_md5)`` with column pruning,
+and ``restore`` drops it. A store written before that keeps the hashes
+in a ``manifest/`` of ``(key, row_md5)`` beside each full snapshot's
+data, read when the recorded schema lacks the column.
+
+``schema`` is the data schema as written (``_row_md5`` included for
+full snapshots, ``_tombstone`` for incremental and delta snapshots), so
+every read is schema-pinned and costs no inference job; only a
+``meta.json`` written before the field existed falls back to inference.
+The transaction log is the source of truth for which snapshots exist: a
+directory it has no commit for is a dead writer's debris, skipped by new
+ids and reclaimed by ``vacuum``.
 
 Each snapshot's log ``add`` action also carries what the write observed
 in the pass it already ran (``Dataset.observe``, no extra job):
@@ -27,21 +34,21 @@ in the pass it already ran (``Dataset.observe``, no extra job):
   ``duration_s``, and for an incremental snapshot ``delta_rows`` (rows in
   its ``data/``, tombstones included) and ``tombstones``. ``(rows,
   xor60)`` is the state digest: the row count and the ``bit_xor`` of the
-  60-bit row hashes (``hash60`` of the manifest's ``row_md5``), the
-  fingerprint ``snap_restore_drill`` certifies by. ``verify()`` checks a
-  live table against it with one aggregate.
+  60-bit row hashes (``hash60`` of ``_row_md5``), the fingerprint
+  ``snap_restore_drill`` certifies by. ``verify()`` checks a live table
+  against it in one map-only job.
 - ``commit_delta()``: ``rows`` and ``tombstones`` of its change batch,
   and ``duration_s``.
 
 A stat is absent when Spark reported no metrics for it (the optimizer
 drops the observer of an input it proves empty, such as an empty source
 of an incremental snapshot), and in stores written before stats were
-recorded; without a digest ``verify()`` runs the manifest join.
+recorded; without a digest ``verify()`` runs the exact join.
 
 Incremental snapshots are *differential*: each stores changed+added rows
 plus tombstones relative to the latest FULL snapshot, found by ONE
-``full_outer`` join of the hashed source against that snapshot's
-manifest, so row payloads move only when they actually changed. Restore
+``full_outer`` join of the hashed source against that snapshot's stored
+row hashes, so row payloads move only when they actually changed. Restore
 of a delta is a single two-way merge (base + one delta, newest version
 per key winning via a row_number window) and retention can drop any
 intermediate delta without breaking later ones; restore of a full
@@ -51,6 +58,7 @@ non-null, which the diff and the restore fold both assume.
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import time
@@ -58,7 +66,7 @@ import time
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType, StructField, StructType
+from pyspark.sql.types import StructType
 
 from blog_snapshotbackup_azuredatalake_spark.scratch import scratch_dir
 from blog_snapshotbackup_azuredatalake_spark.functions.hashing import (
@@ -70,11 +78,14 @@ from blog_snapshotbackup_azuredatalake_spark.functions.hashing import (
 from blog_snapshotbackup_azuredatalake_spark.operators.txnlog import TransactionLog
 
 
-def _digest(md5: Column) -> list[Column]:
-    """Aggregates of the state digest over rows whose row hash is `md5`."""
+HASH = "_row_md5"  # a full snapshot's stored row hash column
+
+
+def _digest(md5: str) -> list[Column]:
+    """Aggregates of the state digest over the row hash column `md5`."""
     return [
         F.count(F.lit(1)).alias("rows"),
-        F.bit_xor(hash60(md5)).alias("xor60"),
+        F.bit_xor(hash60(F.col(md5))).alias("xor60"),
     ]
 
 
@@ -127,22 +138,26 @@ class SnapshotManager:
         with open(self._meta_path(table, snap_id)) as f:
             return json.load(f)
 
-    def _read(self, table: str, meta: dict, part: str) -> DataFrame:
-        """Read a snapshot's ``data`` or ``manifest`` directory with the
-        schema its meta.json records (manifest: the key's type plus
-        ``row_md5``)."""
-        path = f"{self._dir(table, meta['id'])}/{part}"
+    def _read(self, table: str, meta: dict) -> DataFrame:
+        """Read a snapshot's data with the schema its meta.json records."""
+        path = f"{self._dir(table, meta['id'])}/data"
         if "schema" not in meta:  # written before schemas were recorded
             return self.spark.read.parquet(path)
-        schema = StructType.fromJson(meta["schema"])
-        if part == "manifest":
-            schema = StructType(
-                [
-                    StructField("key", schema[meta["key"]].dataType),
-                    StructField("row_md5", StringType()),
-                ]
-            )
-        return self.spark.read.schema(schema).parquet(path)
+        return self.spark.read.schema(
+            StructType.fromJson(meta["schema"])
+        ).parquet(path)
+
+    def _hashes(self, table: str, meta: dict) -> DataFrame:
+        """(key, row_md5) of a full snapshot: the key and hash columns of
+        its data, or the ``manifest/`` of a store written before the data
+        held the hash (its recorded schema lacks the column)."""
+        data, key = self._read(table, meta), meta["key"]
+        if HASH in data.columns:
+            return data.select(F.col(key).alias("key"), F.col(HASH).alias("row_md5"))
+        ktype = data.schema[key].dataType.simpleString()
+        return self.spark.read.schema(f"key {ktype}, row_md5 string").parquet(
+            f"{self._dir(table, meta['id'])}/manifest"
+        )
 
     def _publish(self, table: str, meta: dict, op: str, **add) -> None:
         """Write meta.json, then commit the snapshot to the log with the
@@ -179,11 +194,11 @@ class SnapshotManager:
         df: DataFrame, key: str, base: DataFrame, digest: Observation
     ) -> DataFrame:
         """Changed and added rows of `df`, plus a tombstone for every key
-        of the `base` manifest that `df` no longer holds, from one
-        full_outer join. `digest` observes the state digest of `df` on
-        the hashes the join compares."""
+        of the `base` (key, row_md5) hashes that `df` no longer holds,
+        from one full_outer join. `digest` observes the state digest of
+        `df` on the hashes the join compares."""
         cur = df.withColumn("_md5", row_hash(*sorted(df.columns)))
-        cur = cur.observe(digest, *_digest(cur["_md5"]))
+        cur = cur.observe(digest, *_digest("_md5"))
         base = base.select(
             F.col("key").alias("_base_key"), F.col("row_md5").alias("_base_md5")
         )
@@ -207,54 +222,40 @@ class SnapshotManager:
     def snapshot(
         self, df: DataFrame, table: str, key: str, force_full: bool = False
     ) -> int:
-        """Write the next snapshot: full copy if no full snapshot is
-        committed (or ``force_full`` starts a fresh differential chain),
-        else a delta against the latest FULL snapshot's manifest. Each
-        snapshot is also recorded as one atomic commit in the
-        transaction log, whose add action carries the state digest and
-        the write's stats (module docstring); an incremental snapshot
-        writes no manifest."""
+        """Write the next snapshot: full copy with its row hashes if no
+        full snapshot is committed (or ``force_full`` starts a fresh
+        differential chain), else a delta against the row hashes of the
+        latest FULL snapshot. Each snapshot is also recorded as one
+        atomic commit in the transaction log, whose add action carries
+        the state digest and the write's stats (module docstring)."""
         t0 = time.perf_counter()
         committed = self._committed(table)
         snap_id = self._next_id(table, committed)
         fulls = [i for i, a in committed.items() if a["kind"] == "full"]
-        d = self._dir(table, snap_id)
         digest = Observation("digest")
+        observed = [digest]
         if force_full or not fulls:
-            meta = {
-                "id": snap_id,
-                "base": None,
-                "kind": "full",
-                "key": key,
-                "schema": df.schema.jsonValue(),
-            }
-            df.write.mode("errorifexists").parquet(f"{d}/data")
-            # hash the files just written: a source that is itself a
-            # restore fold (rebase) is evaluated once, not twice
-            written = self._read(table, meta, "data")
-            manifest = self._manifest(written, key)
-            manifest = manifest.observe(digest, *_digest(manifest["row_md5"]))
-            manifest.write.parquet(f"{d}/manifest")
-            stats = _observed(digest)
+            base = None
+            out = df.withColumn(HASH, row_hash(*sorted(df.columns)))
+            out = out.observe(digest, *_digest(HASH))
         else:
-            base = self._read_meta(table, max(fulls))
-            changes = Observation("changes")
-            delta = self._diff(
-                df, key, self._read(table, base, "manifest"), digest
-            ).observe(
+            base, changes = max(fulls), Observation("changes")
+            observed.append(changes)
+            hashes = self._hashes(table, self._read_meta(table, base))
+            out = self._diff(df, key, hashes, digest).observe(
                 changes,
                 F.count(F.lit(1)).alias("delta_rows"),
                 F.count_if("_tombstone").alias("tombstones"),
             )
-            meta = {
-                "id": snap_id,
-                "base": base["id"],
-                "kind": "incremental",
-                "key": key,
-                "schema": delta.schema.jsonValue(),
-            }
-            delta.write.mode("errorifexists").parquet(f"{d}/data")
-            stats = {**_observed(digest), **_observed(changes)}
+        meta = {
+            "id": snap_id,
+            "base": base,
+            "kind": "full" if base is None else "incremental",
+            "key": key,
+            "schema": out.schema.jsonValue(),
+        }
+        out.write.mode("errorifexists").parquet(f"{self._dir(table, snap_id)}/data")
+        stats = {k: v for obs in observed for k, v in _observed(obs).items()}
         stats["duration_s"] = round(time.perf_counter() - t0, 3)
         self._publish(table, meta, "snapshot", **stats)
         return snap_id
@@ -270,10 +271,10 @@ class SnapshotManager:
         STATES and so costs O(|table|) per call — the delta's base is
         the PREVIOUS committed snapshot (full or delta), so ``restore``
         folds the whole chain newest-version-per-key and ``rebase``
-        compacts long chains back to one full snapshot. It writes no
-        manifest and records no state digest (either would cost an
-        O(|table|) pass), so ``verify()`` of a delta joins the manifest of
-        its restore. The add action records the batch's ``rows`` and
+        compacts long chains back to one full snapshot. It stores no
+        row hashes and records no state digest (either would cost an
+        O(|table|) pass), so ``verify()`` of a delta joins the row hashes
+        of its restore. The add action records the batch's ``rows`` and
         ``tombstones``, observed on the data write."""
         t0 = time.perf_counter()
         committed = self._committed(table)
@@ -342,8 +343,9 @@ class SnapshotManager:
     # -- restore ----------------------------------------------------------
     def restore(self, table: str, snap_id: int) -> DataFrame:
         """Materialize the table state at `snap_id`: a full snapshot is
-        read as written; a delta is replayed onto its base full
-        snapshot, newest version per key winning; shallow clones
+        read as written, less its row hash column (which the column
+        pruning then never reads); a delta is replayed onto its base
+        full snapshot, newest version per key winning; shallow clones
         resolve through their pointer first."""
         meta = self._read_meta(table, snap_id)
         if meta.get("kind") == "clone":
@@ -352,12 +354,12 @@ class SnapshotManager:
         while chain[-1]["base"] is not None:
             chain.append(self._read_meta(table, chain[-1]["base"]))
         if len(chain) == 1:
-            return self._read(table, meta, "data")
+            return self._read(table, meta).drop(HASH)
         chain.reverse()  # base full snapshot first
         key = chain[0]["key"]
         parts = []
         for depth, meta in enumerate(chain):
-            df = self._read(table, meta, "data")
+            df = self._read(table, meta).drop(HASH)
             if "_tombstone" not in df.columns:
                 df = df.withColumn("_tombstone", F.lit(False))
             parts.append(df.withColumn("_version", F.lit(depth)))
@@ -376,25 +378,31 @@ class SnapshotManager:
         """Compare live data against a snapshot: returns integer counts
         of matching / changed / missing / extra keys, and ``ok``.
 
-        When the snapshot's add action records a state digest, one
-        global aggregate digests `df`; if its (row count, 60-bit xor of
-        row hashes) equals the recorded pair, the table is reported
-        intact (``matching`` = rows, zeros, ``ok``). That verdict rests
-        on the row count plus a 60-bit xor: a change that leaves both
-        unchanged (a hash collision) would pass. Any other outcome, or a
+        When the snapshot's add action records a state digest, `df` is
+        digested in one map-only job (the digest observed on a ``noop``
+        write, no shuffle); if its (row count, 60-bit xor of row hashes)
+        equals the recorded pair, the table is reported intact
+        (``matching`` = rows, zeros, ``ok``). That verdict rests on the
+        row count plus a 60-bit xor: a change that leaves both unchanged
+        (a hash collision) would pass. It also compares with what was
+        recorded at write time and reads no stored data, so it does not
+        detect a backup damaged after its write. Any other outcome, or a
         snapshot with no digest (a delta, or a store written before
         digests), runs the exact comparison, a ``full_outer`` join of
-        (key, row_md5) manifests: a full snapshot's stored manifest, or
-        for any other kind the manifest of its restore. A clone verifies
-        against the snapshot it points at."""
+        (key, row_md5) sets: a full snapshot's stored row hashes, or for
+        any other kind those of its restore. A clone verifies against
+        the snapshot it points at."""
         meta = self._read_meta(table, snap_id)
         if meta["kind"] == "clone":
             return self.verify(df, meta["src_table"], meta["src_snap"])
         add = self._committed(table).get(snap_id, {})
         live = self._manifest(df, meta["key"])
         if "xor60" in add:
-            got = live.agg(*_digest(live["row_md5"])).collect()[0]
-            if (got["rows"], got["xor60"] or 0) == (add["rows"], add["xor60"]):
+            obs = Observation("verify")
+            noop = live.observe(obs, *_digest("row_md5")).write.format("noop")
+            noop.mode("overwrite").save()
+            got = _observed(obs)
+            if (got.get("rows"), got.get("xor60")) == (add["rows"], add["xor60"]):
                 return {
                     "matching": add["rows"],
                     "changed": 0,
@@ -403,7 +411,7 @@ class SnapshotManager:
                     "ok": True,
                 }
         if meta["kind"] == "full":
-            snap = self._read(table, meta, "manifest")
+            snap = self._hashes(table, meta)
         else:
             snap = self._manifest(self.restore(table, snap_id), meta["key"])
         l_md5, s_md5 = F.col("l.row_md5"), F.col("s.row_md5")
@@ -502,55 +510,45 @@ class SnapshotManager:
         an uncommitted directory is garbage by definition).
 
         An unlisted directory younger than `min_age_seconds` (newest
-        file mtime) is reported as 'recent' and NOT deleted: snapshot()
-        writes data/manifest/meta BEFORE its log commit, so a vacuum
-        racing an in-flight writer would otherwise delete its
-        not-yet-committed directory. Same guard as Delta's VACUUM
-        retention threshold; pass 0 only when no writer can be active.
+        mtime of the directory, its subdirectories and its files) is
+        reported as 'recent' and NOT deleted: snapshot() writes data and
+        meta BEFORE its log commit, so a vacuum racing an in-flight
+        writer would otherwise delete its not-yet-committed directory.
+        Same guard as Delta's VACUUM retention threshold; pass 0 only
+        when no writer can be active.
 
-        Listing goes through Spark's binaryFile reader selecting only
-        (path, length) — file METADATA, content never read — so the
-        scan distributes across executors on a real lake; only one
-        (dir, files, bytes) row per snapshot dir reaches the driver.
-        The deletion itself is committed to the log as a 'vacuum' op:
-        the audit trail explains every disappearance.
+        Listing walks ``<table>/snap_*`` with POSIX calls, as purge does,
+        and counts every file: a writer that died mid-write may leave only
+        ``data/_temporary/``, which a Spark file listing skips. The
+        deletion is committed to the log as a 'vacuum' op: the audit
+        trail explains every disappearance.
 
         Returns one report dict per snapshot dir: path, files, bytes,
-        status ('live' | 'orphan'), deleted."""
+        status ('live' | 'recent' | 'orphan'), deleted."""
         import shutil
 
-        listing = (
-            self.spark.read.format("binaryFile")
-            .option("recursiveFileLookup", "true")
-            .load(self.root)
-            .select("path", "length", "modificationTime")
-            .filter(~F.col("path").contains("/_txn_log/"))
-            .withColumn(
-                "snap_dir",
-                F.regexp_extract(
-                    F.col("path"), r"([^/]+/snap_\d{6})/", 1
-                ),
+        listing = []
+        snaps = os.path.join(glob.escape(self.root), "*", "snap_" + "[0-9]" * 6)
+        for path in sorted(glob.glob(snaps)):
+            dirs, files = [], []
+            for dp, _, fs in os.walk(path):
+                dirs.append(os.stat(dp))
+                files += [os.stat(os.path.join(dp, f)) for f in fs]
+            listing.append(
+                {
+                    "snap_dir": os.path.relpath(path, self.root),
+                    "files": len(files),
+                    "bytes": sum(st.st_size for st in files),
+                    "newest_mod": max(st.st_mtime for st in dirs + files),
+                }
             )
-            .filter(F.col("snap_dir") != "")
-            .groupBy("snap_dir")
-            .agg(
-                F.count(F.lit(1)).alias("files"),
-                F.sum("length").alias("bytes"),
-                F.max("modificationTime").alias("newest_mod"),
-            )
-            .collect()
-        )
         live = set(self.log.state().keys())
         now = time.time()
         report = []
         removed = []
-        for r in sorted(listing, key=lambda r: r["snap_dir"]):
+        for r in listing:
             unlisted = r["snap_dir"] not in live
-            recent = (
-                unlisted
-                and r["newest_mod"] is not None
-                and now - r["newest_mod"].timestamp() < min_age_seconds
-            )
+            recent = unlisted and now - r["newest_mod"] < min_age_seconds
             orphan = unlisted and not recent
             if orphan and not dry_run:
                 shutil.rmtree(
@@ -824,7 +822,7 @@ def snap_restore_drill(spark: SparkSession, sf_dir: str) -> DataFrame:
     from blog_snapshotbackup_azuredatalake_spark.operators.snapshot import (
         _perturbed_orders,
         _perturbed_orders_v2,
-        orders_cols,
+        _ORDERS_COLS,
     )
     from blog_snapshotbackup_azuredatalake_spark.sources.catalog import (
         load_table,
@@ -840,7 +838,7 @@ def snap_restore_drill(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def fingerprint(df: DataFrame):
         row = (
-            df.select(row_hash_int(*orders_cols()).alias("h"))
+            df.select(row_hash_int(*_ORDERS_COLS).alias("h"))
             .agg(
                 F.count(F.lit(1)).alias("n"),
                 F.expr("bit_xor(h)").alias("x"),

@@ -1,6 +1,8 @@
 """Bulk-copy sinks — the reference's "DataFrame copy operations over
-ADLS" re-expressed as a storage-agnostic writer (local path in tests,
-``abfss://`` in production; Spark's writers don't care).
+ADLS" re-expressed as Spark writers. ``compact_files`` swaps directories
+with local ``os`` calls, so like the backup store it is POSIX-only for
+now (ROADMAP item 3); the copies themselves go through Spark's readers
+and writers only.
 
 ``copy_table`` is a standalone bulk copy for one-off exports and
 migrations: partition layout for downstream pruning, bounded file sizes

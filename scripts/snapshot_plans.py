@@ -1,15 +1,18 @@
 """Dump ``explain("formatted")`` of the SnapshotManager plans on the
-backup loop's hot path: the incremental snapshot's delta write,
-``verify()`` of that snapshot, and ``restore()`` of a full snapshot.
+backup loop's hot path: the full snapshot's writes, the incremental
+snapshot's delta write, ``verify()`` of that snapshot, and ``restore()``
+of a full snapshot.
 
     python scripts/snapshot_plans.py SF_DIR TAG OUT_DIR [PACKAGE_ROOT]
 
 It builds a scratch store from ``SF_DIR/orders.parquet`` (a full
 snapshot, then an incremental one of a perturbed next day) and writes
-``OUT_DIR/snapshot_delta_write_TAG.txt``, ``verify_TAG.txt`` and
+``OUT_DIR/snapshot_full_write_TAG.txt``,
+``snapshot_delta_write_TAG.txt``, ``verify_TAG.txt`` and
 ``restore_full_TAG.txt``. The plans are captured from the calls
-themselves (the frame handed to the data writer, the frame verify
-collects), so the script needs no knowledge of either revision's
+themselves (every frame handed to a parquet writer, in order, and the
+frame verify runs, whether it collects it or writes it to a ``noop``
+sink), so the script needs no knowledge of either revision's
 internals. Each is explained at the moment of the call, so a cached
 frame shows as the in-memory scan it is. ``PACKAGE_ROOT`` imports the
 package from another checkout, to dump an older revision's plans with
@@ -70,31 +73,53 @@ def main() -> None:
     )
     store = tempfile.mkdtemp(prefix="snapshot_plans_")
     mgr = SnapshotManager(spark, store)
-    full = mgr.snapshot(orders, "orders", "o_orderkey")
 
-    seen: dict[str, str] = {}
-    write, collect = DataFrameWriter.parquet, DataFrame.collect
+    seen: list[tuple[str, str]] = []
+    write, save, collect = (
+        DataFrameWriter.parquet,
+        DataFrameWriter.save,
+        DataFrame.collect,
+    )
 
     def parquet(self, path, *args, **kwargs):
-        seen.setdefault(os.path.basename(path), _explain(self._df))
+        seen.append((f"{os.path.basename(path)}/", _explain(self._df)))
         return write(self, path, *args, **kwargs)
 
+    def save_(self, *args, **kwargs):
+        seen.append(("save", _explain(self._df)))
+        return save(self, *args, **kwargs)
+
     def collect_(self):
-        seen.setdefault("collect", _explain(self))
+        seen.append(("collect", _explain(self)))
         return collect(self)
 
-    DataFrameWriter.parquet, DataFrame.collect = parquet, collect_
+    def captured(fn) -> list[tuple[str, str]]:
+        seen.clear()
+        fn()
+        return list(seen)
+
+    DataFrameWriter.parquet, DataFrameWriter.save = parquet, save_
+    DataFrame.collect = collect_
     try:
-        inc = mgr.snapshot(next_day, "orders", "o_orderkey")
-        delta_write = seen["data"]
-        seen.pop("collect", None)
-        mgr.verify(next_day, "orders", inc)
-        verify = seen["collect"]
+        full_writes = captured(
+            lambda: mgr.snapshot(orders, "orders", "o_orderkey")
+        )
+        delta_writes = captured(
+            lambda: mgr.snapshot(next_day, "orders", "o_orderkey")
+        )
+        full, inc = mgr.snapshot_ids("orders")
+        verify_action, verify_plan = captured(
+            lambda: mgr.verify(next_day, "orders", inc)
+        )[0]
     finally:
-        DataFrameWriter.parquet, DataFrame.collect = write, collect
+        DataFrameWriter.parquet, DataFrameWriter.save = write, save
+        DataFrame.collect = collect
     plans = {
-        "snapshot_delta_write": delta_write,
-        "verify": verify,
+        "snapshot_full_write": "".join(
+            f"## write to {target}\n{plan}" for target, plan in full_writes
+        ),
+        "snapshot_delta_write": dict(delta_writes)["data/"],
+        "verify": f"## {verify_action}\n{verify_plan}",
         "restore_full": _explain(mgr.restore("orders", full)),
     }
     os.makedirs(out_dir, exist_ok=True)

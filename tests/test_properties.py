@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     FloatType,
+    LongType,
     StringType,
     StructField,
     StructType,
@@ -28,8 +29,11 @@ from blog_snapshotbackup_azuredatalake_spark.functions.hashing import (
     hash60,
     md5_int60,
     row_hash,
+    row_hash_int,
     sql_hash60,
     sql_md5_int60,
+    sql_row_hash,
+    sql_row_hash_int,
 )
 from blog_snapshotbackup_azuredatalake_spark.functions.centroids import (
     Centroids,
@@ -74,6 +78,45 @@ def test_row_hash_matches_python_model(spark, vals):
         hashlib.md5(f"{a}{SEP}{b}".encode()).hexdigest() for a, b in vals
     ]
     assert got == want
+
+
+@given(
+    vals=st.lists(
+        st.tuples(
+            st.none() | _txt,
+            st.none() | st.integers(min_value=-(2**63), max_value=2**63 - 1),
+        ),
+        min_size=1,
+        max_size=8,
+    )
+)
+@_SLOW
+def test_row_hash_expression_matches_python_and_duckdb(spark, vals):
+    """The one-expression row hash over SQL-expression strings: a column
+    named by a reserved word (quoted with backticks), a bigint column and
+    a computed expression, with NULLs, against the Python model and
+    DuckDB's ``sql_row_hash``/``sql_row_hash_int``."""
+    df = spark.createDataFrame(
+        vals,
+        StructType(
+            [StructField("select", StringType()), StructField("n", LongType())]
+        ),
+    )
+    cols = ["select", "n", "length(`select`)"]
+    got = df.select(
+        row_hash(*cols).alias("h"), row_hash_int(*cols).alias("h60")
+    ).collect()
+    ddb_cols = ['"select"', "n", 'length("select")']
+    for (s, n), row in zip(vals, got):
+        length = None if s is None else len(s)
+        enc = ["" if v is None else str(v) for v in (s, n, length)]
+        md5 = hashlib.md5(SEP.join(enc).encode()).hexdigest()
+        want = duckdb.execute(
+            f"SELECT {sql_row_hash(ddb_cols)}, {sql_row_hash_int(ddb_cols)}"
+            ' FROM (SELECT ?::VARCHAR AS "select", ?::BIGINT AS n)',
+            [s, n],
+        ).fetchone()
+        assert (row["h"], row["h60"]) == (md5, int(md5[:15], 16)) == want
 
 
 @given(s=_txt)

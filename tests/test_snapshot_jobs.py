@@ -3,13 +3,15 @@
 Spark's fixed cost per job dominates these calls at small and medium
 scale, so the number of jobs each call launches is pinned here:
 
+- a full snapshot is one write of its rows plus their row hash
+  column, digest observed; nothing reads the written files back;
 - an incremental snapshot is one full_outer diff plan (two shuffle map
-  stages and the delta write); it writes no manifest, and its digest
-  and stats are observed in that pass;
+  stages and the delta write) against the base's stored row hashes; it
+  stores no hashes, and its digest and stats are observed in that pass;
 - a commit_delta is the write of its change batch, stats observed;
 - verifying an intact table against a recorded digest, of a full or
-  an incremental snapshot, is one global aggregate (its shuffle map
-  stage and the final stage);
+  an incremental snapshot, is one map-only job (the digest observed on
+  a ``noop`` write, no shuffle);
 - restoring a full snapshot is a plain schema-pinned read that plans
   without a job and without a fold.
 """
@@ -24,9 +26,10 @@ from blog_snapshotbackup_azuredatalake_spark.operators.snapshot_manager import (
 from blog_snapshotbackup_azuredatalake_spark.sources.catalog import load_table
 from tests.conftest import SF_DIR
 
+FULL_SNAPSHOT_JOBS = 1
 INCREMENTAL_SNAPSHOT_JOBS = 3
-VERIFY_JOBS = 2
-FULL_VERIFY_JOBS = 2
+VERIFY_JOBS = 1
+FULL_VERIFY_JOBS = 1
 COMMIT_DELTA_JOBS = 1
 
 
@@ -56,6 +59,16 @@ def store(spark, tmp_path):
     mgr = SnapshotManager(spark, str(tmp_path / "store"))
     full = mgr.snapshot(orders, "orders", "o_orderkey")
     return mgr, full, orders, day1
+
+
+def test_full_snapshot_job_budget(spark, store):
+    mgr, _, orders, _ = store
+    sid, n_snapshot = _jobs(
+        spark,
+        lambda: mgr.snapshot(orders, "orders", "o_orderkey", force_full=True),
+    )
+    assert mgr._read_meta("orders", sid)["kind"] == "full"
+    assert n_snapshot == FULL_SNAPSHOT_JOBS
 
 
 def test_incremental_snapshot_and_verify_job_budget(spark, store):

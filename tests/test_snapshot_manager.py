@@ -136,6 +136,34 @@ def test_vacuum_grace_window_protects_inflight_writer(spark, mgr):
     assert {r["path"] for r in gone if r["deleted"]} == {"t/snap_000099"}
 
 
+def test_vacuum_reclaims_a_writer_that_died_mid_write(spark, mgr):
+    """A writer that died inside Spark's write leaves only a
+    ``_temporary`` tree: vacuum lists it like any other debris, as
+    'recent' inside the grace window and as an orphan it deletes after."""
+    orders = load_table(spark, SF_DIR, "orders").limit(100)
+    mgr.snapshot(orders, "t", "o_orderkey")
+    part = (
+        f"{mgr.root}/t/snap_000007/data/_temporary/0/_temporary/attempt_0/"
+        "part-00000.parquet"
+    )
+    os.makedirs(os.path.dirname(part))
+    with open(part, "wb") as f:
+        f.write(b"PAR1")
+
+    report = {r["path"]: r for r in mgr.vacuum()}
+    assert report["t/snap_000007"]["status"] == "recent"
+    assert report["t/snap_000007"]["files"] == 1
+    assert not report["t/snap_000007"]["deleted"]
+    assert os.path.isfile(part)
+
+    report = {r["path"]: r for r in mgr.vacuum(min_age_seconds=0.0)}
+    assert report["t/snap_000007"]["status"] == "orphan"
+    assert report["t/snap_000007"]["deleted"]
+    assert not os.path.isdir(f"{mgr.root}/t/snap_000007")
+    assert report["t/snap_000000"]["status"] == "live"
+    assert mgr.restore("t", 0).count() == 100
+
+
 def test_shallow_clone_zero_copy_and_isolated(spark, mgr):
     orders = load_table(spark, SF_DIR, "orders").limit(200)
     sid = mgr.snapshot(orders, "t", "o_orderkey")
@@ -267,7 +295,7 @@ def test_restore_drill_detects_tampering(spark, tmp_path):
     )
     from blog_snapshotbackup_azuredatalake_spark.operators.snapshot import (
         _perturbed_orders,
-        orders_cols,
+        _ORDERS_COLS,
     )
 
     keyed = F.col("o_orderkey") % 10 == 0
@@ -285,7 +313,7 @@ def test_restore_drill_detects_tampering(spark, tmp_path):
 
     def fp(df):
         return tuple(
-            df.select(row_hash_int(*orders_cols()).alias("h"))
+            df.select(row_hash_int(*_ORDERS_COLS).alias("h"))
             .agg(F.count(F.lit(1)), F.expr("bit_xor(h)"))
             .collect()[0]
         )
@@ -542,7 +570,6 @@ def test_digest_verify_matches_exact_join(spark, tmp_path, kind):
     ignored the key would miss it)."""
     v0, v1, _, _ = _slice_states(spark)
     key = "o_orderkey"
-    k = F.col(key)
     a = SnapshotManager(spark, str(tmp_path / "a"))
     sid = a.snapshot(v0, "t", key)
     state = v0
@@ -554,8 +581,20 @@ def test_digest_verify_matches_exact_join(spark, tmp_path, kind):
     assert "xor60" not in b._committed("t")[sid]
     assert _sorted_rows(b.restore("t", sid)) == _sorted_rows(state)
 
+    for name, (live, bad) in _tamper_cases(state, key).items():
+        got = a.verify(live, "t", sid)
+        assert got == b.verify(live, "t", sid), name
+        assert (got["changed"], got["missing_live"], got["extra_live"]) == bad
+        assert got["ok"] == (bad == (0, 0, 0)), name
+
+
+def _tamper_cases(state, key):
+    """Name -> (live table, its expected (changed, missing_live,
+    extra_live) against `state`): intact, one changed row, one missing
+    key, one extra key, and two keys swapping payloads."""
+    k = F.col(key)
     k1, k2 = (r[0] for r in state.select(key).orderBy(key).limit(2).collect())
-    cases = {
+    return {
         "intact": (state, (0, 0, 0)),
         "changed": (
             state.withColumn(
@@ -582,11 +621,6 @@ def test_digest_verify_matches_exact_join(spark, tmp_path, kind):
             (2, 0, 0),
         ),
     }
-    for name, (live, bad) in cases.items():
-        got = a.verify(live, "t", sid)
-        assert got == b.verify(live, "t", sid), name
-        assert (got["changed"], got["missing_live"], got["extra_live"]) == bad
-        assert got["ok"] == (bad == (0, 0, 0)), name
 
 
 def test_verify_counts_are_ints_on_an_empty_table(spark, tmp_path):
@@ -620,8 +654,9 @@ def test_add_actions_record_write_stats(spark, mgr):
     """The log's add actions carry the per-commit record, observed on
     the frames the writes already ran: the state digest and rows of a
     snapshot, an incremental's delta rows and tombstones, and a
-    commit_delta batch's rows and tombstones. Only full snapshots keep
-    a manifest."""
+    commit_delta batch's rows and tombstones. No snapshot writes a
+    manifest: a full snapshot's data holds the row hash column, and an
+    incremental's does not."""
     from blog_snapshotbackup_azuredatalake_spark.functions.hashing import (
         row_hash_int,
     )
@@ -647,5 +682,89 @@ def test_add_actions_record_write_stats(spark, mgr):
     assert add[s2]["tombstones"] == changes.filter("_tombstone").count() > 0
     assert "xor60" not in add[s2]
     assert all(add[sid]["duration_s"] > 0 for sid in (s0, s1, s2))
-    manifests = [os.path.isdir(f"{mgr._dir('t', s)}/manifest") for s in (s0, s1, s2)]
-    assert manifests == [True, False, False]
+    assert not any(
+        os.path.isdir(f"{mgr._dir('t', s)}/manifest") for s in (s0, s1, s2)
+    )
+
+    def fields(sid):
+        return {f["name"] for f in mgr._read_meta("t", sid)["schema"]["fields"]}
+
+    assert "_row_md5" in fields(s0)
+    assert "_row_md5" not in fields(s1)
+
+
+def _old_layout(mgr, root):
+    """A copy of `mgr`'s store in the layout written before full
+    snapshots held their row hashes: each full snapshot's data loses
+    ``_row_md5``, a ``manifest/`` of (key, row_md5) holds the hashes, and
+    the schema in its meta.json loses the field."""
+    import json
+    import shutil
+
+    shutil.copytree(mgr.root, root)
+    old = SnapshotManager(mgr.spark, str(root))
+    for add in old.log.state().values():
+        table, sid = add["table"], add["snap_id"]
+        meta = old._read_meta(table, sid)
+        if meta["kind"] != "full":
+            continue
+        data = mgr.spark.read.parquet(f"{mgr._dir(table, sid)}/data")
+        d = old._dir(table, sid)
+        shutil.rmtree(f"{d}/data")
+        data.drop("_row_md5").write.parquet(f"{d}/data")
+        data.select(
+            F.col(meta["key"]).alias("key"), F.col("_row_md5").alias("row_md5")
+        ).write.parquet(f"{d}/manifest")
+        meta["schema"]["fields"] = [
+            f for f in meta["schema"]["fields"] if f["name"] != "_row_md5"
+        ]
+        with open(old._meta_path(table, sid), "w") as f:
+            json.dump(meta, f)
+    return old
+
+
+def test_store_in_the_old_layout_reads_the_same(spark, tmp_path):
+    """A store whose full snapshots keep their row hashes in a separate
+    manifest (the layout before the data held them) restores, verifies
+    on the digest path and on the exact join, and takes the next
+    incremental snapshot exactly as the current layout does."""
+    v0, v1, v2, changes = _slice_states(spark)
+    key = "o_orderkey"
+    new = SnapshotManager(spark, str(tmp_path / "new"))
+    sids = [
+        new.snapshot(v0, "t", key),
+        new.snapshot(v1, "t", key),
+        new.commit_delta(changes, "t", key),
+    ]
+    old = _old_layout(new, tmp_path / "old")
+    full = old._dir("t", sids[0])
+    assert os.path.isdir(f"{full}/manifest")
+    assert "_row_md5" not in spark.read.parquet(f"{full}/data").columns
+    assert not os.path.isdir(f"{new._dir('t', sids[0])}/manifest")
+
+    for sid, state in zip(sids, (v0, v1, v2)):
+        want = _sorted_rows(state)
+        assert _sorted_rows(new.restore("t", sid)) == want
+        assert _sorted_rows(old.restore("t", sid)) == want
+    stores = {
+        "new": new,
+        "old": old,
+        "new_exact": _without_digests(new, tmp_path / "new_exact"),
+        "old_exact": _without_digests(old, tmp_path / "old_exact"),
+    }
+    for sid, state in zip(sids[:2], (v0, v1)):
+        for name, (live, bad) in _tamper_cases(state, key).items():
+            got = {s: m.verify(live, "t", sid) for s, m in stores.items()}
+            assert len({repr(v) for v in got.values()}) == 1, (sid, name, got)
+            rep = got["new"]
+            assert (rep["changed"], rep["missing_live"], rep["extra_live"]) == bad
+
+    n_new, n_old = new.snapshot(v2, "t", key), old.snapshot(v2, "t", key)
+    assert n_new == n_old
+    assert new._read_meta("t", n_new) == old._read_meta("t", n_old)
+    assert _sorted_rows(
+        spark.read.parquet(f"{old._dir('t', n_old)}/data")
+    ) == _sorted_rows(spark.read.parquet(f"{new._dir('t', n_new)}/data"))
+    for m, sid in ((new, n_new), (old, n_old)):
+        assert _sorted_rows(m.restore("t", sid)) == _sorted_rows(v2)
+        assert m.verify(v2, "t", sid)["ok"]
