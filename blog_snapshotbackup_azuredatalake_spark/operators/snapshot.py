@@ -14,13 +14,36 @@ the DuckDB oracle and a future non-Spark consumer — can recompute and
 audit them. Doubles are encoded via DECIMAL(12,2) and timestamps via their
 canonical 'YYYY-MM-DD HH:MM:SS' rendering so the string encoding is
 engine-portable.
+
+The manifest, diff, fold and digest that the diff, verify, apply, rebase
+and change-feed entries show are the ones ``SnapshotManager`` writes
+backups with: ``functions/changeset.py``, whose DuckDB forms the oracles
+here are built from.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from blog_snapshotbackup_azuredatalake_spark.functions.changeset import (
+    HASH,
+    TOMBSTONE,
+    count_changes,
+    delta,
+    diff,
+    digest,
+    fold_latest,
+    hashed,
+    manifest,
+    sql_count_changes,
+    sql_delta,
+    sql_diff,
+    sql_digest,
+    sql_fold_latest,
+    sql_hashed,
+    sql_manifest,
+)
 from blog_snapshotbackup_azuredatalake_spark.functions.hashing import (
     hash60,
     row_hash,
@@ -39,8 +62,17 @@ from blog_snapshotbackup_azuredatalake_spark.sources.catalog import (
 # portable row encodings for the `orders` table (the manifest example table)
 # ---------------------------------------------------------------------------
 
-# the `orders` row encoding as Spark SQL expressions, for ``row_hash`` and
-# ``row_hash_int``, and its DuckDB mirror
+K = "o_orderkey"
+# the `orders` columns, and its row encoding as Spark SQL expressions (for
+# ``row_hash`` and ``row_hash_int``) with its DuckDB mirror
+_ORDERS_FIELDS = [
+    "o_orderkey",
+    "o_custkey",
+    "o_orderstatus",
+    "o_totalprice",
+    "o_orderdate",
+    "o_orderpriority",
+]
 _ORDERS_COLS = [
     "o_orderkey",
     "o_custkey",
@@ -52,6 +84,35 @@ _ORDERS_COLS = [
 ORDERS_COLS_SQL = [c.replace(" as string)", " as varchar)") for c in _ORDERS_COLS]
 
 
+def _manifest(df: DataFrame) -> DataFrame:
+    return manifest(df, K, _ORDERS_COLS)
+
+
+def _sql_manifest(rel: str) -> str:
+    return sql_manifest(rel, K, ORDERS_COLS_SQL)
+
+
+def _delta(prev: DataFrame, curr: DataFrame) -> DataFrame:
+    """The change batch from state `prev` to state `curr` of `orders`."""
+    return delta(_manifest(prev), hashed(curr, _ORDERS_COLS), K)
+
+
+def _sql_delta(prev: str, curr: str) -> str:
+    """Mirror of ``_delta`` for two `orders`-shaped relations."""
+    return sql_delta(
+        f"({_sql_manifest(prev)})",
+        f"({sql_hashed(curr, ORDERS_COLS_SQL)})",
+        K,
+        _ORDERS_FIELDS,
+    )
+
+
+def _sql_digest(rel: str, tag: str) -> str:
+    h = sql_row_hash(ORDERS_COLS_SQL)
+    return f"SELECT {sql_digest(h, f'n_{tag}', f'xor_{tag}')} FROM {rel}"
+
+
+
 # ---------------------------------------------------------------------------
 # §2A queries
 # ---------------------------------------------------------------------------
@@ -61,14 +122,12 @@ def snap_row_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-row manifest of `orders`: (key, content hash). The unit of
     change detection — one narrow scan, no shuffle at all (manifest
     writing is embarrassingly parallel)."""
-    orders = load_table(spark, sf_dir, "orders")
-    return orders.select(
-        F.col("o_orderkey"), row_hash(*_ORDERS_COLS).alias("row_md5")
-    )
+    orders = _manifest(load_table(spark, sf_dir, "orders"))
+    return orders.withColumnRenamed(HASH, "row_md5")
 
 
 _SNAP_ROW_MANIFEST_SQL = f"""
-SELECT o_orderkey, {sql_row_hash(ORDERS_COLS_SQL)} AS row_md5 FROM orders
+SELECT o_orderkey, {HASH} AS row_md5 FROM ({_sql_manifest("orders")})
 """
 
 
@@ -188,38 +247,24 @@ _PERTURBED_V2_SQL = """
 
 def snap_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Snapshot diff A→B: classify every key as added / removed / changed
-    by full-outer-joining the two manifests and comparing row hashes.
-    Only (key, hash) pairs shuffle — the payload never moves."""
-    a = load_table(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("key"), row_hash(*_ORDERS_COLS).alias("hash_a")
-    )
-    b = _perturbed_orders(spark, sf_dir).select(
-        F.col("o_orderkey").alias("key"), row_hash(*_ORDERS_COLS).alias("hash_b")
-    )
-    joined = a.join(b, "key", "full_outer")
+    by full-outer-joining the two manifests and comparing row hashes
+    (``changeset.diff``). Only (key, hash) pairs shuffle — the payload
+    never moves."""
+    a = _manifest(load_table(spark, sf_dir, "orders"))
+    b = _manifest(_perturbed_orders(spark, sf_dir))
     return (
-        joined.withColumn(
-            "change_type",
-            F.when(F.col("hash_a").isNull(), F.lit("added"))
-            .when(F.col("hash_b").isNull(), F.lit("removed"))
-            .when(F.col("hash_a") != F.col("hash_b"), F.lit("changed")),
-        )
-        .filter(F.col("change_type").isNotNull())
-        .select(F.col("key").alias("o_orderkey"), "change_type")
+        diff(a, b, K)
+        .filter(F.col("change") != "same")
+        .select(K, F.col("change").alias("change_type"))
     )
-
 
 
 _SNAP_DIFF_SQL = f"""
 WITH b_rows AS ({_PERTURBED_SQL}),
-a_man AS (SELECT o_orderkey AS key, {sql_row_hash(ORDERS_COLS_SQL)} AS hash_a FROM orders),
-b_man AS (SELECT o_orderkey AS key, {sql_row_hash(ORDERS_COLS_SQL)} AS hash_b FROM b_rows)
-SELECT key AS o_orderkey,
-       CASE WHEN hash_a IS NULL THEN 'added'
-            WHEN hash_b IS NULL THEN 'removed'
-            WHEN hash_a <> hash_b THEN 'changed' END AS change_type
-FROM a_man FULL OUTER JOIN b_man USING (key)
-WHERE (hash_a IS NULL OR hash_b IS NULL OR hash_a <> hash_b)
+a_man AS ({_sql_manifest("orders")}),
+b_man AS ({_sql_manifest("b_rows")})
+SELECT o_orderkey, change AS change_type
+FROM ({sql_diff("a_man", "b_man", K)}) WHERE change <> 'same'
 """
 
 
@@ -487,45 +532,32 @@ def snap_apply_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshot + k incrementals → state at time k, the reference's
     incremental-backup contract).
 
-    The change batch is derived, not given: upserts = target rows whose
-    (key, hash) isn't in the base manifest (covers added AND changed),
-    deletes = base keys absent from the target. Apply = one left-anti
-    join of the base against the touched-key set, union the upserts.
-    Self-certifying output: one row whose `state_match` says the merged
-    table's (count, xor-checksum) equals the target state's — at 100 TB
-    the joins move manifests (key, 16-byte hash) and only the upsert
-    payload rows; the certificate shuffles four numbers."""
+    The change batch is derived, not given: it is the ``delta`` of the
+    base manifest against the hashed target, one full_outer diff —
+    upserts are the target's added and changed rows, deletes the base
+    keys it no longer holds (tombstones). Apply = ``fold_latest`` of the
+    base and the batch, the fold ``SnapshotManager.restore`` runs: one
+    window over their union, newest version per key. Self-certifying
+    output: one row whose `state_match` says the merged table's (count,
+    xor-checksum) ``digest`` equals the target state's. The diff moves
+    manifests (key, 16-byte hash) plus the target's payload; the fold
+    shuffles the base payload and the batch once by key; the certificate
+    shuffles four numbers."""
     base = load_table(spark, sf_dir, "orders")
-    # the target state feeds three subtrees (manifest, delete keys, the
-    # certificate summary) and the upsert batch two — lazy checkpoints
-    # materialize each once instead of re-deriving per subtree
+    # the target feeds the diff and its certificate digest, and the batch
+    # the fold and its counts — lazy checkpoints materialize each once
+    # instead of re-deriving per subtree
     tgt = _perturbed_orders(spark, sf_dir).localCheckpoint(eager=False)
-    bm = base.select("o_orderkey", row_hash(*_ORDERS_COLS).alias("h"))
-    tm = tgt.withColumn("h", row_hash(*_ORDERS_COLS))
-    upserts = (
-        tm.join(bm, ["o_orderkey", "h"], "left_anti")
-        .drop("h")
-        .localCheckpoint(eager=False)
-    )
-    deletes = bm.select("o_orderkey").join(
-        tgt.select("o_orderkey"), "o_orderkey", "left_anti"
-    )
-    touched = upserts.select("o_orderkey").unionByName(deletes)
-    merged = base.join(touched, "o_orderkey", "left_anti").unionByName(
-        upserts
-    )
-
-    def _summ(df: DataFrame, tag: str) -> DataFrame:
-        return df.select(row_hash_int(*_ORDERS_COLS).alias("h")).agg(
-            F.count(F.lit(1)).alias(f"n_{tag}"),
-            F.expr("bit_xor(h)").alias(f"xor_{tag}"),
-        )
-
+    changes = _delta(base, tgt).localCheckpoint(eager=False)
+    merged = fold_latest([base, changes], K)
+    h = row_hash(*_ORDERS_COLS)
     counts = (
-        upserts.agg(F.count(F.lit(1)).alias("n_upserts"))
-        .crossJoin(deletes.agg(F.count(F.lit(1)).alias("n_deletes")))
-        .crossJoin(_summ(merged, "merged"))
-        .crossJoin(_summ(tgt, "target"))
+        changes.agg(
+            F.count_if(~F.col(TOMBSTONE)).alias("n_upserts"),
+            F.count_if(TOMBSTONE).alias("n_deletes"),
+        )
+        .crossJoin(merged.agg(*digest(h, "n_merged", "xor_merged")))
+        .crossJoin(tgt.agg(*digest(h, "n_target", "xor_target")))
     )
     return counts.select(
         "n_upserts",
@@ -543,28 +575,16 @@ def snap_apply_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SNAP_APPLY_INCR_SQL = f"""
 WITH b_rows AS ({_PERTURBED_SQL}),
-bm AS (SELECT o_orderkey, {sql_row_hash(ORDERS_COLS_SQL)} AS h FROM orders),
-tm AS (SELECT *, {sql_row_hash(ORDERS_COLS_SQL)} AS h FROM b_rows),
-upserts AS (SELECT * EXCLUDE (h) FROM tm
-            WHERE NOT EXISTS (SELECT 1 FROM bm
-                              WHERE bm.o_orderkey = tm.o_orderkey
-                                AND bm.h = tm.h)),
-deletes AS (SELECT o_orderkey FROM bm
-            WHERE o_orderkey NOT IN (SELECT o_orderkey FROM b_rows)),
-touched AS (SELECT o_orderkey FROM upserts
-            UNION ALL SELECT o_orderkey FROM deletes),
-merged AS (SELECT * FROM orders
-           WHERE o_orderkey NOT IN (SELECT o_orderkey FROM touched)
-           UNION ALL SELECT * FROM upserts),
-ms AS (SELECT COUNT(*) AS n_merged, BIT_XOR({sql_row_hash_int(ORDERS_COLS_SQL)}) AS xor_merged
-       FROM merged),
-ts AS (SELECT COUNT(*) AS n_target, BIT_XOR({sql_row_hash_int(ORDERS_COLS_SQL)}) AS xor_target
-       FROM b_rows),
-us AS (SELECT COUNT(*) AS n_upserts FROM upserts),
-ds AS (SELECT COUNT(*) AS n_deletes FROM deletes)
+changes AS ({_sql_delta("orders", "b_rows")}),
+merged AS ({sql_fold_latest(["orders", "changes"], K, _ORDERS_FIELDS)}),
+cs AS (SELECT COUNT(*) FILTER (WHERE NOT {TOMBSTONE}) AS n_upserts,
+              COUNT(*) FILTER (WHERE {TOMBSTONE}) AS n_deletes
+       FROM changes),
+ms AS ({_sql_digest("merged", "merged")}),
+ts AS ({_sql_digest("b_rows", "target")})
 SELECT n_upserts, n_deletes, n_merged, n_target, xor_merged, xor_target,
        (n_merged = n_target AND xor_merged = xor_target) AS state_match
-FROM us, ds, ms, ts
+FROM cs, ms, ts
 """
 
 
@@ -587,77 +607,47 @@ def snap_verify_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     for a 100 TB backup. At scale the sample predicate also prunes:
     it pushes to the manifest scan, and a backup laid out bucketed-by-
     key (sources/sinks.copy_table_bucketed) prunes whole buckets."""
-    src = load_table(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("key"), row_hash(*_ORDERS_COLS).alias("h_src")
+    in_sample = hash60(F.md5(F.col(K).cast("string"))) % 100 < SAMPLE_SLOTS
+    src = _manifest(load_table(spark, sf_dir, "orders")).filter(in_sample)
+    bkp = _manifest(_perturbed_orders(spark, sf_dir)).filter(in_sample)
+    n = diff(src, bkp, K).agg(*count_changes())
+    same, changed, removed, added = (
+        F.col(c) for c in ("same", "changed", "removed", "added")
     )
-    bkp = _perturbed_orders(spark, sf_dir).select(
-        F.col("o_orderkey").alias("key"), row_hash(*_ORDERS_COLS).alias("h_bkp")
-    )
-    in_sample = hash60(F.md5(F.col("key").cast("string"))) % 100 < SAMPLE_SLOTS
-    joined = src.filter(in_sample).join(
-        bkp.filter(in_sample), "key", "full_outer"
-    )
-    agg = joined.agg(
-        F.count("h_src").alias("n_src_sampled"),
-        F.count("h_bkp").alias("n_bkp_sampled"),
-        F.sum(
-            (F.col("h_src") == F.col("h_bkp")).cast("bigint")
-        ).alias("n_match"),
-        F.sum(
-            (
-                F.col("h_src").isNotNull()
-                & F.col("h_bkp").isNotNull()
-                & (F.col("h_src") != F.col("h_bkp"))
-            ).cast("bigint")
-        ).alias("n_changed"),
-        F.sum(F.col("h_bkp").isNull().cast("bigint")).alias("n_removed"),
-        F.sum(F.col("h_src").isNull().cast("bigint")).alias("n_added"),
-    )
-    return agg.select(
+    n_src = same + changed + removed
+    return n.select(
         F.lit(SAMPLE_SLOTS).alias("sample_pct"),
-        "n_src_sampled",
-        "n_bkp_sampled",
-        "n_match",
-        "n_changed",
-        "n_removed",
-        "n_added",
+        n_src.alias("n_src_sampled"),
+        (same + changed + added).alias("n_bkp_sampled"),
+        same.alias("n_match"),
+        changed.alias("n_changed"),
+        removed.alias("n_removed"),
+        added.alias("n_added"),
         (
             F.lit(100.0)
-            * (F.col("n_changed") + F.col("n_removed")).cast("double")
-            / F.col("n_src_sampled").cast("double")
+            * (changed + removed).cast("double")
+            / n_src.cast("double")
         ).alias("est_drift_pct"),
     )
 
 
 _SAMPLE_PRED = (
-    f"{sql_md5_int60('CAST(key AS VARCHAR)')} % 100 < {SAMPLE_SLOTS}"
+    f"{sql_md5_int60('CAST(o_orderkey AS VARCHAR)')} % 100 < {SAMPLE_SLOTS}"
 )
 
 _SNAP_VERIFY_SAMPLED_SQL = f"""
 WITH b_rows AS ({_PERTURBED_SQL}),
-src AS (SELECT o_orderkey AS key, {sql_row_hash(ORDERS_COLS_SQL)} AS h_src FROM orders),
-bkp AS (SELECT o_orderkey AS key, {sql_row_hash(ORDERS_COLS_SQL)} AS h_bkp FROM b_rows),
-j AS (SELECT * FROM (SELECT * FROM src WHERE {_SAMPLE_PRED}) s
-      FULL OUTER JOIN (SELECT * FROM bkp WHERE {_SAMPLE_PRED}) b
-      USING (key)),
-agg AS (
-  SELECT COUNT(h_src) AS n_src_sampled, COUNT(h_bkp) AS n_bkp_sampled,
-         CAST(SUM(CASE WHEN h_src = h_bkp THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_match,
-         CAST(SUM(CASE WHEN h_src IS NOT NULL AND h_bkp IS NOT NULL
-                       AND h_src <> h_bkp THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_changed,
-         CAST(SUM(CASE WHEN h_bkp IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_removed,
-         CAST(SUM(CASE WHEN h_src IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_added
-  FROM j
-)
-SELECT CAST({SAMPLE_SLOTS} AS INT) AS sample_pct, n_src_sampled,
-       n_bkp_sampled, n_match, n_changed, n_removed, n_added,
-       100.0 * CAST(n_changed + n_removed AS DOUBLE)
-             / CAST(n_src_sampled AS DOUBLE) AS est_drift_pct
-FROM agg
+src AS ({_sql_manifest("orders")} WHERE {_SAMPLE_PRED}),
+bkp AS ({_sql_manifest("b_rows")} WHERE {_SAMPLE_PRED}),
+n AS (SELECT {sql_count_changes()} FROM ({sql_diff("src", "bkp", K)}))
+SELECT CAST({SAMPLE_SLOTS} AS INT) AS sample_pct,
+       same + changed + removed AS n_src_sampled,
+       same + changed + added AS n_bkp_sampled,
+       same AS n_match, changed AS n_changed, removed AS n_removed,
+       added AS n_added,
+       100.0 * CAST(changed + removed AS DOUBLE)
+             / CAST(same + changed + removed AS DOUBLE) AS est_drift_pct
+FROM n
 """
 
 
@@ -691,76 +681,45 @@ def _perturbed_orders_v2(
     return kept.unionByName(added)
 
 
-def _change_batch(prev: DataFrame, curr: DataFrame, version: int) -> DataFrame:
-    """Derive the (version, payload, is_delete) change batch between two
-    snapshot states — upserts are current rows whose (key, hash) is not
-    in the previous manifest, deletes are previous keys gone from the
-    current state (payload columns ride along but are ignored)."""
-    pm = prev.select("o_orderkey", row_hash(*_ORDERS_COLS).alias("h"))
-    cm = curr.withColumn("h", row_hash(*_ORDERS_COLS))
-    upserts = (
-        cm.join(pm, ["o_orderkey", "h"], "left_anti")
-        .drop("h")
-        .withColumn("is_delete", F.lit(False))
-    )
-    deletes = prev.join(
-        curr.select("o_orderkey"), "o_orderkey", "left_anti"
-    ).withColumn("is_delete", F.lit(True))
-    return upserts.unionByName(deletes).withColumn(
-        "version", F.lit(version)
-    )
-
-
 def snap_chain_rebase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Backup-chain compaction: fold a full snapshot + k incremental
     batches into ONE new full snapshot (the rebase that keeps restore
     latency flat as the incremental chain grows — without it a restore
     replays every batch since the last full copy).
 
-    Fold = union all batches (version-stamped) → latest operation per
-    key (one window) → base rows whose key was never touched survive
-    as-is, touched keys resurrect their latest upsert payload unless the
-    latest operation was a delete. Self-certifying: the output row
-    proves the rebased table's (count, xor-checksum) equals the directly
-    computed final state's. At 100 TB the fold shuffles only the change
-    batches (the base table joins by key against the *touched-key set*,
-    which broadcasts when days are quiet), never the full payload of the
-    base — the same manifest-weight profile as ``snap_apply_incremental``
-    but for an arbitrary-length chain."""
+    Each batch is the ``delta`` between consecutive states (one
+    full_outer diff: upserts plus tombstones). Fold = ``fold_latest`` of
+    the base and all batches, the fold ``SnapshotManager.restore`` runs:
+    one window over the union of all versions, the newest version per
+    key winning and tombstones dropped. Self-certifying: the output row
+    proves the rebased table's (count, xor-checksum) ``digest`` equals
+    the directly computed final state's. The fold shuffles the base
+    payload once by key together with the batches — the same plan as
+    ``snap_apply_incremental``, for an arbitrary-length chain."""
     base = load_table(spark, sf_dir, "orders")
     # v1/v2 each feed several plan subtrees (two change batches, the
     # target summary); a lazy localCheckpoint materializes each state
     # once instead of re-deriving it per subtree (measured 1.8× here)
     v1 = _perturbed_orders(spark, sf_dir).localCheckpoint(eager=False)
     v2 = _perturbed_orders_v2(spark, sf_dir).localCheckpoint(eager=False)
-    batches = _change_batch(base, v1, 1).unionByName(
-        _change_batch(v1, v2, 2)
+    # each batch feeds the fold and the counts: materialize it once too
+    d1, d2 = (
+        _delta(prev, curr).localCheckpoint(eager=False)
+        for prev, curr in ((base, v1), (v1, v2))
     )
-    w = Window.partitionBy("o_orderkey").orderBy(F.desc("version"))
-    latest = (
-        batches.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
+    rebased = fold_latest([base, d1, d2], K)
+    batches = d1.withColumn("version", F.lit(1)).unionByName(
+        d2.withColumn("version", F.lit(2))
     )
-    survivors = latest.filter(~F.col("is_delete")).select(base.columns)
-    rebased = base.join(
-        latest.select("o_orderkey"), "o_orderkey", "left_anti"
-    ).unionByName(survivors)
-
-    def _summ(df: DataFrame, tag: str) -> DataFrame:
-        return df.select(row_hash_int(*_ORDERS_COLS).alias("h")).agg(
-            F.count(F.lit(1)).alias(f"n_{tag}"),
-            F.expr("bit_xor(h)").alias(f"xor_{tag}"),
-        )
-
+    h = row_hash(*_ORDERS_COLS)
     counts = (
         batches.agg(
-            F.sum((~F.col("is_delete")).cast("bigint")).alias("n_upserts"),
-            F.sum(F.col("is_delete").cast("bigint")).alias("n_deletes"),
+            F.count_if(~F.col(TOMBSTONE)).alias("n_upserts"),
+            F.count_if(TOMBSTONE).alias("n_deletes"),
             F.countDistinct("version").alias("n_batches"),
         )
-        .crossJoin(_summ(rebased, "rebased"))
-        .crossJoin(_summ(v2, "target"))
+        .crossJoin(rebased.agg(*digest(h, "n_rebased", "xor_rebased")))
+        .crossJoin(v2.agg(*digest(h, "n_target", "xor_target")))
     )
     return counts.select(
         F.col("n_batches").cast("int").alias("n_batches"),
@@ -780,57 +739,17 @@ def snap_chain_rebase(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SNAP_CHAIN_REBASE_SQL = f"""
 WITH v1 AS ({_PERTURBED_SQL}),
 v2 AS ({_PERTURBED_V2_SQL}),
-pm0 AS (SELECT o_orderkey, {sql_row_hash(ORDERS_COLS_SQL)} AS h FROM orders),
-cm1 AS (SELECT *, {sql_row_hash(ORDERS_COLS_SQL)} AS h FROM v1),
-pm1 AS (SELECT o_orderkey, h FROM cm1),
-cm2 AS (SELECT *, {sql_row_hash(ORDERS_COLS_SQL)} AS h FROM v2),
-b1 AS (
-  SELECT 1 AS version, o_orderkey, o_custkey, o_orderstatus, o_totalprice,
-         o_orderdate, o_orderpriority, FALSE AS is_delete
-  FROM cm1 WHERE NOT EXISTS (SELECT 1 FROM pm0
-                             WHERE pm0.o_orderkey = cm1.o_orderkey
-                               AND pm0.h = cm1.h)
-  UNION ALL
-  SELECT 1, o.*, TRUE FROM orders o
-  WHERE o_orderkey NOT IN (SELECT o_orderkey FROM v1)
-),
-b2 AS (
-  SELECT 2 AS version, o_orderkey, o_custkey, o_orderstatus, o_totalprice,
-         o_orderdate, o_orderpriority, FALSE AS is_delete
-  FROM cm2 WHERE NOT EXISTS (SELECT 1 FROM pm1
-                             WHERE pm1.o_orderkey = cm2.o_orderkey
-                               AND pm1.h = cm2.h)
-  UNION ALL
-  SELECT 2, v1.*, TRUE FROM v1
-  WHERE o_orderkey NOT IN (SELECT o_orderkey FROM v2)
-),
-batches AS (SELECT * FROM b1 UNION ALL SELECT * FROM b2),
-latest AS (
-  SELECT * FROM batches
-  QUALIFY ROW_NUMBER() OVER (PARTITION BY o_orderkey
-                             ORDER BY version DESC) = 1
-),
-rebased AS (
-  SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice, o_orderdate,
-         o_orderpriority
-  FROM orders WHERE o_orderkey NOT IN (SELECT o_orderkey FROM latest)
-  UNION ALL
-  SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice, o_orderdate,
-         o_orderpriority
-  FROM latest WHERE NOT is_delete
-),
-bs AS (SELECT CAST(SUM(CASE WHEN is_delete THEN 0 ELSE 1 END) AS BIGINT)
-                AS n_upserts,
-              CAST(SUM(CASE WHEN is_delete THEN 1 ELSE 0 END) AS BIGINT)
-                AS n_deletes,
+d1 AS ({_sql_delta("orders", "v1")}),
+d2 AS ({_sql_delta("v1", "v2")}),
+rebased AS ({sql_fold_latest(["orders", "d1", "d2"], K, _ORDERS_FIELDS)}),
+batches AS (SELECT 1 AS version, {TOMBSTONE} FROM d1
+            UNION ALL SELECT 2, {TOMBSTONE} FROM d2),
+bs AS (SELECT COUNT(*) FILTER (WHERE NOT {TOMBSTONE}) AS n_upserts,
+              COUNT(*) FILTER (WHERE {TOMBSTONE}) AS n_deletes,
               COUNT(DISTINCT version) AS n_batches
        FROM batches),
-rs AS (SELECT COUNT(*) AS n_rebased,
-              BIT_XOR({sql_row_hash_int(ORDERS_COLS_SQL)}) AS xor_rebased
-       FROM rebased),
-ts AS (SELECT COUNT(*) AS n_target,
-              BIT_XOR({sql_row_hash_int(ORDERS_COLS_SQL)}) AS xor_target
-       FROM v2)
+rs AS ({_sql_digest("rebased", "rebased")}),
+ts AS ({_sql_digest("v2", "target")})
 SELECT CAST(n_batches AS INT) AS n_batches, n_upserts, n_deletes,
        n_rebased, n_target, xor_rebased, xor_target,
        (n_rebased = n_target AND xor_rebased = xor_target) AS state_match
@@ -988,115 +907,84 @@ FROM s_tree s FULL OUTER JOIN b_tree b USING (level, idx)
 """
 
 
-_CDC_COLS = [
-    "o_orderkey",
-    "o_custkey",
-    "o_orderstatus",
-    "o_totalprice",
-    "o_orderdate",
-    "o_orderpriority",
-]
+_PAYLOAD = _ORDERS_FIELDS[1:]
 
 
 def _cdc_pair(prev: DataFrame, curr: DataFrame, version: int) -> DataFrame:
     """Typed change feed between two snapshot states: insert / delete /
     update_preimage / update_postimage (Delta change-data-feed
-    vocabulary). Classification joins carry (key, 16-byte row hash)
-    manifests only; payload rows are semi-joined out for touched keys —
-    quiet days move almost nothing."""
-    a = prev.withColumn("_h", row_hash(*_ORDERS_COLS))
-    b = curr.withColumn("_h", row_hash(*_ORDERS_COLS))
-    ins = (
-        b.join(a.select("o_orderkey"), "o_orderkey", "left_anti")
-        .select(*_CDC_COLS)
-        .withColumn("change_type", F.lit("insert"))
+    vocabulary), from one full_outer ``diff`` carrying both sides'
+    payload. Each changed key emits its images in place (``inline``): a
+    removed key its old row, an added key its new row, a changed key
+    both."""
+    d = diff(
+        hashed(prev, _ORDERS_COLS),
+        hashed(curr, _ORDERS_COLS),
+        K,
+        _PAYLOAD,
+        _PAYLOAD,
     )
-    dele = (
-        a.join(b.select("o_orderkey"), "o_orderkey", "left_anti")
-        .select(*_CDC_COLS)
-        .withColumn("change_type", F.lit("delete"))
+    change = F.col("change")
+
+    def image(change_type: Column, prefix: str) -> Column:
+        return F.struct(
+            K,
+            *[F.col(prefix + c).alias(c) for c in _PAYLOAD],
+            change_type.alias("change_type"),
+        )
+
+    pre = F.when(change == "removed", "delete").when(
+        change == "changed", "update_preimage"
     )
-    upd_keys = (
-        a.select("o_orderkey", F.col("_h").alias("ph"))
-        .join(b.select("o_orderkey", F.col("_h").alias("ch")), "o_orderkey")
-        .filter(F.col("ph") != F.col("ch"))
-        .select("o_orderkey")
-    )
-    pre = (
-        a.join(upd_keys, "o_orderkey", "left_semi")
-        .select(*_CDC_COLS)
-        .withColumn("change_type", F.lit("update_preimage"))
-    )
-    post = (
-        b.join(upd_keys, "o_orderkey", "left_semi")
-        .select(*_CDC_COLS)
-        .withColumn("change_type", F.lit("update_postimage"))
+    post = F.when(change == "added", "insert").when(
+        change == "changed", "update_postimage"
     )
     return (
-        ins.unionByName(dele)
-        .unionByName(pre)
-        .unionByName(post)
+        d.filter(change != "same")
+        .select(F.inline(F.array(image(pre, "_old_"), image(post, ""))))
+        .filter(F.col("change_type").isNotNull())
         .withColumn("version", F.lit(version))
     )
 
 
-def snap_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Change data feed across the backup chain: the ordered, typed
-    row-change stream (insert / delete / update_preimage /
-    update_postimage per version) that downstream consumers replay
-    instead of re-diffing snapshots — Delta CDF semantics derived
-    purely from snapshot states, covering v0→v1→v2 of the demo chain.
-    Both images of an update ship, so an auditor sees exactly what a
-    value changed FROM; the feed is the incremental-consumer
-    counterpart of ``snap_chain_rebase``'s fold."""
+def _cdc_feed(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The v0 and v2 states of the demo chain and its v0→v1→v2 feed."""
     base = load_table(spark, sf_dir, "orders")
-    # each state feeds several classification subtrees per pair (and v1
-    # feeds both pairs); lazy checkpoints derive each state once
+    # v1 feeds both pairs and v2 a pair and the caller's certificate; lazy
+    # checkpoints derive each state once
     v1 = _perturbed_orders(spark, sf_dir).localCheckpoint(eager=False)
     v2 = _perturbed_orders_v2(spark, sf_dir).localCheckpoint(eager=False)
-    feed = _cdc_pair(base, v1, 1).unionByName(_cdc_pair(v1, v2, 2))
-    return feed.select(
-        F.col("version").cast("int").alias("version"),
-        "change_type",
-        *_CDC_COLS,
-    )
+    return base, v2, _cdc_pair(base, v1, 1).unionByName(_cdc_pair(v1, v2, 2))
 
 
-def snap_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental view maintenance from the CDC feed: a per-priority
-    (count, revenue) aggregate view is maintained by folding ONLY the
-    change feed into the v0 aggregate — insert/update_postimage rows
-    count +1, delete/update_preimage rows −1 (the update pair nets to
-    the value delta) — and the result is certified row-by-row against
-    the aggregate recomputed directly on the final state. This is why
-    the CDC feed exists at 100 TB: two days of changes re-aggregate in
-    change-volume time instead of a full corpus re-scan, and decimal
-    sums make the maintained view EXACTLY equal, not approximately.
-    Shuffle weight is |feed| + |groups|; the base table is touched only
-    by its (already maintained) aggregate."""
-    base = load_table(spark, sf_dir, "orders")
-    v1 = _perturbed_orders(spark, sf_dir).localCheckpoint(eager=False)
-    v2 = _perturbed_orders_v2(spark, sf_dir).localCheckpoint(eager=False)
-    feed = _cdc_pair(base, v1, 1).unionByName(_cdc_pair(v1, v2, 2))
-
-    dec = F.col("o_totalprice").cast("decimal(12,2)")
+def _ivm_delta_aggs() -> list[Column]:
+    """The feed's per-group (dn, drev): insert/update_postimage rows count
+    +1, delete/update_preimage rows −1, revenue summed as a decimal."""
     sign = F.when(
         F.col("change_type").isin("insert", "update_postimage"), F.lit(1)
     ).otherwise(F.lit(-1))
-    delta = feed.groupBy("o_orderpriority").agg(
-        F.sum(sign).alias("dn"),
-        F.sum(sign * dec).alias("drev"),
-    )
+    dec = F.col("o_totalprice").cast("decimal(12,2)")
+    return [F.sum(sign).alias("dn"), F.sum(sign * dec).alias("drev")]
+
+
+def _ivm_certificate(
+    base: DataFrame, delta: DataFrame, final: DataFrame
+) -> DataFrame:
+    """The per-priority (count, revenue) view maintained as `base`'s
+    aggregate plus the (dn, drev) `delta`, certified row by row against
+    the aggregate of the `final` state."""
+    dec = F.col("o_totalprice").cast("decimal(12,2)")
 
     def agg_of(df: DataFrame, n: str, rev: str) -> DataFrame:
         return df.groupBy("o_orderpriority").agg(
             F.count(F.lit(1)).alias(n), F.sum(dec).alias(rev)
         )
 
-    base_agg = agg_of(base, "n_base", "rev_base")
-    direct = agg_of(v2, "n_direct", "rev_direct")
     m = (
-        base_agg.join(delta, "o_orderpriority", "full_outer")
+        agg_of(base, "n_base", "rev_base")
+        .join(delta, "o_orderpriority", "full_outer")
         .select(
             "o_orderpriority",
             F.coalesce("n_base", F.lit(0)).alias("n_base"),
@@ -1109,7 +997,7 @@ def snap_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
                 + F.coalesce(F.col("drev"), F.lit(0))
             ).alias("rev_m"),
         )
-        .join(direct, "o_orderpriority")
+        .join(agg_of(final, "n_direct", "rev_direct"), "o_orderpriority")
     )
     return m.select(
         "o_orderpriority",
@@ -1126,51 +1014,82 @@ def snap_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _cdc_pair_sql(prev: str, curr: str, version: int) -> str:
-    sel_b = ", ".join(f"b.{c}" for c in _CDC_COLS)
-    sel_a = ", ".join(f"a.{c}" for c in _CDC_COLS)
-    return f"""
-  SELECT CAST({version} AS INT) AS version, 'insert' AS change_type, {sel_b}
-  FROM {curr} b LEFT JOIN {prev} a ON a.o_orderkey = b.o_orderkey
-  WHERE a.o_orderkey IS NULL
-  UNION ALL
-  SELECT CAST({version} AS INT), 'delete', {sel_a}
-  FROM {prev} a LEFT JOIN {curr} b ON a.o_orderkey = b.o_orderkey
-  WHERE b.o_orderkey IS NULL
-  UNION ALL
-  SELECT CAST({version} AS INT), 'update_preimage', {sel_a}
-  FROM {prev} a JOIN {curr} b ON a.o_orderkey = b.o_orderkey
-  WHERE a.h <> b.h
-  UNION ALL
-  SELECT CAST({version} AS INT), 'update_postimage', {sel_b}
-  FROM {prev} a JOIN {curr} b ON a.o_orderkey = b.o_orderkey
-  WHERE a.h <> b.h
-"""
+def snap_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Change data feed across the backup chain: the ordered, typed
+    row-change stream (insert / delete / update_preimage /
+    update_postimage per version) that downstream consumers replay
+    instead of re-diffing snapshots — Delta CDF semantics derived
+    purely from snapshot states, covering v0→v1→v2 of the demo chain.
+    Both images of an update ship, so an auditor sees exactly what a
+    value changed FROM; the feed is the incremental-consumer
+    counterpart of ``snap_chain_rebase``'s fold."""
+    _, _, feed = _cdc_feed(spark, sf_dir)
+    return feed.select(
+        F.col("version").cast("int").alias("version"),
+        "change_type",
+        *_ORDERS_FIELDS,
+    )
 
+
+def snap_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Incremental view maintenance from the CDC feed: a per-priority
+    (count, revenue) aggregate view is maintained by folding ONLY the
+    change feed into the v0 aggregate — insert/update_postimage rows
+    count +1, delete/update_preimage rows −1 (the update pair nets to
+    the value delta) — and the result is certified row-by-row against
+    the aggregate recomputed directly on the final state. This is why
+    the CDC feed exists at 100 TB: two days of changes re-aggregate in
+    change-volume time instead of a full corpus re-scan, and decimal
+    sums make the maintained view EXACTLY equal, not approximately.
+    Shuffle weight is |feed| + |groups|; the base table is touched only
+    by its (already maintained) aggregate."""
+    base, v2, feed = _cdc_feed(spark, sf_dir)
+    delta = feed.groupBy("o_orderpriority").agg(*_ivm_delta_aggs())
+    return _ivm_certificate(base, delta, v2)
+
+
+def _cdc_pair_sql(prev: str, curr: str, version: int) -> str:
+    """Mirror of ``_cdc_pair``, as the CTEs ``d<version>`` (the diff) and
+    ``img<version>`` (the two images of each changed key)."""
+    d = sql_diff(
+        f"({sql_hashed(prev, ORDERS_COLS_SQL)})",
+        f"({sql_hashed(curr, ORDERS_COLS_SQL)})",
+        K,
+        _PAYLOAD,
+        _PAYLOAD,
+    )
+    old = ", ".join(f"_old_{c} AS {c}" for c in _PAYLOAD)
+    return f"""d{version} AS ({d}),
+img{version} AS (
+  SELECT CAST({version} AS INT) AS version,
+         CASE change WHEN 'removed' THEN 'delete'
+                     ELSE 'update_preimage' END AS change_type,
+         o_orderkey, {old}
+  FROM d{version} WHERE change IN ('removed', 'changed')
+  UNION ALL
+  SELECT CAST({version} AS INT),
+         CASE change WHEN 'added' THEN 'insert'
+                     ELSE 'update_postimage' END,
+         o_orderkey, {", ".join(_PAYLOAD)}
+  FROM d{version} WHERE change IN ('added', 'changed')
+)"""
+
+
+# the CTEs of the v0→v1→v2 change feed, shared by the cdc and ivm oracles
+_CDC_FEED_CTES = f"""v1 AS ({_PERTURBED_SQL}),
+v2 AS ({_PERTURBED_V2_SQL}),
+{_cdc_pair_sql("orders", "v1", 1)},
+{_cdc_pair_sql("v1", "v2", 2)},
+feed AS (SELECT * FROM img1 UNION ALL SELECT * FROM img2)"""
 
 _SNAP_CDC_SQL = f"""
-WITH v1 AS ({_PERTURBED_SQL}),
-v2 AS ({_PERTURBED_V2_SQL}),
-a0 AS (SELECT *, {sql_row_hash(ORDERS_COLS_SQL)} AS h FROM orders),
-a1 AS (SELECT *, {sql_row_hash(ORDERS_COLS_SQL)} AS h FROM v1),
-a2 AS (SELECT *, {sql_row_hash(ORDERS_COLS_SQL)} AS h FROM v2)
-{_cdc_pair_sql("a0", "a1", 1)}
-UNION ALL
-{_cdc_pair_sql("a1", "a2", 2)}
+WITH {_CDC_FEED_CTES}
+SELECT version, change_type, {", ".join(_ORDERS_FIELDS)} FROM feed
 """
 
 
 _SNAP_IVM_SQL = f"""
-WITH v1 AS ({_PERTURBED_SQL}),
-v2 AS ({_PERTURBED_V2_SQL}),
-a0 AS (SELECT *, {sql_row_hash(ORDERS_COLS_SQL)} AS h FROM orders),
-a1 AS (SELECT *, {sql_row_hash(ORDERS_COLS_SQL)} AS h FROM v1),
-a2 AS (SELECT *, {sql_row_hash(ORDERS_COLS_SQL)} AS h FROM v2),
-feed AS (
-{_cdc_pair_sql("a0", "a1", 1)}
-UNION ALL
-{_cdc_pair_sql("a1", "a2", 2)}
-),
+WITH {_CDC_FEED_CTES},
 delta AS (
   SELECT o_orderpriority,
          CAST(SUM(CASE WHEN change_type IN ('insert', 'update_postimage')

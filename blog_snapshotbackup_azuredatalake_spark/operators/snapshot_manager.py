@@ -2,7 +2,8 @@
 
 Where ``operators.snapshot`` exposes the *plans* (manifest/diff/verify as
 oracle-checkable queries), this class performs the actual storage
-operations the reference's backup scripts do. The store is POSIX-only
+operations the reference's backup scripts do; both build on the
+change-set core, ``functions/changeset.py``. The store is POSIX-only
 for now: the log, ``meta.json``, purge and vacuum use local-filesystem
 calls, so only Spark's own reads and writes would work on an ``abfss://``
 URI (ROADMAP item 3).
@@ -45,15 +46,16 @@ drops the observer of an input it proves empty, such as an empty source
 of an incremental snapshot), and in stores written before stats were
 recorded; without a digest ``verify()`` runs the exact join.
 
-Incremental snapshots are *differential*: each stores changed+added rows
-plus tombstones relative to the latest FULL snapshot, found by ONE
-``full_outer`` join of the hashed source against that snapshot's stored
-row hashes, so row payloads move only when they actually changed. Restore
-of a delta is a single two-way merge (base + one delta, newest version
-per key winning via a row_number window) and retention can drop any
-intermediate delta without breaking later ones; restore of a full
-snapshot is a plain read. Tables are keyed: the key is unique and
-non-null, which the diff and the restore fold both assume.
+A full snapshot's data is a ``hashed`` frame. Incremental snapshots are
+*differential*: each is the ``delta`` (changed and added rows plus
+tombstones) of the hashed source against the latest FULL snapshot's
+stored row hashes, ONE ``full_outer`` join, so row payloads move only
+when they changed. Restoring a delta is ``fold_latest`` of its chain
+(newest version per key, one window), and retention can drop any
+intermediate delta without breaking later ones; restoring a full
+snapshot is a plain read. ``verify()`` compares by ``digest``, else by
+``diff`` of manifests. Tables are keyed: the key is unique and non-null,
+which the diff and the fold both assume.
 """
 
 from __future__ import annotations
@@ -64,29 +66,27 @@ import os
 import time
 
 from py4j.protocol import Py4JJavaError
-from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from blog_snapshotbackup_azuredatalake_spark.scratch import scratch_dir
+from blog_snapshotbackup_azuredatalake_spark.scratch import scratch_store
+from blog_snapshotbackup_azuredatalake_spark.functions.changeset import (
+    HASH,
+    count_changes,
+    delta,
+    diff,
+    digest,
+    fold_latest,
+    hashed,
+    manifest,
+    sql_digest,
+)
 from blog_snapshotbackup_azuredatalake_spark.functions.hashing import (
-    hash60,
     row_hash,
-    row_hash_int,
-    sql_row_hash_int,
+    sql_row_hash,
 )
 from blog_snapshotbackup_azuredatalake_spark.operators.txnlog import TransactionLog
-
-
-HASH = "_row_md5"  # a full snapshot's stored row hash column
-
-
-def _digest(md5: str) -> list[Column]:
-    """Aggregates of the state digest over the row hash column `md5`."""
-    return [
-        F.count(F.lit(1)).alias("rows"),
-        F.bit_xor(hash60(F.col(md5))).alias("xor60"),
-    ]
 
 
 def _observed(obs: Observation) -> dict:
@@ -148,16 +148,26 @@ class SnapshotManager:
         ).parquet(path)
 
     def _hashes(self, table: str, meta: dict) -> DataFrame:
-        """(key, row_md5) of a full snapshot: the key and hash columns of
-        its data, or the ``manifest/`` of a store written before the data
-        held the hash (its recorded schema lacks the column)."""
+        """The manifest of a full snapshot: the key and hash columns of
+        its data, or the ``manifest/`` (key, row_md5) of a store written
+        before the data held the hash (its recorded schema lacks it)."""
         data, key = self._read(table, meta), meta["key"]
         if HASH in data.columns:
-            return data.select(F.col(key).alias("key"), F.col(HASH).alias("row_md5"))
+            return data.select(key, HASH)
         ktype = data.schema[key].dataType.simpleString()
-        return self.spark.read.schema(f"key {ktype}, row_md5 string").parquet(
-            f"{self._dir(table, meta['id'])}/manifest"
+        return (
+            self.spark.read.schema(f"key {ktype}, row_md5 string")
+            .parquet(f"{self._dir(table, meta['id'])}/manifest")
+            .select(F.col("key").alias(key), F.col("row_md5").alias(HASH))
         )
+
+    def _chain(self, table: str, snap_id: int) -> list[dict]:
+        """Metas of `snap_id` and of every snapshot its ``base`` pointers
+        lead to, newest first: a full snapshot's chain is itself."""
+        chain = [self._read_meta(table, snap_id)]
+        while chain[-1]["base"] is not None:
+            chain.append(self._read_meta(table, chain[-1]["base"]))
+        return chain
 
     def _publish(self, table: str, meta: dict, op: str, **add) -> None:
         """Write meta.json, then commit the snapshot to the log with the
@@ -181,43 +191,6 @@ class SnapshotManager:
             ],
         )
 
-    # -- manifest ---------------------------------------------------------
-    @staticmethod
-    def _manifest(df: DataFrame, key: str) -> DataFrame:
-        cols = sorted(df.columns)
-        return df.select(
-            F.col(key).alias("key"), row_hash(*cols).alias("row_md5")
-        )
-
-    @staticmethod
-    def _diff(
-        df: DataFrame, key: str, base: DataFrame, digest: Observation
-    ) -> DataFrame:
-        """Changed and added rows of `df`, plus a tombstone for every key
-        of the `base` (key, row_md5) hashes that `df` no longer holds,
-        from one full_outer join. `digest` observes the state digest of
-        `df` on the hashes the join compares."""
-        cur = df.withColumn("_md5", row_hash(*sorted(df.columns)))
-        cur = cur.observe(digest, *_digest("_md5"))
-        base = base.select(
-            F.col("key").alias("_base_key"), F.col("row_md5").alias("_base_md5")
-        )
-        return (
-            cur.join(base, cur[key] == base["_base_key"], "full_outer")
-            # a key on one side only, or a changed row: both md5s are
-            # non-null where present, so null-safe inequality covers all
-            .filter(~cur["_md5"].eqNullSafe(base["_base_md5"]))
-            .select(
-                *[
-                    F.coalesce(cur[key], base["_base_key"]).alias(key)
-                    if c == key
-                    else cur[c]
-                    for c in df.columns
-                ],
-                cur["_md5"].isNull().alias("_tombstone"),
-            )
-        )
-
     # -- snapshot ---------------------------------------------------------
     def snapshot(
         self, df: DataFrame, table: str, key: str, force_full: bool = False
@@ -232,17 +205,17 @@ class SnapshotManager:
         committed = self._committed(table)
         snap_id = self._next_id(table, committed)
         fulls = [i for i, a in committed.items() if a["kind"] == "full"]
-        digest = Observation("digest")
-        observed = [digest]
+        state = Observation("digest")
+        observed = [state]
+        # the digest is observed on the row hashes the write or diff uses
+        cur = hashed(df, sorted(df.columns)).observe(state, *digest(HASH))
         if force_full or not fulls:
-            base = None
-            out = df.withColumn(HASH, row_hash(*sorted(df.columns)))
-            out = out.observe(digest, *_digest(HASH))
+            base, out = None, cur
         else:
             base, changes = max(fulls), Observation("changes")
             observed.append(changes)
             hashes = self._hashes(table, self._read_meta(table, base))
-            out = self._diff(df, key, hashes, digest).observe(
+            out = delta(hashes, cur, key).observe(
                 changes,
                 F.count(F.lit(1)).alias("delta_rows"),
                 F.count_if("_tombstone").alias("tombstones"),
@@ -350,28 +323,9 @@ class SnapshotManager:
         meta = self._read_meta(table, snap_id)
         if meta.get("kind") == "clone":
             return self.restore(meta["src_table"], meta["src_snap"])
-        chain = [meta]
-        while chain[-1]["base"] is not None:
-            chain.append(self._read_meta(table, chain[-1]["base"]))
-        if len(chain) == 1:
-            return self._read(table, meta).drop(HASH)
-        chain.reverse()  # base full snapshot first
-        key = chain[0]["key"]
-        parts = []
-        for depth, meta in enumerate(chain):
-            df = self._read(table, meta).drop(HASH)
-            if "_tombstone" not in df.columns:
-                df = df.withColumn("_tombstone", F.lit(False))
-            parts.append(df.withColumn("_version", F.lit(depth)))
-        all_rows = parts[0]
-        for p in parts[1:]:
-            all_rows = all_rows.unionByName(p)
-        w = Window.partitionBy(key).orderBy(F.col("_version").desc())
-        return (
-            all_rows.withColumn("_rn", F.row_number().over(w))
-            .filter((F.col("_rn") == 1) & (~F.col("_tombstone")))
-            .drop("_rn", "_version", "_tombstone")
-        )
+        chain = self._chain(table, snap_id)[::-1]  # base full snapshot first
+        parts = [self._read(table, m).drop(HASH) for m in chain]
+        return parts[0] if len(parts) == 1 else fold_latest(parts, meta["key"])
 
     # -- verify -----------------------------------------------------------
     def verify(self, df: DataFrame, table: str, snap_id: int) -> dict:
@@ -395,11 +349,11 @@ class SnapshotManager:
         meta = self._read_meta(table, snap_id)
         if meta["kind"] == "clone":
             return self.verify(df, meta["src_table"], meta["src_snap"])
-        add = self._committed(table).get(snap_id, {})
-        live = self._manifest(df, meta["key"])
+        add, key = self._committed(table).get(snap_id, {}), meta["key"]
+        live = manifest(df, key, sorted(df.columns))
         if "xor60" in add:
             obs = Observation("verify")
-            noop = live.observe(obs, *_digest("row_md5")).write.format("noop")
+            noop = live.observe(obs, *digest(HASH)).write.format("noop")
             noop.mode("overwrite").save()
             got = _observed(obs)
             if (got.get("rows"), got.get("xor60")) == (add["rows"], add["xor60"]):
@@ -413,17 +367,15 @@ class SnapshotManager:
         if meta["kind"] == "full":
             snap = self._hashes(table, meta)
         else:
-            snap = self._manifest(self.restore(table, snap_id), meta["key"])
-        l_md5, s_md5 = F.col("l.row_md5"), F.col("s.row_md5")
-        j = live.alias("l").join(
-            snap.alias("s"), F.col("l.key") == F.col("s.key"), "full_outer"
-        )
-        out = j.agg(
-            F.count_if(l_md5 == s_md5).alias("matching"),
-            F.count_if(l_md5 != s_md5).alias("changed"),
-            F.count_if(F.col("l.key").isNull()).alias("missing_live"),
-            F.count_if(F.col("s.key").isNull()).alias("extra_live"),
-        ).collect()[0].asDict()
+            restored = self.restore(table, snap_id)
+            snap = manifest(restored, key, sorted(restored.columns))
+        n = diff(snap, live, key).agg(*count_changes()).collect()[0]
+        out = {
+            "matching": n["same"],
+            "changed": n["changed"],
+            "missing_live": n["removed"],
+            "extra_live": n["added"],
+        }
         out["ok"] = not (
             out["changed"] or out["missing_live"] or out["extra_live"]
         )
@@ -439,12 +391,8 @@ class SnapshotManager:
 
         ids = self.snapshot_ids(table)
         keep = set(ids[-keep_last:]) if keep_last else set(ids)
-        # walk dependency chains of kept snapshots
-        for sid in list(keep):
-            cur = self._read_meta(table, sid)["base"]
-            while cur is not None:
-                keep.add(cur)
-                cur = self._read_meta(table, cur)["base"]
+        for sid in list(keep):  # and every snapshot a kept one depends on
+            keep.update(m["id"] for m in self._chain(table, sid))
         purged = [i for i in ids if i not in keep]
         if purged:
             self.log.commit(
@@ -617,28 +565,28 @@ def snap_txn_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     # purge) is what's demonstrated; writing the whole table 3× is not
     keyed = F.col("o_orderkey") % 10 == 0
     orders = load_table(spark, sf_dir, "orders").filter(keyed)
-    work = scratch_dir("snap_txn_log_")
-    mgr = SnapshotManager(spark, work)
-    mgr.snapshot(orders, "orders", "o_orderkey")
-    perturbed = _perturbed_orders(spark, sf_dir).filter(keyed)
-    mgr.snapshot(perturbed, "orders", "o_orderkey")
-    mgr.snapshot(perturbed, "orders", "o_orderkey", force_full=True)
-    mgr.purge("orders", keep_last=1)
-    live = set(mgr.log.state().keys())
-    rows = []
-    for h in mgr.log.history():
-        _, actions = mgr.log.read_commit(h["version"])
-        for a in actions:
-            act = "add" if "add" in a else "remove"
-            rows.append(
-                (
-                    h["version"],
-                    h["op"],
-                    act,
-                    a[act]["path"],
-                    a[act]["path"] in live,
+    with scratch_store("snap_txn_log_") as work:
+        mgr = SnapshotManager(spark, work)
+        mgr.snapshot(orders, "orders", "o_orderkey")
+        perturbed = _perturbed_orders(spark, sf_dir).filter(keyed)
+        mgr.snapshot(perturbed, "orders", "o_orderkey")
+        mgr.snapshot(perturbed, "orders", "o_orderkey", force_full=True)
+        mgr.purge("orders", keep_last=1)
+        live = set(mgr.log.state().keys())
+        rows = []
+        for h in mgr.log.history():
+            _, actions = mgr.log.read_commit(h["version"])
+            for a in actions:
+                act = "add" if "add" in a else "remove"
+                rows.append(
+                    (
+                        h["version"],
+                        h["op"],
+                        act,
+                        a[act]["path"],
+                        a[act]["path"] in live,
+                    )
                 )
-            )
     return spark.createDataFrame(
         rows, "version int, op string, action string, path string, live boolean"
     )
@@ -659,26 +607,26 @@ def snap_txn_conflict(spark: SparkSession, sf_dir: str) -> DataFrame:
         TransactionLog,
     )
 
-    work = scratch_dir("txn_conflict_")
-    log = TransactionLog(work)
-    v0 = log.commit("init", [{"add": {"path": "base"}}])
-    log.commit("writer_a", [{"add": {"path": "a1"}}], read_version=v0)
-    n_conflicts = 0
-    try:
-        # writer B still believes v0 is HEAD — must NOT be accepted
-        log.commit("writer_b", [{"add": {"path": "b1"}}], read_version=v0)
-    except CommitConflict:
-        n_conflicts += 1
-        log.commit(
-            "writer_b_retry",
-            [{"add": {"path": "b1"}}],
-            read_version=log.latest_version(),
-        )
-    live = set(log.state().keys())
-    rows = [
-        (h["version"], h["op"], h["n_add"], n_conflicts)
-        for h in log.history()
-    ]
+    with scratch_store("txn_conflict_") as work:
+        log = TransactionLog(work)
+        v0 = log.commit("init", [{"add": {"path": "base"}}])
+        log.commit("writer_a", [{"add": {"path": "a1"}}], read_version=v0)
+        n_conflicts = 0
+        try:
+            # writer B still believes v0 is HEAD — must NOT be accepted
+            log.commit("writer_b", [{"add": {"path": "b1"}}], read_version=v0)
+        except CommitConflict:
+            n_conflicts += 1
+            log.commit(
+                "writer_b_retry",
+                [{"add": {"path": "b1"}}],
+                read_version=log.latest_version(),
+            )
+        live = set(log.state().keys())
+        rows = [
+            (h["version"], h["op"], h["n_add"], n_conflicts)
+            for h in log.history()
+        ]
     out = spark.createDataFrame(
         rows, "version int, op string, n_add bigint, n_conflicts int"
     )
@@ -716,23 +664,25 @@ def snap_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     keyed = F.col("o_orderkey") % 10 == 0
     orders = load_table(spark, sf_dir, "orders").filter(keyed)
-    work = scratch_dir("snap_vacuum_")
-    mgr = SnapshotManager(spark, work)
-    mgr.snapshot(orders, "orders", "o_orderkey")
-    last = mgr.snapshot(
-        _perturbed_orders(spark, sf_dir).filter(keyed), "orders", "o_orderkey"
-    )
-    expected = mgr.restore("orders", last).count()
-    # crashed writer: data landed, log commit never happened
-    orders.limit(100).write.parquet(f"{work}/orders/snap_000099/data")
-    # stray temp upload inside an otherwise-live table dir
-    orders.limit(10).write.parquet(f"{work}/orders/snap_000098/data")
+    with scratch_store("snap_vacuum_") as work:
+        mgr = SnapshotManager(spark, work)
+        mgr.snapshot(orders, "orders", "o_orderkey")
+        last = mgr.snapshot(
+            _perturbed_orders(spark, sf_dir).filter(keyed),
+            "orders",
+            "o_orderkey",
+        )
+        expected = mgr.restore("orders", last).count()
+        # crashed writer: data landed, log commit never happened
+        orders.limit(100).write.parquet(f"{work}/orders/snap_000099/data")
+        # stray temp upload inside an otherwise-live table dir
+        orders.limit(10).write.parquet(f"{work}/orders/snap_000098/data")
 
-    # min_age 0: this drill's "crashed writer" debris is seconds old by
-    # construction; no concurrent writer exists in the scratch store
-    report = mgr.vacuum(min_age_seconds=0.0)
-    restored = mgr.restore("orders", last).count()
-    head, _ = mgr.log.read_commit(mgr.log.latest_version())
+        # min_age 0: this drill's "crashed writer" debris is seconds old by
+        # construction; no concurrent writer exists in the scratch store
+        report = mgr.vacuum(min_age_seconds=0.0)
+        restored = mgr.restore("orders", last).count()
+        head, _ = mgr.log.read_commit(mgr.log.latest_version())
     rows = [
         (
             r["path"],
@@ -769,39 +719,39 @@ def snap_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     keyed = F.col("o_orderkey") % 10 == 0
     orders = load_table(spark, sf_dir, "orders").filter(keyed)
-    work = scratch_dir("snap_clone_")
-    mgr = SnapshotManager(spark, work)
-    src_id = mgr.snapshot(orders, "orders", "o_orderkey")
-    n_at_clone = mgr.restore("orders", src_id).count()
-    clone_id = mgr.clone("orders", src_id, "orders_dev")
+    with scratch_store("snap_clone_") as work:
+        mgr = SnapshotManager(spark, work)
+        src_id = mgr.snapshot(orders, "orders", "o_orderkey")
+        n_at_clone = mgr.restore("orders", src_id).count()
+        clone_id = mgr.clone("orders", src_id, "orders_dev")
 
-    # source moves on; the clone must not
-    mgr.snapshot(
-        _perturbed_orders(spark, sf_dir).filter(keyed),
-        "orders",
-        "o_orderkey",
-    )
-    clone_dir = mgr._dir("orders_dev", clone_id)
-    clone_files = [
-        os.path.join(dp, f)
-        for dp, _, fs in os.walk(clone_dir)
-        for f in fs
-    ]
-    vacuum_report = mgr.vacuum()
-    checks = [
-        # restored AFTER the source advanced — this IS the isolation
-        # proof: the pointer resolves to the pinned snapshot, not HEAD
-        ("clone_restores_source_state",
-         mgr.restore("orders_dev", clone_id).count() == n_at_clone),
-        ("clone_is_metadata_only",
-         [os.path.basename(p) for p in clone_files] == ["meta.json"]),
-        ("source_advanced_past_clone",
-         mgr.snapshot_ids("orders")[-1] > src_id),
-        ("vacuum_keeps_clone_and_source",
-         not any(r["deleted"] for r in vacuum_report)),
-        ("clone_commit_logged",
-         any(h["op"] == "clone" for h in mgr.log.history())),
-    ]
+        # source moves on; the clone must not
+        mgr.snapshot(
+            _perturbed_orders(spark, sf_dir).filter(keyed),
+            "orders",
+            "o_orderkey",
+        )
+        clone_dir = mgr._dir("orders_dev", clone_id)
+        clone_files = [
+            os.path.join(dp, f)
+            for dp, _, fs in os.walk(clone_dir)
+            for f in fs
+        ]
+        vacuum_report = mgr.vacuum()
+        checks = [
+            # restored AFTER the source advanced — this IS the isolation
+            # proof: the pointer resolves to the pinned snapshot, not HEAD
+            ("clone_restores_source_state",
+             mgr.restore("orders_dev", clone_id).count() == n_at_clone),
+            ("clone_is_metadata_only",
+             [os.path.basename(p) for p in clone_files] == ["meta.json"]),
+            ("source_advanced_past_clone",
+             mgr.snapshot_ids("orders")[-1] > src_id),
+            ("vacuum_keeps_clone_and_source",
+             not any(r["deleted"] for r in vacuum_report)),
+            ("clone_commit_logged",
+             any(h["op"] == "clone" for h in mgr.log.history())),
+        ]
     return spark.createDataFrame(checks, "check string, ok boolean")
 
 
@@ -812,7 +762,8 @@ def snap_restore_drill(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the deterministic perturbed days), then restores EVERY version
     and fingerprints the materialized state: row count + 60-bit xor of
     the canonical row hash, plus the delta-chain length the restore
-    folded. `checksum_match` compares the restored fingerprint against
+    folded; the fingerprint is the state ``digest`` the store records.
+    `checksum_match` compares the restored fingerprint against
     the directly-constructed state's — both computed Spark-side, each a
     two-number aggregate (the 100 TB verify cost is one scan per side,
     shuffling two numbers; nothing row-sized leaves the executors).
@@ -832,33 +783,19 @@ def snap_restore_drill(spark: SparkSession, sf_dir: str) -> DataFrame:
     v0 = load_table(spark, sf_dir, "orders").filter(keyed)
     v1 = _perturbed_orders(spark, sf_dir).filter(keyed)
     v2 = _perturbed_orders_v2(spark, sf_dir).filter(keyed)
-    work = scratch_dir("snap_restore_drill_")
-    mgr = SnapshotManager(spark, work)
-    sids = [mgr.snapshot(v, "orders", "o_orderkey") for v in (v0, v1, v2)]
 
     def fingerprint(df: DataFrame):
-        row = (
-            df.select(row_hash_int(*_ORDERS_COLS).alias("h"))
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.expr("bit_xor(h)").alias("x"),
-            )
-            .collect()[0]
-        )
-        return int(row["n"]), int(row["x"])
+        return tuple(df.agg(*digest(row_hash(*_ORDERS_COLS))).collect()[0])
 
     rows = []
-    for ver, (sid, direct) in enumerate(zip(sids, (v0, v1, v2))):
-        chain_len, cur = 0, sid
-        while cur is not None:
-            meta = mgr._read_meta("orders", cur)
-            chain_len += 1
-            cur = meta["base"]
-        rn, rx = fingerprint(mgr.restore("orders", sid))
-        dn, dx = fingerprint(direct)
-        rows.append(
-            (ver, chain_len, rn, rx, rn == dn and rx == dx)
-        )
+    with scratch_store("snap_restore_drill_") as work:
+        mgr = SnapshotManager(spark, work)
+        sids = [mgr.snapshot(v, "orders", "o_orderkey") for v in (v0, v1, v2)]
+        for ver, (sid, direct) in enumerate(zip(sids, (v0, v1, v2))):
+            chain_len = len(mgr._chain("orders", sid))
+            rn, rx = fingerprint(mgr.restore("orders", sid))
+            dn, dx = fingerprint(direct)
+            rows.append((ver, chain_len, rn, rx, (rn, rx) == (dn, dx)))
     return spark.createDataFrame(
         rows,
         "version int, chain_len int, n_rows bigint, xor_checksum bigint,"
@@ -873,16 +810,14 @@ def _restore_drill_sql() -> str:
         ORDERS_COLS_SQL,
     )
 
-    h = sql_row_hash_int(ORDERS_COLS_SQL)
+    digest = sql_digest(sql_row_hash(ORDERS_COLS_SQL), "n_rows", "xor_checksum")
     selects = []
     # chain layout by construction: v0 full, v1/v2 deltas against v0
     for ver, (src, chain_len) in enumerate(
         [("orders", 1), ("v1", 2), ("v2", 2)]
     ):
         selects.append(f"""
-SELECT {ver} AS version, {chain_len} AS chain_len,
-       CAST(COUNT(*) AS BIGINT) AS n_rows,
-       BIT_XOR({h}) AS xor_checksum,
+SELECT {ver} AS version, {chain_len} AS chain_len, {digest},
        TRUE AS checksum_match
 FROM {src} WHERE o_orderkey % 10 = 0""")
     return (

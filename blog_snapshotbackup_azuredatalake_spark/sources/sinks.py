@@ -18,9 +18,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from blog_snapshotbackup_azuredatalake_spark.scratch import scratch_dir
+from blog_snapshotbackup_azuredatalake_spark.functions.changeset import (
+    digest,
+    sql_digest,
+)
 from blog_snapshotbackup_azuredatalake_spark.functions.hashing import (
     row_hash,
     row_hash_int,
+    sql_row_hash,
 )
 
 
@@ -308,29 +313,17 @@ def snap_format_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     }
 
     def cert(fmt: str, df: DataFrame) -> DataFrame:
-        return (
-            df.select(row_hash_int(*_RT_COLS).alias("h"))
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.expr("bit_xor(h)").alias("xor_checksum"),
-            )
-            .select(F.lit(fmt).alias("fmt"), "n_rows", "xor_checksum")
-        )
+        return df.agg(
+            *digest(row_hash(*_RT_COLS), "n_rows", "xor_checksum")
+        ).select(F.lit(fmt).alias("fmt"), "n_rows", "xor_checksum")
 
     return cert("csv", back["csv"]).unionByName(cert("jsonl", back["jsonl"]))
 
 
 def _format_roundtrip_sql() -> str:
-    from blog_snapshotbackup_azuredatalake_spark.functions.hashing import (
-        sql_row_hash_int,
-    )
-
-    h = sql_row_hash_int(_RT_COLS)
+    digest = sql_digest(sql_row_hash(_RT_COLS), "n_rows", "xor_checksum")
     return f"""
-WITH base AS (
-  SELECT COUNT(*) AS n_rows, bit_xor(h) AS xor_checksum
-  FROM (SELECT {h} AS h FROM customer)
-)
+WITH base AS (SELECT {digest} FROM customer)
 SELECT 'csv' AS fmt, n_rows, xor_checksum FROM base
 UNION ALL
 SELECT 'jsonl' AS fmt, n_rows, xor_checksum FROM base

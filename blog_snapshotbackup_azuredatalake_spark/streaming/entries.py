@@ -484,33 +484,23 @@ def stream_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline keeps analytics views warm between snapshots instead of
     re-scanning the lake."""
     from blog_snapshotbackup_azuredatalake_spark.operators.snapshot import (
-        _cdc_pair,
-        _perturbed_orders,
-        _perturbed_orders_v2,
+        _cdc_feed,
+        _ivm_certificate,
+        _ivm_delta_aggs,
     )
 
-    base = load_table(spark, sf_dir, "orders")
-    v1 = _perturbed_orders(spark, sf_dir).localCheckpoint(eager=False)
-    v2 = _perturbed_orders_v2(spark, sf_dir).localCheckpoint(eager=False)
-    feed = (
-        _cdc_pair(base, v1, 1)
-        .unionByName(_cdc_pair(v1, v2, 2))
-        .select("change_type", "o_orderpriority", "o_totalprice")
-    )
+    base, v2, feed = _cdc_feed(spark, sf_dir)
+    feed = feed.select("change_type", "o_orderpriority", "o_totalprice")
     work = scratch_dir("stream_ivm_")
     src = f"{work}/feed_src"
     feed.coalesce(DEMO_STATE_PARTITIONS).write.parquet(src)
 
-    dec = F.col("o_totalprice").cast("decimal(12,2)")
-    sign = F.when(
-        F.col("change_type").isin("insert", "update_postimage"), F.lit(1)
-    ).otherwise(F.lit(-1))
     stream = spark.readStream.schema(feed.schema).parquet(src)
     name = f"ivm_{uuid.uuid4().hex[:8]}"
     with demo_state_partitions(spark):
         q = (
             stream.groupBy("o_orderpriority")
-            .agg(F.sum(sign).alias("dn"), F.sum(sign * dec).alias("drev"))
+            .agg(*_ivm_delta_aggs())
             .writeStream.format("memory")
             .queryName(name)
             .outputMode("complete")
@@ -519,43 +509,7 @@ def stream_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    delta = spark.table(name)
-
-    def agg_of(df: DataFrame, n: str, rev: str) -> DataFrame:
-        return df.groupBy("o_orderpriority").agg(
-            F.count(F.lit(1)).alias(n), F.sum(dec).alias(rev)
-        )
-
-    m = (
-        agg_of(base, "n_base", "rev_base")
-        .join(delta, "o_orderpriority", "full_outer")
-        .select(
-            "o_orderpriority",
-            F.coalesce("n_base", F.lit(0)).alias("n_base"),
-            F.coalesce("dn", F.lit(0)).alias("dn"),
-            (
-                F.coalesce("n_base", F.lit(0)) + F.coalesce("dn", F.lit(0))
-            ).alias("n_maintained"),
-            (
-                F.coalesce(F.col("rev_base"), F.lit(0))
-                + F.coalesce(F.col("drev"), F.lit(0))
-            ).alias("rev_m"),
-        )
-        .join(agg_of(v2, "n_direct", "rev_direct"), "o_orderpriority")
-    )
-    return m.select(
-        "o_orderpriority",
-        "n_base",
-        "dn",
-        "n_maintained",
-        "n_direct",
-        F.col("rev_m").cast("double").alias("rev_maintained"),
-        F.col("rev_direct").cast("double").alias("rev_direct"),
-        (
-            (F.col("n_maintained") == F.col("n_direct"))
-            & (F.col("rev_m") == F.col("rev_direct"))
-        ).alias("is_consistent"),
-    )
+    return _ivm_certificate(base, spark.table(name), v2)
 
 
 LATE_DELAY_US = 30 * 60 * 1_000_000  # watermark delay
@@ -1034,8 +988,8 @@ def stream_apply_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     one commit per change batch in order, each delta's data dir must
     hold exactly the batch's change rows (write volume ∝ |changes|),
     and the post-rebase full snapshot must still equal that state."""
-    from blog_snapshotbackup_azuredatalake_spark.functions.hashing import (
-        md5_int60,
+    from blog_snapshotbackup_azuredatalake_spark.functions.changeset import (
+        digest,
     )
     from blog_snapshotbackup_azuredatalake_spark.operators.snapshot import (
         _cdc_pair,
@@ -1104,9 +1058,8 @@ def stream_apply_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     q.stop()
 
     head = mgr.restore("orders", mgr.snapshot_ids("orders")[-1])
-    hx = lambda df: df.select(  # noqa: E731
-        md5_int60(F.col("o_orderkey").cast("string")).alias("h")
-    ).agg(F.count(F.lit(1)).alias("n"), F.expr("bit_xor(h)").alias("x"))
+    key_md5 = F.md5(F.col("o_orderkey").cast("string"))
+    hx = lambda df: df.agg(*digest(key_md5, "n", "x"))  # noqa: E731
     got = hx(head).first()
     want = hx(v2).first()
     ops = [h["op"] for h in mgr.log.history()]

@@ -1,15 +1,18 @@
 """Dump ``explain("formatted")`` of the SnapshotManager plans on the
 backup loop's hot path: the full snapshot's writes, the incremental
 snapshot's delta write, ``verify()`` of that snapshot, and ``restore()``
-of a full snapshot.
+of a full snapshot, of the incremental one and of a ``commit_delta``
+chain.
 
     python scripts/snapshot_plans.py SF_DIR TAG OUT_DIR [PACKAGE_ROOT]
 
 It builds a scratch store from ``SF_DIR/orders.parquet`` (a full
-snapshot, then an incremental one of a perturbed next day) and writes
+snapshot, an incremental one of a perturbed next day, then a
+``commit_delta`` batch on top of it) and writes
 ``OUT_DIR/snapshot_full_write_TAG.txt``,
-``snapshot_delta_write_TAG.txt``, ``verify_TAG.txt`` and
-``restore_full_TAG.txt``. The plans are captured from the calls
+``snapshot_delta_write_TAG.txt``, ``verify_TAG.txt``,
+``restore_full_TAG.txt``, ``restore_incremental_TAG.txt`` and
+``restore_delta_TAG.txt``. The plans are captured from the calls
 themselves (every frame handed to a parquet writer, in order, and the
 frame verify runs, whether it collects it or writes it to a ``noop``
 sink), so the script needs no knowledge of either revision's
@@ -114,6 +117,10 @@ def main() -> None:
     finally:
         DataFrameWriter.parquet, DataFrameWriter.save = write, save
         DataFrame.collect = collect
+    batch = next_day.filter(key % 7 == 0).withColumn(
+        "_tombstone", key % 14 == 0
+    )
+    chained = mgr.commit_delta(batch, "orders", "o_orderkey")
     plans = {
         "snapshot_full_write": "".join(
             f"## write to {target}\n{plan}" for target, plan in full_writes
@@ -121,6 +128,8 @@ def main() -> None:
         "snapshot_delta_write": dict(delta_writes)["data/"],
         "verify": f"## {verify_action}\n{verify_plan}",
         "restore_full": _explain(mgr.restore("orders", full)),
+        "restore_incremental": _explain(mgr.restore("orders", inc)),
+        "restore_delta": _explain(mgr.restore("orders", chained)),
     }
     os.makedirs(out_dir, exist_ok=True)
     for name, plan in plans.items():

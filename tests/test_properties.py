@@ -11,7 +11,7 @@ import math
 
 import duckdb
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from pyspark.sql import functions as F
@@ -34,6 +34,21 @@ from blog_snapshotbackup_azuredatalake_spark.functions.hashing import (
     sql_md5_int60,
     sql_row_hash,
     sql_row_hash_int,
+)
+from blog_snapshotbackup_azuredatalake_spark.functions.changeset import (
+    HASH,
+    delta,
+    diff,
+    digest,
+    fold_latest,
+    hashed,
+    manifest,
+    sql_delta,
+    sql_diff,
+    sql_digest,
+    sql_fold_latest,
+    sql_hashed,
+    sql_manifest,
 )
 from blog_snapshotbackup_azuredatalake_spark.functions.centroids import (
     Centroids,
@@ -136,6 +151,134 @@ def test_md5_int60_matches_duckdb(spark, s):
     # the 60-bit truncation the operators run, against Python's md5
     assert row["h60"] == int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
     assert 0 <= row["h"] < 2**60
+
+
+# change-set core: a keyed table k -> (a, b) with NULL-able payload
+_CS_COLS = ["k", "a", "b"]
+_CS_SCHEMA = "k bigint, a string, b bigint"
+_CS_DDL = "k BIGINT, a VARCHAR, b BIGINT"
+_payload = st.tuples(st.none() | _txt, st.none() | st.integers(-3, 3))
+_state = st.dictionaries(st.integers(0, 7), _payload, max_size=6)
+
+
+def _cs_md5(k, payload):
+    enc = ["" if v is None else str(v) for v in (k, *payload)]
+    return hashlib.md5(SEP.join(enc).encode()).hexdigest()
+
+
+def _cs_digest(state):
+    if not state:
+        return (0, None)
+    x = 0
+    for k, p in state.items():
+        x ^= int(_cs_md5(k, p)[:15], 16)
+    return (len(state), x)
+
+
+def _cs_table(con, name, rows, ddl=_CS_DDL):
+    con.execute(f"CREATE TABLE {name} ({ddl})")
+    if rows:
+        marks = ", ".join("?" * len(rows[0]))
+        con.executemany(f"INSERT INTO {name} VALUES ({marks})", rows)
+
+
+def _by_key(rows):
+    return sorted((tuple(r) for r in rows), key=lambda r: r[0])
+
+
+@given(old=_state, new=_state)
+@example(old={0: (None, None), 1: ("x", 1)}, new={0: ("", None), 2: ("y", None)})
+@_SLOW
+def test_changeset_diff_delta_digest_match_python_and_duckdb(spark, old, new):
+    """``diff``, ``delta`` and ``digest`` in Spark and DuckDB against a
+    Python model, on generated states: keys on one side only, changed
+    payloads, NULL payload columns and empty sides; and replaying the
+    delta onto the old state with ``fold_latest`` gives the new one."""
+    o = spark.createDataFrame([(k, *p) for k, p in old.items()], _CS_SCHEMA)
+    n = spark.createDataFrame([(k, *p) for k, p in new.items()], _CS_SCHEMA)
+    con = duckdb.connect()
+    _cs_table(con, "o", [(k, *p) for k, p in old.items()])
+    _cs_table(con, "n", [(k, *p) for k, p in new.items()])
+
+    def change(k):
+        if k not in new:
+            return "removed"
+        if k not in old:
+            return "added"
+        # rows compare by their hash, whose encoding reads NULL as ''
+        same = _cs_md5(k, old[k]) == _cs_md5(k, new[k])
+        return "same" if same else "changed"
+
+    nulls = (None, None)
+    keys = sorted(old.keys() | new.keys())
+    want = [(k, change(k), *old.get(k, nulls), *new.get(k, nulls)) for k in keys]
+    got = diff(hashed(o, _CS_COLS), hashed(n, _CS_COLS), "k", ["a", "b"], ["a", "b"])
+    sql = sql_diff(
+        f"({sql_hashed('o', _CS_COLS)})",
+        f"({sql_hashed('n', _CS_COLS)})",
+        "k",
+        ["a", "b"],
+        ["a", "b"],
+    )
+    assert _by_key(got.collect()) == want == _by_key(con.execute(sql).fetchall())
+
+    want = [(k, *new.get(k, nulls), k not in new) for k in keys if change(k) != "same"]
+    got = delta(manifest(o, "k", _CS_COLS), hashed(n, _CS_COLS), "k")
+    sql = sql_delta(
+        f"({sql_manifest('o', 'k', _CS_COLS)})",
+        f"({sql_hashed('n', _CS_COLS)})",
+        "k",
+        _CS_COLS,
+    )
+    assert _by_key(got.collect()) == want == _by_key(con.execute(sql).fetchall())
+    replayed = fold_latest([o, got], "k").collect()
+    assert {r["k"]: _cs_md5(r["k"], r[1:]) for r in replayed} == {
+        k: _cs_md5(k, p) for k, p in new.items()
+    }
+
+    for state, df, rel in ((old, o, "o"), (new, n, "n")):
+        h = hashed(df, _CS_COLS).agg(*digest(HASH)).collect()[0]
+        sql = f"SELECT {sql_digest(HASH)} FROM ({sql_hashed(rel, _CS_COLS)})"
+        assert tuple(h) == _cs_digest(state) == con.execute(sql).fetchone()
+
+
+# a delta maps a key to a new payload, or to None: a tombstone
+_deltas = st.lists(
+    st.dictionaries(st.integers(0, 7), st.none() | _payload, max_size=4),
+    min_size=1,
+    max_size=3,
+)
+
+
+@given(base=_state, deltas=_deltas)
+@example(base={1: ("x", 1), 2: (None, None)}, deltas=[{1: None}, {1: ("y", None)}])
+@_SLOW
+def test_changeset_fold_latest_matches_python_and_duckdb(spark, base, deltas):
+    """``fold_latest`` of a base and a delta chain, in Spark and DuckDB,
+    against replaying the chain in Python: the newest version of a key
+    wins, a tombstone removes it, and a later delta can add it again."""
+    con = duckdb.connect()
+    rows = [[(k, *p) for k, p in base.items()]]
+    rows += [
+        [(k, *(p or (None, None)), p is None) for k, p in d.items()]
+        for d in deltas
+    ]
+    parts = [spark.createDataFrame(rows[0], _CS_SCHEMA)]
+    _cs_table(con, "p0", rows[0])
+    for i, r in enumerate(rows[1:], 1):
+        parts.append(spark.createDataFrame(r, f"{_CS_SCHEMA}, _tombstone boolean"))
+        _cs_table(con, f"p{i}", r, f"{_CS_DDL}, _tombstone BOOLEAN")
+    state = dict(base)
+    for d in deltas:
+        for k, p in d.items():
+            if p is None:
+                state.pop(k, None)
+            else:
+                state[k] = p
+    want = [(k, *state[k]) for k in sorted(state)]
+    sql = sql_fold_latest([f"p{i}" for i in range(len(rows))], "k", _CS_COLS)
+    assert _by_key(fold_latest(parts, "k").collect()) == want
+    assert _by_key(con.execute(sql).fetchall()) == want
 
 
 def _nonzero(v):  # zero-norm → ANSI divide-by-zero; real embeddings aren't

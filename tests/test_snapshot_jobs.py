@@ -13,7 +13,10 @@ scale, so the number of jobs each call launches is pinned here:
   an incremental snapshot, is one map-only job (the digest observed on
   a ``noop`` write, no shuffle);
 - restoring a full snapshot is a plain schema-pinned read that plans
-  without a job and without a fold.
+  without a job and without a fold;
+- restoring a ``commit_delta`` chain is one window fold
+  (``changeset.fold_latest``) over the union of its versions: one
+  ``Window``, and no join over the base scan.
 """
 import uuid
 
@@ -113,3 +116,21 @@ def test_full_restore_is_a_plain_read(spark, store):
         spark, lambda: df.write.format("noop").mode("overwrite").save()
     )
     assert n_run == 1
+
+
+
+def test_delta_restore_is_one_window_fold(spark, store):
+    mgr, _, orders, _ = store
+    changes = (
+        orders.filter(F.col("o_orderkey") % 7 == 0)
+        .withColumn("o_totalprice", F.col("o_totalprice") + 1.0)
+        .withColumn("_tombstone", F.col("o_orderkey") % 14 == 0)
+    )
+    mgr.commit_delta(changes, "orders", "o_orderkey")
+    sid = mgr.commit_delta(changes.filter(~F.col("_tombstone")), "orders", "o_orderkey")
+    df, n_plan = _jobs(spark, lambda: mgr.restore("orders", sid))
+    assert n_plan == 0
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    operators = [line.lstrip(" :+-*") for line in plan.splitlines()]
+    assert sum(op.startswith("Window ") for op in operators) == 1
+    assert "Join" not in plan

@@ -1,6 +1,8 @@
 """SnapshotManager lifecycle: full snapshot → mutate → incremental →
 restore both states → verify → retention purge."""
+import glob
 import os
+import tempfile
 
 import pyspark.sql.functions as F
 import pytest
@@ -768,3 +770,34 @@ def test_store_in_the_old_layout_reads_the_same(spark, tmp_path):
     for m, sid in ((new, n_new), (old, n_old)):
         assert _sorted_rows(m.restore("t", sid)) == _sorted_rows(v2)
         assert m.verify(v2, "t", sid)["ok"]
+
+
+def test_driver_built_entries_remove_their_scratch_store(spark):
+    """The lifecycle entries whose result is built on the driver remove
+    their scratch store before they return, so repeated calls leave no
+    directory behind on tmpfs."""
+    from blog_snapshotbackup_azuredatalake_spark.operators import (
+        snapshot_manager as sm,
+    )
+    from blog_snapshotbackup_azuredatalake_spark.scratch import scratch_root
+
+    root = scratch_root() or tempfile.gettempdir()
+    names = {
+        "snap_txn_log": "snap_txn_log_",
+        "snap_txn_conflict": "txn_conflict_",
+        "snap_vacuum": "snap_vacuum_",
+        "snap_clone": "snap_clone_",
+        "snap_restore_drill": "snap_restore_drill_",
+    }
+
+    def listing():
+        return {
+            d
+            for prefix in names.values()
+            for d in glob.glob(os.path.join(root, prefix + "*"))
+        }
+
+    before = listing()
+    for name in names:
+        assert getattr(sm, name)(spark, SF_DIR).count() > 0
+    assert listing() <= before
