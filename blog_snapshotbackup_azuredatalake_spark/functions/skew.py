@@ -14,8 +14,6 @@ changes query RESULTS, so it needs no oracle portability.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -55,10 +53,9 @@ def salted_join(
 # the sort's parallelism at that cardinality no matter how large the
 # corpus or the cluster — measured as 97–150 s warm-run swings at 2.4 M
 # vectors from heap churn on a 48 M-row 20-partition ADC sort
-# (SCALING.md round 9). Scale-adaptive by env (a cluster run raises it
-# with the executor count); the default keeps |parts|·TOPK_SALT ≫ any
-# local core count while phase 2 stays trivially small.
-TOPK_SALT = int(os.environ.get("SPARK_GRAFT_TOPK_SALT", "64"))
+# (SCALING.md round 9). 64 keeps |parts|·TOPK_SALT ≫ any local core
+# count while phase 2 stays trivially small.
+TOPK_SALT = 64
 
 
 def two_phase_rank(

@@ -50,6 +50,15 @@ from blog_snapshotbackup_azuredatalake_spark.functions.vectors import (
     sql_l2_sq,
     sql_sign_bucket,
 )
+from blog_snapshotbackup_azuredatalake_spark.functions.pq import (
+    PQERR_FP,
+    ProductQuantizer,
+    l2_top,
+    py_l2_sq,
+    refine,
+    sql_adc_refine,
+    sql_pq_ctes,
+)
 from blog_snapshotbackup_azuredatalake_spark.functions.skew import (
     two_phase_rank_dual,
 )
@@ -248,7 +257,7 @@ def ann_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     # round 10: left as a single window — Spark 4.1 plans this
     # rank+filter shape with WindowGroupLimit(Partial) before the
     # exchange (map-side top-k per query), so the sort parallelism is
-    # NOT bounded by |Q|; see _adc_shortlist's docstring
+    # NOT bounded by |Q|; see ProductQuantizer.adc_shortlist
     w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("vec_id"))
     return (
         pairs.withColumn("rnk", F.row_number().over(w))
@@ -337,7 +346,7 @@ def ann_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # round 10: left as a single window — Spark 4.1 plans this
     # rank+filter shape with WindowGroupLimit(Partial) before the
     # exchange (map-side top-k per query), so the sort parallelism is
-    # NOT bounded by |Q|; see _adc_shortlist's docstring
+    # NOT bounded by |Q|; see ProductQuantizer.adc_shortlist
     w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("vec_id"))
     return (
         pairs.withColumn("rnk", F.row_number().over(w))
@@ -438,7 +447,7 @@ def _ivf_search(emb: DataFrame, cents: Centroids) -> DataFrame:
     # round 10: left as a single window — Spark 4.1 plans this
     # rank+filter shape with WindowGroupLimit(Partial) before the
     # exchange (map-side top-k per query), so the sort parallelism is
-    # NOT bounded by |Q|; see _adc_shortlist's docstring
+    # NOT bounded by |Q|; see ProductQuantizer.adc_shortlist
     w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("vec_id"))
     return (
         pairs.withColumn("rnk", F.row_number().over(w))
@@ -541,7 +550,7 @@ def ann_filtered_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # round 10: single window kept — WindowGroupLimit(Partial) already
-    # does the map-side top-k here; see _adc_shortlist's docstring
+    # does the map-side top-k here; see ProductQuantizer.adc_shortlist
     w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("vec_id"))
     return (
         pairs.withColumn("rnk", F.row_number().over(w))
@@ -1078,250 +1087,68 @@ FROM q LEFT JOIN hits h ON h.src = q.q_id
 """
 
 
-PQ_M = 32  # subspaces (64-dim → 2 dims each)
-PQ_SUBDIM = 2
-PQ_K = 16  # codes per subspace → one byte-nibble per subspace
-PQ_FP = 1 << 20  # fixed-point scale for ADC table entries
-PQ_SHORTLIST = 20  # ADC candidates per query kept for exact re-rank
-def _adc_shortlist(scored: DataFrame) -> DataFrame:
-    """Top-PQ_SHORTLIST per query over the corpus-sized ADC scan.
-
-    Round-10 decision (plans/r10/emb_pq_adc_before.txt): the round-9
-    verdict prescribed a salted two-phase rewrite of this window on the
-    premise that it shuffles |corpus|·|Q| rows into |Q| = 20 sort
-    tasks. Spark 4.1's rank-limit pushdown (SPARK-37099) already plans
-    this exact shape as `Sort → WindowGroupLimit(Partial, k=20) →
-    Exchange(q_id) → WindowGroupLimit(Final) → Window`: every MAP task
-    locally sorts its slice and keeps its own top-20 per query, the
-    exchange carries ≤ maptasks·|Q|·20 rows, and the 20 reduce
-    partitions sort only those survivors. That IS the two-phase
-    partial top-k, done engine-side with one exchange; an explicit
-    salted rewrite was measured/plan-verified to add a second exchange
-    and TOPK_SALT× more shuffled survivors for the same local sort
-    work, so the single window stays."""
-    ws = Window.partitionBy("q_id").orderBy("adc_fp", "vec_id")
-    return (
-        scored.withColumn("srnk", F.row_number().over(ws))
-        .filter(F.col("srnk") <= PQ_SHORTLIST)
-        .select("q_id", "vec_id", "adc_fp")
+def _pq_queries(emb: DataFrame) -> DataFrame:
+    return emb.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
     )
 
 
-def _pq_l2(a: list, b: list) -> float:
-    acc = 0.0  # left-to-right fold — same order as both engines
-    for x, y in zip(a, b):
-        acc += (x - y) * (x - y)
-    return acc
+def _pq_query_rows(emb: DataFrame) -> list:
+    """The (q_id, q_emb) query rows, collected and sorted by q_id."""
+    return sorted(_pq_queries(emb).collect(), key=lambda r: r["q_id"])
 
 
-def _pq_sub(v: list, s: int) -> list:
-    return v[s * PQ_SUBDIM : (s + 1) * PQ_SUBDIM]
-
-
-def _pq_codebook(emb: DataFrame) -> tuple[dict, list]:
-    """Deterministic first-PQ_K seed codebook (as ann_topk_ivf seeds
-    its lists) — KBs at any corpus size, driver-held by design."""
-    cb_rows = emb.filter(F.col("vec_id") < PQ_K).collect()
-    cb = {
-        int(r["vec_id"]): [float(x) for x in r["embedding"]] for r in cb_rows
-    }
-    return cb, sorted(cb)
-
-
-def _pq_query_tables(q_rows: list, cb: dict, ks: list) -> list:
-    """Per-query fixed-point ADC tables (floor(d²·2²⁰) BIGINTs) — the
-    scan's per-pair sum is integer-exact, order-independent, and
-    engine-portable."""
-    import math
-
-    qtabs = []
-    for qr in sorted(q_rows, key=lambda r: r["vec_id"]):
-        qv = [float(x) for x in qr["embedding"]]
-        t = []
-        for s in range(PQ_M):
-            for k in ks:
-                t.append(
-                    int(
-                        math.floor(
-                            _pq_l2(_pq_sub(qv, s), _pq_sub(cb[k], s)) * PQ_FP
-                        )
-                    )
-                )
-        qtabs.append((int(qr["vec_id"]), t))
-    return qtabs
-
-
-def _pq_encode_sql(cb: dict, ks: list, col: str = "embedding") -> str:
-    """The whole PQ_M×PQ_K codebook-argmin expression emitted as ONE
-    SQL string parsed in a single F.expr call. Building it through the
-    Column API costs one Py4J round-trip per operator node (~8k trips
-    ≈ 20 s of pure driver latency, flat at every SF); the string goes
-    over the wire once. Same left-to-right double arithmetic, so encode
-    parity with the oracle and the driver-side tables holds.
-
-    The ~128 KB expression FAILS whole-stage codegen (janino method-
-    size) and runs interpreted — measured NOT worth fixing (round 7,
-    600 k vectors, warm min-of-2): this unrolled form 6.5 s vs a
-    nested higher-order-function loop (tiny expression tree, codebook
-    as array literal) 18.0 s and an Arrow/numpy pandas-UDF encode
-    18.9 s, all three bit-identical on 2 000 checked rows. The
-    interpreted unrolled tree evaluates constant-folded literals with
-    no per-element lambda dispatch and no Arrow transfer — keep it;
-    the codegen WARN on stderr is the cost."""
-
-    def d2_sql(s: int, vals: list) -> str:
-        terms = []
-        for i, v in enumerate(vals):
-            x = f"cast(element_at({col}, {s * PQ_SUBDIM + i + 1}) as double)"
-            c = f"cast('{float(v)!r}' as double)"
-            terms.append(f"({x} - {c}) * ({x} - {c})")
-        return " + ".join(terms)
-
-    def code_sql(s: int) -> str:
-        structs = ", ".join(
-            f"named_struct('d2', {d2_sql(s, _pq_sub(cb[k], s))}, 'j', {j})"
-            for j, k in enumerate(ks)
-        )
-        return f"array_min(array({structs})).j"
-
-    return "array(" + ", ".join(code_sql(s) for s in range(PQ_M)) + ")"
+def _pq_query_tables(
+    spark: SparkSession, pq: ProductQuantizer, emb: DataFrame
+) -> DataFrame:
+    """(q_id, t): each query's ADC table, as DATA — |Q|×(PQ_M·PQ_K)
+    bigints ride a broadcast frame, not ~10k literal expression nodes."""
+    return spark.createDataFrame(
+        [
+            (int(r["q_id"]), pq.table([float(x) for x in r["q_emb"]]))
+            for r in _pq_query_rows(emb)
+        ],
+        "q_id bigint, t array<bigint>",
+    )
 
 
 def emb_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ANN with asymmetric-distance scan + exact
-    refine (faiss's IndexPQ + refine recipe): the corpus compresses to
-    PQ_M 4-bit sub-codes — 16 bytes instead of 256 per 64-dim float
-    vector, the 16× memory cut that lets a 100 TB embedding corpus live
-    executor-resident — each query scans codes via a precomputed
-    per-subspace distance table (PQ_M lookups/vector, no float math in
-    the scan), and only the PQ_SHORTLIST quantized survivors per query
-    rejoin their float vectors for the exact L2 re-rank (measured
-    recall@5 vs exact: 0.84 at sf0.01, on embeddings with no cluster
-    structure — PQ's worst case).
+    refine (faiss's IndexPQ + refine recipe, ``functions/pq.py``): the
+    corpus compresses to PQ_M 4-bit sub-codes — 16 bytes instead of 256
+    per 64-dim float vector, the 16× memory cut that lets a 100 TB
+    embedding corpus live executor-resident — each query scans codes
+    via a precomputed per-subspace distance table (PQ_M lookups/vector,
+    no float math in the scan), and only the PQ_SHORTLIST quantized
+    survivors per query rejoin their float vectors for the exact L2
+    re-rank (measured recall@5 vs exact: 0.84 at sf0.01, on embeddings
+    with no cluster structure — PQ's worst case).
 
-    Spark shape: encoding is MAP-ONLY (per-subspace argmin against the
-    literal-bound codebook, the ``functions/centroids.py`` trick — the
-    corpus is never
-    shuffled to get coded); query ADC tables are fixed-point BIGINTs
-    (floor(d²·2²⁰)) bound as literals, so the scan's per-pair sum is
-    integer-exact, order-independent, and engine-portable. Shuffles
-    touch only the shortlist windows: the scan emits |corpus|·|Q|
-    (bigint, bigint) scored rows — same scan complexity as brute force
-    but integer lookups over 16× smaller data — and the refine join
-    carries |Q|·PQ_SHORTLIST rows. The codebook (deterministic
-    first-PQ_K seed vectors, as ann_topk_ivf seeds its lists) and
-    tables are KBs at any corpus size. Note: the PQ_M×PQ_K argmin tree
-    exceeds the JVM's 64KB generated-method limit, so Spark logs a
-    one-time codegen ERROR and evaluates it interpreted — fine for the
-    plan-shape demo; the throughput deployment swaps the encode for the
-    Arrow/numpy batch kernel (see ann_topk_arrow and SCALING.md's
-    kernel-path table), keeping the identical code assignment."""
+    Spark shape: the encode is map-only and its coded index is
+    checkpointed; the one-row-per-query table frame crossJoins onto it
+    as a broadcast (same shape as ann_topk_bruteforce's query
+    broadcast; the big side streams map-only). The scan emits
+    |corpus|·|Q| (bigint, bigint) scored rows — brute-force scan
+    complexity, but integer lookups over 16× smaller data — and the
+    refine join carries |Q|·PQ_SHORTLIST rows. The encode runs
+    interpreted (Spark logs a one-time codegen ERROR); the throughput
+    deployment swaps it for the Arrow/numpy batch kernel (see
+    ann_topk_arrow and SCALING.md's kernel-path table), keeping the
+    identical code assignment."""
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    cb, ks = _pq_codebook(emb)
-    q_rows = emb.filter(F.col("vec_id") < N_QUERIES).collect()
-    qtabs = _pq_query_tables(q_rows, cb, ks)
-    # derived-array-under-join barrier (round 9, same class as the two
-    # IVFPQ variants): without it the ~128 KB interpreted encode
-    # re-evaluates under the |Q|-way crossJoin fan-out — fresh min-of-N
-    # 37.8/35.6 s at 1.2 M/2.4 M vectors vs 18.9/32.8 s with the
-    # barrier. Both variants show large warm-run variance at 2.4 M
-    # (repeat runs to 110-150 s — heap churn from the 48 M-row ADC
-    # window sort), so min-of-N fresh decides per the house rule
-    # (SCALING.md round 9)
-    encoded = emb.select(
-        "vec_id", F.expr(_pq_encode_sql(cb, ks)).alias("codes")
-    ).localCheckpoint(eager=False)
-    # the |Q|×(PQ_M·PQ_K) table set rides as broadcast DATA, not as ~10k
-    # literal expression nodes — the one-row-per-query frame crossJoins
-    # onto the coded scan (same shape as ann_topk_bruteforce's query
-    # broadcast; the big side streams map-only)
-    qdf = spark.createDataFrame(qtabs, "q_id bigint, t array<bigint>")
-    scored = (
-        encoded.crossJoin(F.broadcast(qdf))
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "vec_id",
-            F.expr(
-                f"aggregate(transform(codes, (c, s) -> t[s * {len(ks)} + c]),"
-                " 0L, (acc, x) -> acc + x)"
-            ).alias("adc_fp"),
-        )
-    )
-    shortlist = _adc_shortlist(scored)
-    # exact re-rank of the quantized shortlist (faiss's refine step):
-    # |Q|·PQ_SHORTLIST rows rejoin their float vectors — the only float
-    # math after the scan, and the only rows that ever carry vectors
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    reranked = (
-        shortlist.join(emb, "vec_id")
-        .join(F.broadcast(queries), "q_id")
-        .select(
-            "q_id",
-            "vec_id",
-            "adc_fp",
-            l2_sq(F.col("q_emb"), F.col("embedding")).alias("d2"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy("d2", "vec_id")
-    return (
-        reranked.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= TOP_K)
-        .select(
-            "q_id", "vec_id", "adc_fp", "d2",
-            F.col("rnk").cast("int").alias("rnk"),
-        )
-    )
+    pq = ProductQuantizer(emb)
+    qdf = _pq_query_tables(spark, pq, emb)
+    coded = pq.coded_index(emb, "vec_id")
+    shortlist = pq.adc_shortlist(coded.crossJoin(F.broadcast(qdf)))
+    return refine(shortlist, emb, _pq_queries(emb), TOP_K)
 
 
 _PQ_ADC_SQL = f"""
-WITH sub AS (
-  SELECT vec_id, s,
-         embedding[s * {PQ_SUBDIM} + 1 : s * {PQ_SUBDIM} + {PQ_SUBDIM}] AS sv
-  FROM embeddings, UNNEST(range(0, {PQ_M})) AS r(s)
-), cbi AS (
-  SELECT s, sv, ROW_NUMBER() OVER (PARTITION BY s ORDER BY vec_id) - 1 AS j
-  FROM sub WHERE vec_id < {PQ_K}
-), encoded AS (
-  SELECT vec_id, s, j AS code FROM (
-    SELECT v.vec_id, v.s, c.j,
-           ROW_NUMBER() OVER (
-             PARTITION BY v.vec_id, v.s
-             ORDER BY {sql_l2_sq("v.sv", "c.sv")}, c.j) AS rn
-    FROM sub v JOIN cbi c ON v.s = c.s)
-  WHERE rn = 1
-), qtab AS (
-  SELECT q.vec_id AS q_id, q.s, c.j,
-         CAST(floor({sql_l2_sq("q.sv", "c.sv")} * {PQ_FP})
-              AS BIGINT) AS dfp
-  FROM sub q JOIN cbi c ON q.s = c.s
-  WHERE q.vec_id < {N_QUERIES}
-), adc AS (
-  SELECT t.q_id, e.vec_id, SUM(t.dfp) AS adc_fp
-  FROM encoded e JOIN qtab t ON e.s = t.s AND e.code = t.j
-  WHERE e.vec_id <> t.q_id
-  GROUP BY t.q_id, e.vec_id
-), shortlist AS (
-  SELECT q_id, vec_id, adc_fp FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id
-                                 ORDER BY adc_fp, vec_id) AS srnk
-    FROM adc)
-  WHERE srnk <= {PQ_SHORTLIST}
-), reranked AS (
-  SELECT s.q_id, s.vec_id, CAST(s.adc_fp AS BIGINT) AS adc_fp,
-         {sql_l2_sq("q.embedding", "b.embedding")} AS d2
-  FROM shortlist s
-  JOIN embeddings b ON b.vec_id = s.vec_id
-  JOIN embeddings q ON q.vec_id = s.q_id
-)
-SELECT q_id, vec_id, adc_fp, d2, CAST(rnk AS INT) AS rnk
-FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id
-                                   ORDER BY d2, vec_id) AS rnk
-      FROM reranked)
-WHERE rnk <= {TOP_K}
-"""
+WITH queries AS (
+  SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings
+  WHERE vec_id < {N_QUERIES}
+), {sql_pq_ctes(queries=("queries", "q_emb"))},
+{sql_adc_refine(TOP_K)}"""
 
 
 # ---------------------------------------------------------------------------
@@ -1617,36 +1444,6 @@ FROM lists CROSS JOIN total
 # PQ per-subspace residual-energy audit
 # ---------------------------------------------------------------------------
 
-PQERR_FP = 1 << 30  # fixed-point scale for per-subspace min-d2 errors
-
-
-def _pq_err_sql(cb: dict, ks: list) -> str:
-    """Like ``_pq_encode_sql`` but emits floor(min-d²·2³⁰) per subspace
-    — the quantization error of the chosen codeword, in the same ONE
-    literal SQL string (argmin and its achieved distance come from the
-    same struct array_min, so error parity holds wherever encode parity
-    does)."""
-
-    def d2_sql(s: int, vals: list) -> str:
-        terms = []
-        for i, v in enumerate(vals):
-            x = f"cast(element_at(embedding, {s * PQ_SUBDIM + i + 1}) as double)"
-            c = f"cast('{float(v)!r}' as double)"
-            terms.append(f"({x} - {c}) * ({x} - {c})")
-        return " + ".join(terms)
-
-    def err_sql(s: int) -> str:
-        structs = ", ".join(
-            f"named_struct('d2', {d2_sql(s, _pq_sub(cb[k], s))}, 'j', {j})"
-            for j, k in enumerate(ks)
-        )
-        return (
-            f"cast(floor(array_min(array({structs})).d2 * {PQERR_FP})"
-            " as bigint)"
-        )
-
-    return "array(" + ", ".join(err_sql(s) for s in range(PQ_M)) + ")"
-
 
 def emb_pq_residual_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-subspace PQ quantization-error audit: mean and max
@@ -1659,14 +1456,13 @@ def emb_pq_residual_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     {PQ_M}-cell aggregate; integer `div` ratios keep the certificate
     engine-exact."""
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    cb, ks = _pq_codebook(emb)
+    pq = ProductQuantizer(emb)
     # evaluate the PQ_M×PQ_K literal-codebook expression ONCE per row
     # and cut lineage before the Generate: feeding the ~16k-node
-    # interpreted expression (codegen gives up at 64KB, as emb_pq_adc
-    # documents) directly into posexplode OOMs the driver-side plan;
-    # the checkpointed relation is just (vec_id, 32 bigints) — linear
+    # interpreted expression directly into posexplode OOMs the
+    # driver-side plan; the checkpointed relation is just 32 bigints
     err_arr = emb.select(
-        F.expr(_pq_err_sql(cb, ks)).alias("errs")
+        F.expr(pq.error_sql()).alias("errs")
     ).localCheckpoint(eager=True)
     errs = err_arr.select(
         F.posexplode("errs").alias("p", "err_fp")
@@ -1702,23 +1498,12 @@ def emb_pq_residual_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _PQ_RESIDUAL_SQL = f"""
-WITH sub AS (
-  SELECT vec_id, s,
-         embedding[s * {PQ_SUBDIM} + 1 : s * {PQ_SUBDIM} + {PQ_SUBDIM}] AS sv
-  FROM embeddings, UNNEST(range(0, {PQ_M})) AS r(s)
-), cbi AS (
-  SELECT s, sv, ROW_NUMBER() OVER (PARTITION BY s ORDER BY vec_id) - 1 AS j
-  FROM sub WHERE vec_id < {PQ_K}
-), errs AS (
-  SELECT v.vec_id, v.s,
-         CAST(floor(MIN({sql_l2_sq("v.sv", "c.sv")})
-                    * {PQERR_FP}) AS BIGINT) AS err_fp
-  FROM sub v JOIN cbi c ON v.s = c.s
-  GROUP BY v.vec_id, v.s
-), per AS (
+WITH {sql_pq_ctes()}, per AS (
   SELECT s, COUNT(*) AS n_vectors, SUM(err_fp) AS sum_err_fp,
          MAX(err_fp) AS max_err_fp
-  FROM errs GROUP BY s
+  FROM (SELECT s, CAST(floor(d2 * {PQERR_FP}) AS BIGINT) AS err_fp
+        FROM encoded)
+  GROUP BY s
 ), total AS (SELECT SUM(sum_err_fp) AS tot FROM per)
 SELECT CAST(s AS INT) AS s, n_vectors,
        CAST(sum_err_fp // n_vectors AS BIGINT) AS mean_err_fp,
@@ -1762,34 +1547,16 @@ def ann_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     the per-query shortlist windows."""
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     cents = Centroids.first(emb, IVF_NLIST)
-    cb, ks = _pq_codebook(emb)
-    q_rows = emb.filter(F.col("vec_id") < N_QUERIES).collect()
-    qtabs = _pq_query_tables(q_rows, cb, ks)
+    pq = ProductQuantizer(emb)
+    qdf = _pq_query_tables(spark, pq, emb)
     # ONE corpus pass builds the whole index row: inverted-list id +
-    # PQ codes, both map-only literal-expression argmins. The
-    # localCheckpoint is the derived-array-under-join barrier (the
-    # round-8 residual-IVFPQ trap class): without it the ~128 KB
-    # interpreted encode projection re-evaluates per JOIN-OUTPUT row
-    # of the probe join below (|Q|·NPROBE/NLIST ≈ 5 evals per corpus
-    # row here), which round 9 measured as the variant's super-linear
-    # wall-clock edge — fresh min-of-2 55.3/165.3 s at 2.4 M/4.8 M
-    # vectors (alpha 1.58, heap-pressure inflected: the warm second
-    # run came out SLOWER than the cold one) collapsing to
-    # 34.8/50.9 s (alpha 0.55) with the barrier (SCALING.md round 9).
-    # It is also semantically the faiss-faithful artifact: the
-    # PQ-coded index is MATERIALIZED once at build time, then scanned.
-    coded = (
-        cents.bind(emb)
-        .select(
-            "vec_id",
-            cents.nearest(F.col("embedding"))["centroid_id"].alias("list_id"),
-            F.expr(_pq_encode_sql(cb, ks)).alias("codes"),
-        )
-        .localCheckpoint(eager=False)
+    # PQ codes, both map-only literal-expression argmins
+    coded = pq.coded_index(
+        cents.bind(emb),
+        "vec_id",
+        cents.nearest(F.col("embedding"))["centroid_id"].alias("list_id"),
     )
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
+    queries = _pq_queries(emb)
     probes = (
         cents.bind(queries)
         .select(
@@ -1799,91 +1566,17 @@ def ann_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("q_id", F.col("pr.centroid_id").alias("list_id"))
     )
     # |Q|·NPROBE probe rows carry their ADC tables as broadcast DATA
-    qdf = spark.createDataFrame(qtabs, "q_id bigint, t array<bigint>")
     probes_t = probes.join(qdf, "q_id")
-    scored = (
-        coded.join(F.broadcast(probes_t), "list_id")
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "vec_id",
-            F.expr(
-                f"aggregate(transform(codes, (c, s) -> t[s * {len(ks)} + c]),"
-                " 0L, (acc, x) -> acc + x)"
-            ).alias("adc_fp"),
-        )
-    )
-    shortlist = _adc_shortlist(scored)
-    reranked = (
-        shortlist.join(emb, "vec_id")
-        .join(F.broadcast(queries), "q_id")
-        .select(
-            "q_id",
-            "vec_id",
-            "adc_fp",
-            l2_sq(F.col("q_emb"), F.col("embedding")).alias("d2"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy("d2", "vec_id")
-    return (
-        reranked.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= TOP_K)
-        .select(
-            "q_id", "vec_id", "adc_fp", "d2",
-            F.col("rnk").cast("int").alias("rnk"),
-        )
-    )
+    shortlist = pq.adc_shortlist(coded.join(F.broadcast(probes_t), "list_id"))
+    return refine(shortlist, emb, queries, TOP_K)
 
 
+# the probes carry their query's table per probed list, so the scan joins
+# codes to tables on the list id, as in the residual variant
 _IVFPQ_SQL = f"""
-WITH {_IVF_CTES}, sub AS (
-  SELECT vec_id, s,
-         embedding[s * {PQ_SUBDIM} + 1 : s * {PQ_SUBDIM} + {PQ_SUBDIM}] AS sv
-  FROM embeddings, UNNEST(range(0, {PQ_M})) AS r(s)
-), cbi AS (
-  SELECT s, sv, ROW_NUMBER() OVER (PARTITION BY s ORDER BY vec_id) - 1 AS j
-  FROM sub WHERE vec_id < {PQ_K}
-), encoded AS (
-  SELECT vec_id, s, j AS code FROM (
-    SELECT v.vec_id, v.s, c.j,
-           ROW_NUMBER() OVER (
-             PARTITION BY v.vec_id, v.s
-             ORDER BY {sql_l2_sq("v.sv", "c.sv")}, c.j) AS rn
-    FROM sub v JOIN cbi c ON v.s = c.s)
-  WHERE rn = 1
-), qtab AS (
-  SELECT q.vec_id AS q_id, q.s, c.j,
-         CAST(floor({sql_l2_sq("q.sv", "c.sv")} * {PQ_FP})
-              AS BIGINT) AS dfp
-  FROM sub q JOIN cbi c ON q.s = c.s
-  WHERE q.vec_id < {N_QUERIES}
-), adc AS (
-  SELECT t.q_id, e.vec_id, SUM(t.dfp) AS adc_fp
-  FROM encoded e
-  JOIN assigned a ON a.vec_id = e.vec_id
-  JOIN probes p ON p.list_id = a.list_id
-  JOIN qtab t ON t.q_id = p.q_id AND t.s = e.s AND t.j = e.code
-  WHERE e.vec_id <> p.q_id
-  GROUP BY t.q_id, e.vec_id
-), shortlist AS (
-  SELECT q_id, vec_id, adc_fp FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id
-                                 ORDER BY adc_fp, vec_id) AS srnk
-    FROM adc)
-  WHERE srnk <= {PQ_SHORTLIST}
-), reranked AS (
-  SELECT s.q_id, s.vec_id, CAST(s.adc_fp AS BIGINT) AS adc_fp,
-         {sql_l2_sq("q.embedding", "b.embedding")} AS d2
-  FROM shortlist s
-  JOIN embeddings b ON b.vec_id = s.vec_id
-  JOIN embeddings q ON q.vec_id = s.q_id
-)
-SELECT q_id, vec_id, adc_fp, d2, CAST(rnk AS INT) AS rnk
-FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id
-                                   ORDER BY d2, vec_id) AS rnk
-      FROM reranked)
-WHERE rnk <= {TOP_K}
-"""
+WITH {_IVF_CTES},
+{sql_pq_ctes("assigned", queries=("probes", "q_emb"), by_list=True)},
+{sql_adc_refine(TOP_K, by_list=True)}"""
 
 
 def ann_topk_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1948,95 +1641,26 @@ def ann_topk_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # residual codebook: the first PQ_K vectors' ENGINE-computed
-    # residuals (collect keeps Spark/oracle arithmetic identical; the
-    # vec_id < PQ_K filter pushes to the scan, so this is a 16-row pass)
-    seed = sorted(
-        resid.filter(F.col("vec_id") < PQ_K).collect(),
-        key=lambda r: r["vec_id"],
-    )
-    cbr = {int(r["vec_id"]): [float(x) for x in r["resid"]] for r in seed}
-    ksr = sorted(cbr)
-    # THE BARRIER BELONGS ON THE CODES, NOT THE RESIDUALS (round-8
-    # measured decomposition, SCALING.md): leaving the 128 KB encode
-    # projection under the interpreted broadcast-join re-evaluated it
-    # per JOIN-OUTPUT row (~NPROBE·|Q|/NLIST ≈ 5× per corpus row —
-    # scored stage 190.7 s at 1.2 M vectors), while the checkpointed
-    # coded index serves the same scan in 1.7 s. It is also the
-    # faithful faiss artifact: a real pipeline persists the PQ-coded
-    # inverted lists, not the float residuals. Round 7's wash A/B only
-    # tested the RESID barrier against re-inlining of the zip_with —
-    # the encode-under-join re-evaluation is a different (and the
-    # dominant) leak.
-    coded = resid.select(
-        "vec_id",
-        "list_id",
-        F.expr(_pq_encode_sql(cbr, ksr, col="resid")).alias("codes"),
-    ).localCheckpoint(eager=False)
+    # residuals (the vec_id < PQ_K filter pushes to the scan, so this
+    # is a 16-row pass)
+    pq = ProductQuantizer(resid, "resid")
+    coded = pq.coded_index(resid, "vec_id", "list_id")
     # driver-side probes + per-(q, list) residual ADC tables: queries
-    # and centroids are already driver-held; _pq_l2 is the same
-    # left-to-right fold both engines run
-    import math
-
-    q_rows = sorted(
-        emb.filter(F.col("vec_id") < N_QUERIES).collect(),
-        key=lambda r: r["vec_id"],
-    )
+    # and centroids are already driver-held
     qtabs = []
-    for qr in q_rows:
-        qv = [float(x) for x in qr["embedding"]]
+    for qr in _pq_query_rows(emb):
+        qv = [float(x) for x in qr["q_emb"]]
         byc = sorted(
-            ((_pq_l2(qv, cmap[cid]), cid) for cid in sorted(cmap)),
+            ((py_l2_sq(qv, cmap[cid]), cid) for cid in sorted(cmap)),
         )[:IVF_NPROBE]
         for _, cid in byc:
             qres = [a - b for a, b in zip(qv, cmap[cid])]
-            t = [
-                int(
-                    math.floor(
-                        _pq_l2(_pq_sub(qres, s), _pq_sub(cbr[k], s)) * PQ_FP
-                    )
-                )
-                for s in range(PQ_M)
-                for k in ksr
-            ]
-            qtabs.append((int(qr["vec_id"]), int(cid), t))
+            qtabs.append((int(qr["q_id"]), int(cid), pq.table(qres)))
     qdf = spark.createDataFrame(
         qtabs, "q_id bigint, list_id bigint, t array<bigint>"
     )
-    scored = (
-        coded.join(F.broadcast(qdf), "list_id")
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "vec_id",
-            F.expr(
-                f"aggregate(transform(codes, (c, s) -> t[s * {len(ksr)} + c]),"
-                " 0L, (acc, x) -> acc + x)"
-            ).alias("adc_fp"),
-        )
-    )
-    shortlist = _adc_shortlist(scored)
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    reranked = (
-        shortlist.join(emb, "vec_id")
-        .join(F.broadcast(queries), "q_id")
-        .select(
-            "q_id",
-            "vec_id",
-            "adc_fp",
-            l2_sq(F.col("q_emb"), F.col("embedding")).alias("d2"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy("d2", "vec_id")
-    return (
-        reranked.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= TOP_K)
-        .select(
-            "q_id", "vec_id", "adc_fp", "d2",
-            F.col("rnk").cast("int").alias("rnk"),
-        )
-    )
+    shortlist = pq.adc_shortlist(coded.join(F.broadcast(qdf), "list_id"))
+    return refine(shortlist, emb, _pq_queries(emb), TOP_K)
 
 
 _SQL_RESID = (
@@ -2051,61 +1675,14 @@ WITH {_IVF_CTES}, resid AS (
   FROM embeddings e
   JOIN assigned a ON a.vec_id = e.vec_id
   JOIN cent c ON c.centroid_id = a.list_id
-), sub AS (
-  SELECT vec_id, list_id, s,
-         r[s * {PQ_SUBDIM} + 1 : s * {PQ_SUBDIM} + {PQ_SUBDIM}] AS sv
-  FROM resid, UNNEST(range(0, {PQ_M})) AS t(s)
-), cbi AS (
-  SELECT s, sv, ROW_NUMBER() OVER (PARTITION BY s ORDER BY vec_id) - 1 AS j
-  FROM sub WHERE vec_id < {PQ_K}
-), encoded AS (
-  SELECT vec_id, list_id, s, j AS code FROM (
-    SELECT v.vec_id, v.list_id, v.s, c.j,
-           ROW_NUMBER() OVER (
-             PARTITION BY v.vec_id, v.s
-             ORDER BY {sql_l2_sq("v.sv", "c.sv")}, c.j) AS rn
-    FROM sub v JOIN cbi c ON v.s = c.s)
-  WHERE rn = 1
 ), qres AS (
   SELECT p.q_id, p.list_id,
          {_SQL_RESID.format(v="q.embedding", c="c.c_emb")} AS r
   FROM probes p
   JOIN embeddings q ON q.vec_id = p.q_id
   JOIN cent c ON c.centroid_id = p.list_id
-), qsub AS (
-  SELECT q_id, list_id, s,
-         r[s * {PQ_SUBDIM} + 1 : s * {PQ_SUBDIM} + {PQ_SUBDIM}] AS sv
-  FROM qres, UNNEST(range(0, {PQ_M})) AS t(s)
-), qtab AS (
-  SELECT q.q_id, q.list_id, q.s, c.j,
-         CAST(floor({sql_l2_sq("q.sv", "c.sv")} * {PQ_FP})
-              AS BIGINT) AS dfp
-  FROM qsub q JOIN cbi c ON q.s = c.s
-), adc AS (
-  SELECT t.q_id, e.vec_id, SUM(t.dfp) AS adc_fp
-  FROM encoded e
-  JOIN qtab t ON t.list_id = e.list_id AND t.s = e.s AND t.j = e.code
-  WHERE e.vec_id <> t.q_id
-  GROUP BY t.q_id, e.vec_id
-), shortlist AS (
-  SELECT q_id, vec_id, adc_fp FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id
-                                 ORDER BY adc_fp, vec_id) AS srnk
-    FROM adc)
-  WHERE srnk <= {PQ_SHORTLIST}
-), reranked AS (
-  SELECT s.q_id, s.vec_id, CAST(s.adc_fp AS BIGINT) AS adc_fp,
-         {sql_l2_sq("q.embedding", "b.embedding")} AS d2
-  FROM shortlist s
-  JOIN embeddings b ON b.vec_id = s.vec_id
-  JOIN embeddings q ON q.vec_id = s.q_id
-)
-SELECT q_id, vec_id, adc_fp, d2, CAST(rnk AS INT) AS rnk
-FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id
-                                   ORDER BY d2, vec_id) AS rnk
-      FROM reranked)
-WHERE rnk <= {TOP_K}
-"""
+), {sql_pq_ctes("resid", "r", queries=("qres", "r"), by_list=True)},
+{sql_adc_refine(TOP_K, by_list=True)}"""
 
 
 def ann_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2136,11 +1713,8 @@ def ann_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
     pairs = (
-        emb.crossJoin(F.broadcast(queries))
+        emb.crossJoin(F.broadcast(_pq_queries(emb)))
         .filter(F.col("vec_id") != F.col("q_id"))
         .select(
             "q_id",
@@ -2148,12 +1722,7 @@ def ann_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             l2_sq(F.col("q_emb"), F.col("embedding")).alias("d2"),
         )
     )
-    w = Window.partitionBy("q_id").orderBy("d2", "vec_id")
-    exact = (
-        pairs.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= TOP_K)
-        .select("q_id", "vec_id")
-    )
+    exact = l2_top(pairs, TOP_K).select("q_id", "vec_id")
     return (
         exact.join(approx, ["q_id", "vec_id"], "left_outer")
         .groupBy("q_id")

@@ -227,9 +227,8 @@ def diag_plan_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from pyspark.sql import functions as F  # noqa: N812
 
-    from blog_snapshotbackup_azuredatalake_spark.operators.similarity import (
-        _pq_codebook,
-        _pq_encode_sql,
+    from blog_snapshotbackup_azuredatalake_spark.functions.pq import (
+        ProductQuantizer,
     )
     from blog_snapshotbackup_azuredatalake_spark.sources.catalog import (
         load_table,
@@ -238,9 +237,9 @@ def diag_plan_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
-    cb, ks = _pq_codebook(emb)
+    pq = ProductQuantizer(emb)
     penc = plan_of(
-        emb.select("vec_id", F.expr(_pq_encode_sql(cb, ks)).alias("codes"))
+        emb.select("vec_id", F.expr(pq.encode_sql()).alias("codes"))
     )
     checks.append(
         ("emb_pq_adc", "literal_codebook_encode_map_only",

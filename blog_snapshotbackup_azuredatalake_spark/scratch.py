@@ -10,16 +10,23 @@ shared storage instead (they must survive driver loss) and backup
 stores at the lake — both are constructor/argument-level choices in
 the operators that use this helper.
 
-``scratch_dir`` leaves its directory in place: a streaming or sink entry
-returns a lazy read of it. An entry whose result is built on the driver
-uses ``scratch_store``, which removes the directory when its block exits,
-so repeated calls do not accumulate tmpfs (that is, RAM).
+Every scratch directory lives under one root per process, made on first
+use (again if something removed it) and removed when the interpreter
+exits, so no call leaves tmpfs (that is, RAM) behind past its process.
+``scratch_dir`` leaves its directory in place until then: a streaming or
+sink entry returns a lazy read of it. An entry whose result is built on
+the driver uses ``scratch_store``, which removes the directory when its
+block exits, so repeated calls do not accumulate within a process.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import tempfile
+
+_root: tuple[int, str] | None = None  # (pid, path) of this process's root
 
 
 def scratch_root() -> str | None:
@@ -27,12 +34,31 @@ def scratch_root() -> str | None:
     return "/dev/shm" if os.access("/dev/shm", os.W_OK) else None
 
 
+def _process_root() -> str:
+    """This process's directory under ``scratch_root()``. A forked child
+    makes its own, so it never removes its parent's."""
+    global _root
+    pid = os.getpid()
+    if _root is None or _root[0] != pid or not os.path.isdir(_root[1]):
+        _root = (
+            pid,
+            tempfile.mkdtemp(prefix=f"scratch_{pid}_", dir=scratch_root()),
+        )
+    return _root[1]
+
+
+@atexit.register
+def _remove_root() -> None:
+    if _root is not None and _root[0] == os.getpid():
+        shutil.rmtree(_root[1], ignore_errors=True)
+
+
 def scratch_dir(prefix: str) -> str:
-    """A new directory under ``scratch_root()``, left for the caller."""
-    return tempfile.mkdtemp(prefix=prefix, dir=scratch_root())
+    """A new directory under this process's root, left for the caller."""
+    return tempfile.mkdtemp(prefix=prefix, dir=_process_root())
 
 
 def scratch_store(prefix: str) -> tempfile.TemporaryDirectory:
-    """A context manager yielding a new directory under
-    ``scratch_root()`` and removing it when the block exits."""
-    return tempfile.TemporaryDirectory(prefix=prefix, dir=scratch_root())
+    """A context manager yielding a new directory under this process's
+    root and removing it when the block exits."""
+    return tempfile.TemporaryDirectory(prefix=prefix, dir=_process_root())

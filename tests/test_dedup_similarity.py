@@ -3,6 +3,7 @@
 import pytest
 
 from blog_snapshotbackup_azuredatalake_spark import substrate
+from blog_snapshotbackup_azuredatalake_spark.functions.pq import PQ_M
 from blog_snapshotbackup_azuredatalake_spark.operators import dedup, graph, similarity
 from tests.conftest import SF_DIR, assert_matches_oracle
 
@@ -323,12 +324,12 @@ def test_ivf_upsert_conserves_and_flags(spark):
 
 def test_pq_residual_audit_shares_sum_to_one(spark):
     rows = similarity.emb_pq_residual_audit(spark, SF_DIR).collect()
-    assert len(rows) == similarity.PQ_M
-    assert {r["s"] for r in rows} == set(range(similarity.PQ_M))
+    assert len(rows) == PQ_M
+    assert {r["s"] for r in rows} == set(range(PQ_M))
     fp = similarity.BALANCE_FP
     # floor'd shares sum to ≤ 1.0 and within PQ_M ulps of it
     tot = sum(r["err_share_fp"] for r in rows)
-    assert fp - similarity.PQ_M <= tot <= fp
+    assert fp - PQ_M <= tot <= fp
     for r in rows:
         assert 0 <= r["mean_err_fp"] <= r["max_err_fp"]
 

@@ -389,6 +389,27 @@ def dot_like(spark, sf_dir):
 '''
 
 
+# the same shapes in the primitive's call form (functions/pq.py): the
+# emitter is a method, the projection keeps extra columns
+_REPRO_PQ_TRAP = '''
+def coded_index(self, frame, *keep):
+    coded = frame.select(
+        *keep, F.expr(self.encode_sql()).alias("codes")
+    )
+    scored = coded.join(F.broadcast(probes_t), "list_id")
+    return scored
+'''
+
+_REPRO_PQ_BARRIERED = '''
+def coded_index(self, frame, *keep):
+    coded = frame.select(
+        *keep, F.expr(self.encode_sql()).alias("codes")
+    ).localCheckpoint(eager=False)
+    scored = coded.join(F.broadcast(probes_t), "list_id")
+    return scored
+'''
+
+
 def test_derived_array_lint_red_on_synthetic_repro():
     """The lint must catch the exact shape that cost 13.4x (residual
     IVFPQ, round 8) and 3.2x (shared IVFPQ at 4.8M vectors, round 9)."""
@@ -396,11 +417,15 @@ def test_derived_array_lint_red_on_synthetic_repro():
     assert len(v) == 1 and "coded" in v[0], v
     v, _ = _scan_derived({"repro.py": _REPRO_ZIPWITH_TRAP})
     assert len(v) == 1 and "resid" in v[0], v
+    v, _ = _scan_derived({"repro.py": _REPRO_PQ_TRAP})
+    assert len(v) == 1 and "coded" in v[0], v
 
 
 def test_derived_array_lint_green_on_barrier_and_scalar_fold():
     v, _ = _scan_derived({"repro.py": _REPRO_BARRIERED})
     assert not v, v
+    v, found = _scan_derived({"repro.py": _REPRO_PQ_BARRIERED})
+    assert not v and found == {("repro.py", "coded_index", "coded")}, v
     # zip_with folded to a scalar by F.aggregate is NOT a derived
     # array column — must not be flagged
     v, found = _scan_derived({"repro.py": _REPRO_FOLDED_SCALAR})
@@ -452,6 +477,13 @@ def test_no_unbarriered_derived_array_joins():
         "ann_topk_ivfpq at 4.8M vectors r9); checkpoint the relation "
         "or allowlist with a measured negative A/B:\n" + "\n".join(v)
     )
+
+
+def test_derived_array_lint_covers_the_pq_encode():
+    """The coded index every PQ entry scans is built in one place; the
+    lint must still see that encode (and its barrier) there."""
+    _, found = _scan_derived()
+    assert ("functions/pq.py", "coded_index", "coded") in found, sorted(found)
 
 
 def test_derived_array_allowlist_not_stale():

@@ -220,6 +220,9 @@ def test_q9_part_filter_before_join(spark):
 
 
 def test_pq_encode_is_map_only_scan_is_integer(spark):
+    from blog_snapshotbackup_azuredatalake_spark.functions.pq import (
+        ProductQuantizer,
+    )
     from blog_snapshotbackup_azuredatalake_spark.operators import similarity
 
     from pyspark.sql import functions as F
@@ -238,12 +241,9 @@ def test_pq_encode_is_map_only_scan_is_integer(spark):
     emb = similarity.load_table(spark, SF_DIR, "embeddings").select(
         "vec_id", "embedding"
     )
-    cb, ks = similarity._pq_codebook(emb)
+    pq = ProductQuantizer(emb)
     eplan = _plan(
-        emb.select(
-            "vec_id",
-            F.expr(similarity._pq_encode_sql(cb, ks)).alias("codes"),
-        )
+        emb.select("vec_id", F.expr(pq.encode_sql()).alias("codes"))
     )
     assert "array_min" in eplan
     assert "Exchange" not in eplan

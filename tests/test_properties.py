@@ -65,7 +65,19 @@ from blog_snapshotbackup_azuredatalake_spark.functions.vectors import (
     sql_cosine,
     sql_l2_sq,
 )
-from blog_snapshotbackup_azuredatalake_spark.operators.similarity import _pq_l2
+from blog_snapshotbackup_azuredatalake_spark.functions.pq import (
+    PQ_K,
+    PQ_M,
+    PQ_SHORTLIST,
+    PQ_SUBDIM,
+    PQERR_FP,
+    ProductQuantizer,
+    py_l2_sq,
+    refine,
+    sql_adc_refine,
+    sql_pq_ctes,
+    subvector,
+)
 
 # no control chars (SEP itself excluded by design contract), ASCII-ish
 _txt = st.text(
@@ -323,7 +335,7 @@ def test_dot_and_cosine_match_python(spark, ab):
     assert row["dot"] == dot
     # the squared-L2 fold: Spark, DuckDB and the driver-side Python
     # mirror the residual-IVFPQ probes use are the same double
-    l2 = _pq_l2([f32(x) for x in a], [f32(y) for y in b])
+    l2 = py_l2_sq([f32(x) for x in a], [f32(y) for y in b])
     assert row["l2"] == l2
     ddb_l2 = duckdb.execute(
         f"SELECT {sql_l2_sq('a', 'b')} FROM "
@@ -391,6 +403,144 @@ def test_centroid_ties_go_to_the_lower_id(spark, fold, sql_fold):
         (0, 0), (1, 0), (2, 2), (3, 0), (4, 2)
     ]
     assert [c for _, c in got[3][2]] == [0, 1, 2]
+
+
+_PQ_DIMS = PQ_M * PQ_SUBDIM
+# few distinct values, so equal subvectors (exact codeword ties) are common
+_pq_corpus = st.lists(
+    st.lists(
+        st.sampled_from([-1.0, -0.5, 0.0, 0.5, 1.0]),
+        min_size=_PQ_DIMS,
+        max_size=_PQ_DIMS,
+    ),
+    min_size=2,
+    max_size=PQ_SHORTLIST,
+)
+
+
+@pytest.mark.parametrize("resid", [False, True])
+@given(vecs=_pq_corpus)
+# codewords 0 and 1 are equal, and vector 3 is as near to codeword 2
+# as to them in every subspace: its codes are all 0
+@example(vecs=[[0.0] * _PQ_DIMS, [0.0] * _PQ_DIMS, [1.0] * _PQ_DIMS,
+               [0.5] * _PQ_DIMS, [-1.0] * _PQ_DIMS])
+@_SLOW
+def test_pq_forms_agree_and_ties_go_to_the_lower_code(spark, resid, vecs):
+    """The Spark encode and errors, the Python ADC tables and the DuckDB
+    CTEs agree with a Python model on codes (ties to the lower j),
+    errors, tables and ADC sums, and the two refine forms return the
+    same rows. ``resid`` quantizes engine-computed residuals against
+    vector 0 in list 0, as the residual IVFPQ entry does."""
+    n = len(vecs)
+    emb = spark.createDataFrame(
+        list(enumerate(vecs)), "vec_id bigint, embedding array<float>"
+    )
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE embeddings AS SELECT v.* FROM (VALUES "
+        + ", ".join(f"({i}, {v}::FLOAT[])" for i, v in enumerate(vecs))
+        + ") v(vec_id, embedding)"
+    )
+    if resid:
+        c = vecs[0]
+        frame = emb.select(
+            "vec_id",
+            F.lit(0).cast("bigint").alias("list_id"),
+            F.zip_with(
+                "embedding",
+                F.array(*[F.lit(x) for x in c]),
+                lambda x, y: x.cast("double") - y,
+            ).alias("r"),
+        )
+        for name, key in (("resid", "vec_id"), ("qres", "q_id")):
+            con.execute(
+                f"CREATE TABLE {name} AS SELECT vec_id AS {key}, "
+                "0::BIGINT AS list_id, list_transform(range(1, "
+                f"{_PQ_DIMS + 1}), i -> CAST(embedding[i] AS DOUBLE)"
+                f" - CAST(({c}::FLOAT[])[i] AS DOUBLE)) AS r FROM embeddings"
+            )
+        ctes = sql_pq_ctes("resid", "r", ("qres", "r"), by_list=True)
+        qvecs = [[a - b for a, b in zip(v, c)] for v in vecs]
+    else:
+        frame = emb.withColumnRenamed("embedding", "r")
+        con.execute(
+            "CREATE TABLE queries AS "
+            "SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings"
+        )
+        ctes = sql_pq_ctes(queries=("queries", "q_emb"))
+        qvecs = vecs
+    pq = ProductQuantizer(frame, "r")
+    got = frame.select(
+        "vec_id",
+        F.expr(pq.encode_sql()).alias("codes"),
+        F.expr(pq.error_sql()).alias("errs"),
+        "r",
+    ).collect()
+    got = sorted(got, key=lambda r: r["vec_id"])
+
+    # the model: nearest codeword by (d2, j), over the engine's vectors
+    cb = [list(r["r"]) for r in got[:PQ_K]]
+    codes, errs = [], []
+    for r in got:
+        best = [
+            min(
+                (py_l2_sq(subvector(r["r"], s), subvector(w, s)), j)
+                for j, w in enumerate(cb)
+            )
+            for s in range(PQ_M)
+        ]
+        codes.append([j for _, j in best])
+        errs.append([math.floor(d * PQERR_FP) for d, _ in best])
+    assert [list(r["codes"]) for r in got] == codes
+    assert [list(r["errs"]) for r in got] == errs
+    assert con.execute(
+        f"""WITH {ctes}
+        SELECT list(code ORDER BY s),
+               list(CAST(floor(d2 * {PQERR_FP}) AS BIGINT) ORDER BY s)
+        FROM encoded GROUP BY vec_id ORDER BY vec_id"""
+    ).fetchall() == list(zip(codes, errs))
+
+    tables = [pq.table(q) for q in qvecs]
+    assert con.execute(
+        f"""WITH {ctes}
+        SELECT list(dfp ORDER BY s, j) FROM qtab
+        GROUP BY q_id ORDER BY q_id"""
+    ).fetchall() == [(t,) for t in tables]
+
+    # with n ≤ PQ_SHORTLIST every pair survives the shortlist, so the
+    # refine's top-n holds every pair's ADC sum and exact distance
+    want = []
+    for q in range(n):
+        pairs = sorted(
+            (py_l2_sq(vecs[q], vecs[v]), v) for v in range(n) if v != q
+        )
+        for rnk, (d2, v) in enumerate(pairs, start=1):
+            adc = sum(
+                tables[q][s * len(cb) + codes[v][s]] for s in range(PQ_M)
+            )
+            want.append((q, v, adc, d2, rnk))
+    want.sort()
+    tabs = [(q, 0, t) for q, t in enumerate(tables)]
+    if resid:
+        qdf = spark.createDataFrame(
+            tabs, "q_id bigint, list_id bigint, t array<bigint>"
+        )
+        coded = pq.coded_index(frame, "vec_id", "list_id")
+        scan = coded.join(F.broadcast(qdf), "list_id")
+    else:
+        qdf = spark.createDataFrame(
+            [(q, t) for q, _, t in tabs], "q_id bigint, t array<bigint>"
+        )
+        coded = pq.coded_index(frame, "vec_id")
+        scan = coded.crossJoin(F.broadcast(qdf))
+    queries = emb.select(
+        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
+    )
+    out = refine(pq.adc_shortlist(scan), emb, queries, n)
+    assert sorted(map(tuple, out.collect())) == want
+    assert sorted(
+        con.execute(f"WITH {ctes}, {sql_adc_refine(n, resid)}").fetchall()
+    ) == want
 
 
 def test_grams_of_short_docs_are_empty(spark):

@@ -2,7 +2,6 @@
 restore both states → verify → retention purge."""
 import glob
 import os
-import tempfile
 
 import pyspark.sql.functions as F
 import pytest
@@ -779,9 +778,9 @@ def test_driver_built_entries_remove_their_scratch_store(spark):
     from blog_snapshotbackup_azuredatalake_spark.operators import (
         snapshot_manager as sm,
     )
-    from blog_snapshotbackup_azuredatalake_spark.scratch import scratch_root
+    from blog_snapshotbackup_azuredatalake_spark import scratch
 
-    root = scratch_root() or tempfile.gettempdir()
+    root = scratch._process_root()
     names = {
         "snap_txn_log": "snap_txn_log_",
         "snap_txn_conflict": "txn_conflict_",
