@@ -265,7 +265,7 @@ def _scan_derived(sources=None):
                 for li in range(node.lineno, node.end_lineno + 1):
                     prev = func_of.get(li)
                     if prev is None or node.lineno > prev[0]:
-                        func_of[li] = (node.lineno, node.name)
+                        func_of[li] = (node.lineno, node.name, node.end_lineno)
         for node in ast.walk(tree):
             if not (
                 isinstance(node, ast.Assign)
@@ -330,6 +330,10 @@ def _scan_derived(sources=None):
             end = start + 60
             if stop is not None:
                 end = min(end, stop - 1)
+            # a same-named variable in a later function is another
+            # relation: the window ends with the enclosing function
+            if func is not None:
+                end = min(end, func_of[node.lineno][2])
             for j, ln in enumerate(lines[start:end], start=start + 1):
                 if re.search(
                     rf"\b{name}\.(join|crossJoin)\(", ln
@@ -340,6 +344,26 @@ def _scan_derived(sources=None):
                         f"localCheckpoint barrier -> {ln.strip()[:80]}"
                     )
                     break
+            else:
+                # A builder that hands the relation back (`return name`)
+                # leaves the join to its callers, where no marker is in
+                # sight: the barrier must be in place before it escapes.
+                for ret in ast.walk(tree):
+                    if (
+                        isinstance(ret, ast.Return)
+                        and isinstance(ret.value, ast.Name)
+                        and ret.value.id == name
+                        and ret.lineno > node.end_lineno
+                        and (stop is None or ret.lineno < stop)
+                        and (func_of.get(ret.lineno) or (0, None))[1]
+                        == func
+                    ):
+                        violations.append(
+                            f"{rel}:{ret.lineno}: derived-array relation "
+                            f"'{name}' in {func} returned to callers "
+                            f"without a localCheckpoint barrier"
+                        )
+                        break
     result = (violations, found)
     if cache_it:
         _SCAN_DERIVED_CACHE.append(result)
@@ -389,24 +413,35 @@ def dot_like(spark, sf_dir):
 '''
 
 
-# the same shapes in the primitive's call form (functions/pq.py): the
-# emitter is a method, the projection keeps extra columns
+# the primitive's call shape (functions/pq.py): a method builds the
+# coded relation and returns it; the joins are in its callers, on a
+# name that carries no marker, so the barrier must be in the builder
 _REPRO_PQ_TRAP = '''
-def coded_index(self, frame, *keep):
-    coded = frame.select(
-        *keep, F.expr(self.encode_sql()).alias("codes")
-    )
-    scored = coded.join(F.broadcast(probes_t), "list_id")
-    return scored
+class PQ:
+    def coded_index(self, frame, *keep):
+        coded = frame.select(
+            *keep, F.expr(self.encode_sql()).alias("codes")
+        )
+        return coded
+
+
+def ivfpq_like(spark, sf_dir):
+    coded = pq.coded_index(emb, "vec_id", "list_id")
+    return coded.join(F.broadcast(probes_t), "list_id")
 '''
 
 _REPRO_PQ_BARRIERED = '''
-def coded_index(self, frame, *keep):
-    coded = frame.select(
-        *keep, F.expr(self.encode_sql()).alias("codes")
-    ).localCheckpoint(eager=False)
-    scored = coded.join(F.broadcast(probes_t), "list_id")
-    return scored
+class PQ:
+    def coded_index(self, frame, *keep):
+        coded = frame.select(
+            *keep, F.expr(self.encode_sql()).alias("codes")
+        ).localCheckpoint(eager=False)
+        return coded
+
+
+def ivfpq_like(spark, sf_dir):
+    coded = pq.coded_index(emb, "vec_id", "list_id")
+    return coded.join(F.broadcast(probes_t), "list_id")
 '''
 
 
@@ -418,7 +453,7 @@ def test_derived_array_lint_red_on_synthetic_repro():
     v, _ = _scan_derived({"repro.py": _REPRO_ZIPWITH_TRAP})
     assert len(v) == 1 and "resid" in v[0], v
     v, _ = _scan_derived({"repro.py": _REPRO_PQ_TRAP})
-    assert len(v) == 1 and "coded" in v[0], v
+    assert len(v) == 1 and "coded_index" in v[0] and "returned" in v[0], v
 
 
 def test_derived_array_lint_green_on_barrier_and_scalar_fold():
@@ -481,9 +516,16 @@ def test_no_unbarriered_derived_array_joins():
 
 def test_derived_array_lint_covers_the_pq_encode():
     """The coded index every PQ entry scans is built in one place; the
-    lint must still see that encode (and its barrier) there."""
-    _, found = _scan_derived()
+    lint must see that encode there, pass it with its barrier, and
+    flag the same source with the barrier taken out."""
+    v, found = _scan_derived()
     assert ("functions/pq.py", "coded_index", "coded") in found, sorted(found)
+    assert not [x for x in v if x.startswith("functions/pq.py")], v
+    src = open(os.path.join(BASE, "functions", "pq.py")).read()
+    barrier = ".localCheckpoint(eager=False)"
+    assert src.count(barrier) == 1, src.count(barrier)
+    v, _ = _scan_derived({"functions/pq.py": src.replace(barrier, "")})
+    assert len(v) == 1 and "coded_index" in v[0], v
 
 
 def test_derived_array_allowlist_not_stale():

@@ -55,9 +55,14 @@ def test_scratch_is_removed_when_the_process_exits():
     assert not left, left
 
 
-def test_scratch_root_is_made_again_after_removal():
+def test_scratch_root_is_made_again_after_removal(monkeypatch, tmp_path):
+    # a root of its own under tmp_path: the session's root, which holds
+    # other tests' lazily read directories, is left alone
+    monkeypatch.setattr(scratch, "_root", None)
+    monkeypatch.setattr(scratch, "scratch_root", lambda: str(tmp_path))
     first = scratch.scratch_dir("again_")
     root = os.path.dirname(first)
+    assert os.path.dirname(root) == str(tmp_path), root
     assert os.path.basename(root).startswith("scratch_"), root
     shutil.rmtree(root)
     second = scratch.scratch_dir("again_")
