@@ -1,0 +1,145 @@
+"""Exact cosine pair scoring in numpy, with no Spark in it.
+
+The registry's cosine (``functions/vectors.py``) is a left-to-right double
+fold: Spark's ``F.aggregate`` over ``zip_with`` and DuckDB's ``list_reduce``
+add one product at a time. numpy's ``dot``, ``sum`` and BLAS ``@`` add
+pairwise or in blocks, so they differ in the last ulp and near-tied ranks
+flip. This kernel keeps the fold: it adds one dimension at a time across a
+whole block of pairs, so every dot product and squared norm is the same
+sequence of double additions the engines make, and the quotient is
+``dot / (|a|·|b|)``, multiplied first. Ranking is the engines'
+``ORDER BY cos DESC, id``: NaN (a zero-norm vector) is the greatest double
+and sorts first, and ties go to the smaller id.
+
+Two drivers run it. ``cell_topk`` scores all pairs within one group of
+rows (``applyInPandas`` in ``ann_knn_graph``). ``panel_topk`` and
+``panel_max`` score one Arrow batch of a corpus scan (``mapInArrow``)
+against a small panel collected on the driver (``stack``), for each
+query's top-k rows of the batch or each row's best cosine. A row in a
+query's global top-k is in its batch's top-k, so a window over the
+per-batch candidates picks the global top-k exactly.
+"""
+
+from __future__ import annotations
+
+import numpy as np
+import pandas as pd
+import pyarrow as pa
+
+BLOCK = 1 << 16  # pairs scored together: one block's arrays stay in cache
+
+
+def stack(rows) -> tuple[np.ndarray, np.ndarray]:
+    """``(ids, vectors)`` of ``(id, vector)`` rows: int64 ids and an
+    (n, d) float64 matrix. Vectors of unequal length raise."""
+    rows = list(rows)
+    ids = np.array([r[0] for r in rows], dtype=np.int64)
+    vecs = np.array([r[1] for r in rows], dtype=np.float64)
+    return ids, vecs.reshape(len(rows), -1 if rows else 0)
+
+
+def matrix(values: pa.Array, width: int) -> np.ndarray:
+    """An Arrow list column as an (n, width) float64 matrix, through one
+    ``flatten()``. A null or a vector of another length raises: a reshape
+    would pair the wrong elements."""
+    lengths = np.diff(values.offsets.to_numpy())
+    if values.null_count or (lengths != width).any():
+        raise ValueError(f"expected vectors of {width} elements")
+    flat = values.flatten().to_numpy(zero_copy_only=False)
+    return flat.astype(np.float64).reshape(len(values), width)
+
+
+def cosines(a: np.ndarray, b: np.ndarray, widths=(None,)) -> list[np.ndarray]:
+    """``cos[i, j]`` of rows ``a[i]`` and ``b[j]`` over their first ``w``
+    elements, one matrix per ``w`` in ``widths`` (None: all of them). One
+    fold serves every width: a prefix's cosine is the fold read early."""
+    if a.shape[1] != b.shape[1]:
+        raise ValueError(f"vectors of {a.shape[1]} and {b.shape[1]} elements")
+    d = a.shape[1]
+    stops = [d if w is None else min(w, d) for w in widths]
+    # norms after each prefix: cumsum adds in order, as the fold does
+    na, nb = (
+        np.sqrt(np.cumsum(np.pad(v * v, ((0, 0), (1, 0))), axis=1)) for v in (a, b)
+    )
+    at, bt = np.ascontiguousarray(a.T), np.ascontiguousarray(b.T)
+    out = [np.empty((len(a), len(b))) for _ in stops]
+    rows = max(1, BLOCK // max(len(b), 1))
+    tmp = np.empty((rows, len(b)))
+    for lo in range(0, len(a), rows):
+        blk = slice(lo, lo + rows)
+        dot = np.zeros((min(rows, len(a) - lo), len(b)))
+        t = tmp[: len(dot)]
+        done = 0
+        for j in sorted(range(len(stops)), key=stops.__getitem__):
+            for i in range(done, stops[j]):
+                dot += np.multiply.outer(at[i, blk], bt[i], out=t)
+            done = stops[j]
+            with np.errstate(divide="ignore", invalid="ignore"):
+                out[j][blk] = dot / np.multiply.outer(
+                    na[blk, done], nb[:, done]
+                )
+    return out
+
+
+def top_k(cos: np.ndarray, ids: np.ndarray, self_ids: np.ndarray, k: int):
+    """The best ``k`` rows of each column j of ``cos`` (rows × queries) by
+    cosine descending, NaN first, then ``ids`` ascending, leaving out rows
+    whose id is ``self_ids[j]``. Returns ``(row, col, rank)`` arrays,
+    column by column in rank order."""
+    own = ids[:, None] == self_ids[None, :]
+    tie = np.broadcast_to(ids[:, None], cos.shape)
+    row = np.lexsort((tie, -cos, ~np.isnan(cos), own), axis=0)[:k].T
+    col = np.broadcast_to(np.arange(row.shape[0])[:, None], row.shape)
+    rank = np.broadcast_to(np.arange(1, row.shape[1] + 1), row.shape)
+    keep = ~own[row, col]
+    return row[keep], col[keep], rank[keep]
+
+
+def cell_topk(pdf: pd.DataFrame, k: int) -> pd.DataFrame:
+    """Every row's ``k`` nearest other rows within one cell of
+    ``(vec_id, embedding)`` rows, as ``(src, rank, dst, cos)``."""
+    ids, x = stack(zip(pdf["vec_id"], pdf["embedding"]))
+    cos = cosines(x, x)[0]
+    dst, src, rank = top_k(cos, ids, ids, k)
+    return pd.DataFrame(
+        {
+            "src": ids[src],
+            "rank": rank.astype(np.int32),
+            "dst": ids[dst],
+            "cos": cos[dst, src],
+        }
+    )
+
+
+def panel_topk(batch: pa.RecordBatch, ids, vectors, k: int, widths: dict):
+    """Each panel query's top-``k`` rows of one batch of ``(vec_id,
+    embedding)`` rows, its own row left out, under the cosine over each
+    width of ``widths`` ({column: width, None for all elements}). Emits
+    ``q_id``, ``vec_id`` and one cosine column per width for the union of
+    the top-k sets."""
+    if not len(ids):
+        batch = batch.slice(0, 0)
+    row_ids = batch.column("vec_id").to_numpy()
+    n = len(row_ids)
+    x = matrix(batch.column("embedding"), vectors.shape[1])
+    cos = cosines(x, vectors, widths.values())
+    tops = [top_k(s, row_ids, ids, k) for s in cos]
+    picked = np.unique(np.concatenate([c * n + r for r, c, _ in tops]))
+    row, col = (picked % n, picked // n) if n else (picked, picked)
+    return pa.RecordBatch.from_arrays(
+        [pa.array(ids[col]), pa.array(row_ids[row])]
+        + [pa.array(s[row, col]) for s in cos],
+        names=["q_id", "vec_id", *widths],
+    )
+
+
+def panel_max(batch: pa.RecordBatch, vectors, keep: list[str]):
+    """Each row's greatest cosine over the panel ``vectors`` as
+    ``max_cos``, next to the batch's ``keep`` columns. NaN is the greatest
+    double, as in both engines' MAX. An empty panel pairs with nothing, so
+    no row is emitted."""
+    if not len(vectors):
+        batch = batch.slice(0, 0)
+    x = matrix(batch.column("embedding"), vectors.shape[1])
+    best = cosines(x, vectors)[0].max(axis=1, initial=-np.inf)
+    return batch.select(keep).append_column("max_cos", pa.array(best))

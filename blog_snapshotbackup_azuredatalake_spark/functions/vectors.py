@@ -11,7 +11,8 @@ type, so the two engines agree bit-for-bit on float32 inputs.
 but note they are CodegenFallback in Spark 4.x (interpreted lambda
 evaluation, NOT whole-stage codegen) — which is exactly why pair-heavy
 scorers hoist row-constant norms out of the per-pair expression
-(``cosine_with_norms``, round 10).
+(``cosine_with_norms``, round 10). ``functions/pairscore.py`` is the
+same fold in numpy, for scorers against a small panel and kNN cells.
 """
 
 from __future__ import annotations
@@ -65,8 +66,8 @@ def cosine_with_norms(
     min AND collapsed the warm-run spread (3.7–13.1 → 2.3–3.1 s — less
     per-pair garbage). The probe
     also rejected the unrolled-element_at dot (15.0 s, 4× WORSE: the
-    64-term chain blows past codegen limits into a worse interpreter),
-    so the lambda fold stays for the dot itself."""
+    64-term chain blows past codegen limits into a worse interpreter).
+    Against a small panel, ``functions/pairscore.py`` folds in numpy."""
     return dot_product(a, b) / (_col(na) * _col(nb))
 
 

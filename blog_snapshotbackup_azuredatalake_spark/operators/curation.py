@@ -20,7 +20,7 @@ and mirror bit-for-bit in the DuckDB oracle.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from blog_snapshotbackup_azuredatalake_spark.functions.hints import (
@@ -36,10 +36,12 @@ from blog_snapshotbackup_azuredatalake_spark.functions.centroids import (
     sql_centroid_ctes,
     sql_neg_cosine,
 )
+from blog_snapshotbackup_azuredatalake_spark.functions import pairscore
 from blog_snapshotbackup_azuredatalake_spark.functions.vectors import (
-    cosine_with_norms,
-    l2_norm,
     sql_cosine,
+)
+from blog_snapshotbackup_azuredatalake_spark.session import (
+    ensure_package_on_workers,
 )
 from blog_snapshotbackup_azuredatalake_spark.sources.catalog import load_table
 
@@ -1141,46 +1143,35 @@ def corpus_decontaminate_semantic(spark: SparkSession, sf_dir: str) -> DataFrame
 
     Plan shape is the one this problem actually has at 100 TB: the
     bench side is an eval suite (thousands of vectors, KBs–MBs), so it
-    BROADCASTS and the corpus is scanned once, map-only — n·|bench|
-    dot products, no corpus shuffle, and the per-vector max folds in
-    the same pass. If the bench set ever outgrows broadcast, the
-    escalation is the sign-bucket LSH prefilter already shipped for
+    is collected once and rides in the closure of one Arrow batch scan
+    of the corpus (``pairscore.panel_max``): n·|bench| dot products,
+    no pair relation and no corpus shuffle, and the per-vector max
+    folds in the same pass. If the bench set ever outgrows the driver,
+    the escalation is the sign-bucket LSH prefilter already shipped for
     `dedup_embedding`. Cosine is the sequential double fold — the same
     left-associative reduction DuckDB's list_reduce performs, so the
     comparison against {SEM_TAU} and the floor-quantized aggregate are
     bit-identical to the oracle."""
+    ensure_package_on_workers(spark)
     emb = load_table(spark, sf_dir, "embeddings")
-    bench = emb.filter(
-        (F.col("vec_id") % SEM_BENCH_MOD == 0)
-        & (F.col("vec_id") < SEM_BENCH_MAX_ID)
-    ).select(
-        F.col("vec_id").alias("b_id"),
-        F.col("embedding").alias("b_emb"),
-        # per-row norms hoisted below the pair join (round 10,
-        # `cosine_with_norms`): this scorer folded 3 interpreted HOFs per
-        # (corpus row × bench vec) pair; both norms now fold once per
-        # row, leaving only the dot per pair
-        l2_norm("embedding").alias("b_nrm"),
+    _, bench = pairscore.stack(
+        emb.filter(
+            (F.col("vec_id") % SEM_BENCH_MOD == 0)
+            & (F.col("vec_id") < SEM_BENCH_MAX_ID)
+        )
+        .select("vec_id", "embedding")
+        .collect()
     )
     corpus = emb.filter(
         (F.col("vec_id") % SEM_BENCH_MOD != 0)
         | (F.col("vec_id") >= SEM_BENCH_MAX_ID)
-    ).select(
-        "vec_id", "label", "embedding", l2_norm("embedding").alias("nrm")
-    )
-    # guarded hint: the bench set is eval-suite-sized in deployment
-    # but demo-derived here — past the bound the hint drops (the
-    # real escalation at that size is the LSH prefilter above)
-    bench = bench.localCheckpoint(eager=False)
-    per_vec = (
-        corpus.crossJoin(bcast(bench))
-        .select(
-            "vec_id",
-            "label",
-            cosine_with_norms("embedding", "b_emb", "nrm", "b_nrm").alias("cos"),
-        )
-        .groupBy("vec_id", "label")
-        .agg(F.max("cos").alias("max_cos"))
+    ).select("vec_id", "label", "embedding")
+    # vec_id is a key, so a row's max is its (vec_id, label) group's max
+    per_vec = corpus.mapInArrow(
+        lambda batches: (
+            pairscore.panel_max(b, bench, ["vec_id", "label"]) for b in batches
+        ),
+        "vec_id bigint, label int, max_cos double",
     )
     return per_vec.groupBy("label").agg(
         F.count(F.lit(1)).alias("n_corpus"),

@@ -14,15 +14,19 @@ Every scratch directory lives under one root per process, made on first
 use (again if something removed it) and removed when the interpreter
 exits, so no call leaves tmpfs (that is, RAM) behind past its process.
 ``scratch_dir`` leaves its directory in place until then: a streaming or
-sink entry returns a lazy read of it. An entry whose result is built on
-the driver uses ``scratch_store``, which removes the directory when its
-block exits, so repeated calls do not accumulate within a process.
+sink entry returns a lazy read of it. A process killed by a signal runs
+no exit hook, so the first process to make its root afterwards removes
+the roots of processes that no longer exist, never a live one's. An
+entry whose result is built on the driver uses ``scratch_store``, which
+removes the directory when its block exits, so repeated calls do not
+accumulate within a process.
 """
 
 from __future__ import annotations
 
 import atexit
 import os
+import re
 import shutil
 import tempfile
 
@@ -40,11 +44,24 @@ def _process_root() -> str:
     global _root
     pid = os.getpid()
     if _root is None or _root[0] != pid or not os.path.isdir(_root[1]):
-        _root = (
-            pid,
-            tempfile.mkdtemp(prefix=f"scratch_{pid}_", dir=scratch_root()),
-        )
+        parent = scratch_root() or tempfile.gettempdir()
+        if _root is None or _root[0] != pid:
+            _remove_dead_roots(parent)
+        _root = (pid, tempfile.mkdtemp(prefix=f"scratch_{pid}_", dir=parent))
     return _root[1]
+
+
+def _remove_dead_roots(parent: str) -> None:
+    """Remove the roots in ``parent`` whose process no longer exists."""
+    for name in os.listdir(parent):
+        m = re.fullmatch(r"scratch_(\d+)_\w+", name)
+        try:
+            if m:
+                os.kill(int(m[1]), 0)  # signal 0 only asks if it exists
+        except ProcessLookupError:
+            shutil.rmtree(os.path.join(parent, name), ignore_errors=True)
+        except PermissionError:  # it exists, as another user's process
+            pass
 
 
 @atexit.register

@@ -9,10 +9,11 @@ Pandas-UDF paths.
 from __future__ import annotations
 
 import os
-import tempfile
 import zipfile
 
 from pyspark.sql import SparkSession
+
+from blog_snapshotbackup_azuredatalake_spark.scratch import scratch_dir
 
 _pkg_zip: str | None = None
 _shipped_ctx: set[int] = set()
@@ -26,7 +27,8 @@ def ensure_package_on_workers(spark: SparkSession) -> None:
     true when the driver runs from the repo root, false for an external
     driver (the grading harness, a spark-submit from elsewhere). Calling
     this from every Python-UDF code path makes the import work anywhere,
-    exactly as ``--py-files`` would on a real cluster."""
+    exactly as ``--py-files`` would on a real cluster. The zip is built
+    once per process under its scratch root, so it is gone at exit."""
     global _pkg_zip
     sc = spark.sparkContext
     if id(sc) in _shipped_ctx:
@@ -34,8 +36,7 @@ def ensure_package_on_workers(spark: SparkSession) -> None:
     if _pkg_zip is None or not os.path.exists(_pkg_zip):
         pkg_dir = os.path.dirname(os.path.abspath(__file__))
         pkg_name = os.path.basename(pkg_dir)
-        fd, _pkg_zip = tempfile.mkstemp(suffix=".zip", prefix=f"{pkg_name}_")
-        os.close(fd)
+        _pkg_zip = os.path.join(scratch_dir(f"{pkg_name}_"), f"{pkg_name}.zip")
         with zipfile.ZipFile(_pkg_zip, "w") as zf:
             for root, _dirs, files in os.walk(pkg_dir):
                 for f in files:

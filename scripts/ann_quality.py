@@ -19,7 +19,6 @@ METHODS = [
     "ann_topk_lsh",
     "ann_topk_ivf",
     "ann_topk_ivf_trained",
-    "ann_topk_arrow",
 ]
 
 

@@ -34,7 +34,6 @@ QUERIES = [
     "dedup_ngram_jaccard",
     "ann_topk_lsh",
     "ann_topk_ivf",
-    "ann_topk_arrow",
     "text_quality",
     "text_tokencount",
     "text_redact_pii",

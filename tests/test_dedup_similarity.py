@@ -20,21 +20,6 @@ def test_similarity_matches_oracle(spark, ddb, name):
     assert_matches_oracle(df, ddb, similarity.ORACLES[name])
 
 
-def test_arrow_topk_matches_exact_baseline(spark):
-    exact = {
-        (r["q_id"], r["vec_id"])
-        for r in similarity.ann_topk_bruteforce(spark, SF_DIR).collect()
-    }
-    arrow = {
-        (r["q_id"], r["vec_id"])
-        for r in similarity.ann_topk_arrow(spark, SF_DIR).collect()
-    }
-    # same pairs up to last-ulp rank ties (numpy fold order differs)
-    assert len(arrow & exact) / len(exact) >= 0.95, (
-        len(arrow & exact), len(exact),
-    )
-
-
 def test_mmr_matches_pure_python_reference(spark):
     # independent greedy MMR over Spark's own shortlist rel values —
     # must agree with the applyInPandas output exactly (same floats,

@@ -1,5 +1,6 @@
-"""Edge-case unit tests for the round-8 vectorized kNN cell kernel
-(_knn_cell_topk) — pure pandas/numpy, no Spark session.
+"""Edge-case unit tests for the vectorized kNN cell kernel
+(_knn_cell_topk, the cell driver of functions/pairscore.py) — pure
+pandas/numpy, no Spark session.
 
 The kernel must reproduce the SQL oracle's window semantics exactly:
 ROW_NUMBER() OVER (PARTITION BY src ORDER BY cos DESC, dst ASC),

@@ -284,14 +284,45 @@ def test_shard_shuffle_reads_only_needed_columns(spark):
     assert "text" not in read, read
 
 
+def _scan_feeds_map_in_arrow(plan: str) -> None:
+    """The corpus scan feeds MapInArrow directly: no Exchange or join
+    between them, and no pair join (nested loop or cartesian) at all."""
+    assert "MapInArrow" in plan, plan
+    tree = plan.split("\n\n")[0].splitlines()
+    at = next(i for i, line in enumerate(tree) if "MapInArrow" in line)
+    depth = tree[at].index("MapInArrow")
+    below = []
+    for line in tree[at + 1:]:
+        if len(line) - len(line.lstrip(" :|+-")) <= depth:
+            break
+        below.append(line)
+    assert any("Scan parquet" in line for line in below), tree
+    assert not any(
+        op in line for line in below for op in ("Exchange", "Join")
+    ), tree
+    assert "NestedLoopJoin" not in plan and "Cartesian" not in plan, tree
+
+
 def test_semantic_decontamination_broadcasts_bench(spark):
-    """The bench side must broadcast (BroadcastNestedLoopJoin) — a
+    """The bench side rides to the corpus scan in the MapInArrow closure,
+    and each vector's max folds in the same task: no Exchange or
+    SortMergeJoin between the corpus scan and the per-vector max — a
     shuffled corpus here would be the 100 TB scale-killer."""
     from blog_snapshotbackup_azuredatalake_spark.operators import curation
 
     plan = _plan(curation.corpus_decontaminate_semantic(spark, SF_DIR))
-    assert "BroadcastNestedLoopJoin" in plan
+    _scan_feeds_map_in_arrow(plan)
     assert "SortMergeJoin" not in plan
+
+
+def test_panel_scorers_scan_arrow_batches(spark):
+    """The query-panel scorers build no pair relation: each Arrow batch
+    of the corpus scan keeps its per-query top-k, and only those
+    candidates are shuffled for the global window."""
+    from blog_snapshotbackup_azuredatalake_spark.operators import similarity
+
+    for entry in (similarity.ann_topk_bruteforce, similarity.emb_truncation_audit):
+        _scan_feeds_map_in_arrow(_plan(entry(spark, SF_DIR)))
 
 
 def test_bucketed_join_has_no_join_key_exchange(spark):
