@@ -13,11 +13,13 @@ and sorts first, and ties go to the smaller id.
 
 Two drivers run it. ``cell_topk`` scores all pairs within one group of
 rows (``applyInPandas`` in ``ann_knn_graph``). ``panel_topk`` and
-``panel_max`` score one Arrow batch of a corpus scan (``mapInArrow``)
-against a small panel collected on the driver (``stack``), for each
-query's top-k rows of the batch or each row's best cosine. A row in a
-query's global top-k is in its batch's top-k, so a window over the
-per-batch candidates picks the global top-k exactly.
+``panel_max`` pick from one Arrow batch of a corpus scan (``mapInArrow``)
+scored against a small panel collected on the driver (``stack``): each
+query's top-k rows of the batch under each score and exclusion mask, or
+each row's best cosine. A row in a query's global top-k is in its batch's
+top-k, so a window over the per-batch candidates picks the global top-k
+exactly. ``sign_hamming`` is the other score a panel scan picks by: the
+count of sign bits two vectors differ in.
 """
 
 from __future__ import annotations
@@ -81,18 +83,35 @@ def cosines(a: np.ndarray, b: np.ndarray, widths=(None,)) -> list[np.ndarray]:
     return out
 
 
-def top_k(cos: np.ndarray, ids: np.ndarray, self_ids: np.ndarray, k: int):
-    """The best ``k`` rows of each column j of ``cos`` (rows × queries) by
-    cosine descending, NaN first, then ``ids`` ascending, leaving out rows
-    whose id is ``self_ids[j]``. Returns ``(row, col, rank)`` arrays,
-    column by column in rank order."""
-    own = ids[:, None] == self_ids[None, :]
-    tie = np.broadcast_to(ids[:, None], cos.shape)
-    row = np.lexsort((tie, -cos, ~np.isnan(cos), own), axis=0)[:k].T
+def sign_hamming(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """``ham[i, j]``: the elements whose sign bits differ between rows
+    ``a[i]`` and ``b[j]``. An element's bit is ``x >= 0``, and NaN's bit is
+    set: Spark and DuckDB order NaN above every number, numpy does not."""
+    sa, sb = (((v >= 0) | np.isnan(v)).astype(np.int64) for v in (a, b))
+    return sa @ (1 - sb).T + (1 - sa) @ sb.T
+
+
+def top_k(score: np.ndarray, ids: np.ndarray, exclude: np.ndarray, k: int):
+    """The best ``k`` rows of each column j of ``score`` (rows × queries)
+    by score descending, NaN first, then ``ids`` ascending, leaving out the
+    rows where ``exclude`` (rows × queries) is true. Returns ``(row, col,
+    rank)`` arrays, column by column in rank order."""
+    tie = np.broadcast_to(ids[:, None], score.shape)
+    row = np.lexsort((tie, -score, ~np.isnan(score), exclude), axis=0)[:k].T
     col = np.broadcast_to(np.arange(row.shape[0])[:, None], row.shape)
     rank = np.broadcast_to(np.arange(1, row.shape[1] + 1), row.shape)
-    keep = ~own[row, col]
+    keep = ~exclude[row, col]
     return row[keep], col[keep], rank[keep]
+
+
+def split_masks(own: np.ndarray, by: np.ndarray, q_by: np.ndarray) -> list:
+    """Two exclusion masks (rows × queries) that pick each query's rows
+    whose ``by`` equals the query's ``q_by``, then its rows whose ``by``
+    differs, the ``own`` pairs left out of both. NaN stands for NULL: it
+    is neither equal nor unequal to anything, so its pairs are in neither
+    pick, as in SQL."""
+    by = by[:, None]
+    return [own | ~(by == q_by), own | ~((by < q_by) | (by > q_by))]
 
 
 def cell_topk(pdf: pd.DataFrame, k: int) -> pd.DataFrame:
@@ -100,7 +119,7 @@ def cell_topk(pdf: pd.DataFrame, k: int) -> pd.DataFrame:
     ``(vec_id, embedding)`` rows, as ``(src, rank, dst, cos)``."""
     ids, x = stack(zip(pdf["vec_id"], pdf["embedding"]))
     cos = cosines(x, x)[0]
-    dst, src, rank = top_k(cos, ids, ids, k)
+    dst, src, rank = top_k(cos, ids, ids[:, None] == ids, k)
     return pd.DataFrame(
         {
             "src": ids[src],
@@ -111,25 +130,30 @@ def cell_topk(pdf: pd.DataFrame, k: int) -> pd.DataFrame:
     )
 
 
-def panel_topk(batch: pa.RecordBatch, ids, vectors, k: int, widths: dict):
-    """Each panel query's top-``k`` rows of one batch of ``(vec_id,
-    embedding)`` rows, its own row left out, under the cosine over each
-    width of ``widths`` ({column: width, None for all elements}). Emits
-    ``q_id``, ``vec_id`` and one cosine column per width for the union of
-    the top-k sets."""
-    if not len(ids):
-        batch = batch.slice(0, 0)
-    row_ids = batch.column("vec_id").to_numpy()
-    n = len(row_ids)
-    x = matrix(batch.column("embedding"), vectors.shape[1])
-    cos = cosines(x, vectors, widths.values())
-    tops = [top_k(s, row_ids, ids, k) for s in cos]
+def panel_topk(
+    batch: pa.RecordBatch,
+    queries: dict,
+    scores: dict,
+    excludes: list,
+    k: int,
+    carry: list[str],
+) -> pa.RecordBatch:
+    """Each panel query's top-``k`` rows of one batch under each score of
+    ``scores`` ({column: rows × queries matrix}) and each exclusion mask
+    of ``excludes``, ranked by ``top_k`` with ``vec_id`` breaking ties.
+    Emits the ``queries`` columns ({column: one value per query}), the
+    batch's ``carry`` columns and every score for the union of the top-k
+    sets, one row per picked (query, row) pair."""
+    n = batch.num_rows
+    ids = batch.column("vec_id").to_numpy()
+    tops = [top_k(s, ids, m, k) for s in scores.values() for m in excludes]
     picked = np.unique(np.concatenate([c * n + r for r, c, _ in tops]))
     row, col = (picked % n, picked // n) if n else (picked, picked)
     return pa.RecordBatch.from_arrays(
-        [pa.array(ids[col]), pa.array(row_ids[row])]
-        + [pa.array(s[row, col]) for s in cos],
-        names=["q_id", "vec_id", *widths],
+        [pa.array(v[col]) for v in queries.values()]
+        + batch.select(carry).take(pa.array(row)).columns
+        + [pa.array(s[row, col]) for s in scores.values()],
+        names=[*queries, *carry, *scores],
     )
 
 

@@ -97,77 +97,6 @@ def two_phase_rank(
     ).filter(F.col(rank_name) <= k)
 
 
-def two_phase_rank_dual(
-    df: DataFrame,
-    order_a,
-    order_b,
-    k: int,
-    part_cols=("q_id",),
-    salt_col: str = "vec_id",
-    in_a: str = "in_a",
-    in_b: str = "in_b",
-) -> DataFrame:
-    """Two exact top-k picks by DIFFERENT orders over the same
-    data-sized relation, sharing ONE salted exchange (round 10).
-
-    The ANN audit entries (truncation / binary-Hamming / SQ8 overlap)
-    ran two row_number windows partitioned by q_id over the full
-    scored relation: one exchange, but two corpus-sized sorts whose
-    parallelism is bounded at |Q| = 20 tasks by contract. Here phase 1
-    computes BOTH cell ranks within (part_cols..., salt) — still one
-    exchange, now |parts|·TOPK_SALT small sorts per order — and keeps
-    only rows in EITHER cell top-k. Phase 2 recovers each order's
-    exact global rank as a running count of its qualifying rows over
-    the tiny union (≤ 2·k·TOPK_SALT rows per partition), so both final
-    picks live on one relation with no plan duplication.
-
-    Returns the union rows with boolean columns ``in_a`` / ``in_b``:
-    true ⟺ the row is in the true global top-k under that order.
-    Exactness argument as two_phase_rank: orders must end in a
-    within-partition-unique tiebreak, every global top-k row is in its
-    cell top-k, and ranking among qualifying rows equals the global
-    rank because the global top-k only contains qualifying rows."""
-    # the salt MUST be a materialized column, not an inline expression:
-    # two windows partitioned by separate instances of the same
-    # expression plan as two different partition keys — i.e. TWO full
-    # exchanges of the corpus-sized input (measured in the round-10
-    # plan capture); one shared attribute → one exchange, two sorts
-    salted = df.withColumn(
-        "_salt", F.pmod(F.xxhash64(F.col(salt_col)), F.lit(TOPK_SALT))
-    )
-    w1a = Window.partitionBy(*part_cols, "_salt").orderBy(*order_a)
-    w1b = Window.partitionBy(*part_cols, "_salt").orderBy(*order_b)
-    pre = (
-        salted.withColumn("_ca", F.row_number().over(w1a))
-        .withColumn("_cb", F.row_number().over(w1b))
-        .filter((F.col("_ca") <= k) | (F.col("_cb") <= k))
-        .drop("_salt")
-    )
-    w2a = (
-        Window.partitionBy(*part_cols)
-        .orderBy(*order_a)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w2b = (
-        Window.partitionBy(*part_cols)
-        .orderBy(*order_b)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return (
-        pre.withColumn(
-            "_ga",
-            F.sum(F.when(F.col("_ca") <= k, 1).otherwise(0)).over(w2a),
-        )
-        .withColumn(
-            "_gb",
-            F.sum(F.when(F.col("_cb") <= k, 1).otherwise(0)).over(w2b),
-        )
-        .withColumn(in_a, (F.col("_ca") <= k) & (F.col("_ga") <= k))
-        .withColumn(in_b, (F.col("_cb") <= k) & (F.col("_gb") <= k))
-        .drop("_ca", "_cb", "_ga", "_gb")
-    )
-
-
 def two_phase_agg(
     df: DataFrame,
     keys: list[str],

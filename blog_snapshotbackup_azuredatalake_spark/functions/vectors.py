@@ -9,10 +9,10 @@ type, so the two engines agree bit-for-bit on float32 inputs.
 
 ``F.zip_with`` + ``F.aggregate`` avoid any Python round-trip per row,
 but note they are CodegenFallback in Spark 4.x (interpreted lambda
-evaluation, NOT whole-stage codegen) — which is exactly why pair-heavy
+evaluation, NOT whole-stage codegen) — which is why the probe-join
 scorers hoist row-constant norms out of the per-pair expression
-(``cosine_with_norms``, round 10). ``functions/pairscore.py`` is the
-same fold in numpy, for scorers against a small panel and kNN cells.
+(``cosine_with_norms``). ``functions/pairscore.py`` is the same fold in
+numpy, for every scorer against the small query panel and kNN cells.
 """
 
 from __future__ import annotations
@@ -55,19 +55,19 @@ def cosine_with_norms(
 ) -> Column:
     """``cosine_similarity`` with PRE-COMPUTED norms: na/nb must be the
     ``l2_norm`` of a/b materialized as columns on each join side, so the
-    quotient divides the SAME doubles — bit-identical cosines. Why it
-    exists (round 10): in a pair scorer (corpus × broadcast query panel)
-    the inline form re-folds both norms once per PAIR; zip_with/aggregate
-    are CodegenFallback (interpreted, boxed per element), so 2/3 of the
-    per-pair fold work is recomputing row-constant values. Hoisting the
-    norms below the join evaluates them once per ROW: sf60de A/B
-    (SCALING.md, "Round 10, session 3 — per-pair interpreted-fold
-    sweep", 1.2 M vectors) measured the bruteforce shape 3.71 → 2.29 s
-    min AND collapsed the warm-run spread (3.7–13.1 → 2.3–3.1 s — less
-    per-pair garbage). The probe
-    also rejected the unrolled-element_at dot (15.0 s, 4× WORSE: the
-    64-term chain blows past codegen limits into a worse interpreter).
-    Against a small panel, ``functions/pairscore.py`` folds in numpy."""
+    quotient divides the SAME doubles — bit-identical cosines. Its users
+    are the probe-join scorers (IVF, filtered, nprobe, hybrid, LSH and
+    range entries, which join a broadcast probe list per candidate pair)
+    and ``dedup_embedding``: the inline form re-folds both norms once per
+    PAIR, and zip_with/aggregate are CodegenFallback (interpreted, boxed
+    per element), so hoisting the norms below the join evaluates them once
+    per ROW. Measured on the corpus × panel shape before it moved to
+    ``functions/pairscore.py``: sf60de A/B (SCALING.md, "Round 10,
+    session 3 — per-pair interpreted-fold sweep", 1.2 M vectors) 3.71 →
+    2.29 s min, with the warm-run spread down from 3.7–13.1 to 2.3–3.1 s.
+    The probe also rejected the unrolled-element_at dot (15.0 s, 4× WORSE:
+    the 64-term chain blows past codegen limits into a worse
+    interpreter)."""
     return dot_product(a, b) / (_col(na) * _col(nb))
 
 

@@ -19,18 +19,18 @@ Three plans for top-k cosine neighbors:
   trade, and unlike the sign-LSH it degrades gracefully (more probes →
   more recall) without re-bucketing.
 
-Dot products run as zip_with/aggregate double folds — bit-identical to
-the DuckDB oracle's list_reduce fold (verified); both forms live in
-``functions/vectors.py``. These higher-order functions are
-CodegenFallback (interpreted), which is why every pair scorer hoists
-row-constant norms out of the per-pair expression (``cosine_with_norms``
-in ``functions/vectors.py``, round 10). Scorers against a small query
-panel and the kNN graph's cells run the same fold in numpy instead
-(``functions/pairscore.py``), with no interpreted lambda per element.
+Every scorer against the small query panel (``_panel_topk``) and the kNN
+graph's cells run the engines' left-to-right double fold in numpy
+(``functions/pairscore.py``): bit-identical to the DuckDB oracle's
+list_reduce fold, with no interpreted lambda per element. The probe-join
+entries still fold each candidate pair in Spark (zip_with/aggregate,
+``functions/vectors.py``), with the row norms hoisted out of the pair
+(``cosine_with_norms``).
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -61,9 +61,6 @@ from blog_snapshotbackup_azuredatalake_spark.functions.pq import (
     refine,
     sql_adc_refine,
     sql_pq_ctes,
-)
-from blog_snapshotbackup_azuredatalake_spark.functions.skew import (
-    two_phase_rank_dual,
 )
 from blog_snapshotbackup_azuredatalake_spark.session import (
     ensure_package_on_workers,
@@ -240,7 +237,8 @@ FROM fused QUALIFY rank <= {HYBRID_TOPK}
 def ann_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact top-k cosine neighbors for the first N_QUERIES vectors: a
     window over the few per-batch candidates of ``_panel_topk``."""
-    scored = _panel_topk(spark, sf_dir, {"cos": None})
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    scored = _panel_topk(spark, emb, TOP_K, _cosine, "vec_id bigint, cos double")
     w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("vec_id"))
     return (
         scored.withColumn("rnk", F.row_number().over(w))
@@ -249,23 +247,57 @@ def ann_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _panel_topk(spark: SparkSession, sf_dir: str, widths: dict) -> DataFrame:
-    """Per-batch top-TOP_K candidates of each of the first N_QUERIES
-    vectors, self excluded, under the cosine over each width of
-    ``widths``: one Arrow batch scan of the corpus
-    (``pairscore.panel_topk``), with no pair relation and no corpus
-    shuffle. The query panel is collected once and rides in the closure.
-    Every global top-k row is in its batch's top-k, so a window over the
-    candidates is exact."""
+def _cosine(batch, x, panel) -> dict:
+    """The ``cos`` of each batch row (``x``) with each panel vector."""
+    return {"cos": pairscore.cosines(x, panel)[0]}
+
+
+def _panel_topk(
+    spark: SparkSession,
+    corpus: DataFrame,
+    k: int,
+    score,
+    schema: str,
+    carry: tuple = ("vec_id",),
+    split: str | None = None,
+) -> DataFrame:
+    """Per-batch top-``k`` candidates of each of the first N_QUERIES rows
+    of ``corpus`` (``vec_id``, ``embedding`` and the ``carry`` columns),
+    its own row left out: one Arrow batch scan (``pairscore.panel_topk``),
+    with no pair relation and no corpus shuffle. The query panel is
+    collected once and rides in the closure. ``score(batch, x, panel)``
+    gives the batch's score matrices ({column: rows × queries}) from its
+    ``embedding`` matrix ``x`` and the panel's. With ``split``, a column,
+    each query is picked twice: among rows whose ``split`` equals the
+    query's (``q_<split>``) and among rows whose ``split`` differs, a null
+    in neither. Every global top-k row is in its batch's top-k, so a
+    window over the candidates is exact. ``schema`` names the carry and
+    score columns after ``q_id`` (and ``q_<split>``)."""
     ensure_package_on_workers(spark)
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    ids, vecs = pairscore.stack(emb.filter(F.col("vec_id") < N_QUERIES).collect())
-    cols = ", ".join(f"{c} double" for c in widths)
-    return emb.mapInArrow(
-        lambda batches: (
-            pairscore.panel_topk(b, ids, vecs, TOP_K, widths) for b in batches
-        ),
-        f"q_id bigint, vec_id bigint, {cols}",
+    cols = ["vec_id", "embedding", *([split] if split else [])]
+    panel = corpus.filter(F.col("vec_id") < N_QUERIES).select(cols).collect()
+    ids, vecs = pairscore.stack(panel)
+    queries = {"q_id": ids}
+    if split:  # as double, a null as NaN (``pairscore.split_masks``)
+        queries[f"q_{split}"] = np.array([r[2] for r in panel], dtype=float)
+
+    def pick(batch):
+        x = pairscore.matrix(batch.column("embedding"), vecs.shape[1])
+        own = batch.column("vec_id").to_numpy()[:, None] == ids
+        excludes = [own]
+        if split:
+            by = batch.column(split).to_numpy(zero_copy_only=False)
+            excludes = pairscore.split_masks(
+                own, by.astype(float), queries[f"q_{split}"]
+            )
+        return pairscore.panel_topk(
+            batch, queries, score(batch, x, vecs), excludes, k, list(carry)
+        )
+
+    if not len(ids):  # no query: nothing to pick
+        corpus = corpus.limit(0)
+    return corpus.mapInArrow(
+        lambda batches: map(pick, batches), f"q_id bigint, {schema}"
     )
 
 
@@ -297,9 +329,9 @@ def ann_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rows match no probe bucket — so a corpus-side norm column would
     # fold once per corpus ROW while saving only per matched PAIR: the
     # full hoist measured a regression here (sf60de 1.44 → 2.00 s min)
-    # where its crossJoin siblings gained 1.5–3.5×. The corpus norm
-    # stays inline (evaluated on matched pairs only); q_nrm rides the
-    # tiny probe side for free.
+    # where the crossJoin scorers of the time gained 1.5–3.5×. The
+    # corpus norm stays inline (evaluated on matched pairs only); q_nrm
+    # rides the tiny probe side for free.
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id",
         "embedding",
@@ -819,7 +851,7 @@ def ann_knn_graph_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall audit of the capped-LSH kNN graph: for the bounded
     {N_QUERIES}-vector panel, how many of each vector's TRUE
     top-{KNN_GRAPH_K} cosine neighbors (exact, whole-corpus brute force:
-    corpus scan × broadcast panel) does the graph actually contain? This
+    the Arrow batch scan of ``_panel_topk``) does the graph contain? This
     is the permanent "recall pricing" for the blocked substrate the
     round-7 verdict asked about: the LSH trade (same-bucket candidates
     only + the occupancy-cap sub-split) is priced per panel vector as
@@ -852,45 +884,18 @@ def ann_knn_graph_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph = knn_graph_cached(spark, sf_dir).filter(
         F.col("src") < N_QUERIES
     )
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        "embedding",
-        # per-row norm hoisted below the pair join (round 10,
-        # `cosine_with_norms`): folded once per row, not once per pair
-        l2_norm("embedding").alias("nrm"),
-    )
-    panel = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    scored = (
-        emb.crossJoin(F.broadcast(panel))
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "vec_id",
-            cosine_with_norms("q_emb", "embedding", "q_nrm", "nrm").alias("cos"),
-        )
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    scored = _panel_topk(
+        spark, emb, KNN_GRAPH_K, _cosine, "vec_id bigint, cos double"
     )
     w = Window.partitionBy("q_id").orderBy(
         F.col("cos").desc(), F.col("vec_id")
     )
-    ranked = scored.withColumn("rnk", F.row_number().over(w))
-    # round 10: `ranked` used to feed TWO filters (rnk <= K for the
-    # exact set, rnk == K for the tie bar), and each DataFrame
-    # reference plans its OWN subtree — the committed before-plan
-    # (plans/r10/ann_knn_graph_recall_before.txt) shows the whole
-    # corpus-sized BroadcastNestedLoopJoin + cosine + window chain
-    # TWICE (no ReusedExchange fires across the differing filters), so
-    # the dominant brute-force scan ran twice. Filter to the top-K
-    # survivors ONCE — WindowGroupLimit(Partial) still applies — and
-    # barrier the <= |panel|·K-row result; both consumers then read
-    # the tiny materialized relation: one corpus pass instead of two
-    # (guide §1.2: remove unnecessary passes).
+    # one window gives the exact set (rnk <= K) and the tie bar (rnk = K);
+    # the barrier lets both read it without a second Python scan
     topk = (
-        ranked.filter(F.col("rnk") <= KNN_GRAPH_K)
-        .select("q_id", "vec_id", "cos", "rnk")
+        scored.withColumn("rnk", F.row_number().over(w))
+        .filter(F.col("rnk") <= KNN_GRAPH_K)
         .localCheckpoint(eager=False)
     )
     exact = topk.select(
@@ -914,7 +919,8 @@ def ann_knn_graph_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("dist_hits"))
     )
     return (
-        panel.select(F.col("q_id").alias("src"))
+        emb.filter(F.col("vec_id") < N_QUERIES)
+        .select(F.col("vec_id").alias("src"))
         .join(hits, "src", "left")
         .join(dhits, "src", "left")
         .select(
@@ -1666,14 +1672,33 @@ def emb_truncation_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-k sets (``_panel_topk``; the truncated cosine is the same fold
     read at TRUNC_DIMS). Offline-audit cost profile — the same |Q|·N
     scan as the brute-force baseline, run once per candidate dim."""
-    scored = _panel_topk(spark, sf_dir, {"cf": None, "ct": TRUNC_DIMS})
-    wf = Window.partitionBy("q_id").orderBy(F.desc("cf"), F.asc("vec_id"))
-    wt = Window.partitionBy("q_id").orderBy(F.desc("ct"), F.asc("vec_id"))
-    both = (F.row_number().over(wf) <= TOP_K) & (F.row_number().over(wt) <= TOP_K)
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+
+    def score(batch, x, panel):
+        cf, ct = pairscore.cosines(x, panel, (None, TRUNC_DIMS))
+        return {"cf": cf, "ct": ct}
+
+    scored = _panel_topk(
+        spark, emb, TOP_K, score, "vec_id bigint, cf double, ct double"
+    )
+    return _overlap(scored, "cf", "ct")
+
+
+def _overlap(scored: DataFrame, a: str, b: str, **aggs) -> DataFrame:
+    """Per query: how many candidates are in both its top-TOP_K by ``a``
+    and its top-TOP_K by ``b`` (each descending, then ``vec_id``), from
+    two windows over ``scored``, plus the named ``aggs`` over its columns
+    and the ``in_<a>`` flag."""
+    for c in (a, b):
+        w = Window.partitionBy("q_id").orderBy(F.desc(c), F.asc("vec_id"))
+        scored = scored.withColumn(f"in_{c}", F.row_number().over(w) <= TOP_K)
+    both = (F.col(f"in_{a}") & F.col(f"in_{b}")).cast("long")
     return (
-        scored.withColumn("both", both)
-        .groupBy("q_id")
-        .agg(F.sum(F.col("both").cast("long")).alias("n_overlap"))
+        scored.groupBy("q_id")
+        .agg(
+            F.sum(both).alias("n_overlap"),
+            *[v.alias(k) for k, v in aggs.items()],
+        )
         .select(
             "q_id",
             F.lit(TOP_K).alias("k"),
@@ -1681,6 +1706,7 @@ def emb_truncation_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("n_overlap").cast("double") / F.lit(float(TOP_K))).alias(
                 "overlap_frac"
             ),
+            *aggs,
         )
     )
 
@@ -1810,26 +1836,16 @@ FROM joined GROUP BY true_label
 # 1-bit (binary sign) quantization audit
 # ---------------------------------------------------------------------------
 
-_HAM_HALF = 32  # pack 64 sign bits as two 32-bit halves in BIGINTs —
-# shiftleft(1L, 63) wraps differently across engines; two halves keep
-# every shift in safe range and cost one extra bit_count
-
-
-def _pack_bits_expr(col: str, lo_bit: int) -> str:
-    """Spark SQL: pack {_HAM_HALF} sign bits of ``col`` starting at
-    ``lo_bit`` into one BIGINT (bit i set iff dim lo_bit+i >= 0).
-    Emitted as ONE SQL string (SURVEY §6: Py4J per-node cost)."""
-    return (
-        f"aggregate(transform(sequence(0, {_HAM_HALF - 1}), i -> "
-        f"IF(element_at({col}, i + {lo_bit + 1}) >= 0, "
-        f"shiftleft(CAST(1 AS BIGINT), i), CAST(0 AS BIGINT))), "
-        f"CAST(0 AS BIGINT), (acc, x) -> acc + x)"
-    )
+_HAM_HALF = 32  # the oracle packs 64 sign bits as two 32-bit halves in
+# BIGINTs: a shift by 63 reaches the sign bit; two halves keep every
+# shift in safe range and cost one extra bit_count
 
 
 def _pack_bits_sql(col: str, lo_bit: int) -> str:
-    """DuckDB equivalent of ``_pack_bits_expr`` — list_sum widens to
-    HUGEINT, so cast back (SURVEY §4)."""
+    """DuckDB: pack {_HAM_HALF} sign bits of ``col`` starting at ``lo_bit``
+    into one BIGINT (bit i set iff dim lo_bit+i >= 0, NaN included) —
+    list_sum widens to HUGEINT, so cast back (SURVEY §4). The Spark side
+    counts the same bits in numpy (``pairscore.sign_hamming``)."""
     return (
         f"CAST(list_sum(list_transform(range(0, {_HAM_HALF}), i -> "
         f"CASE WHEN {col}[i + {lo_bit + 1}] >= 0 "
@@ -1840,69 +1856,27 @@ def _pack_bits_sql(col: str, lo_bit: int) -> str:
 def emb_binary_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary (1-bit-per-dim) quantization audit — the 32× compression
     point beyond PQ's 16× (`emb_pq_adc`): each 64-dim float32 vector
-    collapses to 64 SIGN BITS (two packed BIGINTs), and candidate
-    ranking becomes bit_count(xor) — pure integer ALU work, the cheapest
-    possible scan kernel. Per query: overlap between the exact top-
-    {TOP_K} by cosine and the top-{TOP_K} by Hamming distance, both
-    ranked in ONE |Q|·N scan (two windows over the same scored pairs —
-    the `emb_truncation_audit` shape), so the keep-how-many-bits
-    decision is oracle-gated data. Packing is map-only engine-side SQL
-    (no Python); at index time the packed column is what you'd
-    materialize — 16 bytes/vector."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        "embedding",
-        F.expr(_pack_bits_expr("embedding", 0)).alias("b_lo"),
-        F.expr(_pack_bits_expr("embedding", _HAM_HALF)).alias("b_hi"),
-        # per-row norm hoisted below the pair join (round 10,
-        # `cosine_with_norms`): folded once per row, not once per pair
-        l2_norm("embedding").alias("nrm"),
+    collapses to 64 SIGN BITS, and candidate ranking becomes the count
+    of differing bits — pure integer work, the cheapest possible scan
+    kernel. Per query: overlap between the exact top-{TOP_K} by cosine
+    and the top-{TOP_K} by Hamming distance, both picked in ONE Arrow
+    batch scan (``_panel_topk``, ranking by the negated count) and ranked
+    by two windows over the candidates (the `emb_truncation_audit`
+    shape), so the keep-how-many-bits decision is oracle-gated data. At
+    index time the bits are what you'd materialize — 8 bytes/vector."""
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    bits = 2 * _HAM_HALF
+
+    def score(batch, x, panel):
+        ham = pairscore.sign_hamming(x[:, :bits], panel[:, :bits])
+        return {"cos": pairscore.cosines(x, panel)[0], "nham": -ham}
+
+    scored = _panel_topk(
+        spark, emb, TOP_K, score, "vec_id bigint, cos double, nham bigint"
     )
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("b_lo").alias("q_lo"),
-        F.col("b_hi").alias("q_hi"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    scored = (
-        emb.crossJoin(F.broadcast(queries))
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "vec_id",
-            cosine_with_norms("q_emb", "embedding", "q_nrm", "nrm").alias("cos"),
-            F.expr(
-                "bit_count(b_lo ^ q_lo) + bit_count(b_hi ^ q_hi)"
-            ).alias("ham"),
-        )
-    )
-    # both top-k picks in one pass over one salted exchange (round 10)
-    ranked = two_phase_rank_dual(
-        scored,
-        (F.desc("cos"), F.asc("vec_id")),
-        (F.asc("ham"), F.asc("vec_id")),
-        TOP_K,
-    )
-    return (
-        ranked.groupBy("q_id")
-        .agg(
-            F.sum(
-                (F.col("in_a") & F.col("in_b")).cast("long")
-            ).alias("n_overlap"),
-            F.min(F.when(F.col("in_a"), F.col("ham"))).alias(
-                "min_ham_of_true"
-            ),
-        )
-        .select(
-            "q_id",
-            F.lit(TOP_K).alias("k"),
-            "n_overlap",
-            (F.col("n_overlap").cast("double") / F.lit(float(TOP_K))).alias(
-                "overlap_frac"
-            ),
-            F.col("min_ham_of_true").cast("int").alias("min_ham_of_true"),
-        )
+    ham = F.when(F.col("in_cos"), -F.col("nham"))
+    return _overlap(
+        scored, "cos", "nham", min_ham_of_true=F.min(ham).cast("int")
     )
 
 
@@ -1955,7 +1929,10 @@ def emb_quantize_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
     setup). Per-dim stats are a {SQ8_DIMS}-cell aggregate collected to
     the driver (bounded by construction — the centroid-literal pattern)
     and ride into the scan as literals, so quantize+reconstruct is
-    MAP-ONLY; the oracle recomputes identical stats from the data."""
+    MAP-ONLY; the oracle recomputes identical stats from the data. One
+    Arrow batch scan (``_panel_topk``) scores both the exact and the
+    reconstructed vectors against the panel, and two windows over the
+    per-batch candidates pick the two top-{TOP_K} sets."""
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
@@ -1990,66 +1967,18 @@ def emb_quantize_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sequence(F.lit(1), F.lit(len(stats))), _recon
         ).alias("rembedding"),
     )
-    # per-row norms (exact AND reconstructed) hoisted below the pair
-    # join (round 10, `cosine_with_norms`): this entry folded FOUR norms per
-    # pair inline — including a norm over the derived rembedding, whose
-    # reconstruction transform the fold re-walked per pair — so the
-    # hoist removes 2/3 of its interpreted per-pair work. Separate
-    # select above `recon` so r_nrm references the named rembedding
-    # column rather than inlining the transform a second time.
-    recon = recon.select(
-        "vec_id",
-        "embedding",
-        "rembedding",
-        l2_norm("embedding").alias("e_nrm"),
-        l2_norm("rembedding").alias("r_nrm"),
+
+    def score(batch, x, panel):
+        r = pairscore.matrix(batch.column("rembedding"), panel.shape[1])
+        return {
+            "cx": pairscore.cosines(x, panel)[0],
+            "cr": pairscore.cosines(r, panel)[0],
+        }
+
+    scored = _panel_topk(
+        spark, recon, TOP_K, score, "vec_id bigint, cx double, cr double"
     )
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        l2_norm("embedding").alias("q_nrm"),
-    )
-    scored = (
-        recon.crossJoin(F.broadcast(queries))
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "vec_id",
-            cosine_with_norms("q_emb", "embedding", "q_nrm", "e_nrm").alias("cx"),
-            cosine_with_norms("q_emb", "rembedding", "q_nrm", "r_nrm").alias("cr"),
-        )
-    )
-    # round 10: the two_phase_rank_dual rewrite its siblings took
-    # (emb_truncation_audit 2.85×, emb_binary_hamming 4.0× at sf60de)
-    # was measured SLOWER here in two independent fresh-session
-    # min-of-N pairs at sf60de (31.8 s plain vs 52.5 s dual; first
-    # pair 54.3 vs 89.7 — ~1.6× both times), so per the
-    # measurement-decides rule the original two-window form stays.
-    # Mechanism attributed by the norm-hoist A/B (this round, below):
-    # the per-pair cost was dominated by the four interpreted norm
-    # folds — one over the derived rembedding — which the dual rewrite
-    # never touched while adding its exchange.
-    wx = Window.partitionBy("q_id").orderBy(F.desc("cx"), F.asc("vec_id"))
-    wr = Window.partitionBy("q_id").orderBy(F.desc("cr"), F.asc("vec_id"))
-    ranked = scored.withColumn("rx", F.row_number().over(wx)).withColumn(
-        "rr", F.row_number().over(wr)
-    )
-    return (
-        ranked.groupBy("q_id")
-        .agg(
-            F.sum(
-                ((F.col("rx") <= TOP_K) & (F.col("rr") <= TOP_K)).cast("long")
-            ).alias("n_overlap")
-        )
-        .select(
-            "q_id",
-            F.lit(TOP_K).alias("k"),
-            "n_overlap",
-            (F.col("n_overlap").cast("double") / F.lit(float(TOP_K))).alias(
-                "overlap_frac"
-            ),
-        )
-    )
+    return _overlap(scored, "cx", "cr")
 
 
 _SQ8_SQL = f"""
@@ -2248,35 +2177,21 @@ MMR_LAMBDA = 0.7
 
 
 def _mmr_shortlist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact per-query candidate shortlist for MMR (broadcast query
-    side + rank window). Factored out so
-    the test can replay the greedy loop in pure Python on the SAME
-    Spark-computed relevance values."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        "embedding",
-        # per-row norm hoisted below the pair join (round 10,
-        # `cosine_with_norms`): folded once per row, not once per pair
-        l2_norm("embedding").alias("nrm"),
-    )
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    pairs = (
-        emb.crossJoin(F.broadcast(queries))
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "q_emb",
-            "vec_id",
-            "embedding",
-            cosine_with_norms("q_emb", "embedding", "q_nrm", "nrm").alias("rel"),
-        )
+    """Exact per-query candidate shortlist for MMR: a rank window over
+    the per-batch candidates of ``_panel_topk``, each with its
+    embedding. Factored out so the test can replay the greedy loop in
+    pure Python on the SAME Spark-computed relevance values."""
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    cands = _panel_topk(
+        spark,
+        emb,
+        MMR_SHORTLIST,
+        lambda batch, x, panel: {"rel": pairscore.cosines(x, panel)[0]},
+        "vec_id bigint, embedding array<float>, rel double",
+        carry=("vec_id", "embedding"),
     )
     w = Window.partitionBy("q_id").orderBy(F.col("rel").desc(), F.col("vec_id"))
-    return pairs.withColumn("rnk", F.row_number().over(w)).filter(
+    return cands.withColumn("rnk", F.row_number().over(w)).filter(
         F.col("rnk") <= MMR_SHORTLIST
     )
 
@@ -2290,8 +2205,8 @@ def emb_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     feed the model 5 copies of the same paragraph). The greedy loop is
     inherently sequential, but only WITHIN a query over ≤{MMR_SHORTLIST}
     rows — so it runs as applyInPandas per q_id group (Arrow-batched,
-    bounded memory per group by construction) after the distributed
-    exact shortlist (broadcast query side, rank window). Rows-only entry:
+    bounded memory per group by construction) after the exact
+    shortlist (``_mmr_shortlist``). Rows-only entry:
     the greedy argmax over numpy doubles is not expressible as one SQL
     fold; the pytest reimplements MMR in pure Python on the
     oracle-verified brute-force shortlist and the outputs must agree
@@ -2354,58 +2269,38 @@ def emb_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     the triplet margin (cos_pos − cos_neg; negative margin ⇒ the
     negative out-scores every positive — a label-noise signal).
 
-    Plan: corpus × broadcast 20-query panel (map-only, linear), one
-    per-query top-k window (Spark 4 WindowGroupLimit keeps it
-    per-partition) and one max_by-style agg for the positive; margin is
-    a subtraction of identically-computed doubles, so it is
-    bit-portable across engines (SURVEY §4). At 100 TB the scorer
+    Plan: one Arrow batch scan of the corpus against the collected
+    20-query panel (``_panel_topk``, map-only, linear) picks each query's
+    top-k per batch among same-label and among other-label rows; one
+    window over those candidates ranks both, its rank-1 positive being
+    the best positive. The margin is a subtraction of
+    identically-computed doubles, so it is bit-portable across engines
+    (SURVEY §4). At 100 TB the scorer
     swaps to the IVF shortlist exactly as ann_recall_audit composes
     it; the contract (per-query top-k with label exclusion) is
     unchanged."""
     emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        "embedding",
-        "label",
-        # per-row norm hoisted below the pair join (round 10,
-        # `cosine_with_norms`): folded once per row, not once per pair
-        l2_norm("embedding").alias("nrm"),
+        "vec_id", "embedding", "label"
     )
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("label").alias("q_label"),
-        F.col("nrm").alias("q_nrm"),
+    pairs = _panel_topk(
+        spark,
+        emb,
+        HARD_NEG_K,
+        _cosine,
+        "q_label double, vec_id bigint, label int, cos double",
+        carry=("vec_id", "label"),
+        split="label",
     )
-    pairs = (
-        emb.crossJoin(F.broadcast(queries))
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "q_label",
-            "vec_id",
-            "label",
-            cosine_with_norms("q_emb", "embedding", "q_nrm", "nrm").alias("cos"),
-        )
-    )
-    # round 10: `pairs` used to feed the negatives window AND a
-    # separate positives max-aggregate, and each DataFrame reference
-    # plans its OWN subtree — the committed before-plan
-    # (plans/r10/emb_hard_negatives_before.txt) shows the corpus-sized
-    # BroadcastNestedLoopJoin + cosine chain TWICE (the
-    # ann_knn_graph_recall disease). One window partitioned by
-    # (q_id, is_pos) ranks positives and negatives in the same pass —
-    # rank-1 positive cos IS max(cos) over positives (same desc order,
-    # ties only tie on cos) — with the rank-limit filter keeping
-    # WindowGroupLimit(Partial) in play; the ≤ |Q|·2·K survivors are
-    # checkpoint-barriered so deriving both sides plans the brute
-    # chain once (guide §1.2).
+    # one window partitioned by (q_id, is_pos) ranks positives and
+    # negatives — rank-1 positive cos IS max(cos) over positives (same
+    # desc order, ties only tie on cos); the barrier lets both sides
+    # read the survivors without a second Python scan
     w2 = Window.partitionBy(
         "q_id", F.col("label") == F.col("q_label")
     ).orderBy(F.col("cos").desc(), F.col("vec_id"))
     survivors = (
         pairs.withColumn("rnk", F.row_number().over(w2))
         .filter(F.col("rnk") <= HARD_NEG_K)
-        .select("q_id", "q_label", "vec_id", "label", "cos", "rnk")
         .localCheckpoint(eager=False)
     )
     pos = (

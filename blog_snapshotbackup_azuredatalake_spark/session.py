@@ -48,6 +48,15 @@ def ensure_package_on_workers(spark: SparkSession) -> None:
     _shipped_ctx.add(id(sc))
 
 
+def default_driver_memory() -> str:
+    """The driver heap when ``SPARK_DRIVER_MEM`` is unset: half the host's
+    physical memory, at most 16g. A local-mode driver hosts every executor
+    thread, so it is sized for sf1+ runs, yet a second JVM beside it (a
+    test suite next to a verify drive) must still fit on the host."""
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{min(phys // 2, 16 << 30) >> 20}m"
+
+
 def get_session(
     app_name: str = "snapshotbackup-spark",
     shuffle_partitions: int | None = None,
@@ -75,10 +84,9 @@ def get_session(
         # events.parquet stores TIMESTAMP(NANOS), which Spark's parquet
         # reader rejects; read as raw nanos bigint and convert explicitly.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # local-mode driver hosts every executor thread; size for sf1+
-        # local runs (the box has 128 GiB — 16g leaves ample headroom)
         .config(
-            "spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g")
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory(),
         )
         # a guarded large broadcast (e.g. the triangle adjacency, ~3 GB
         # at 360 M edges) is BUILT by collecting to the driver, so it

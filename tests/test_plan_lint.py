@@ -208,12 +208,7 @@ def test_allowlist_not_stale():
 # ---------------------------------------------------------------------------
 
 # (path-suffix, enclosing function, var-name): measured-safe rationale
-DERIVED_ARRAY_ALLOW = {
-    ("operators/similarity.py", "emb_quantize_sq8", "recon"):
-        "negative A/B sf30de: checkpointing rembedding 20.9->18.0s "
-        "(14%) — under this crossJoin the transform evaluates per "
-        "corpus row, not per output row (SCALING.md round 8)",
-}
+DERIVED_ARRAY_ALLOW = {}
 
 _DERIVED_MARKERS = ("encode_sql(",)
 _ARRAY_BUILDERS = ("zip_with(", "F.transform(")

@@ -315,13 +315,27 @@ def test_semantic_decontamination_broadcasts_bench(spark):
     assert "SortMergeJoin" not in plan
 
 
-def test_panel_scorers_scan_arrow_batches(spark):
+def test_panel_scorers_scan_arrow_batches(spark, monkeypatch):
     """The query-panel scorers build no pair relation: each Arrow batch
     of the corpus scan keeps its per-query top-k, and only those
-    candidates are shuffled for the global window."""
-    from blog_snapshotbackup_azuredatalake_spark.operators import similarity
+    candidates are shuffled for the global window. The localCheckpoint
+    barriers over the candidates are lifted so the scan stays in the
+    plan; the kNN graph substrate is built (and checkpointed) first."""
+    from blog_snapshotbackup_azuredatalake_spark.operators import graph, similarity
 
-    for entry in (similarity.ann_topk_bruteforce, similarity.emb_truncation_audit):
+    graph.knn_graph_cached(spark, SF_DIR)
+    monkeypatch.setattr(
+        type(spark.range(1)), "localCheckpoint", lambda self, eager=True: self
+    )
+    for entry in (
+        similarity.ann_topk_bruteforce,
+        similarity.emb_truncation_audit,
+        similarity.ann_knn_graph_recall,
+        similarity.emb_binary_hamming,
+        similarity.emb_quantize_sq8,
+        similarity.emb_mmr_diversify,
+        similarity.emb_hard_negatives,
+    ):
         _scan_feeds_map_in_arrow(_plan(entry(spark, SF_DIR)))
 
 
