@@ -22,7 +22,10 @@ from pyspark.sql import functions as F
 from blog_snapshotbackup_azuredatalake_spark.functions.centroids import (
     Centroids,
 )
-from blog_snapshotbackup_azuredatalake_spark.sources.catalog import load_table
+from blog_snapshotbackup_azuredatalake_spark.sources.catalog import (
+    load_table,
+    local_frame,
+)
 
 K = 8
 ITERATIONS = 3
@@ -77,7 +80,8 @@ def _recompute(spark: SparkSession, assigned: DataFrame) -> DataFrame:
         (cid, [dims_map[i] for i in range(len(dims_map))])
         for cid, dims_map in sorted(by_centroid.items())
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         data, "centroid_id bigint, c_emb array<double>"
     )
 
@@ -213,7 +217,8 @@ def emb_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for rank, dim in enumerate(top)
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "rank int, dim int, loading double, eigenvalue double,"
         " var_explained double, n_iter int",

@@ -389,11 +389,13 @@ def corpus_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles for the overlap test; only the final per-source stats
     group-by does. Reports contamination counts per source."""
     from blog_snapshotbackup_azuredatalake_spark.operators.dedup import (
-        grams_for,
+        grams_cached,
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    grams = grams_for(docs)  # (doc_id, sh: array<bigint>)
+    # the near-dup family's cached gram sets: both branches (and the
+    # dedup entries) read one Arrow gram scan per session
+    grams = grams_cached(spark, sf_dir)  # (doc_id, sh: array<bigint>)
     bench_g = (
         grams.filter(F.col("doc_id") % BENCH_MOD == 0)
         .select(F.explode_outer("sh").alias("g"))
@@ -1925,10 +1927,9 @@ def corpus_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    # checkpoint before explode + self-join: without it CollapseProject
-    # re-inlines the token-hash array into the gram lambda in BOTH join
-    # branches (the grams_for O(n²) trap; measured 144 s → ~2 s at
-    # sf0.1 — same fix as text_gram_novelty / dedup_cluster_cc)
+    # checkpoint before explode + self-join: both join branches read
+    # the one materialized gram set, so the Arrow gram scan runs once
+    # (as in text_gram_novelty)
     pairs = (
         grams_for(docs, keep=("source",))
         .localCheckpoint(eager=True)

@@ -11,16 +11,20 @@ unigrams saturate (every long doc shares most of the vocab) while 5-grams
 isolate the planted near-duplicates (25 pairs with J≥0.5 at sf0.01).
 
 Shingles are carried as NUMERIC rolling hashes, never as strings: one
-md5 per token (the only md5 in the whole pipeline — SURVEY.md §4's
-portable primitive), then 5-gram fingerprints by polynomial combination
-mod a 31-bit prime, minhash permutations as affine maps over those
-fingerprints, and band keys as packed bigints. Everything downstream of
-tokenization is integer arithmetic inside whole-stage codegen; the
-DuckDB oracle recomputes the identical integers. (An earlier revision
-built 5-gram *strings* and re-md5'd them 16× for minhash — 3× slower
-end-to-end.) 31-bit fingerprints keep every product below 2^62: Spark
-would wrap silently on bigint overflow while DuckDB throws, so staying
-overflow-free is what keeps the two engines bit-identical.
+md5 per distinct token (the only md5 in the whole pipeline — SURVEY.md
+§4's portable primitive), then 5-gram fingerprints by polynomial
+combination mod a 31-bit prime, minhash permutations as affine maps over
+those fingerprints, and band keys as packed bigints. The gram sets and
+the band index are integer work on token ids in one Arrow batch scan
+each (``functions/tokens.py``, numpy under ``mapInArrow``), not Spark
+higher-order lambdas, which run interpreted (CodegenFallback), one
+boxed call per element. Pair generation and verification downstream are
+Spark joins and array built-ins; the DuckDB oracle recomputes the
+identical integers. (An earlier revision built 5-gram *strings* and
+re-md5'd them 16× for minhash — 3× slower end-to-end.) 31-bit
+fingerprints keep every product below 2^62: Spark would wrap silently on
+bigint overflow while DuckDB throws, so staying overflow-free is what
+keeps the two engines bit-identical.
 """
 
 from __future__ import annotations
@@ -29,12 +33,21 @@ import hashlib
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    IntegerType,
+    LongType,
+    StructField,
+    StructType,
+)
 
 from blog_snapshotbackup_azuredatalake_spark import substrate
+from blog_snapshotbackup_azuredatalake_spark.functions import tokens
 from blog_snapshotbackup_azuredatalake_spark.functions.hashing import (
     hash60,
     sql_md5_int60,
 )
+from blog_snapshotbackup_azuredatalake_spark.functions.tokens import K_POLY, P31
 from blog_snapshotbackup_azuredatalake_spark.functions.vectors import (
     cosine_with_norms,
     l2_norm,
@@ -42,7 +55,13 @@ from blog_snapshotbackup_azuredatalake_spark.functions.vectors import (
     sql_cosine,
     sql_sign_bucket,
 )
-from blog_snapshotbackup_azuredatalake_spark.sources.catalog import load_table
+from blog_snapshotbackup_azuredatalake_spark.session import (
+    ensure_package_on_workers,
+)
+from blog_snapshotbackup_azuredatalake_spark.sources.catalog import (
+    load_table,
+    local_frame,
+)
 
 JACCARD_THRESHOLD = 0.5
 # stop-shingle cap: grams in more docs than this are excluded from the
@@ -69,9 +88,6 @@ EMB_ANCHOR_DIMS = 16
 # Recall cost of the cap is MEASURED by dedup_lsh_calibration.
 MATCH_CAP = 8
 
-P31 = 2_147_483_647  # 2^31 - 1 (prime); all fingerprints live in [0, P31)
-K_POLY = 1_000_003  # rolling-hash base, < 2^31 so products stay < 2^62
-
 
 def _affine_consts(tag: str, n: int) -> list[tuple[int, int]]:
     """Deterministic (a, b) pairs for affine hashes mod P31, derived
@@ -89,32 +105,17 @@ _SIMHASH_AB = _affine_consts("sim", 2)
 
 def grams_for(docs: DataFrame, keep: tuple[str, ...] = ()) -> DataFrame:
     """(doc_id, text, …) → (doc_id, *keep, sh: array<bigint>) — distinct
-    token-5-gram fingerprints in [0, P31): md5-hash each token once,
-    then fold 5-token windows with the rolling polynomial
-    (acc * K + tok) mod P. No gram strings are materialized.
-
-    Two separate projections on purpose: the token-hash array must be a
-    bound column before the gram lambda indexes into it five times —
-    inlined, Catalyst re-evaluates the whole split+md5 array per
-    element_at, turning O(n) token hashing into O(n²) per document
-    (measured 12× slower end-to-end at sf0.1)."""
-    toks = F.transform(
-        F.split(F.col("text"), " "), lambda t: hash60(F.md5(t)) % P31
+    token-5-gram fingerprints in [0, P31), in first-occurrence order:
+    md5-hash each distinct token once, then fold 5-token windows with the
+    rolling polynomial (acc * K + tok) mod P. One Arrow batch scan
+    (``tokens.grams``); no gram strings are materialized."""
+    ensure_package_on_workers(docs.sparkSession)
+    cols = ["doc_id", *keep]
+    schema = StructType(
+        [*(docs.schema[c] for c in cols), StructField("sh", ArrayType(LongType()))]
     )
-    th = F.col("th")
-
-    def gram(i: Column) -> Column:
-        acc = F.element_at(th, i)
-        for off in range(1, 5):
-            acc = (acc * K_POLY + F.element_at(th, i + off)) % P31
-        return acc
-
-    grams = F.transform(F.sequence(F.lit(1), F.size(th) - 4), gram)
-    sh = F.when(F.size(th) >= 5, F.array_distinct(grams)).otherwise(
-        F.expr("CAST(array() AS array<bigint>)")
-    )
-    return docs.select("doc_id", *keep, toks.alias("th")).select(
-        "doc_id", *keep, sh.alias("sh")
+    return docs.select(*cols, "text").mapInArrow(
+        lambda batches: (tokens.grams(b, cols) for b in batches), schema
     )
 
 
@@ -445,41 +446,23 @@ QUALIFY ROW_NUMBER() OVER (PARTITION BY doc_a
 # ---------------------------------------------------------------------------
 
 
-def _minhash_col(j: int) -> Column:
-    a, b = _MINHASH_AB[j]
-    return F.array_min(F.transform(F.col("sh"), lambda v: (v * a + b) % P31))
-
-
 def mh_bands(docs: DataFrame) -> DataFrame:
     """(doc_id, sh) → the LSH band index (doc_id, band_id, band_hash):
     MinHash(16 affine perms over gram fingerprints) packed into 8 bands
-    of 2. This is the thing a production pipeline PERSISTS — incremental
-    dedup probes it instead of re-banding the corpus."""
-    mh = docs.select(
-        "doc_id",
-        "sh",
-        *[_minhash_col(j).alias(f"mh{j}") for j in range(MINHASH_PERMS)],
+    of 2, one Arrow batch scan (``tokens.bands``); a doc with no grams
+    has 8 NULL keys. This is the thing a production pipeline PERSISTS —
+    incremental dedup probes it instead of re-banding the corpus."""
+    ensure_package_on_workers(docs.sparkSession)
+    schema = StructType(
+        [
+            docs.schema["doc_id"],
+            StructField("band_id", IntegerType()),
+            StructField("band_hash", LongType()),
+        ]
     )
-    return mh.select(
-        "doc_id",
-        # explode_outer: the band array is constant-size 8, and plain
-        # explode would infer a size()>0 filter that re-inlines all 16
-        # minhash expressions below this projection (see postings above)
-        F.explode_outer(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_id"),
-                        # both minhashes < 2^31: pack into one bigint key
-                        (
-                            F.col(f"mh{2 * b}") * P31 + F.col(f"mh{2 * b + 1}")
-                        ).alias("band_hash"),
-                    )
-                    for b in range(MINHASH_BANDS)
-                ]
-            )
-        ).alias("band"),
-    ).select("doc_id", "band.band_id", "band.band_hash")
+    return docs.select("doc_id", "sh").mapInArrow(
+        lambda batches: (tokens.bands(b, _MINHASH_AB) for b in batches), schema
+    )
 
 
 def _verify_jaccard(cand: DataFrame, docs: DataFrame) -> DataFrame:
@@ -586,10 +569,8 @@ dedup_cache_clear = substrate.clear
 def grams_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Build-if-absent (doc_id, sh) fingerprint frame over the full
     documents table, cached COLUMNAR (persist MEMORY_AND_DISK + count
-    — compressed, spillable; the §6 recipe for corpus-sized bases).
-    The materialization barrier also keeps CollapseProject from
-    re-inlining the token-hash array into the gram lambda when the
-    relation feeds a join (§6 trap — measured O(tokens²·md5))."""
+    — compressed, spillable; the §6 recipe for corpus-sized bases), so
+    the Arrow gram scan runs once per session for every consumer."""
     return substrate.cached(
         spark,
         sf_dir,
@@ -871,8 +852,10 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates: higher-order `aggregate` lambdas are interpreted per
     element (32 passes/doc), while the groupBy stays in whole-stage
     codegen and partial-aggregates to 33 longs per doc before the
-    shuffle (measured 1.4× on the sim stage at sf0.1)."""
-    docs = _docs_with_grams(spark, sf_dir)
+    shuffle (measured 1.4× on the sim stage at sf0.1). The grams come
+    from the session substrate cache: the plan reads them in five
+    branches, and the cache runs the Arrow gram scan once."""
+    docs = grams_cached(spark, sf_dir)
     ex = docs.select("doc_id", F.explode_outer("sh").alias("g")).select(
         "doc_id", _mix32(F.col("g")).alias("v")
     )
@@ -1273,9 +1256,9 @@ SPAN_K = 8  # span length in tokens (Lee et al. use 50 BPE tokens; the
 def _span_grams(docs: DataFrame) -> DataFrame:
     """(doc_id, source, text) → (doc_id, source, g: array<bigint>) —
     POSITIONAL (non-distinct) rolling {SPAN_K}-token-gram hashes, one
-    per span start, so span *coverage* can be measured. Same two-step
-    projection as ``grams_for`` (token-hash array bound before the gram
-    lambda — the HOF-inlining trap in SURVEY §6)."""
+    per span start, so span *coverage* can be measured. Two projections:
+    the token-hash array is bound before the gram lambda indexes it (the
+    HOF-inlining trap in SURVEY §6)."""
     toks = F.transform(
         F.split(F.col("text"), " "), lambda t: hash60(F.md5(t)) % P31
     )
@@ -1408,7 +1391,8 @@ def dedup_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     joined = best.join(docs, "doc_b")
     total = docs.groupBy().agg(F.sum("toks").alias("tok_total"))
-    taus = spark.createDataFrame(
+    taus = local_frame(
+        spark,
         [(t,) for t in DEDUP_TAUS], "tau double"
     )
     return (

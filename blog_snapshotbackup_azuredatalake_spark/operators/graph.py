@@ -42,7 +42,10 @@ from blog_snapshotbackup_azuredatalake_spark.functions.hashing import (
 from blog_snapshotbackup_azuredatalake_spark.operators.dedup import (
     sql_star_pair_ctes,
 )
-from blog_snapshotbackup_azuredatalake_spark.sources.catalog import load_table
+from blog_snapshotbackup_azuredatalake_spark.sources.catalog import (
+    load_table,
+    local_frame,
+)
 
 MAX_CC_ITERS = 20
 
@@ -1297,7 +1300,8 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce(F.sum("c"), F.lit(0)).alias("s2"),
         ).collect()[0]
         rows.append((rnd, KCORE_K, stats["n"], stats["s2"] // 2))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows, "round int, k int, n_nodes bigint, n_edges bigint"
     )
 
@@ -1443,7 +1447,8 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     num = 4 * m * intra - dsq["sum_dsq"]
     den = 4 * m * m
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 m,
@@ -1572,7 +1577,8 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     num = n * sxy - sx * sx
     den = n * sxx - sx * sx
     r = 0.0 if den == 0 else float(num) / float(den)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(n, sx, sxx, sxy, r)],
         "n_edge_ends bigint, sum_deg bigint, sum_deg_sq bigint,"
         " sum_deg_prod bigint, assortativity double",

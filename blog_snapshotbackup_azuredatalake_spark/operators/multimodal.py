@@ -628,7 +628,8 @@ def mm_cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     staged = docs.select("doc_id", "source", payload.alias("s"))
     # char codes computed ONCE per payload, bound as a column in their
-    # own projection (the grams_for two-projection guard) — the window
+    # own projection (SURVEY.md §6: a lambda indexing an unbound array
+    # re-evaluates it per element) — the window
     # hash is then a pure integer polynomial per position. The naive
     # md5(substring)-per-position variant measured 35 s at sf1 (7 µs of
     # interpreted string/md5/conv per candidate); this is the same
@@ -662,7 +663,7 @@ def mm_cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # checkpoint the coded relation: CollapseProject otherwise inlines
     # the codes transform into all 8 element_ats of every position's
-    # polynomial and planning/eval blows up (the grams_for trap again —
+    # polynomial and planning/eval blows up (the same §6 trap —
     # measured: hangs at sf0.01 without this, 2 s with it)
     coded = staged.select(
         "source", "s", F.expr(codes_sql).alias("cc")

@@ -35,7 +35,10 @@ from blog_snapshotbackup_azuredatalake_spark.functions.hashing import (
     md5_int60,
     sql_md5_int60,
 )
-from blog_snapshotbackup_azuredatalake_spark.sources.catalog import load_table
+from blog_snapshotbackup_azuredatalake_spark.sources.catalog import (
+    load_table,
+    local_frame,
+)
 
 _DQ_COLS = (
     "o_orderkey",
@@ -265,7 +268,8 @@ def snap_schema_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             rows.append((name, "type_changed", cur[name], nxt[name]))
         else:
             rows.append((name, "unchanged", cur[name], nxt[name]))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows, "col_name string, change string, from_type string, to_type string"
     )
 

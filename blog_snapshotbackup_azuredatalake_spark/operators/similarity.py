@@ -65,7 +65,10 @@ from blog_snapshotbackup_azuredatalake_spark.functions.pq import (
 from blog_snapshotbackup_azuredatalake_spark.session import (
     ensure_package_on_workers,
 )
-from blog_snapshotbackup_azuredatalake_spark.sources.catalog import load_table
+from blog_snapshotbackup_azuredatalake_spark.sources.catalog import (
+    load_table,
+    local_frame,
+)
 
 N_QUERIES = 20
 TOP_K = 5
@@ -997,7 +1000,8 @@ def _pq_query_tables(
 ) -> DataFrame:
     """(q_id, t): each query's ADC table, as DATA — |Q|×(PQ_M·PQ_K)
     bigints ride a broadcast frame, not ~10k literal expression nodes."""
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (int(r["q_id"]), pq.table([float(x) for x in r["q_emb"]]))
             for r in _pq_query_rows(emb)
@@ -1165,7 +1169,8 @@ def ann_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             cosine_with_norms("q_emb", "embedding", "q_nrm", "nrm").alias("cos"),
         )
     )
-    grid = spark.createDataFrame(
+    grid = local_frame(
+        spark,
         [(int(v),) for v in NPROBE_GRID], "nprobe int"
     )
     cands = pairs.join(F.broadcast(grid), F.col("p") <= F.col("nprobe"))
@@ -1546,7 +1551,8 @@ def ann_topk_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
         for _, cid in byc:
             qres = [a - b for a, b in zip(qv, cmap[cid])]
             qtabs.append((int(qr["q_id"]), int(cid), pq.table(qres)))
-    qdf = spark.createDataFrame(
+    qdf = local_frame(
+        spark,
         qtabs, "q_id bigint, list_id bigint, t array<bigint>"
     )
     shortlist = pq.adc_shortlist(coded.join(F.broadcast(qdf), "list_id"))

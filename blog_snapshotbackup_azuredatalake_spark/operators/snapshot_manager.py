@@ -87,6 +87,7 @@ from blog_snapshotbackup_azuredatalake_spark.functions.hashing import (
     sql_row_hash,
 )
 from blog_snapshotbackup_azuredatalake_spark.operators.txnlog import TransactionLog
+from blog_snapshotbackup_azuredatalake_spark.sources.catalog import local_frame
 
 
 def _observed(obs: Observation) -> dict:
@@ -587,7 +588,8 @@ def snap_txn_log(spark: SparkSession, sf_dir: str) -> DataFrame:
                         a[act]["path"] in live,
                     )
                 )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows, "version int, op string, action string, path string, live boolean"
     )
 
@@ -627,7 +629,8 @@ def snap_txn_conflict(spark: SparkSession, sf_dir: str) -> DataFrame:
             (h["version"], h["op"], h["n_add"], n_conflicts)
             for h in log.history()
         ]
-    out = spark.createDataFrame(
+    out = local_frame(
+        spark,
         rows, "version int, op string, n_add bigint, n_conflicts int"
     )
     return out.withColumn(
@@ -695,7 +698,8 @@ def snap_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for r in report
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "path string, files int, has_bytes boolean, status string,"
         " deleted boolean, restore_intact boolean, vacuum_logged boolean",
@@ -752,7 +756,7 @@ def snap_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
             ("clone_commit_logged",
              any(h["op"] == "clone" for h in mgr.log.history())),
         ]
-    return spark.createDataFrame(checks, "check string, ok boolean")
+    return local_frame(spark, checks, "check string, ok boolean")
 
 
 def snap_restore_drill(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -796,7 +800,8 @@ def snap_restore_drill(spark: SparkSession, sf_dir: str) -> DataFrame:
             rn, rx = fingerprint(mgr.restore("orders", sid))
             dn, dx = fingerprint(direct)
             rows.append((ver, chain_len, rn, rx, (rn, rx) == (dn, dx)))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "version int, chain_len int, n_rows bigint, xor_checksum bigint,"
         " checksum_match boolean",

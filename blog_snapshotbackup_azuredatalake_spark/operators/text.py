@@ -1,10 +1,13 @@
 """Text-analysis operators for training-data curation (SURVEY.md §2C).
 
-All four operators run entirely in JVM built-ins (split / filter /
-aggregate / transform over the token array) — whole-stage codegen, no
-Python in the hot path, embarrassingly parallel over documents. Ratios
-are double divisions of exact integer counts so Spark and the DuckDB
-oracle agree bit-for-bit (SURVEY.md §4).
+The operators run in JVM built-ins (split / filter / aggregate /
+transform over the token array), embarrassingly parallel over
+documents, except the two bigram LMs (``text_ngram_lm``,
+``text_perplexity_filter``) and the gram-set callers of
+``dedup.grams_for``: their token work is one Arrow batch scan each
+(``functions/tokens.py``, numpy under ``mapInArrow``). Ratios are
+double divisions of exact integer counts so Spark and the DuckDB oracle
+agree bit-for-bit (SURVEY.md §4).
 
 The driver's synthetic corpus is lowercase `[a-z ]` text over a 31-word
 vocabulary, so tokenization is a literal space split and the language-ID
@@ -19,12 +22,17 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from blog_snapshotbackup_azuredatalake_spark.functions import tokens
 from blog_snapshotbackup_azuredatalake_spark.functions.hashing import (
     hash60,
     sql_md5_int60,
 )
 from blog_snapshotbackup_azuredatalake_spark.functions.skew import (
     two_phase_rank,
+)
+from blog_snapshotbackup_azuredatalake_spark.functions.tokens import LM_SCALE
+from blog_snapshotbackup_azuredatalake_spark.session import (
+    ensure_package_on_workers,
 )
 from blog_snapshotbackup_azuredatalake_spark.sources.catalog import load_table
 
@@ -776,8 +784,42 @@ WHERE rank <= {TFIDF_TOPK}
 """
 
 
-LM_SCALE = 256  # fixed-point denominator for bucketed probabilities
 LM_LOWQ_NUM, LM_LOWQ_DEN = 3, 10  # "low quality" = avg prob < 3/10
+
+
+def _bigram_counts(docs: DataFrame) -> DataFrame:
+    """(w1, w2, c): the bigram LM counts of ``docs``' text, the rows of
+    ``tokens.BigramModel``. Each Arrow batch emits its partial pair
+    counts and vocabulary (``tokens.bigram_counts``); one small aggregate
+    sums them. Vocab²-bounded, as the model is, so it is collected."""
+    ensure_package_on_workers(docs.sparkSession)
+    return (
+        docs.select("text")
+        .mapInArrow(
+            lambda batches: map(tokens.bigram_counts, batches),
+            "w1 string, w2 string, c bigint",
+        )
+        .groupBy("w1", "w2")
+        .agg(F.sum("c").alias("c"))
+    )
+
+
+def _bigram_scores(
+    docs: DataFrame, model: tokens.BigramModel, by: str
+) -> DataFrame:
+    """(doc_id, by, n_bigrams, score_fp) per document: its bigram count
+    and the exact BIGINT sum of its buckets under ``model``, summed over
+    the rows of a doc_id. One Arrow batch scan (``model.scores``, the
+    model in its closure); a document with no bigram has no row."""
+    ensure_package_on_workers(docs.sparkSession)
+    cols = ["doc_id", by]
+    per_row = docs.select(*cols, "text").mapInArrow(
+        lambda batches: (model.scores(b, cols) for b in batches),
+        f"doc_id bigint, {by} string, n_bigrams bigint, score_fp bigint",
+    )
+    return per_row.groupBy(*cols).agg(
+        F.sum("n_bigrams").alias("n_bigrams"), F.sum("score_fp").alias("score_fp")
+    )
 
 
 def text_ngram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -790,59 +832,17 @@ def text_ngram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact BIGINT sum — order-independent, bit-identical on any engine
     (SURVEY.md §4: never hash a raw double sum).
 
-    Scale: the model is vocab²-bounded (KBs even for real vocabularies)
-    and rides broadcast; the token stream shuffles twice (model count,
-    per-doc score) — the dedup_substring profile. Output: per-source
-    doc counts, exact fixed-point mass, avg bigram probability, and the
-    would-be-filtered doc count (avg prob < 0.3, integer cross-multiply
-    compare)."""
+    Scale: two Arrow batch scans of the text (``functions/tokens.py``).
+    The first counts bigrams per batch; one small aggregate sums the
+    vocab²-bounded model (KBs even for real vocabularies) onto the
+    driver. The second scores each document under that model in the
+    scan's closure and emits one row per document, so only per-document
+    rows shuffle. Output: per-source doc counts, exact fixed-point mass,
+    avg bigram probability, and the would-be-filtered doc count (avg
+    prob < 0.3, integer cross-multiply compare)."""
     docs = load_table(spark, sf_dir, "documents")
-    # bind toks, then the bigram array, each in its own projection
-    # (HOF-inlining trap, SURVEY.md §6)
-    toked = docs.select("doc_id", "source", _tokens().alias("toks"))
-    with_bg = toked.select(
-        "doc_id",
-        "source",
-        F.when(
-            F.size("toks") < 2, F.array().cast("array<struct<w1:string,w2:string>>")
-        )
-        .otherwise(
-            F.expr(
-                "transform(slice(toks, 1, size(toks) - 1),"
-                " (t, i) -> struct(t AS w1, toks[i + 1] AS w2))"
-            )
-        )
-        .alias("bgs"),
-    )
-    bigr = with_bg.select(
-        "doc_id", "source", F.explode_outer("bgs").alias("bg")
-    ).filter(F.col("bg").isNotNull()).select(
-        "doc_id", "source", F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2")
-    )
-    model = bigr.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
-    heads = model.groupBy("w1").agg(F.sum("c12").alias("c1"))
-    vocab = (
-        toked.select(F.explode_outer("toks").alias("tok"))
-        .filter(F.col("tok") != "")
-        .agg(F.countDistinct("tok").alias("v"))
-    )
-    model_p = (
-        model.join(heads, "w1")
-        .crossJoin(F.broadcast(vocab))
-        .select(
-            "w1",
-            "w2",
-            F.expr(f"(c12 + 1) * {LM_SCALE} div (c1 + v)").alias("bucket"),
-        )
-    )
-    per_doc = (
-        bigr.join(F.broadcast(model_p), ["w1", "w2"])
-        .groupBy("doc_id", "source")
-        .agg(
-            F.count(F.lit(1)).alias("n_bigrams"),
-            F.sum("bucket").alias("score_fp"),
-        )
-    )
+    model = tokens.BigramModel(_bigram_counts(docs).toArrow())
+    per_doc = _bigram_scores(docs, model, "source")
     return (
         per_doc.groupBy("source")
         .agg(
@@ -1252,68 +1252,30 @@ def text_perplexity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     decision is row-level data.
 
     Unseen mass is handled by Laplace smoothing evaluated with missing
-    counts as zero: bucket = (c12+1)·S div (c1+v) after LEFT joins to
-    the pair and head count tables — a pure integer function, so every
-    aggregate is an exact BIGINT sum (SURVEY.md §4, no raw double
-    sums). Scale: the model is vocab²-bounded (KBs) and rides
-    broadcast — bounded by construction for function-word-sized
+    counts as zero: bucket = (c12+1)·S div (c1+v), an unseen pair or
+    head counting 0 — a pure integer function, so every aggregate is an
+    exact BIGINT sum (SURVEY.md §4, no raw double sums). Scale: the
+    model is counted from the trusted slice's scan (the lang filter
+    reaches the parquet reader) and collected to the driver —
+    vocab²-bounded by construction for function-word-sized
     vocabularies; for open web vocab, cap the model to the top-k pairs
-    and the same plan holds. The token stream shuffles once for model
-    counts; scoring is a map-only broadcast probe."""
+    and the same plan holds. Scoring is one Arrow batch scan of every
+    document with the model in its closure (``functions/tokens.py``)."""
     docs = load_table(spark, sf_dir, "documents")
-    toked = docs.select("doc_id", "lang", _tokens().alias("toks"))
-    with_bg = toked.select(
+    trusted = docs.filter(F.col("lang") == LM_TRUSTED_LANG)
+    model = tokens.BigramModel(_bigram_counts(trusted).toArrow())
+    return _bigram_scores(docs, model, "lang").select(
         "doc_id",
         "lang",
-        F.when(
-            F.size("toks") < 2,
-            F.array().cast("array<struct<w1:string,w2:string>>"),
-        )
-        .otherwise(
-            F.expr(
-                "transform(slice(toks, 1, size(toks) - 1),"
-                " (t, i) -> struct(t AS w1, toks[i + 1] AS w2))"
-            )
-        )
-        .alias("bgs"),
-    )
-    bigr = (
-        with_bg.select("doc_id", "lang", F.explode_outer("bgs").alias("bg"))
-        .filter(F.col("bg").isNotNull())
-        .select("doc_id", "lang", F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))
-    )
-    trusted = bigr.filter(F.col("lang") == LM_TRUSTED_LANG)
-    model = trusted.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
-    heads = model.groupBy("w1").agg(F.sum("c12").alias("c1"))
-    vocab = (
-        toked.filter(F.col("lang") == LM_TRUSTED_LANG)
-        .select(F.explode_outer("toks").alias("tok"))
-        .filter(F.col("tok") != "")
-        .agg(F.countDistinct("tok").alias("v"))
-    )
-    scored = (
-        bigr.join(F.broadcast(model), ["w1", "w2"], "left")
-        .join(F.broadcast(heads), "w1", "left")
-        .crossJoin(F.broadcast(vocab))
-        .select(
-            "doc_id",
-            "lang",
-            F.expr(
-                f"(coalesce(c12, 0) + 1) * {LM_SCALE}"
-                " div (coalesce(c1, 0) + v)"
-            ).alias("bucket"),
-        )
-    )
-    return scored.groupBy("doc_id", "lang").agg(
-        F.count(F.lit(1)).alias("n_bigrams"),
-        F.sum("bucket").alias("score_fp"),
+        "n_bigrams",
+        "score_fp",
         (
-            F.sum("bucket").cast("double")
-            / (F.lit(LM_SCALE) * F.count(F.lit(1))).cast("double")
+            F.col("score_fp").cast("double")
+            / (F.lit(LM_SCALE) * F.col("n_bigrams")).cast("double")
         ).alias("avg_bigram_prob"),
         (
-            F.sum("bucket") * LM_LOWQ_DEN
-            < F.lit(LM_LOWQ_NUM * LM_SCALE) * F.count(F.lit(1))
+            F.col("score_fp") * LM_LOWQ_DEN
+            < F.lit(LM_LOWQ_NUM * LM_SCALE) * F.col("n_bigrams")
         ).alias("flagged"),
     )
 
@@ -1376,11 +1338,8 @@ def text_gram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    # checkpoint BEFORE the explode+join: the join forces fresh
-    # projections in both branches and CollapseProject re-inlines the
-    # token-hash array into every element_at of the gram lambda — the
-    # O(tokens²·md5) trap grams_for's two-projection guard exists for.
-    # Measured: 297 s → ~2 s at sf0.1 (the dedup_cluster_cc pattern).
+    # checkpoint BEFORE the explode+join: both join branches read the
+    # one materialized gram set, so the Arrow gram scan runs once
     g = (
         grams_for(docs, keep=("source",))
         .localCheckpoint(eager=True)

@@ -12,7 +12,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from blog_snapshotbackup_azuredatalake_spark.sources.catalog import load_table
+from blog_snapshotbackup_azuredatalake_spark.sources.catalog import (
+    load_table,
+    local_frame,
+)
 
 TOP_HEAVY = 5
 
@@ -245,10 +248,13 @@ def diag_plan_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("emb_pq_adc", "literal_codebook_encode_map_only",
          "array_min" in penc and "Exchange" not in penc)
     )
+    # the score pass scans Arrow batches of the text with the collected
+    # model in its closure: no exploded token stream, no join
     plm = plan_of(text_ngram_lm(spark, sf_dir))
     checks.append(
-        ("text_ngram_lm", "lm_model_broadcasts",
-         "BroadcastHashJoin" in plm)
+        ("text_ngram_lm", "lm_scores_scan_arrow_batches",
+         "MapInArrow" in plm and "Generate" not in plm
+         and "SortMergeJoin" not in plm)
     )
     from blog_snapshotbackup_azuredatalake_spark.operators.similarity import (
         ann_topk_ivfpq,
@@ -272,7 +278,8 @@ def diag_plan_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("q_forecast_seasonal_naive", "single_events_scan",
          psn.count("Scan parquet") == 2)
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         checks, "query string, plan_property string, ok boolean"
     )
 
@@ -308,7 +315,8 @@ def diag_observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     row = result.collect()[0]  # the ONE action both result and metrics ride
     m = obs.get
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 m["n_input_rows"],

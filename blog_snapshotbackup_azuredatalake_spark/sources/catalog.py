@@ -8,8 +8,11 @@ pushdown reach the scan for free.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -146,3 +149,17 @@ def load_path(
     if schema is not None:
         reader = reader.schema(schema)
     return reader.load(path)
+
+
+def local_frame(spark: SparkSession, rows, ddl: str) -> DataFrame:
+    """A DataFrame of driver-side ``rows`` (tuples in the column order of
+    the DDL schema ``ddl``), built from an Arrow table so it plans a
+    ``LocalTableScan``. A Python list plans a scan of a pickled RDD
+    instead, and each result then runs a job in a Python worker."""
+    schema = StructType.fromDDL(ddl)
+    arrow = to_arrow_schema(schema)
+    table = pa.table(
+        [pa.array([r[i] for r in rows], f.type) for i, f in enumerate(arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, schema)

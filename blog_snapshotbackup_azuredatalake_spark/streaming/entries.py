@@ -21,7 +21,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from blog_snapshotbackup_azuredatalake_spark.scratch import scratch_dir
-from blog_snapshotbackup_azuredatalake_spark.sources.catalog import load_table
+from blog_snapshotbackup_azuredatalake_spark.sources.catalog import (
+    load_table,
+    local_frame,
+)
 from blog_snapshotbackup_azuredatalake_spark.streaming.incremental import (
     dedup_events_stream,
     incremental_sync,
@@ -1091,7 +1094,7 @@ def stream_apply_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
          mgr._read_meta("orders", rid)["kind"] == "full"
          and (post["n"], post["x"]) == (want["n"], want["x"])),
     ]
-    return spark.createDataFrame(checks, "check string, ok boolean")
+    return local_frame(spark, checks, "check string, ok boolean")
 
 
 # defined below the registry block, so registered here

@@ -19,9 +19,10 @@ Allowlist keys are (path-suffix, enclosing-function, var-name) — NOT
 just (path, var) — so a future explode-derived variable reusing an
 allowlisted name in a different function is still linted (round-6
 ADVICE). test_allowlist_not_stale asserts every ALLOW key still
-matches a live explode-derived assignment, so a refactor that renames
-or checkpoints a guarded variable fails the suite loudly instead of
-leaving a dead entry silently covering new code.
+covers a join the lint would otherwise flag, so a refactor that
+renames or checkpoints a guarded variable, or drops or hints its join,
+fails the suite loudly instead of leaving a dead entry silently
+covering new code.
 """
 
 import ast
@@ -44,32 +45,10 @@ ALLOW = {
     # pairs derives from a checkpointed relation (unknown→large stats)
     ("plans/analytics_ext.py", "q_basket_affinity", "pairs"):
         "checkpoint-derived, agg sides",
-    # explicit broadcast of a bounded side at the join site
-    ("streaming/entries.py", "stream_hist_quantile", "targets"):
-        "joins F.broadcast(cum)",
-    ("operators/sketch.py", "cms_rank_heavy_hitters", "probes"):
-        "joins F.broadcast(cells)",
-    ("operators/sketch.py", "sketch_hist_quantile", "targets"):
-        "joins F.broadcast(cum)",
-    ("operators/text.py", "text_ngram_lm", "bigr"):
-        "joins F.broadcast(model), vocab-bounded",
-    ("operators/text.py", "text_perplexity_filter", "bigr"):
-        "joins F.broadcast(model), vocab-bounded",
-    # model/heads are vocab²-bounded aggs of bigr (AQE-exact stats);
-    # they read as explode-derived only because the vocab explode on
-    # the following statement bleeds into their 8-line stmt window
-    ("operators/text.py", "text_ngram_lm", "model"):
-        "agg-derived vocab² model, stmt-window bleed",
-    ("operators/text.py", "text_ngram_lm", "heads"):
-        "agg-derived vocab² model, stmt-window bleed",
     # tv-divergence grid: both join sides are agg-derived (AQE-exact)
     ("operators/text.py", "text_source_tv_divergence", "counts"):
         "agg-derived vocab grid",
-    ("operators/curation.py", "corpus_decontaminate", "train_g"):
-        "left-semi vs bcast(bench_g)",
     # calibration truth sets: grams_cached is checkpoint-backed
-    ("operators/dedup.py", "dedup_simhash", "ex"):
-        "checkpoint-backed grams, capped cal set",
     ("operators/dedup.py", "dedup_substring", "ex"):
         "checkpoint-backed grams, capped cal set",
     ("operators/dedup.py", "dedup_lsh_calibration", "ex"):
@@ -85,14 +64,6 @@ ALLOW = {
     ("operators/graph.py", "graph_clustering_coefficient", "nv"):
         "agg-derived adjacency",
     # qdf is the bounded query set (each site audited per-function)
-    ("operators/similarity.py", "ann_hybrid_rrf", "probes"):
-        "bounded query probe set",
-    ("operators/similarity.py", "_ivf_search", "probes"):
-        "bounded query probe set",
-    ("operators/similarity.py", "ann_filtered_search", "probes"):
-        "bounded query probe set",
-    ("operators/similarity.py", "ann_nprobe_curve", "probes"):
-        "bounded query probe set",
     ("operators/similarity.py", "ann_topk_ivfpq", "probes"):
         "bounded query probe set",
     # SCD2 dim is dimension-scale by contract
@@ -107,11 +78,12 @@ ALLOW = {
 
 
 def _scan():
-    """Return (violations, found_keys): every unguarded explode-probe
-    join, plus the set of (rel, func, name) explode-derived assignment
-    keys seen — the staleness test checks ALLOW against the latter."""
+    """Return (violations, needed): every unguarded explode-probe join
+    outside ALLOW, plus the ALLOW keys (rel, func, name) whose site
+    would otherwise be one — the staleness test checks ALLOW against
+    the latter."""
     violations = []
-    found = set()
+    needed = set()
     for root, _, files in os.walk(BASE):
         for f in files:
             if not f.endswith(".py"):
@@ -144,10 +116,7 @@ def _scan():
                         and "localCheckpoint" not in stmt
                     ):
                         assigns[(m.group(1), func)] = i + 1
-                        found.add((rel, func, m.group(1)))
             for (name, fn), lineno in assigns.items():
-                if (rel, fn, name) in ALLOW:
-                    continue
                 for j, ln in enumerate(
                     lines[lineno : lineno + 60], start=lineno + 1
                 ):
@@ -164,12 +133,15 @@ def _scan():
                             or ".hint(" in ln
                         ):
                             break
-                        violations.append(
-                            f"{rel}:{j}: {name} in {fn} -> "
-                            f"{ln.strip()[:80]}"
-                        )
+                        if (rel, fn, name) in ALLOW:
+                            needed.add((rel, fn, name))
+                        else:
+                            violations.append(
+                                f"{rel}:{j}: {name} in {fn} -> "
+                                f"{ln.strip()[:80]}"
+                            )
                         break
-    return violations, found
+    return violations, needed
 
 
 def test_no_unhinted_explode_probe_joins():
@@ -183,13 +155,14 @@ def test_no_unhinted_explode_probe_joins():
 
 
 def test_allowlist_not_stale():
-    _, found = _scan()
-    stale = [k for k in ALLOW if k not in found]
+    _, needed = _scan()
+    stale = [k for k in ALLOW if k not in needed]
     assert not stale, (
-        "ALLOW entries no longer match any live explode-derived "
-        "assignment — the guarded variable was renamed, moved, or "
-        "checkpointed; delete or re-key these entries so the "
-        "allowlist can't silently cover new code:\n"
+        "ALLOW entries no longer cover an explode-derived relation "
+        "joined without a strategy — the guarded variable was renamed, "
+        "moved or checkpointed, or its join is gone or now carries one; "
+        "delete or re-key these entries so the allowlist can't silently "
+        "cover new code:\n"
         + "\n".join(str(k) for k in stale)
     )
 
@@ -236,12 +209,22 @@ _SCAN_DERIVED_CACHE = []
 
 
 def _scan_derived(sources=None):
+    """Returns (violations, found): the hits of ``_derived_hits`` whose
+    site DERIVED_ARRAY_ALLOW does not cover, and every derived-array
+    assignment key seen."""
+    hits, found = _derived_hits(sources)
+    return [m for k, m in hits if k not in DERIVED_ARRAY_ALLOW], found
+
+
+def _derived_hits(sources=None):
     """sources: optional {rel_path: src} override for synthetic repro
-    tests; default walks the package (cached — two tests share the
-    ~30 s AST sweep). Returns (violations, found)."""
+    tests; default walks the package (cached — several tests share the
+    ~30 s AST sweep). Returns (hits, found): each unbarriered
+    derived-array join or return as ((rel, func, name), message),
+    allowlisted or not, and every derived-array assignment key seen."""
     if sources is None and _SCAN_DERIVED_CACHE:
         return _SCAN_DERIVED_CACHE[0]
-    violations = []
+    hits = []
     found = set()
     cache_it = sources is None
     if sources is None:
@@ -280,8 +263,6 @@ def _scan_derived(sources=None):
             found.add((rel, func, name))
             if "localCheckpoint" in seg:
                 continue  # barrier in the defining statement
-            if (rel, func, name) in DERIVED_ARRAY_ALLOW:
-                continue
             # Re-bind / barrier detection via the AST, not a line regex
             # (round-10 ADVICE fix): the old `\bname\.localCheckpoint`
             # line match accepted a bare discarded
@@ -333,11 +314,12 @@ def _scan_derived(sources=None):
                 if re.search(
                     rf"\b{name}\.(join|crossJoin)\(", ln
                 ) or re.search(rf"\.(join|crossJoin)\(\s*{name}\b", ln):
-                    violations.append(
+                    hits.append((
+                        (rel, func, name),
                         f"{rel}:{j}: derived-array relation '{name}' in "
                         f"{func} consumed under a join without a "
-                        f"localCheckpoint barrier -> {ln.strip()[:80]}"
-                    )
+                        f"localCheckpoint barrier -> {ln.strip()[:80]}",
+                    ))
                     break
             else:
                 # A builder that hands the relation back (`return name`)
@@ -353,13 +335,14 @@ def _scan_derived(sources=None):
                         and (func_of.get(ret.lineno) or (0, None))[1]
                         == func
                     ):
-                        violations.append(
+                        hits.append((
+                            (rel, func, name),
                             f"{rel}:{ret.lineno}: derived-array relation "
                             f"'{name}' in {func} returned to callers "
-                            f"without a localCheckpoint barrier"
-                        )
+                            f"without a localCheckpoint barrier",
+                        ))
                         break
-    result = (violations, found)
+    result = (hits, found)
     if cache_it:
         _SCAN_DERIVED_CACHE.append(result)
     return result
@@ -523,11 +506,29 @@ def test_derived_array_lint_covers_the_pq_encode():
     assert len(v) == 1 and "coded_index" in v[0], v
 
 
+def _stale_derived(allow, sources=None):
+    """The ``allow`` keys whose site is no unbarriered join or return."""
+    hits, _ = _derived_hits(sources)
+    needed = {k for k, _ in hits}
+    return [k for k in allow if k not in needed]
+
+
 def test_derived_array_allowlist_not_stale():
-    _, found = _scan_derived()
-    stale = [k for k in DERIVED_ARRAY_ALLOW if k not in found]
+    stale = _stale_derived(DERIVED_ARRAY_ALLOW)
     assert not stale, (
-        "DERIVED_ARRAY_ALLOW entries no longer match any live "
-        "derived-array assignment — delete or re-key:\n"
+        "DERIVED_ARRAY_ALLOW entries no longer cover an unbarriered "
+        "derived-array join — the site was renamed, moved or "
+        "barriered, or its join is gone; delete or re-key:\n"
         + "\n".join(str(k) for k in stale)
     )
+
+
+def test_derived_array_allowance_is_stale_once_its_join_is_gone():
+    """An allowance is only live while its site would be a violation:
+    the same key is needed for the unbarriered join and stale once the
+    barrier is in, though the assignment is still there."""
+    key = ("repro.py", "ivfpq_like", "coded")
+    assert _stale_derived({key: "r"}, {"repro.py": _REPRO_TRAP}) == []
+    assert _stale_derived({key: "r"}, {"repro.py": _REPRO_BARRIERED}) == [key]
+    _, found = _derived_hits({"repro.py": _REPRO_BARRIERED})
+    assert key in found

@@ -79,18 +79,15 @@ def test_no_heavy_expr_below_generate(spark):
             assert "md5" not in block, block[:500]
 
 
-def test_gram_projection_is_two_step(spark):
-    """Token-hash array must be bound as its own projection (th) before
-    the gram lambda indexes it — collapsed, md5 work goes quadratic."""
-    plan = _plan(dedup._docs_with_grams(spark, SF_DIR))
-    gram_projects = [
-        block
-        for block in plan.split("\n(")
-        if block.startswith(tuple("0123456789")) and "Project" in block
-    ]
-    # the projection computing sh must reference th#, not split(text
-    sh_blocks = [b for b in gram_projects if " AS sh#" in b]
-    assert sh_blocks and all("split(text" not in b for b in sh_blocks)
+def test_grams_and_bands_scan_arrow_batches(spark):
+    """The gram sets and the band index grams_cached/mh_bands_cached
+    persist are Arrow batch scans of the text (functions/tokens.py): no
+    interpreted lambda, no Generate and no Exchange between the scan and
+    the band keys."""
+    grams = dedup._docs_with_grams(spark, SF_DIR)
+    for plan in (_plan(grams), _plan(dedup.mh_bands(grams))):
+        _scan_feeds_map_in_arrow(plan)
+        assert "Generate" not in plan and "lambdafunction" not in plan, plan
 
 
 def _plan_nodes(node):
@@ -249,13 +246,48 @@ def test_pq_encode_is_map_only_scan_is_integer(spark):
     assert "Exchange" not in eplan
 
 
-def test_ngram_lm_model_broadcasts_onto_token_stream(spark):
+def test_lm_passes_scan_arrow_batches(spark):
+    """Both passes of both bigram LMs read the text in Arrow batches: the
+    count pass (summed by one small aggregate, then collected) and the
+    score pass (the model in its closure, one row per document). No
+    Generate over a token stream, no join to the model."""
     from blog_snapshotbackup_azuredatalake_spark.operators import text
 
-    plan = _plan(text.text_ngram_lm(spark, SF_DIR))
-    # the vocab²-bounded model must broadcast; a sort-merge join would
-    # shuffle the exploded token stream a third time
-    assert "BroadcastHashJoin" in plan
+    docs = text.load_table(spark, SF_DIR, "documents")
+    for df in (
+        text._bigram_counts(docs),
+        text.text_ngram_lm(spark, SF_DIR),
+        text.text_perplexity_filter(spark, SF_DIR),
+    ):
+        plan = _plan(df)
+        _scan_feeds_map_in_arrow(plan)
+        assert "Generate" not in plan and "SortMergeJoin" not in plan, plan
+        assert "BroadcastHashJoin" not in plan, plan
+
+
+def test_local_frames_scan_local_tables(spark):
+    """A result built on the driver plans a LocalTableScan of an Arrow
+    table (catalog.local_frame), never a scan of a pickled Python list,
+    which runs a job in a Python worker. The package makes no other
+    DataFrame from local data."""
+    import os
+
+    import __spark_entry__ as entrymod
+    from blog_snapshotbackup_azuredatalake_spark.sources import catalog
+
+    base = os.path.dirname(os.path.dirname(catalog.__file__))
+    callers = [
+        os.path.relpath(os.path.join(root, f), base)
+        for root, _, files in os.walk(base)
+        for f in files
+        if f.endswith(".py")
+        and "createDataFrame(" in open(os.path.join(root, f)).read()
+    ]
+    assert callers == [os.path.join("sources", "catalog.py")], callers
+    qs = entrymod.queries()
+    for name in ("diag_observe_metrics", "snap_schema_drift", "snap_txn_conflict"):
+        plan = _plan(qs[name](spark, SF_DIR))
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
 
 
 def test_repetition_single_generate_no_python(spark):

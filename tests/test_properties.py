@@ -544,32 +544,21 @@ def test_pq_forms_agree_and_ties_go_to_the_lower_code(spark, resid, vecs):
 
 
 def test_grams_of_short_docs_are_empty(spark):
-    """< 5 tokens ⇒ no 5-grams; the ANSI-mode element_at guard holds."""
+    """< 5 tokens ⇒ no 5-grams, a NULL text included."""
     from blog_snapshotbackup_azuredatalake_spark.operators import dedup
 
     df = spark.createDataFrame(
-        [("a b c",), ("a b c d e f",), ("",)],
-        StructType([StructField("text", StringType())]),
+        [(0, "a b c"), (1, "a b c d e f"), (2, ""), (3, None)],
+        "doc_id bigint, text string",
     )
-    # reuse the expression pipeline on an ad-hoc frame
-    toks = F.transform(
-        F.split(F.col("text"), " "), lambda t: hash60(F.md5(t)) % dedup.P31
-    )
-    staged = df.select(toks.alias("th"))
-    th = F.col("th")
-
-    def gram(i):
-        acc = F.element_at(th, i)
-        for off in range(1, 5):
-            acc = (acc * dedup.K_POLY + F.element_at(th, i + off)) % dedup.P31
-        return acc
-
-    grams = F.transform(F.sequence(F.lit(1), F.size(th) - 4), gram)
-    sh = F.when(F.size(th) >= 5, F.array_distinct(grams)).otherwise(
-        F.expr("CAST(array() AS array<bigint>)")
-    )
-    sizes = [r["n"] for r in staged.select(F.size(sh).alias("n")).collect()]
-    assert sizes == [0, 2, 0]
+    sizes = [
+        r["n"]
+        for r in dedup.grams_for(df)
+        .select("doc_id", F.size("sh").alias("n"))
+        .orderBy("doc_id")
+        .collect()
+    ]
+    assert sizes == [0, 2, 0, 0]
 
 
 # -- transaction log: fold(state) must equal a reference dict model -------
