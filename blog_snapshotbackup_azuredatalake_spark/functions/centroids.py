@@ -3,42 +3,40 @@ the coarse step of every IVF index, the k-means assignment and the
 centroid-curation entries — in Spark (``Centroids``) and DuckDB
 (``sql_centroid_ctes``) forms.
 
-Spark: the k×d centroid set is collected once and bound as ONE literal
-``array<struct<centroid_id, c_emb>>`` column named ``cents``
-(constant-folded once and referenced by name; inlining the k×d literal
-tree into every consumer measurably bloats planning/eval). Each row
-scores every centroid as ``struct(d2, centroid_id)`` under a distance
-fold and takes ``array_min`` (its nearest centroid) or the first n of
-``array_sort`` (its probe list) in place. Assignment is therefore
-MAP-ONLY: the crossJoin+groupBy alternative re-shuffles the whole
-corpus by row id just to collapse k candidate rows born in the same
-task.
+Spark: the k×d centroid set is collected once and searched with the
+numpy kernel ``pairscore.nearest``. Assignment is ONE ``mapInArrow``
+scan that appends each row's nearest centroid and its distance to the
+caller's columns: map-only, with no literal column, no join and no
+interpreted per-element lambda (a Spark fold over the centroid set is
+CodegenFallback, one boxed call per element). Probe lists of a collected
+query panel are searched on the driver, where the panel already is.
 
-Struct order is lexicographic, (d2, centroid_id) — the oracle's
-``ORDER BY d, centroid_id``, so ties go to the lower id in both
-engines. The fold is ``l2_sq`` (squared L2) or ``neg_cosine``: negating
-a cosine is exact, so ascending (-cos, id) is the descending-cosine
-order with the same tiebreak. ``d2`` holds the fold's value for either
-fold.
+The kernel ranks ``(d, centroid_id)`` ascending — the oracle's ``ORDER
+BY d, centroid_id`` — so ties go to the lower id and NaN, the greatest
+double in both engines, comes last. The fold is ``l2_sq`` (squared L2)
+or ``neg_cosine``: negating a cosine is exact, so ascending (-cos, id)
+is the descending-cosine order with the same tiebreak. ``d2`` holds the
+fold's value for either fold, with the engines' fold order, so it is the
+same double the oracle computes.
 """
 
 from __future__ import annotations
 
 from typing import Callable
 
-from pyspark.sql import Column, DataFrame
+import pyarrow as pa
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
+from blog_snapshotbackup_azuredatalake_spark.functions import pairscore
 from blog_snapshotbackup_azuredatalake_spark.functions.vectors import (
-    cosine_similarity,
-    l2_sq,
     sql_cosine,
     sql_l2_sq,
 )
-
-
-def neg_cosine(a: Column | str, b: Column | str) -> Column:
-    return -cosine_similarity(a, b)
+from blog_snapshotbackup_azuredatalake_spark.session import (
+    ensure_package_on_workers,
+)
 
 
 def sql_neg_cosine(a: str, b: str) -> str:
@@ -46,36 +44,19 @@ def sql_neg_cosine(a: str, b: str) -> str:
 
 
 class Centroids:
-    """A driver-held centroid set bound for nearest-centroid search.
+    """A driver-held centroid set for nearest-centroid search.
 
-    ``frame`` has columns (centroid_id, c_emb). Its rows are collected,
-    sorted by id and kept in ``rows`` for driver-side use; ``lit`` is
-    the literal column ``bind`` attaches to a frame as ``cents``. The
-    ``nearest``/``probes`` columns are valid on a bound frame only."""
+    ``frame`` has columns (centroid_id, c_emb). Its rows are collected
+    into ``ids`` (ascending) and the float64 matrix ``vecs``; ``fold`` is
+    a ``pairscore.FOLDS`` name, ``"l2_sq"`` or ``"neg_cosine"``."""
 
-    def __init__(
-        self, frame: DataFrame, fold: Callable[..., Column] = l2_sq
-    ) -> None:
-        self.rows = sorted(frame.collect(), key=lambda r: r["centroid_id"])
+    def __init__(self, frame: DataFrame, fold: str = "l2_sq") -> None:
+        rows = frame.select("centroid_id", "c_emb").collect()
+        self.ids, self.vecs = pairscore.stack(sorted(rows))
         self.fold = fold
-        self.lit = F.array(
-            *[
-                F.struct(
-                    F.lit(int(c["centroid_id"]))
-                    .cast("bigint")
-                    .alias("centroid_id"),
-                    F.array(*[F.lit(float(v)) for v in c["c_emb"]]).alias(
-                        "c_emb"
-                    ),
-                )
-                for c in self.rows
-            ]
-        )
 
     @classmethod
-    def first(
-        cls, emb: DataFrame, n: int, fold: Callable[..., Column] = l2_sq
-    ) -> Centroids:
+    def first(cls, emb: DataFrame, n: int, fold: str = "l2_sq") -> Centroids:
         """The deterministic seed set: the corpus vectors vec_id < n."""
         return cls(
             emb.filter(F.col("vec_id") < n).select(
@@ -85,30 +66,37 @@ class Centroids:
             fold,
         )
 
-    def bind(self, df: DataFrame) -> DataFrame:
-        """``df`` plus the ``cents`` column that ``nearest``/``probes``
-        read; an unbound frame fails analysis on the missing column."""
-        return df.withColumn("cents", self.lit)
+    def search(self, x, n: int = 1):
+        """(rows × n) centroid ids and distances of the rows of ``x``,
+        nearest first."""
+        return pairscore.nearest(x, self.ids, self.vecs, n, self.fold)
 
-    def _ranked(self, emb: Column) -> Column:
-        # d2 is the fold's value: the squared L2 distance for l2_sq, the
-        # negated cosine for neg_cosine (so -best.d2 is the cosine).
-        return F.transform(
-            F.col("cents"),
-            lambda c: F.struct(
-                self.fold(emb, c["c_emb"]).alias("d2"),
-                c["centroid_id"].alias("centroid_id"),
-            ),
+    def assign(self, df: DataFrame, n: int = 1) -> DataFrame:
+        """``df`` plus ``centroid_id`` and ``d2`` of each row's nearest
+        centroid to its ``embedding``, and ``d2_2`` … ``d2_n`` of the
+        next ones (NULL past the last centroid): one ``mapInArrow`` scan.
+        Select the columns to carry first; none is pruned below it."""
+        ensure_package_on_workers(df.sparkSession)
+        width = self.vecs.shape[1]
+        names = ["centroid_id", "d2", *[f"d2_{r}" for r in range(2, n + 1)]]
+
+        def scan(batches):
+            for b in batches:
+                ids, d = self.search(pairscore.matrix(b.column("embedding"), width), n)
+                dists = [
+                    pa.array(d[:, r]) if r < d.shape[1] else pa.nulls(len(d), "double")
+                    for r in range(n)
+                ]
+                yield pa.RecordBatch.from_arrays(
+                    [*b.columns, pa.array(ids[:, 0]), *dists],
+                    [*b.schema.names, *names],
+                )
+
+        types = [LongType()] + [DoubleType()] * n
+        schema = StructType(
+            df.schema.fields + [StructField(c, t) for c, t in zip(names, types)]
         )
-
-    def nearest(self, emb: Column) -> Column:
-        """struct(d2, centroid_id) of the nearest centroid."""
-        return F.array_min(self._ranked(emb))
-
-    def probes(self, emb: Column, n: int) -> Column:
-        """The n nearest centroids as struct(d2, centroid_id), nearest
-        first."""
-        return F.slice(F.array_sort(self._ranked(emb)), 1, n)
+        return df.mapInArrow(scan, schema)
 
 
 def sql_centroid_ctes(

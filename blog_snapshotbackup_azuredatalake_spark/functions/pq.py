@@ -1,41 +1,45 @@
 """Product quantization with asymmetric-distance (ADC) search and exact
 refine — the IVFADC recipe of Jégou et al., *Product Quantization for
-Nearest Neighbor Search* (TPAMI 2011) — in Spark (``ProductQuantizer``,
-``refine``) and DuckDB SQL (``sql_pq_ctes``, ``sql_adc_refine``) forms.
-The five PQ entries (``emb_pq_adc``, ``emb_pq_residual_audit``,
-``ann_topk_ivfpq``, ``ann_topk_ivfpq_residual``, ``ann_ivfpq_recall``)
-and their oracles use these definitions.
+Nearest Neighbor Search* (TPAMI 2011) — in numpy (``ProductQuantizer``,
+run on Arrow batches of a scan) and DuckDB SQL (``sql_pq_ctes``,
+``sql_adc_refine``) forms. The five PQ entries (``emb_pq_adc``,
+``emb_pq_residual_audit``, ``ann_topk_ivfpq``,
+``ann_topk_ivfpq_residual``, ``ann_ivfpq_recall``) and their oracles use
+these definitions.
 
 A vector of PQ_M·PQ_SUBDIM dims is PQ_M subvectors of PQ_SUBDIM dims.
-The codebook is the first PQ_K rows (vec_id < PQ_K) of a frame's vector
-column, deterministic and KBs at any corpus size: codeword j of subspace
-s is the j-th of those rows by vec_id, cut to subspace s. A vector's
-code in subspace s is the codeword at the least squared L2 distance,
-ties to the lower j; its quantization error is that distance.
+The codebook is the first PQ_K rows (vec_id < PQ_K) of a vector column,
+deterministic and KBs at any corpus size: codeword j of subspace s is
+the j-th of those rows by vec_id, cut to subspace s. A vector's code in
+subspace s is the codeword at the least squared L2 distance, ties to the
+lower j; its quantization error is that distance.
 
-- Encode: ONE literal SQL string for the whole PQ_M×PQ_K codebook, an
-  ``array_min`` over ``(d2, j)`` structs per subspace, so the code
-  (``.j``) and the error (``floor(.d2·2³⁰)``) come from the same struct
-  in both forms. Map-only: the corpus is never shuffled to get coded.
+- Encode: ``pairscore.nearest`` per subspace against the PQ_K
+  codewords, so the code and the error ``floor(d2·2³⁰)`` come from the
+  same search. Measured at sf0.1 and on a 200,000-vector corpus
+  (SCALING.md): faster than the unrolled literal ``array_min``
+  expression it replaces, a ~128 KB SQL string Janino could not compile
+  (``Code grows beyond 64 KB``), which then ran interpreted.
 - ADC table: for one driver-held vector (a query, or a query minus its
   probed centroid) ``floor(d²·2²⁰)`` per (subspace, codeword) as
   BIGINTs, so a scan's per-pair sum is integer-exact, order-independent
   and engine-portable.
-- ADC scan: a code row paired with a table row sums PQ_M lookups; each
-  query keeps its PQ_SHORTLIST least sums (ties by vec_id).
-- Refine: the shortlist rejoins its float vectors for the exact L2
-  top-k (ties by vec_id) — the only float math after the scan.
+- ADC scan (``shortlist``): a batch row's sum of PQ_M lookups per query;
+  each query keeps the batch's PQ_SHORTLIST least sums (ties by vec_id).
+  A row in a query's global shortlist is in its batch's, so a window over
+  the candidates gives the oracle's shortlist exactly.
+- Refine: the exact L2 of each shortlisted pair (``pairscore.l2_sq``),
+  then the top-k by (d2, vec_id) — the only float math after the scan.
 """
 
 from __future__ import annotations
 
-import math
-
-from pyspark.sql import Column, DataFrame, Window
+import numpy as np
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from blog_snapshotbackup_azuredatalake_spark.functions import pairscore
 from blog_snapshotbackup_azuredatalake_spark.functions.vectors import (
-    l2_sq,
     sql_l2_sq,
 )
 
@@ -47,175 +51,60 @@ PQERR_FP = 1 << 30  # fixed-point scale for per-subspace min-d2 errors
 PQ_SHORTLIST = 20  # ADC candidates per query kept for exact re-rank
 
 
-def py_l2_sq(a: list, b: list) -> float:
-    """``l2_sq`` on the driver: the same left-to-right double fold as
-    both engines."""
-    acc = 0.0
-    for x, y in zip(a, b):
-        acc += (x - y) * (x - y)
-    return acc
-
-
-def subvector(v: list, s: int) -> list:
-    return v[s * PQ_SUBDIM : (s + 1) * PQ_SUBDIM]
+def seeds(frame: DataFrame, col: str = "embedding") -> np.ndarray:
+    """The ``col`` vectors of ``frame``'s rows vec_id < PQ_K, by vec_id,
+    collected as a float64 matrix: the codebook (as residuals, the
+    residual quantizer's)."""
+    rows = frame.filter(F.col("vec_id") < PQ_K).select("vec_id", col).collect()
+    return pairscore.stack(sorted(rows))[1]
 
 
 class ProductQuantizer:
-    """A quantizer of the vector column ``col``, with the codebook of
-    ``frame``'s rows vec_id < PQ_K held on the driver: ``codebook`` maps
-    vec_id to the vector, ``ks`` is the sorted vec_ids, so codeword j is
-    ``codebook[ks[j]]``. The residual entry passes its engine-computed
-    residuals, so the codebook holds the same doubles as the oracle's.
-    The encode reads ``col`` of whatever frame it is applied to."""
+    """A quantizer with the driver-held ``codebook``: a (k, PQ_M·PQ_SUBDIM)
+    float64 matrix whose row j is codeword j, k ≤ PQ_K."""
 
-    def __init__(self, frame: DataFrame, col: str = "embedding") -> None:
-        self.col = col
-        rows = frame.filter(F.col("vec_id") < PQ_K).collect()
-        self.codebook = {
-            int(r["vec_id"]): [float(x) for x in r[col]] for r in rows
-        }
-        self.ks = sorted(self.codebook)
+    def __init__(self, codebook: np.ndarray) -> None:
+        self.codebook = codebook
+        self.j = np.arange(len(codebook))
 
-    def _argmin_sql(self, pick) -> str:
-        """``array(pick(m_0), ..., pick(m_{PQ_M-1}))`` where m_s is the
-        subspace-s ``array_min`` over ``named_struct('d2', ·, 'j', j)``.
+    def _subspaces(self):
+        for s in range(PQ_M):
+            yield s, slice(s * PQ_SUBDIM, (s + 1) * PQ_SUBDIM)
 
-        One SQL string parsed in a single ``F.expr`` call: building it
-        through the Column API costs one Py4J round trip per operator
-        node (~8k trips ≈ 20 s of driver latency, flat at every SF).
+    def encode(self, x: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        """(rows × PQ_M) codes and errors ``floor(d2·2³⁰)`` of the rows of
+        ``x``: the nearest codeword of each subvector, ties to the lower
+        j."""
+        codes = np.empty((len(x), PQ_M), np.int64)
+        errs = np.empty((len(x), PQ_M), np.int64)
+        xt = np.ascontiguousarray(x.T)  # a subspace's columns, contiguous
+        for s, sub in self._subspaces():
+            j, d2 = pairscore.nearest(xt[sub].T, self.j, self.codebook[:, sub])
+            codes[:, s] = j[:, 0]
+            errs[:, s] = np.floor(d2[:, 0] * PQERR_FP)
+        return codes, errs
 
-        The ~128 KB expression FAILS whole-stage codegen (janino method
-        size; Spark logs a codegen ERROR) and runs interpreted. Measured
-        NOT worth fixing (round 7, 600 k vectors, warm min-of-2): this
-        unrolled form 6.5 s vs a nested higher-order-function loop (tiny
-        expression tree, codebook as array literal) 18.0 s and an
-        Arrow/numpy pandas-UDF encode 18.9 s, all three bit-identical on
-        2 000 checked rows. The interpreted unrolled tree evaluates
-        constant-folded literals with no per-element lambda dispatch and
-        no Arrow transfer."""
+    def tables(self, v: np.ndarray) -> np.ndarray:
+        """The ADC tables of the rows of ``v``: (rows × PQ_M × k)
+        ``floor(d²·2²⁰)`` of subvector s against codeword j."""
+        out = np.empty((len(v), PQ_M, len(self.codebook)), np.int64)
+        for s, sub in self._subspaces():
+            d2 = pairscore.l2_sq(v[:, None, sub], self.codebook[None, :, sub])
+            out[:, s] = np.floor(d2 * PQ_FP)
+        return out
 
-        def d2_sql(s: int, vals: list) -> str:
-            terms = []
-            for i, v in enumerate(vals):
-                at = s * PQ_SUBDIM + i + 1
-                x = f"cast(element_at({self.col}, {at}) as double)"
-                c = f"cast('{float(v)!r}' as double)"
-                terms.append(f"({x} - {c}) * ({x} - {c})")
-            return " + ".join(terms)
-
-        def best(s: int) -> str:
-            structs = ", ".join(
-                "named_struct('d2', "
-                f"{d2_sql(s, subvector(self.codebook[k], s))}, 'j', {j})"
-                for j, k in enumerate(self.ks)
-            )
-            return pick(f"array_min(array({structs}))")
-
-        return "array(" + ", ".join(best(s) for s in range(PQ_M)) + ")"
-
-    def encode_sql(self) -> str:
-        """The codes: array<int> of PQ_M codeword indexes."""
-        return self._argmin_sql(lambda m: f"{m}.j")
-
-    def error_sql(self) -> str:
-        """The quantization errors: array<bigint> of floor(min-d²·2³⁰)
-        per subspace."""
-        return self._argmin_sql(
-            lambda m: f"cast(floor({m}.d2 * {PQERR_FP}) as bigint)"
+    def shortlist(self, ids, codes, tables, at, exclude):
+        """``(row, col, adc)``: each query's PQ_SHORTLIST batch rows by
+        least ADC sum, ties by ``ids``, leaving out the (rows × queries)
+        ``exclude`` pairs. ``tables`` is (sets × queries × PQ_M × k) and
+        row i sums set ``at[i]``'s tables over its ``codes``."""
+        adc = np.zeros(exclude.shape, np.int64)
+        for s in range(PQ_M):
+            adc += tables[at, :, s, codes[:, s]]
+        row, col, _ = pairscore.top_k(
+            adc, ids, exclude, PQ_SHORTLIST, ascending=True
         )
-
-    def table(self, v: list) -> list[int]:
-        """The ADC table of the driver-held vector ``v``: floor(d²·2²⁰)
-        of subspace s against codeword j at index s·len(ks) + j."""
-        return [
-            int(
-                math.floor(
-                    py_l2_sq(subvector(v, s), subvector(self.codebook[k], s))
-                    * PQ_FP
-                )
-            )
-            for s in range(PQ_M)
-            for k in self.ks
-        ]
-
-    def coded_index(self, frame: DataFrame, *keep: str | Column) -> DataFrame:
-        """``keep`` plus ``codes`` (the encode of ``frame``), materialized
-        once behind a ``localCheckpoint`` — the PQ-coded index a faiss
-        pipeline builds once and then scans.
-
-        The barrier is the derived-array-under-join fix: without it the
-        interpreted encode re-evaluates per JOIN-OUTPUT row of the scan
-        joins. Measured (SCALING.md rounds 8 and 9): residual IVFPQ's
-        scored stage 190.7 s → 1.7 s at 1.2 M vectors (~NPROBE·|Q|/NLIST
-        ≈ 5 evaluations per corpus row); shared-codebook IVFPQ fresh
-        min-of-2 55.3/165.3 s → 34.8/50.9 s at 2.4 M/4.8 M vectors
-        (alpha 1.58 → 0.55); ``emb_pq_adc``'s |Q|-way crossJoin fresh
-        min-of-N 37.8/35.6 s → 18.9/32.8 s at 1.2 M/2.4 M vectors. The
-        barrier belongs on the codes: round 7's wash A/B checkpointed
-        the float residuals, which leaves the encode under the join."""
-        coded = frame.select(
-            *keep, F.expr(self.encode_sql()).alias("codes")
-        ).localCheckpoint(eager=False)
-        return coded
-
-    def adc_shortlist(self, pairs: DataFrame) -> DataFrame:
-        """(q_id, vec_id, adc_fp): the ADC scan of ``pairs`` (code rows
-        joined to table rows ``t``, self-pairs dropped) cut to each
-        query's PQ_SHORTLIST least sums, ties by vec_id.
-
-        Round-10 decision (plans/r10/emb_pq_adc_before.txt): the rank
-        window is not salted. Spark 4.1's rank-limit pushdown
-        (SPARK-37099) plans it as `Sort → WindowGroupLimit(Partial) →
-        Exchange(q_id) → WindowGroupLimit(Final) → Window`: every map
-        task keeps its own top-PQ_SHORTLIST per query, so the exchange
-        carries ≤ maptasks·|Q|·PQ_SHORTLIST rows — the two-phase partial
-        top-k, engine-side, with one exchange. A salted rewrite was
-        measured to add a second exchange and TOPK_SALT× more shuffled
-        survivors for the same local sort work."""
-        scored = pairs.filter(F.col("vec_id") != F.col("q_id")).select(
-            "q_id",
-            "vec_id",
-            F.expr(
-                "aggregate(transform(codes, (c, s) -> "
-                f"t[s * {len(self.ks)} + c]), 0L, (acc, x) -> acc + x)"
-            ).alias("adc_fp"),
-        )
-        ws = Window.partitionBy("q_id").orderBy("adc_fp", "vec_id")
-        return (
-            scored.withColumn("srnk", F.row_number().over(ws))
-            .filter(F.col("srnk") <= PQ_SHORTLIST)
-            .select("q_id", "vec_id", "adc_fp")
-        )
-
-
-def l2_top(pairs: DataFrame, k: int) -> DataFrame:
-    """Rows of (q_id, vec_id, d2) ``pairs`` ranked ``rnk`` by (d2,
-    vec_id) within each query, kept to rank ≤ k."""
-    w = Window.partitionBy("q_id").orderBy("d2", "vec_id")
-    return pairs.withColumn("rnk", F.row_number().over(w)).filter(
-        F.col("rnk") <= k
-    )
-
-
-def refine(
-    shortlist: DataFrame, emb: DataFrame, queries: DataFrame, k: int
-) -> DataFrame:
-    """(q_id, vec_id, adc_fp, d2, rnk): the exact L2 top-k of each
-    query's shortlist. ``emb`` is (vec_id, embedding); ``queries`` is
-    (q_id, q_emb) and broadcasts."""
-    reranked = (
-        shortlist.join(emb, "vec_id")
-        .join(F.broadcast(queries), "q_id")
-        .select(
-            "q_id",
-            "vec_id",
-            "adc_fp",
-            l2_sq(F.col("q_emb"), F.col("embedding")).alias("d2"),
-        )
-    )
-    return l2_top(reranked, k).select(
-        "q_id", "vec_id", "adc_fp", "d2", F.col("rnk").cast("int").alias("rnk")
-    )
+        return row, col, adc[row, col]
 
 
 def _sql_sub(rel: str, col: str, keys: list[str]) -> str:
@@ -267,7 +156,7 @@ def sql_pq_ctes(
 
 
 def sql_adc_refine(k: int, by_list: bool = False) -> str:
-    """DuckDB mirror of ``adc_shortlist`` plus ``refine`` over
+    """DuckDB mirror of ``shortlist`` plus the refine over
     ``sql_pq_ctes``' ``encoded`` and ``qtab`` (joined on list_id too when
     ``by_list``): the ``adc``, ``shortlist`` and ``reranked`` CTEs and
     the final (q_id, vec_id, adc_fp, d2, rnk) SELECT of the top k."""

@@ -13,7 +13,8 @@ element:
   to ``hash60(md5(utf8)) % P31``, once per distinct token of the batch;
   a gram folds its five hashes with the rolling polynomial
   ``(acc * K_POLY + h) % P31``. A document of fewer than five tokens has
-  no grams.
+  no grams. ``span_grams`` is the positional form at any width: every
+  window, repeats kept (``dedup_substring``'s spans).
 - ``bands``: the MinHash band index of those sets. For each affine map
   ``(v * a + b) % P31`` the minimum over a set, two minima packed into one
   bigint key per band. A set with no grams has NULL keys, as
@@ -72,23 +73,29 @@ def token_hashes(flat: pa.Array) -> np.ndarray:
     return h[enc.indices.to_numpy(zero_copy_only=False)]
 
 
+def span_grams(text: pa.Array, k: int = GRAM) -> tuple[np.ndarray, np.ndarray]:
+    """Every ``k``-token gram fingerprint of each document, one per span
+    start in token order, and the document of each: ``(grams, doc)``."""
+    flat, offsets = _tokens(text)
+    h = token_hashes(flat)
+    m = max(len(h) - k + 1, 0)  # windows over the flat tokens
+    g = h[:m]
+    for off in range(1, k):
+        g = (g * K_POLY + h[off : off + m]) % P31
+    doc = _doc_of(offsets)[:m]
+    inside = np.arange(m) + k <= offsets[1:][doc]  # not across documents
+    return g[inside], doc[inside]
+
+
 def gram_sets(text: pa.Array) -> pa.ListArray:
     """Each document's distinct 5-gram fingerprints, first occurrence
     first; an empty list below five tokens."""
-    flat, offsets = _tokens(text)
-    h = token_hashes(flat)
-    m = max(len(h) - GRAM + 1, 0)  # windows over the flat tokens
-    g = h[:m]
-    for off in range(1, GRAM):
-        g = (g * K_POLY + h[off : off + m]) % P31
-    doc = _doc_of(offsets)[:m]
-    inside = np.arange(m) + GRAM <= offsets[1:][doc]  # not across documents
-    g, doc = g[inside], doc[inside]
+    g, doc = span_grams(text)
     # np.unique's index is each key's first occurrence; sorted, it keeps
     # the documents in order and each one's grams in first-seen order
     _, first = np.unique(doc * P31 + g, return_index=True)
     first.sort()
-    counts = np.bincount(doc[first], minlength=len(offsets) - 1)
+    counts = np.bincount(doc[first], minlength=len(text))
     list_offsets = np.zeros(len(counts) + 1, np.int32)
     np.cumsum(counts, out=list_offsets[1:])
     return pa.ListArray.from_arrays(list_offsets, pa.array(g[first], pa.int64()))

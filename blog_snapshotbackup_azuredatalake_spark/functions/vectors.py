@@ -2,17 +2,19 @@
 
 The one definition of the cosine fold, in Spark (``dot_product``,
 ``l2_norm``, ``cosine_similarity``, ``cosine_with_norms``) and in DuckDB
-(``sql_cosine``), of the squared-L2 fold (``l2_sq``/``sql_l2_sq``), and
-of the sign-pattern LSH bucket (``sign_bucket``/``sql_sign_bucket``).
-The folds run left to right in double regardless of the array element
-type, so the two engines agree bit-for-bit on float32 inputs.
+(``sql_cosine``), of the DuckDB squared-L2 fold (``sql_l2_sq``; its
+Spark-side form is ``pairscore.l2_sq``), and of the sign-pattern LSH
+bucket (``sign_bucket``/``sql_sign_bucket``). The folds run left to
+right in double regardless of the array element type, so the two
+engines agree bit-for-bit on float32 inputs.
 
 ``F.zip_with`` + ``F.aggregate`` avoid any Python round-trip per row,
 but note they are CodegenFallback in Spark 4.x (interpreted lambda
 evaluation, NOT whole-stage codegen) — which is why the probe-join
 scorers hoist row-constant norms out of the per-pair expression
 (``cosine_with_norms``). ``functions/pairscore.py`` is the same fold in
-numpy, for every scorer against the small query panel and kNN cells.
+numpy, for every scorer against the small query panel, the kNN cells
+and every nearest-centroid or codeword search.
 """
 
 from __future__ import annotations
@@ -71,21 +73,6 @@ def cosine_with_norms(
     return dot_product(a, b) / (_col(na) * _col(nb))
 
 
-def l2_sq(a: Column | str, b: Column | str) -> Column:
-    """Σ (aᵢ-bᵢ)² as a left-to-right double fold — the distance every
-    IVF/k-means centroid argmin and every L2 re-rank scores with."""
-    return F.aggregate(
-        F.zip_with(
-            _col(a),
-            _col(b),
-            lambda x, y: (x.cast("double") - y.cast("double"))
-            * (x.cast("double") - y.cast("double")),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def sign_bucket(col: Column | str, dims: int) -> Column:
     """Sign pattern of the first ``dims`` elements as a '0'/'1' string —
     the random-hyperplane LSH bucket with the axes as hyperplanes."""
@@ -110,7 +97,9 @@ def sql_sign_bucket(dims: int | str) -> str:
 
 
 def sql_l2_sq(a: str, b: str) -> str:
-    """DuckDB SQL mirroring ``l2_sq`` — same association order."""
+    """Σ (aᵢ-bᵢ)² as a left-to-right double fold in DuckDB SQL — the
+    distance of every IVF/k-means centroid search and every L2 re-rank
+    of the oracles; ``pairscore.l2_sq`` folds in the same order."""
     return f"""list_reduce(list_transform(range(1, 1 + len({a})),
   i -> (CAST({a}[i] AS DOUBLE) - CAST({b}[i] AS DOUBLE))
      * (CAST({a}[i] AS DOUBLE) - CAST({b}[i] AS DOUBLE))),

@@ -32,25 +32,11 @@ ITERATIONS = 3
 
 
 def _assign(emb: DataFrame, centroids: DataFrame) -> DataFrame:
-    """Nearest centroid by squared L2 — MAP-ONLY (the k×d centroid set
-    is driver-known by contract; see ``functions/centroids.py``)."""
-    cents = Centroids(centroids)
-    # two-step select: `best` must be a bound column before its fields
-    # are projected, or the whole argmin array is re-evaluated per field
-    return (
-        cents.bind(emb)
-        .select(
-            "vec_id",
-            "embedding",
-            cents.nearest(F.col("embedding")).alias("best"),
-        )
-        .select(
-            "vec_id",
-            F.col("best.centroid_id").alias("centroid_id"),
-            F.col("best.d2").alias("d2"),
-            "embedding",
-        )
-    )
+    """``emb`` (vec_id, embedding) plus the nearest centroid by squared
+    L2 and its distance ``d2`` — one map-only Arrow batch scan (the k×d
+    centroid set is driver-known by contract; see
+    ``functions/centroids.py``)."""
+    return Centroids(centroids).assign(emb.select("vec_id", "embedding"))
 
 
 def _recompute(spark: SparkSession, assigned: DataFrame) -> DataFrame:
@@ -93,10 +79,7 @@ def emb_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", "embedding"
     )
     centroids = emb.filter(F.col("vec_id") < K).select(
-        F.col("vec_id").alias("centroid_id"),
-        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias(
-            "c_emb"
-        ),
+        F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("c_emb")
     )
     assigned = _assign(emb, centroids)
     for _ in range(ITERATIONS - 1):
@@ -124,7 +107,7 @@ def emb_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Never materializes the d×d covariance: each iteration computes
     y = C·v as one corpus pass — per-row projection s = xᵀv against the
-    bound literal v (map-only, the ``functions/centroids.py`` trick),
+    bound literal v (map-only),
     then a posexplode reduce to d cells of Σ x·s. Driver work is O(d) per
     iteration; corpus work is one scan — so 8 iterations over 100 TB
     are 8 scans with d-cell shuffles, no vector ever re-shuffled.

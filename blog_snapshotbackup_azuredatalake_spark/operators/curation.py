@@ -32,7 +32,6 @@ from blog_snapshotbackup_azuredatalake_spark.functions.hashing import (
 )
 from blog_snapshotbackup_azuredatalake_spark.functions.centroids import (
     Centroids,
-    neg_cosine,
     sql_centroid_ctes,
     sql_neg_cosine,
 )
@@ -165,34 +164,14 @@ def emb_centroid_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     the previous Lloyd iteration's output). Centroids broadcast; the
     corpus scans once with no shuffle until the final stats group-by."""
     emb = load_table(spark, sf_dir, "embeddings")
-    # MAP-ONLY argmax (functions/centroids.py): each row picks its best
-    # centroid in place as the argmin of (-cos, centroid_id) ≡ the
-    # oracle's ORDER BY cos DESC, centroid_id. No crossJoin, no
-    # per-vector groupBy: the corpus meets its ONLY shuffle at the
-    # k-row stats aggregation.
-    # round 10 NEGATIVE A/B, kept as-was by measurement: the norm hoist
-    # that won 1.5–3.5× on the pair-join scorers (`cosine_with_norms`)
-    # REGRESSED here (sf60de min-of-3: 1.56 → 2.39 s, consistent across
-    # runs). Mechanism: inside this centroid-literal lambda the
-    # centroid norm is a fold over a FOLDABLE literal — ConstantFolding
-    # already evaluates it at plan time — and a hoisted row-norm column
-    # is referenced once textually, so CollapseProject inlines the fold
-    # back into the lambda; the "hoist" adds plan surface without
-    # removing runtime folds. Same negative result shape as
-    # ann_nprobe_curve's counting-subtree revert: read what the
-    # optimizer already folded before hoisting it by hand.
-    cents = Centroids.first(emb, N_CENTROIDS, neg_cosine)
-    best = (
-        cents.bind(emb)
-        .select(
-            "vec_id", "label", cents.nearest(F.col("embedding")).alias("best")
-        )
-        .select(
-            "vec_id",
-            "label",
-            F.col("best.centroid_id").alias("centroid_id"),
-            (-F.col("best.d2")).alias("best_cos"),
-        )
+    # MAP-ONLY argmax (functions/centroids.py): one Arrow batch scan
+    # picks each row's best centroid as the argmin of (-cos,
+    # centroid_id) ≡ the oracle's ORDER BY cos DESC, centroid_id. No
+    # crossJoin, no per-vector groupBy: the corpus meets its ONLY
+    # shuffle at the k-row stats aggregation.
+    cents = Centroids.first(emb, N_CENTROIDS, "neg_cosine")
+    best = cents.assign(emb.select("vec_id", "label", "embedding")).select(
+        "vec_id", "label", "centroid_id", (-F.col("d2")).alias("best_cos")
     )
     return best.groupBy("centroid_id").agg(
         F.count(F.lit(1)).alias("n_members"),
@@ -232,13 +211,9 @@ def emb_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus never shuffles for the argmax); the (centroid, label)
     count relation is k·|labels| rows, everything after is k-sized."""
     emb = load_table(spark, sf_dir, "embeddings")
-    # norm hoist NOT applied — same centroid-literal negative A/B as
-    # emb_centroid_assign (ConstantFolding already pre-folds the
-    # literal's norm; see that entry's comment)
-    cents = Centroids.first(emb, N_CENTROIDS, neg_cosine)
-    assigned = cents.bind(emb).select(
-        "label",
-        cents.nearest(F.col("embedding"))["centroid_id"].alias("centroid_id"),
+    cents = Centroids.first(emb, N_CENTROIDS, "neg_cosine")
+    assigned = cents.assign(emb.select("label", "embedding")).select(
+        "label", "centroid_id"
     )
     per = assigned.groupBy("centroid_id", "label").agg(
         F.count(F.lit(1)).alias("cnt")
@@ -306,24 +281,17 @@ def emb_silhouette_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
     runner-up; s = (b − a) / max(a, b) ∈ [0, 1] is the separation
     margin (s → 0: the vector sits on a cluster boundary — candidate
     for re-clustering or mixture reweighting). Same deterministic seed
-    centroids as `emb_centroid_assign`; MAP-ONLY top-2 via a sorted
-    literal-struct array (no crossJoin, no per-vector shuffle — the
-    corpus meets its only shuffle at the k-row summary). Fixed-point
-    floor sums keep the certificate bit-portable (SURVEY §4)."""
+    centroids as `emb_centroid_assign`; MAP-ONLY top-2 in one Arrow
+    batch scan (no crossJoin, no per-vector shuffle — the corpus meets
+    its only shuffle at the k-row summary). Fixed-point floor sums keep
+    the certificate bit-portable (SURVEY §4)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    # norm hoist NOT applied — measured a wash here (sf60de 1.93 →
-    # 1.89 s) for the same centroid-literal reason as
-    # emb_centroid_assign's regression (see that entry's comment)
-    cents = Centroids.first(emb, N_CENTROIDS, neg_cosine)
-    top2 = (
-        cents.bind(emb)
-        .select("vec_id", cents.probes(F.col("embedding"), 2).alias("s2"))
-        .select(
-            "vec_id",
-            F.col("s2")[0]["centroid_id"].alias("centroid_id"),
-            (-F.col("s2")[0]["d2"]).alias("c1"),
-            (-F.col("s2")[1]["d2"]).alias("c2"),
-        )
+    cents = Centroids.first(emb, N_CENTROIDS, "neg_cosine")
+    top2 = cents.assign(emb.select("vec_id", "embedding"), n=2).select(
+        "vec_id",
+        "centroid_id",
+        (-F.col("d2")).alias("c1"),
+        (-F.col("d2_2")).alias("c2"),
     )
     sil = top2.select(
         "centroid_id",

@@ -14,9 +14,10 @@ Shingles are carried as NUMERIC rolling hashes, never as strings: one
 md5 per distinct token (the only md5 in the whole pipeline — SURVEY.md
 §4's portable primitive), then 5-gram fingerprints by polynomial
 combination mod a 31-bit prime, minhash permutations as affine maps over
-those fingerprints, and band keys as packed bigints. The gram sets and
-the band index are integer work on token ids in one Arrow batch scan
-each (``functions/tokens.py``, numpy under ``mapInArrow``), not Spark
+those fingerprints, and band keys as packed bigints. The gram sets, the
+band index and ``dedup_substring``'s positional spans are integer work on
+token ids in one Arrow batch scan each (``functions/tokens.py``, numpy
+under ``mapInArrow``), not Spark
 higher-order lambdas, which run interpreted (CodegenFallback), one
 boxed call per element. Pair generation and verification downstream are
 Spark joins and array built-ins; the DuckDB oracle recomputes the
@@ -31,6 +32,7 @@ from __future__ import annotations
 
 import hashlib
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -44,7 +46,6 @@ from pyspark.sql.types import (
 from blog_snapshotbackup_azuredatalake_spark import substrate
 from blog_snapshotbackup_azuredatalake_spark.functions import tokens
 from blog_snapshotbackup_azuredatalake_spark.functions.hashing import (
-    hash60,
     sql_md5_int60,
 )
 from blog_snapshotbackup_azuredatalake_spark.functions.tokens import K_POLY, P31
@@ -1254,30 +1255,20 @@ SPAN_K = 8  # span length in tokens (Lee et al. use 50 BPE tokens; the
 
 
 def _span_grams(docs: DataFrame) -> DataFrame:
-    """(doc_id, source, text) → (doc_id, source, g: array<bigint>) —
-    POSITIONAL (non-distinct) rolling {SPAN_K}-token-gram hashes, one
-    per span start, so span *coverage* can be measured. Two projections:
-    the token-hash array is bound before the gram lambda indexes it (the
-    HOF-inlining trap in SURVEY §6)."""
-    toks = F.transform(
-        F.split(F.col("text"), " "), lambda t: hash60(F.md5(t)) % P31
-    )
-    th = F.col("th")
+    """(doc_id, source, text) → (doc_id, source, gram): one row per
+    POSITIONAL (non-distinct) rolling {SPAN_K}-token-gram hash, one per
+    span start, so span *coverage* can be measured — one Arrow batch scan
+    (``tokens.span_grams``)."""
+    ensure_package_on_workers(docs.sparkSession)
 
-    def gram(i: Column) -> Column:
-        acc = F.element_at(th, i)
-        for off in range(1, SPAN_K):
-            acc = (acc * K_POLY + F.element_at(th, i + off)) % P31
-        return acc
+    def spans(batch):
+        g, doc = tokens.span_grams(batch.column("text"), SPAN_K)
+        keep = batch.select(["doc_id", "source"]).take(pa.array(doc))
+        return keep.append_column("gram", pa.array(g))
 
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size(th) - (SPAN_K - 1)), gram
-    )
-    g = F.when(F.size(th) >= SPAN_K, grams).otherwise(
-        F.expr("CAST(array() AS array<bigint>)")
-    )
-    return docs.select("doc_id", "source", toks.alias("th")).select(
-        "doc_id", "source", g.alias("g")
+    return docs.select("doc_id", "source", "text").mapInArrow(
+        lambda batches: map(spans, batches),
+        "doc_id bigint, source string, gram bigint",
     )
 
 
@@ -1296,11 +1287,7 @@ def dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     The majority test is integer (2·n_rep ≥ n_spans): no doubles
     anywhere near the group boundary."""
     docs = load_table(spark, sf_dir, "documents")
-    ex = (
-        _span_grams(docs)
-        .select("doc_id", "source", F.explode_outer("g").alias("gram"))
-        .filter(F.col("gram").isNotNull())
-    )
+    ex = _span_grams(docs)
     gram_docs = (
         ex.select("gram", "doc_id")
         .distinct()

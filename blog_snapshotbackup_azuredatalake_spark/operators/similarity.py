@@ -11,16 +11,17 @@ Three plans for top-k cosine neighbors:
   cost Σ bucket² — linear-ish in corpus size. Recall is traded for
   that, as usual with ANN.
 - ``ann_topk_ivf`` — IVF coarse+fine: assign every corpus vector to its
-  nearest of NLIST coarse centroids (a map-only argmin against the
-  literal centroid set, ``functions/centroids.py`` — no corpus
+  nearest of NLIST coarse centroids (one Arrow batch scan against the
+  collected centroid set, ``functions/centroids.py`` — no corpus
   shuffle), then each query probes its NPROBE nearest
   lists and re-ranks exactly within them. Candidate cost is
   |Q|·NPROBE/NLIST of the corpus — the standard inverted-file ANN
   trade, and unlike the sign-LSH it degrades gracefully (more probes →
   more recall) without re-bucketing.
 
-Every scorer against the small query panel (``_panel_topk``) and the kNN
-graph's cells run the engines' left-to-right double fold in numpy
+Every scorer against the small query panel (``_panel_topk``), the kNN
+graph's cells, every nearest-centroid search and the product quantizer
+run the engines' left-to-right double fold in numpy
 (``functions/pairscore.py``): bit-identical to the DuckDB oracle's
 list_reduce fold, with no interpreted lambda per element. The probe-join
 entries still fold each candidate pair in Spark (zip_with/aggregate,
@@ -31,7 +32,8 @@ entries still fold each candidate pair in Spark (zip_with/aggregate,
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession, Window
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from blog_snapshotbackup_azuredatalake_spark.functions import pairscore
@@ -47,18 +49,17 @@ from blog_snapshotbackup_azuredatalake_spark.functions.vectors import (
     cosine_similarity,
     cosine_with_norms,
     l2_norm,
-    l2_sq,
     sign_bucket,
     sql_cosine,
     sql_l2_sq,
     sql_sign_bucket,
 )
 from blog_snapshotbackup_azuredatalake_spark.functions.pq import (
+    PQ_M,
     PQERR_FP,
+    PQ_SHORTLIST,
     ProductQuantizer,
-    l2_top,
-    py_l2_sq,
-    refine,
+    seeds,
     sql_adc_refine,
     sql_pq_ctes,
 )
@@ -106,27 +107,17 @@ def ann_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the vector list IS the IVF shortlist (the shipped 100 TB path —
     # ann_topk_ivf's probe/re-rank, restricted to the pinned query):
-    # coarse assign is map-only against the literal centroid set, the
-    # query probes its IVF_NPROBE nearest lists, exact re-rank runs
-    # inside the probed lists only. No corpus-wide crossJoin anywhere
-    # in this entry; the brute-force scorer stays in
+    # coarse assign is one Arrow batch scan against the collected
+    # centroid set, the query probes its IVF_NPROBE nearest lists, exact
+    # re-rank runs inside the probed lists only. No corpus-wide
+    # crossJoin anywhere in this entry; the brute-force scorer stays in
     # ann_topk_bruteforce as the labeled baseline.
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
     cents = Centroids.first(emb, IVF_NLIST)
-    assigned = (
-        cents.bind(emb)
-        .select(
-            "vec_id",
-            "embedding",
-            cents.nearest(F.col("embedding")).alias("best"),
-        )
-        .select(
-            "vec_id",
-            F.col("best.centroid_id").alias("list_id"),
-            "embedding",
-        )
+    assigned = cents.assign(emb).select(
+        "vec_id", F.col("centroid_id").alias("list_id"), "embedding"
     )
     # PARTIAL norm hoist (round 10): q_nrm was re-folded per matched
     # corpus row; it now rides the tiny probe side. The corpus norm
@@ -134,16 +125,8 @@ def ann_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # most corpus rows never match and a corpus-side norm column would
     # cost more rows than it saves (the ann_topk_lsh selective-join
     # argument).
-    probes = (
-        cents.bind(emb.filter(F.col("vec_id") == HYBRID_QUERY_ID))
-        .select(
-            F.col("embedding").alias("q_emb"),
-            l2_norm("embedding").alias("q_nrm"),
-            F.explode(cents.probes(F.col("embedding"), IVF_NPROBE)).alias(
-                "pr"
-            ),
-        )
-        .select("q_emb", "q_nrm", F.col("pr.centroid_id").alias("list_id"))
+    probes = _probes(
+        emb, cents, IVF_NPROBE, F.col("vec_id") == HYBRID_QUERY_ID
     )
     scored = (
         assigned.join(F.broadcast(probes), "list_id")
@@ -255,6 +238,12 @@ def _cosine(batch, x, panel) -> dict:
     return {"cos": pairscore.cosines(x, panel)[0]}
 
 
+def _l2(batch, x, panel) -> dict:
+    """The squared L2 distance ``d2`` of each batch row to each panel
+    vector."""
+    return {"d2": pairscore.l2_sq(x[:, None], panel[None])}
+
+
 def _panel_topk(
     spark: SparkSession,
     corpus: DataFrame,
@@ -263,6 +252,7 @@ def _panel_topk(
     schema: str,
     carry: tuple = ("vec_id",),
     split: str | None = None,
+    ascending: bool = False,
 ) -> DataFrame:
     """Per-batch top-``k`` candidates of each of the first N_QUERIES rows
     of ``corpus`` (``vec_id``, ``embedding`` and the ``carry`` columns),
@@ -275,7 +265,8 @@ def _panel_topk(
     query's (``q_<split>``) and among rows whose ``split`` differs, a null
     in neither. Every global top-k row is in its batch's top-k, so a
     window over the candidates is exact. ``schema`` names the carry and
-    score columns after ``q_id`` (and ``q_<split>``)."""
+    score columns after ``q_id`` (and ``q_<split>``); ``ascending`` picks
+    the least scores, NaN last."""
     ensure_package_on_workers(spark)
     cols = ["vec_id", "embedding", *([split] if split else [])]
     panel = corpus.filter(F.col("vec_id") < N_QUERIES).select(cols).collect()
@@ -294,7 +285,13 @@ def _panel_topk(
                 own, by.astype(float), queries[f"q_{split}"]
             )
         return pairscore.panel_topk(
-            batch, queries, score(batch, x, vecs), excludes, k, list(carry)
+            batch,
+            queries,
+            score(batch, x, vecs),
+            excludes,
+            k,
+            list(carry),
+            ascending,
         )
 
     if not len(ids):  # no query: nothing to pick
@@ -384,7 +381,7 @@ def ann_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # round 10: left as a single window — Spark 4.1 plans this
     # rank+filter shape with WindowGroupLimit(Partial) before the
     # exchange (map-side top-k per query), so the sort parallelism is
-    # NOT bounded by |Q|; see ProductQuantizer.adc_shortlist
+    # NOT bounded by |Q| (rank-limit pushdown, SPARK-37099)
     w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("vec_id"))
     return (
         pairs.withColumn("rnk", F.row_number().over(w))
@@ -437,42 +434,15 @@ def _ivf_search(emb: DataFrame, cents: Centroids) -> DataFrame:
     is independent of how the lists were built."""
     # coarse assignment is MAP-ONLY (functions/centroids.py): the
     # corpus reaches the bucket join with NO exchange at all
-    assigned = (
-        cents.bind(emb)
-        .select(
-            "vec_id",
-            "embedding",
-            cents.nearest(F.col("embedding")).alias("best"),
-            # per-row norm hoisted below the probe join (round 10,
-            # `cosine_with_norms`): folded once per row, not once per pair
-            l2_norm("embedding").alias("nrm"),
-        )
-        .select(
-            "vec_id",
-            F.col("best.centroid_id").alias("list_id"),
-            "embedding",
-            "nrm",
-        )
+    assigned = cents.assign(emb).select(
+        "vec_id",
+        F.col("centroid_id").alias("list_id"),
+        "embedding",
+        # per-row norm hoisted below the probe join (round 10,
+        # `cosine_with_norms`): folded once per row, not once per pair
+        l2_norm("embedding").alias("nrm"),
     )
-    # probe selection is map-only too: explode the first nprobe
-    # entries of the sorted struct array — no crossJoin, no window
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        l2_norm("embedding").alias("q_nrm"),
-    )
-    probes = (
-        cents.bind(queries)
-        .select(
-            "q_id",
-            "q_emb",
-            "q_nrm",
-            F.explode(cents.probes(F.col("q_emb"), IVF_NPROBE)).alias("pr"),
-        )
-        .select(
-            "q_id", "q_emb", "q_nrm", F.col("pr.centroid_id").alias("list_id")
-        )
-    )
+    probes = _probes(emb, cents, IVF_NPROBE)
     pairs = (
         assigned.join(F.broadcast(probes), "list_id")
         .filter(F.col("vec_id") != F.col("q_id"))
@@ -485,13 +455,39 @@ def _ivf_search(emb: DataFrame, cents: Centroids) -> DataFrame:
     # round 10: left as a single window — Spark 4.1 plans this
     # rank+filter shape with WindowGroupLimit(Partial) before the
     # exchange (map-side top-k per query), so the sort parallelism is
-    # NOT bounded by |Q|; see ProductQuantizer.adc_shortlist
+    # NOT bounded by |Q| (rank-limit pushdown, SPARK-37099)
     w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("vec_id"))
     return (
         pairs.withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= TOP_K)
         .select("q_id", "vec_id", "cos", F.col("rnk").cast("int").alias("rnk"))
     )
+
+
+def _probes(
+    emb: DataFrame,
+    cents: Centroids,
+    nprobe: int,
+    where: Column | None = None,
+) -> DataFrame:
+    """(q_id, q_emb, p, list_id, q_nrm): the ``nprobe`` nearest lists of
+    each query row of ``emb`` (the rows ``where`` holds, by default
+    vec_id < N_QUERIES), ``p`` the 1-based probe rank. The queries are
+    collected and searched on the driver, so the probe list is a local
+    table."""
+    if where is None:
+        where = F.col("vec_id") < N_QUERIES
+    rows = emb.filter(where).select("vec_id", "embedding").collect()
+    lists = cents.search(pairscore.stack(rows)[1], nprobe)[0]
+    return local_frame(
+        emb.sparkSession,
+        [
+            (r[0], r[1], p, int(c))
+            for r, ls in zip(rows, lists)
+            for p, c in enumerate(ls, start=1)
+        ],
+        "q_id bigint, q_emb array<float>, p int, list_id bigint",
+    ).withColumn("q_nrm", l2_norm("q_emb"))
 
 
 # the oracle's coarse assign + the N_QUERIES queries' probe lists
@@ -530,55 +526,27 @@ def ann_filtered_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate), the predicate is applied to candidates INSIDE the
     probed lists (post-filtering), and {FILTER_NPROBE} lists are probed
     — double the unfiltered {IVF_NPROBE} — to recover the candidate
-    mass the filter removes. Map-only coarse assign and probe
+    mass the filter removes. Map-only coarse assign of the rows the
+    predicate keeps, and a driver-side probe list
     (`functions/centroids.py`: the corpus never shuffles before the
-    bucket join); the predicate reaches the scan as a pushable filter
-    on the probe side."""
+    bucket join); the predicate reaches the scan as a pushable filter."""
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding", F.col("label").cast("int").alias("label")
     )
     cents = Centroids.first(emb, IVF_NLIST)
-    assigned = (
-        cents.bind(emb)
-        .select(
-            "vec_id",
-            "embedding",
-            "label",
-            cents.nearest(F.col("embedding")).alias("best"),
-            # per-row norm hoisted below the probe join (round 10,
-            # `cosine_with_norms`): folded once per row, not once per pair
-            l2_norm("embedding").alias("nrm"),
-        )
-        .select(
-            "vec_id",
-            "embedding",
-            "label",
-            F.col("best.centroid_id").alias("list_id"),
-            "nrm",
-        )
+    # the filter goes below the assign scan, which it cannot cross
+    assigned = cents.assign(emb.filter(F.col("label") == FILTER_LABEL)).select(
+        "vec_id",
+        "embedding",
+        "label",
+        F.col("centroid_id").alias("list_id"),
+        # per-row norm hoisted below the probe join (round 10,
+        # `cosine_with_norms`): folded once per row, not once per pair
+        l2_norm("embedding").alias("nrm"),
     )
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        l2_norm("embedding").alias("q_nrm"),
-    )
-    probes = (
-        cents.bind(queries)
-        .select(
-            "q_id",
-            "q_emb",
-            "q_nrm",
-            F.explode(cents.probes(F.col("q_emb"), FILTER_NPROBE)).alias(
-                "pr"
-            ),
-        )
-        .select(
-            "q_id", "q_emb", "q_nrm", F.col("pr.centroid_id").alias("list_id")
-        )
-    )
+    probes = _probes(emb, cents, FILTER_NPROBE)
     pairs = (
-        assigned.filter(F.col("label") == FILTER_LABEL)
-        .join(F.broadcast(probes), "list_id")
+        assigned.join(F.broadcast(probes), "list_id")
         .filter(F.col("vec_id") != F.col("q_id"))
         .select(
             "q_id",
@@ -588,7 +556,7 @@ def ann_filtered_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # round 10: single window kept — WindowGroupLimit(Partial) already
-    # does the map-side top-k here; see ProductQuantizer.adc_shortlist
+    # does the map-side top-k here (SPARK-37099)
     w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("vec_id"))
     return (
         pairs.withColumn("rnk", F.row_number().over(w))
@@ -651,10 +619,7 @@ def ann_topk_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
         eager=True
     )
     centroids = emb.filter(F.col("vec_id") < IVF_NLIST).select(
-        F.col("vec_id").alias("centroid_id"),
-        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias(
-            "c_emb"
-        ),
+        F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("c_emb")
     )
     for _ in range(IVF_TRAIN_ITERS):
         centroids = _recompute(spark, _assign(train, centroids))
@@ -720,7 +685,7 @@ def ann_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     The pair stage is VECTORIZED per cell (round 8): the capped cells
     make every group <= {KNN_BUCKET_CAP} vectors, so the all-pairs
     cosine + top-k inside a cell is a bounded dense-matrix problem --
-    groupBy(pat, sub).applyInPandas computes it with numpy instead of
+    groupBy(pat, sub).applyInArrow computes it with numpy instead of
     expanding a candidate-pair RELATION. The round-8 stage probe
     (SCALING.md) showed the old self-join's per-pair interpreted
     higher-order-function cosine was ~80% of the build (72 s of 94
@@ -799,16 +764,16 @@ def ann_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         emb.repartition(nparts, "pat", "sub")
         .groupBy("pat", "sub")
-        .applyInPandas(
+        .applyInArrow(
             _knn_cell_topk, "src bigint, rank int, dst bigint, cos double"
         )
     )
 
 
-def _knn_cell_topk(pdf):
+def _knn_cell_topk(cell: pa.Table) -> pa.Table:
     """Per-cell all-pairs cosine + top-{KNN_GRAPH_K}, fold-order exact
     (``pairscore.cell_topk``)."""
-    return pairscore.cell_topk(pdf, KNN_GRAPH_K)
+    return pairscore.cell_topk(cell, KNN_GRAPH_K)
 
 
 # the capped-LSH graph as a reusable CTE chain — the graph entry and
@@ -984,29 +949,82 @@ FROM q LEFT JOIN hits h ON h.src = q.q_id
 """
 
 
-def _pq_queries(emb: DataFrame) -> DataFrame:
-    return emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-
-
-def _pq_query_rows(emb: DataFrame) -> list:
-    """The (q_id, q_emb) query rows, collected and sorted by q_id."""
-    return sorted(_pq_queries(emb).collect(), key=lambda r: r["q_id"])
-
-
-def _pq_query_tables(
-    spark: SparkSession, pq: ProductQuantizer, emb: DataFrame
+def _pq_search(
+    spark: SparkSession,
+    emb: DataFrame,
+    cents: Centroids | None = None,
+    residual: bool = False,
 ) -> DataFrame:
-    """(q_id, t): each query's ADC table, as DATA — |Q|×(PQ_M·PQ_K)
-    bigints ride a broadcast frame, not ~10k literal expression nodes."""
-    return local_frame(
-        spark,
-        [
-            (int(r["q_id"]), pq.table([float(x) for x in r["q_emb"]]))
-            for r in _pq_query_rows(emb)
-        ],
-        "q_id bigint, t array<bigint>",
+    """(q_id, vec_id, adc_fp, d2, rnk): each of the first N_QUERIES
+    vectors' exact L2 top-TOP_K among its PQ_SHORTLIST least ADC sums,
+    from one Arrow batch scan of ``emb`` (vec_id, embedding) with the
+    quantizer, the query panel and its tables in the closure.
+
+    With ``cents``, each row is coarse-assigned in the scan and counts
+    only for the queries whose IVF_NPROBE probe lists (searched on the
+    driver) hold its list. With ``residual``, a row is encoded as its
+    residual to its list's centroid against a codebook of the seeds'
+    residuals, and each (list, query) pair has its own tables. Each
+    batch keeps its shortlist per query with the exact d2; two windows
+    over those candidates give the global shortlist and its top-k."""
+    ensure_package_on_workers(spark)
+    q_ids, q_vecs = pairscore.stack(
+        emb.filter(F.col("vec_id") < N_QUERIES)
+        .select("vec_id", "embedding")
+        .collect()
+    )
+    codebook = seeds(emb)
+    if residual:
+        lists = cents.search(codebook)[0][:, 0]
+        codebook = codebook - cents.vecs[np.searchsorted(cents.ids, lists)]
+    pq = ProductQuantizer(codebook)
+    if residual:
+        tables = np.stack([pq.tables(q_vecs - c) for c in cents.vecs])
+    else:
+        tables = pq.tables(q_vecs)[None]
+    if cents is not None:
+        probes = cents.search(q_vecs, IVF_NPROBE)[0]
+
+    def scan(batch):
+        ids = batch.column("vec_id").to_numpy()
+        x = pairscore.matrix(batch.column("embedding"), q_vecs.shape[1])
+        exclude = ids[:, None] == q_ids
+        at, coded = np.zeros(len(ids), np.int64), x
+        if cents is not None:
+            lists = cents.search(x)[0][:, 0]
+            exclude |= ~(lists[:, None, None] == probes).any(axis=2)
+            if residual:
+                at = np.searchsorted(cents.ids, lists)
+                coded = x - cents.vecs[at]
+        row, col, adc = pq.shortlist(
+            ids, pq.encode(coded)[0], tables, at, exclude
+        )
+        return pa.RecordBatch.from_arrays(
+            [
+                pa.array(q_ids[col]),
+                pa.array(ids[row]),
+                pa.array(adc),
+                pa.array(pairscore.l2_sq(x[row], q_vecs[col])),
+            ],
+            ["q_id", "vec_id", "adc_fp", "d2"],
+        )
+
+    if not len(q_ids):  # no query: nothing to pick
+        emb = emb.limit(0)
+    cands = emb.mapInArrow(
+        lambda batches: map(scan, batches),
+        "q_id bigint, vec_id bigint, adc_fp bigint, d2 double",
+    )
+    ws = Window.partitionBy("q_id").orderBy("adc_fp", "vec_id")
+    wd = Window.partitionBy("q_id").orderBy("d2", "vec_id")
+    return (
+        cands.withColumn("srnk", F.row_number().over(ws))
+        .filter(F.col("srnk") <= PQ_SHORTLIST)
+        .withColumn("rnk", F.row_number().over(wd))
+        .filter(F.col("rnk") <= TOP_K)
+        .select(
+            "q_id", "vec_id", "adc_fp", "d2", F.col("rnk").cast("int").alias("rnk")
+        )
     )
 
 
@@ -1018,23 +1036,18 @@ def emb_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     embedding corpus live executor-resident — each query scans codes
     via a precomputed per-subspace distance table (PQ_M lookups/vector,
     no float math in the scan), and only the PQ_SHORTLIST quantized
-    survivors per query rejoin their float vectors for the exact L2
-    re-rank (measured recall@5 vs exact: 0.84 at sf0.01, on embeddings
-    with no cluster structure — PQ's worst case).
+    survivors per query are re-ranked by exact L2 (measured recall@5
+    vs exact: 0.84 at sf0.01, on embeddings with no cluster structure —
+    PQ's worst case).
 
-    Spark shape: the encode is map-only and its coded index is
-    checkpointed; the one-row-per-query table frame crossJoins onto it
-    as a broadcast (the big side streams map-only). The scan emits
-    |corpus|·|Q| (bigint, bigint) scored rows — brute-force scan
-    complexity, but integer lookups over 16× smaller data — and the
-    refine join carries |Q|·PQ_SHORTLIST rows. The encode runs
-    interpreted (Spark logs a one-time codegen ERROR)."""
+    Spark shape (``_pq_search``): one Arrow batch scan encodes each row
+    and sums its ADC tables against every query in the closure, keeping
+    each batch's per-query shortlist with its exact d2; the corpus is
+    never joined or shuffled, and only the |tasks|·|Q|·PQ_SHORTLIST
+    candidates reach the two rank windows. Brute-force scan complexity,
+    but integer lookups."""
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    pq = ProductQuantizer(emb)
-    qdf = _pq_query_tables(spark, pq, emb)
-    coded = pq.coded_index(emb, "vec_id")
-    shortlist = pq.adc_shortlist(coded.crossJoin(F.broadcast(qdf)))
-    return refine(shortlist, emb, _pq_queries(emb), TOP_K)
+    return _pq_search(spark, emb)
 
 
 _PQ_ADC_SQL = f"""
@@ -1062,14 +1075,12 @@ def ann_index_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     risk (queries probing it drown in candidates while starved lists
     contribute none). All ratios are integer fixed-point (BIGINT `div`,
     exact in both engines); the plan is the map-only coarse assignment
-    (``functions/centroids.py``) followed by a {IVF_NLIST}-cell count — nothing corpus-sized
-    shuffles, and the one-row total rides the certificate-merge
-    crossJoin."""
+    scan (``functions/centroids.py``) followed by a {IVF_NLIST}-cell
+    count — nothing corpus-sized shuffles, and the one-row total rides
+    the certificate-merge crossJoin."""
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     cents = Centroids.first(emb, IVF_NLIST)
-    assigned = cents.bind(emb).select(
-        cents.nearest(F.col("embedding"))["centroid_id"].alias("list_id")
-    )
+    assigned = cents.assign(emb).select(F.col("centroid_id").alias("list_id"))
     lists = assigned.groupBy("list_id").agg(
         F.count(F.lit(1)).alias("n_vectors")
     )
@@ -1121,44 +1132,21 @@ def ann_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation (computed at the LARGEST budget) serves every curve point
     via a {len(NPROBE_GRID)}-row broadcast values join, one window per
     (query, budget), and a join against the exact baseline. Corpus-side
-    work is the map-only nearest-centroid assign and probe list
-    (``functions/centroids.py``) + broadcast probe join — at max(grid)
-    probes — regardless of grid size;
-    integer fixed-point recall (n_hit·2²⁰ div k)."""
+    work is the map-only nearest-centroid assign scan
+    (``functions/centroids.py``) + broadcast probe join of the
+    driver-side probe list — at max(grid) probes — regardless of grid
+    size; integer fixed-point recall (n_hit·2²⁰ div k)."""
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     cents = Centroids.first(emb, IVF_NLIST)
-    max_probe = max(NPROBE_GRID)
-    assigned = cents.bind(emb).select(
+    assigned = cents.assign(emb).select(
         "vec_id",
         "embedding",
-        cents.nearest(F.col("embedding"))["centroid_id"].alias("list_id"),
+        F.col("centroid_id").alias("list_id"),
         # per-row norm hoisted below the probe join (round 10,
         # `cosine_with_norms`): folded once per row, not once per pair
         l2_norm("embedding").alias("nrm"),
     )
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        l2_norm("embedding").alias("q_nrm"),
-    )
-    probes = (
-        cents.bind(queries)
-        .select(
-            "q_id",
-            "q_emb",
-            "q_nrm",
-            F.posexplode(cents.probes(F.col("q_emb"), max_probe)).alias(
-                "p0", "pr"
-            ),
-        )
-        .select(
-            "q_id",
-            "q_emb",
-            "q_nrm",
-            (F.col("p0") + 1).cast("int").alias("p"),  # 1-based probe rank
-            F.col("pr.centroid_id").alias("list_id"),
-        )
-    )
+    probes = _probes(emb, cents, max(NPROBE_GRID))
     pairs = (
         assigned.join(F.broadcast(probes), "list_id")
         .filter(F.col("vec_id") != F.col("q_id"))
@@ -1188,9 +1176,9 @@ def ann_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # below re-references the corpus-sized `cands`, which plans as its
     # own full subtree — but Catalyst's COLUMN PRUNING already strips
     # the cosine from that counting copy (the committed before-plan's
-    # count-side Project carries only the centroid-argmin assign, no
-    # zip_with fold), so the "duplicated pass" costs one assign-only
-    # scan, not a second cosine pass. A restructure that derived the
+    # count-side Project carried only the centroid assign, no zip_with
+    # fold), so the "duplicated pass" costs one assign-only scan, not a
+    # second cosine pass. A restructure that derived the
     # counts from 16-row list occupancies (occupancy minus one iff the
     # query's own vector lives in the probed list — same values, no
     # pair relation) measured SLOWER in three independent fresh-session
@@ -1271,7 +1259,7 @@ def ann_ivf_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental IVF index maintenance — the vector-store upsert loop
     (the ANN analog of ``dedup_incremental``): a newly-arrived batch
     (vec_id % {UPSERT_MOD} == 0 plays it) is coarse-assigned with the
-    SAME map-only nearest-centroid argmin the index was built with
+    SAME map-only nearest-centroid search the index was built with
     (``functions/centroids.py``), and
     the operator emits the per-list merge plan: size before, vectors
     added, size after, fixed-point growth, and the rebalance flag
@@ -1284,9 +1272,8 @@ def ann_ivf_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     every ratio engine-exact."""
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     cents = Centroids.first(emb, IVF_NLIST)
-    assigned = cents.bind(emb).select(
-        "vec_id",
-        cents.nearest(F.col("embedding"))["centroid_id"].alias("list_id"),
+    assigned = cents.assign(emb).select(
+        "vec_id", F.col("centroid_id").alias("list_id")
     )
     is_new = F.col("vec_id") % UPSERT_MOD == 0
     lists = assigned.groupBy("list_id").agg(
@@ -1345,23 +1332,28 @@ def emb_pq_residual_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor-fixed-point residual d² per subspace, plus each subspace's
     share of the total error — the which-subspaces-need-more-codewords
     decision (a subspace carrying 10× the residual energy is where
-    recall leaks; the fix is more bits there or an OPQ rotation). Same
-    map-only literal-codebook pass as the encoder (the achieved min-d²
-    rides out of the same array_min struct), then one
+    recall leaks; the fix is more bits there or an OPQ rotation). The
+    encode's own Arrow batch scan emits each row's PQ_M errors (the
+    achieved min-d² of the same search that picks the code), then one
     {PQ_M}-cell aggregate; integer `div` ratios keep the certificate
     engine-exact."""
+    ensure_package_on_workers(spark)
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    pq = ProductQuantizer(emb)
-    # evaluate the PQ_M×PQ_K literal-codebook expression ONCE per row
-    # and cut lineage before the Generate: feeding the ~16k-node
-    # interpreted expression directly into posexplode OOMs the
-    # driver-side plan; the checkpointed relation is just 32 bigints
-    err_arr = emb.select(
-        F.expr(pq.error_sql()).alias("errs")
-    ).localCheckpoint(eager=True)
-    errs = err_arr.select(
-        F.posexplode("errs").alias("p", "err_fp")
-    ).select(F.col("p").cast("int").alias("s"), "err_fp")
+    pq = ProductQuantizer(seeds(emb))
+
+    def scan(batch):
+        errs = pq.encode(pairscore.matrix(batch.column("embedding")))[1]
+        return pa.RecordBatch.from_arrays(
+            [
+                pa.array(np.tile(np.arange(PQ_M, dtype=np.int32), len(errs))),
+                pa.array(errs.ravel()),
+            ],
+            ["s", "err_fp"],
+        )
+
+    errs = emb.mapInArrow(
+        lambda batches: map(scan, batches), "s int, err_fp bigint"
+    )
     # DECIMAL(38,0) accumulators (ADD-only, the q1 recipe): err_fp is
     # up to ~2³⁰·d², so a BIGINT Σ survives ~1 M vectors but the
     # ·2²⁰ share multiply overflowed int64 AT 1.2 M (found by the
@@ -1372,8 +1364,10 @@ def emb_pq_residual_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("err_fp").cast("decimal(38,0)")).alias("sum_err_fp"),
         F.max("err_fp").alias("max_err_fp"),
     )
-    total = per.agg(F.sum("sum_err_fp").alias("tot"))
-    return per.crossJoin(F.broadcast(total)).select(
+    # the total over the PQ_M cells rides a window over them, not a
+    # crossJoin of a one-row aggregate
+    tot = F.sum("sum_err_fp").over(Window.partitionBy())
+    return per.withColumn("tot", tot).select(
         "s",
         "n_vectors",
         F.expr("sum_err_fp div n_vectors").cast("bigint").alias("mean_err_fp"),
@@ -1425,45 +1419,23 @@ def ann_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF+PQ ANN — the faiss IVFPQ recipe (shared-codebook variant,
     ``by_residual=false``): the corpus is coarse-assigned to IVF_NLIST
     inverted lists AND PQ-encoded to {PQ_M} 4-bit sub-codes in ONE
-    map-only pass (both the centroid argmin and the codebook argmin are
-    literal-bound expressions — the corpus never shuffles to get
-    indexed), queries probe their {IVF_NPROBE} nearest lists, and the
-    ADC table scan runs ONLY inside probed lists. That composition is
-    the actual production win over the repo's two single-technique
-    operators: `emb_pq_adc` scans |corpus|·|Q| code rows (compression
-    without pruning), `ann_topk_ivf` re-ranks probed lists with full
-    float vectors (pruning without compression) — here the scan cost
-    drops to |corpus|·NPROBE/NLIST per query over 16×-compressed codes,
-    which is what lets a 100 TB corpus answer from executor-resident
-    index shards. The {PQ_SHORTLIST}-candidate quantized shortlist per
-    query then rejoins float vectors for the exact L2 refine, exactly
+    map-only pass (both nearest-codeword searches run in the same Arrow
+    batch scan — the corpus never shuffles to get indexed), queries
+    probe their {IVF_NPROBE} nearest lists, and the ADC table scan
+    counts a row ONLY for the queries that probe its list. That
+    composition is the actual production win over the repo's two
+    single-technique operators: `emb_pq_adc` scans |corpus|·|Q| code
+    rows (compression without pruning), `ann_topk_ivf` re-ranks probed
+    lists with full float vectors (pruning without compression) — here
+    the scan cost drops to |corpus|·NPROBE/NLIST per query over
+    16×-compressed codes, which is what lets a 100 TB corpus answer
+    from executor-resident index shards. The {PQ_SHORTLIST}-candidate
+    quantized shortlist per query is then re-ranked by exact L2, exactly
     as emb_pq_adc documents. Fixed-point ADC tables keep every score a
     BIGINT (order-independent, engine-portable); shuffles touch only
-    the per-query shortlist windows."""
+    the per-query candidate windows."""
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    cents = Centroids.first(emb, IVF_NLIST)
-    pq = ProductQuantizer(emb)
-    qdf = _pq_query_tables(spark, pq, emb)
-    # ONE corpus pass builds the whole index row: inverted-list id +
-    # PQ codes, both map-only literal-expression argmins
-    coded = pq.coded_index(
-        cents.bind(emb),
-        "vec_id",
-        cents.nearest(F.col("embedding"))["centroid_id"].alias("list_id"),
-    )
-    queries = _pq_queries(emb)
-    probes = (
-        cents.bind(queries)
-        .select(
-            "q_id",
-            F.explode(cents.probes(F.col("q_emb"), IVF_NPROBE)).alias("pr"),
-        )
-        .select("q_id", F.col("pr.centroid_id").alias("list_id"))
-    )
-    # |Q|·NPROBE probe rows carry their ADC tables as broadcast DATA
-    probes_t = probes.join(qdf, "q_id")
-    shortlist = pq.adc_shortlist(coded.join(F.broadcast(probes_t), "list_id"))
-    return refine(shortlist, emb, queries, TOP_K)
+    return _pq_search(spark, emb, Centroids.first(emb, IVF_NLIST))
 
 
 # the probes carry their query's table per probed list, so the scan joins
@@ -1484,79 +1456,22 @@ def ann_topk_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the classic IVFADC construction from Jégou et al.'s
     product-quantization paper, public). The price is that ADC tables
     become per-(query, probed-list) — ``||(q − c_l) − code||²`` —
-    |Q|·NPROBE tables instead of |Q|, still KBs, still broadcast DATA.
+    |Q|·NPROBE tables instead of |Q|, still KBs, held in the scan's
+    closure.
 
-    Plan shape matches ann_topk_ivfpq: ONE map-only corpus pass does
-    coarse assign + residual + PQ encode (centroids and the residual
-    codebook ride in as literals/driver tables; the corpus never
-    shuffles to get indexed), probed-list ADC scan, per-query
-    shortlist window, exact float re-rank of {PQ_SHORTLIST}
-    candidates. Residual seeds are the first {PQ_K} vectors'
-    engine-computed residuals (collected, so Spark literal == oracle
-    arithmetic bit-for-bit); fixed-point BIGINT ADC scores keep the
+    Plan shape matches ann_topk_ivfpq: ONE map-only Arrow batch scan
+    does coarse assign + residual + PQ encode + probed-list ADC scan
+    (the corpus never shuffles to get indexed), then the shortlist and
+    top-k windows over the {PQ_SHORTLIST} candidates per query and
+    batch. The residual codebook is the first {PQ_K} vectors' residuals,
+    computed on the driver in the engines' double arithmetic (a float
+    widened to double minus the centroid double), so it holds the
+    oracle's doubles bit-for-bit; fixed-point BIGINT ADC scores keep the
     scan order-independent and engine-portable."""
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    cents = Centroids.first(emb, IVF_NLIST)
-    cmap = {
-        int(c["centroid_id"]): [float(x) for x in c["c_emb"]]
-        for c in cents.rows
-    }
-    # The positional element_at(_cbc, list_id + 1) below is only correct
-    # while centroid ids are exactly the dense vec_ids 0..IVF_NLIST-1
-    # (the oracle joins BY ID); enforce the assumption instead of
-    # leaving it implicit (round-7 ADVICE) so a future sparse seed set
-    # fails loudly here, not as a silent Spark/oracle desync.
-    assert sorted(cmap) == list(range(IVF_NLIST)), (
-        f"residual IVFPQ requires dense centroid ids 0..{IVF_NLIST - 1}; "
-        f"got {sorted(cmap)}"
+    return _pq_search(
+        spark, emb, Centroids.first(emb, IVF_NLIST), residual=True
     )
-    # centroid embeddings indexed by list_id for the residual subtract
-    cbyid = F.array(
-        *[
-            F.array(*[F.lit(v) for v in cmap[cid]])
-            for cid in sorted(cmap)
-        ]
-    )
-    resid = (
-        cents.bind(emb)
-        .select(
-            "vec_id",
-            "embedding",
-            cents.nearest(F.col("embedding"))["centroid_id"].alias("list_id"),
-        )
-        .withColumn("_cbc", cbyid)
-        .select(
-            "vec_id",
-            "list_id",
-            F.zip_with(
-                F.col("embedding"),
-                F.element_at(F.col("_cbc"), (F.col("list_id") + 1).cast("int")),
-                lambda x, y: x.cast("double") - y,
-            ).alias("resid"),
-        )
-    )
-    # residual codebook: the first PQ_K vectors' ENGINE-computed
-    # residuals (the vec_id < PQ_K filter pushes to the scan, so this
-    # is a 16-row pass)
-    pq = ProductQuantizer(resid, "resid")
-    coded = pq.coded_index(resid, "vec_id", "list_id")
-    # driver-side probes + per-(q, list) residual ADC tables: queries
-    # and centroids are already driver-held
-    qtabs = []
-    for qr in _pq_query_rows(emb):
-        qv = [float(x) for x in qr["q_emb"]]
-        byc = sorted(
-            ((py_l2_sq(qv, cmap[cid]), cid) for cid in sorted(cmap)),
-        )[:IVF_NPROBE]
-        for _, cid in byc:
-            qres = [a - b for a, b in zip(qv, cmap[cid])]
-            qtabs.append((int(qr["q_id"]), int(cid), pq.table(qres)))
-    qdf = local_frame(
-        spark,
-        qtabs, "q_id bigint, list_id bigint, t array<bigint>"
-    )
-    shortlist = pq.adc_shortlist(coded.join(F.broadcast(qdf), "list_id"))
-    return refine(shortlist, emb, _pq_queries(emb), TOP_K)
 
 
 _SQL_RESID = (
@@ -1585,8 +1500,7 @@ def ann_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@{TOP_K} of the production IVF+PQ path vs the exact
     answer — the query-set counterpart of ann_knn_graph_recall
     (round 9), closing the PQ family's pricing: cost curves live in
-    SCALING.md (linear through 4.8 M vectors once the coded-index
-    barrier landed), and THIS entry makes the quality side
+    SCALING.md, and THIS entry makes the quality side
     oracle-gated data that re-prices automatically if NLIST/NPROBE/
     PQ_M or the shortlist ever change. The exact side ranks by the
     same metric the IVFPQ refine step uses (L2, ties by neighbor id),
@@ -1596,29 +1510,25 @@ def ann_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     probed lists) and quantized shortlisting (inside a probed list
     but ADC-ranked below the {PQ_SHORTLIST}-candidate shortlist).
     Same recall-report shape as ann_recall_audit (q_id, k, n_hit,
-    recall); the exact pass costs one |corpus| × {N_QUERIES} scored
-    scan against the broadcast panel plus a top-{TOP_K} pick (round-10
-    ADVICE fix: the scan is map-only, the pick is not — it is a rank
-    window, which Spark 4.1 plans with a map-side partial
-    WindowGroupLimit, so the per-query sort is over task-local
-    survivors, not the corpus) — one brute-force scan at any SF, by
-    design."""
+    recall); the exact pass is the query panel's Arrow batch scan
+    (``_panel_topk`` under the L2 fold, least first) plus a top-{TOP_K}
+    window over the per-batch candidates — one brute-force scan at any
+    SF, by design."""
     approx = ann_topk_ivfpq(spark, sf_dir).select(
         "q_id", "vec_id", F.lit(1).alias("hit")
     )
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
-    pairs = (
-        emb.crossJoin(F.broadcast(_pq_queries(emb)))
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "vec_id",
-            l2_sq(F.col("q_emb"), F.col("embedding")).alias("d2"),
-        )
+    scored = _panel_topk(
+        spark, emb, TOP_K, _l2, "vec_id bigint, d2 double", ascending=True
     )
-    exact = l2_top(pairs, TOP_K).select("q_id", "vec_id")
+    w = Window.partitionBy("q_id").orderBy("d2", "vec_id")
+    exact = (
+        scored.withColumn("rnk", F.row_number().over(w))
+        .filter(F.col("rnk") <= TOP_K)
+        .select("q_id", "vec_id")
+    )
     return (
         exact.join(approx, ["q_id", "vec_id"], "left_outer")
         .groupBy("q_id")

@@ -18,7 +18,6 @@ tokenizer for a unicode-aware regexp — the plans are unchanged.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -974,7 +973,7 @@ def text_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     merges_b = spark.sparkContext.broadcast(merges)
 
     @F.pandas_udf("int")
-    def _n_bpe(ws: pd.Series) -> pd.Series:
+    def _n_bpe(ws):
         ms = merges_b.value
 
         def seg_len(w: str) -> int:

@@ -215,38 +215,16 @@ def diag_plan_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     pivf = plan_of(ann_topk_ivf(spark, sf_dir))
     checks.append(
         ("ann_topk_ivf", "coarse_assign_is_map_only",
-         "array_min" in pivf and "SortMergeJoin" not in pivf)
+         "MapInArrow" in pivf and "SortMergeJoin" not in pivf)
     )
-    # the coded index sits behind a localCheckpoint since round 9 (the
-    # derived-array-under-join barrier), so the encode no longer
-    # appears in the entry's downstream plan — audit the two halves:
-    # the ADC scan must stay broadcast (no shuffled cartesian), and
-    # the encode projection itself (rebuilt un-checkpointed) must be
-    # a map-only literal argmin (no Exchange of any kind)
+    # the encode, the ADC sums and the shortlist run in one Arrow batch
+    # scan of the corpus, with the query tables in its closure: no
+    # cartesian product and no join of any kind
     ppq = plan_of(emb_pq_adc(spark, sf_dir))
     checks.append(
-        ("emb_pq_adc", "adc_scan_no_shuffled_cartesian",
-         "CartesianProduct" not in ppq and "SortMergeJoin" not in ppq)
-    )
-    from pyspark.sql import functions as F  # noqa: N812
-
-    from blog_snapshotbackup_azuredatalake_spark.functions.pq import (
-        ProductQuantizer,
-    )
-    from blog_snapshotbackup_azuredatalake_spark.sources.catalog import (
-        load_table,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding"
-    )
-    pq = ProductQuantizer(emb)
-    penc = plan_of(
-        emb.select("vec_id", F.expr(pq.encode_sql()).alias("codes"))
-    )
-    checks.append(
-        ("emb_pq_adc", "literal_codebook_encode_map_only",
-         "array_min" in penc and "Exchange" not in penc)
+        ("emb_pq_adc", "pq_scan_arrow_batches",
+         "MapInArrow" in ppq and "CartesianProduct" not in ppq
+         and "Join" not in ppq)
     )
     # the score pass scans Arrow batches of the text with the collected
     # model in its closure: no exploded token stream, no join
@@ -262,9 +240,9 @@ def diag_plan_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pvq = plan_of(ann_topk_ivfpq(spark, sf_dir))
     checks.append(
-        ("ann_topk_ivfpq", "probe_and_refine_all_broadcast",
-         "BroadcastHashJoin" in pvq and "SortMergeJoin" not in pvq
-         and "CartesianProduct" not in pvq)
+        ("ann_topk_ivfpq", "probe_scan_arrow_batches",
+         "MapInArrow" in pvq and "CartesianProduct" not in pvq
+         and "Join" not in pvq)
     )
     from blog_snapshotbackup_azuredatalake_spark.plans.analytics_ext import (
         q_forecast_seasonal_naive,

@@ -379,3 +379,23 @@ def test_cc_labels_cached_consistent_with_pairs(spark):
     for r in pairs.collect():
         assert lab[r["doc_a"]] == lab[r["doc_b"]]
         assert lab[r["doc_a"]] <= min(r["doc_a"], r["doc_b"])
+
+
+def test_persisted_fills_its_cache_in_one_job(spark):
+    """``substrate.persisted`` materializes its base with one job (a
+    ``noop`` write; ``count()`` ran three), and the next action reads the
+    cache instead of the source."""
+    from pyspark.sql import functions as F
+
+    from tests.test_snapshot_jobs import _jobs
+
+    base = dedup.load_table(spark, SF_DIR, "documents").select(
+        "doc_id", F.length("text").alias("n")
+    )
+    df, jobs = _jobs(spark, lambda: substrate.persisted(base))
+    try:
+        assert jobs == 1, jobs
+        qe = df.groupBy("n").count()._jdf.queryExecution()
+        assert "InMemoryTableScan" in qe.executedPlan().toString()
+    finally:
+        df.unpersist()

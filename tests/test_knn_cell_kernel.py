@@ -1,6 +1,6 @@
 """Edge-case unit tests for the vectorized kNN cell kernel
 (_knn_cell_topk, the cell driver of functions/pairscore.py) — pure
-pandas/numpy, no Spark session.
+pyarrow/numpy, no Spark session.
 
 The kernel must reproduce the SQL oracle's window semantics exactly:
 ROW_NUMBER() OVER (PARTITION BY src ORDER BY cos DESC, dst ASC),
@@ -10,7 +10,7 @@ descending key (Spark/DuckDB NaN-is-greatest double ordering).
 import math
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 from blog_snapshotbackup_azuredatalake_spark.operators.similarity import (
     KNN_GRAPH_K,
@@ -19,9 +19,19 @@ from blog_snapshotbackup_azuredatalake_spark.operators.similarity import (
 
 
 def _cell(ids, vecs):
-    return pd.DataFrame(
-        {"vec_id": ids, "embedding": [np.array(v, dtype=np.float32) for v in vecs]}
+    return pa.table(
+        {
+            "vec_id": pa.array(ids, pa.int64()),
+            "embedding": pa.array(
+                [np.array(v, dtype=np.float32) for v in vecs],
+                pa.list_(pa.float32()),
+            ),
+        }
     )
+
+
+def _col(res, name):
+    return res.column(name).to_pylist()
 
 
 def _oracle(ids, vecs):
@@ -55,12 +65,9 @@ def _oracle(ids, vecs):
     return out
 
 
-def _kernel_rows(pdf):
-    res = _knn_cell_topk(pdf)
-    return [
-        (int(r.src), int(r.rank), int(r.dst), float(r.cos))
-        for r in res.itertuples()
-    ]
+def _kernel_rows(cell):
+    res = _knn_cell_topk(cell)
+    return list(zip(*(_col(res, c) for c in ("src", "rank", "dst", "cos"))))
 
 
 def _assert_matches(ids, vecs):
@@ -81,21 +88,22 @@ def _assert_matches(ids, vecs):
 
 def test_single_vector_cell_emits_nothing():
     res = _knn_cell_topk(_cell([7], [[1.0, 2.0]]))
-    assert len(res) == 0
-    assert list(res.columns) == ["src", "rank", "dst", "cos"]
+    assert res.num_rows == 0
+    assert res.column_names == ["src", "rank", "dst", "cos"]
+    assert res.schema.field("rank").type == pa.int32()
 
 
 def test_two_vector_cell_emits_one_edge_each():
     res = _knn_cell_topk(_cell([1, 2], [[1.0, 0.0], [0.5, 0.5]]))
-    assert len(res) == 2
-    assert set(res["rank"]) == {1}
+    assert res.num_rows == 2
+    assert set(_col(res, "rank")) == {1}
 
 
 def test_small_cell_caps_rank_at_m_minus_1():
     ids = [10, 11, 12]
     vecs = [[1.0, 0.0], [0.9, 0.1], [0.0, 1.0]]
     res = _knn_cell_topk(_cell(ids, vecs))
-    assert len(res) == 3 * 2  # m-1 = 2 < KNN_GRAPH_K
+    assert res.num_rows == 3 * 2  # m-1 = 2 < KNN_GRAPH_K
     _assert_matches(ids, vecs)
 
 
@@ -110,19 +118,17 @@ def test_cosine_ties_break_by_ascending_dst():
     # dst 3 and 4 are IDENTICAL vectors -> identical cos to src
     ids = [1, 3, 4, 9]
     vecs = [[1.0, 0.0], [0.6, 0.8], [0.6, 0.8], [0.0, 1.0]]
-    res = _knn_cell_topk(_cell(ids, vecs))
-    src1 = res[res["src"] == 1].sort_values("rank")
-    assert list(src1["dst"]) == [3, 4, 9]
+    rows = sorted(r[1:3] for r in _kernel_rows(_cell(ids, vecs)) if r[0] == 1)
+    assert [dst for _, dst in rows] == [3, 4, 9]
 
 
 def test_zero_norm_vector_nan_sorts_first_desc():
     # vec 5 is all-zero: cos(src, 5) = NaN, which Spark's DESC puts FIRST
     ids = [1, 2, 5]
     vecs = [[1.0, 0.0], [0.9, 0.1], [0.0, 0.0]]
-    res = _knn_cell_topk(_cell(ids, vecs))
-    src1 = res[res["src"] == 1].sort_values("rank")
-    assert list(src1["dst"])[0] == 5
-    assert math.isnan(list(src1["cos"])[0])
+    rows = sorted(r[1:] for r in _kernel_rows(_cell(ids, vecs)) if r[0] == 1)
+    assert rows[0][1] == 5
+    assert math.isnan(rows[0][2])
     _assert_matches(ids, vecs)
 
 
@@ -130,6 +136,9 @@ def test_self_never_emitted():
     rng = np.random.RandomState(42)
     ids = list(range(50))
     vecs = rng.randn(50, 8).astype(np.float32)
-    res = _knn_cell_topk(_cell(ids, list(vecs)))
-    assert not any(res["src"] == res["dst"])
-    assert res.groupby("src")["rank"].max().eq(KNN_GRAPH_K).all()
+    rows = _kernel_rows(_cell(ids, list(vecs)))
+    assert not any(src == dst for src, _, dst, _ in rows)
+    best = {}
+    for src, rank, _, _ in rows:
+        best[src] = max(best.get(src, 0), rank)
+    assert set(best.values()) == {KNN_GRAPH_K} and len(best) == 50

@@ -284,3 +284,204 @@ def test_panel_max_is_the_engines_max():
     empty = pairscore.panel_max(_batch(ids, vecs), _panel([], [])[1], ["vec_id"])
     assert empty.num_rows == 0
     assert empty.schema.names == ["vec_id", "max_cos"]
+
+
+# ---------------------------------------------------------------------------
+# nearest: the centroid and codeword search (functions/centroids.py, pq.py)
+# ---------------------------------------------------------------------------
+
+
+def _ddb_embeddings(vecs):
+    """A DuckDB connection with ``embeddings(vec_id, embedding FLOAT[])``."""
+    con = duckdb.connect()
+    con.register(
+        "emb_t",
+        pa.table(
+            {
+                "vec_id": pa.array(range(len(vecs)), pa.int64()),
+                "embedding": pa.array(vecs, pa.list_(pa.float32())),
+            }
+        ),
+    )
+    con.execute("CREATE TABLE embeddings AS SELECT * FROM emb_t")
+    return con
+
+
+@pytest.mark.parametrize("fold", ["l2_sq", "neg_cosine"])
+def test_nearest_is_the_oracles_centroid_search(fold):
+    """``nearest`` against ``sql_centroid_ctes``: the assignment and the
+    first-n probe lists, ids and distances, over seeds with an exact tie
+    (seeds 0 and 1 are equal), a zero-norm seed and row (NaN cosines), a
+    row with a NaN element and rows nearer to no seed in particular."""
+    from blog_snapshotbackup_azuredatalake_spark.functions.centroids import (
+        sql_centroid_ctes,
+        sql_neg_cosine,
+    )
+    from blog_snapshotbackup_azuredatalake_spark.functions.vectors import sql_l2_sq
+
+    rng = np.random.RandomState(11)
+    vecs = _f32(rng.randint(-2, 3, size=(40, 6)).astype(np.float32) / 2)
+    vecs[1] = vecs[0]
+    vecs[3] = [0.0] * 6  # a zero-norm seed: its cosines are NaN
+    vecs[7] = [0.0] * 6  # a zero-norm row: NaN against every seed
+    vecs[9][2] = math.nan
+    n_seeds, n = 5, 4
+    con = _ddb_embeddings(vecs)
+    sql_fold = sql_l2_sq if fold == "l2_sq" else sql_neg_cosine
+    want = con.execute(
+        f"""WITH {sql_centroid_ctes(n_seeds, "TRUE", n, sql_fold)}
+        SELECT q_id, list(list_id ORDER BY p), list(d ORDER BY p)
+        FROM probes GROUP BY q_id ORDER BY q_id"""
+    ).fetchall()
+    assigned = con.execute(
+        f"""WITH {sql_centroid_ctes(n_seeds, fold=sql_fold)}
+        SELECT list_id, d FROM assigned ORDER BY vec_id"""
+    ).fetchall()
+    x = np.array(vecs)
+    ids = np.arange(n_seeds)[::-1].copy()  # any order: the kernel sorts
+    got_ids, got_d = pairscore.nearest(x, ids, x[ids], n, fold)
+    # DuckDB's 0/0 is NULL where the kernel's is NaN; both order last
+    nan = lambda ds: [math.nan if d is None else d for d in ds]  # noqa: E731
+    for (q, w_ids, w_d), g_ids, g_d in zip(want, got_ids, got_d):
+        assert list(g_ids) == w_ids, q
+        assert all(map(_same, g_d, nan(w_d))), (q, g_d, w_d)
+    one_ids, one_d = pairscore.nearest(x, ids, x[ids], 1, fold)
+    assert one_ids[:, 0].tolist() == [i for i, _ in assigned]
+    assert all(map(_same, one_d[:, 0], nan(d for _, d in assigned)))
+    # the tie goes to the lower id, and NaN comes last: a row with a NaN
+    # element is NaN against every seed and picks them in id order
+    assert got_ids[0][:2].tolist() == [0, 1]
+    assert got_ids[9].tolist() == [0, 1, 2, 3]
+    assert all(math.isnan(d) for d in got_d[9])
+    if fold == "neg_cosine":  # zero norms: NaN cosines
+        assert got_ids[7].tolist() == [0, 1, 2, 3]
+        assert 3 not in got_ids[10].tolist()  # four numbers rank first
+
+
+def test_nearest_takes_fewer_columns_than_panel_rows_and_no_rows():
+    x = np.array([[0.0, 1.0], [1.0, 0.0]])
+    ids, d = pairscore.nearest(x, np.array([4, 2]), x, 3)
+    assert ids.tolist() == [[4, 2], [2, 4]] and d.tolist() == [[0, 2], [0, 2]]
+    ids, d = pairscore.nearest(x[:0], np.array([4, 2]), x, 2)
+    assert ids.shape == (0, 2) and d.shape == (0, 2)
+
+
+def test_ascending_l2_top_k_puts_nan_last():
+    """The exact side of ann_ivfpq_recall: ORDER BY d2, vec_id keeps the
+    least distances and puts NaN after every number."""
+    rng = np.random.RandomState(12)
+    ids = np.arange(60)[::-1].copy()
+    x = rng.randint(0, 3, size=(60, 4)).astype(float)  # many ties
+    x[[5, 17]] = np.nan
+    q = x[[0, 1, 2]]
+    d2 = pairscore.l2_sq(x[:, None], q[None])
+    row, col, rank = pairscore.top_k(d2, ids, np.zeros(d2.shape, bool), 59, True)
+    for j in range(3):
+        want = sorted(
+            range(60),
+            key=lambda i: (math.isnan(d2[i, j]), np.nan_to_num(d2[i, j]), ids[i]),
+        )[:59]
+        assert list(row[col == j]) == want
+        assert list(rank[col == j]) == list(range(1, 60))
+    # the fold is the engines': one element at a time, from the left
+    a, b = x[3], q[1]
+    acc = 0.0
+    for u, v in zip(a, b):
+        acc += (u - v) * (u - v)
+    assert d2[3, 1] == acc
+
+
+def _pq_vectors(n, seed):
+    """float32 vectors of PQ_M·PQ_SUBDIM dims with few distinct values,
+    so equal subvectors (exact codeword ties) are common."""
+    from blog_snapshotbackup_azuredatalake_spark.functions.pq import PQ_M, PQ_SUBDIM
+
+    rng = np.random.RandomState(seed)
+    return _f32(rng.randint(-2, 3, size=(n, PQ_M * PQ_SUBDIM)) / 2 + 0.1)
+
+
+def test_pq_codes_errors_and_tables_are_the_oracles():
+    """``ProductQuantizer.encode`` against ``sql_pq_ctes``' ``encoded``
+    (codes and floor(d2·2³⁰) errors, ties to the lower code), its
+    ``tables`` against ``qtab`` and its ADC sums against the oracle's
+    ``adc`` join, for a codebook of the first PQ_K rows."""
+    from blog_snapshotbackup_azuredatalake_spark.functions.pq import (
+        PQ_K,
+        PQERR_FP,
+        ProductQuantizer,
+        sql_pq_ctes,
+    )
+
+    vecs = _pq_vectors(50, 13)
+    vecs[1] = vecs[0]  # two equal codewords: every tie goes to code 0
+    con = _ddb_embeddings(vecs)
+    con.execute(
+        "CREATE TABLE queries AS SELECT vec_id AS q_id, embedding AS q_emb "
+        "FROM embeddings WHERE vec_id < 7"
+    )
+    ctes = sql_pq_ctes(queries=("queries", "q_emb"))
+    x = np.array(vecs)
+    pq = ProductQuantizer(x[:PQ_K])
+    codes, errs = pq.encode(x)
+    assert not (codes == 1).any()
+    want = con.execute(
+        f"""WITH {ctes}
+        SELECT list(code ORDER BY s),
+               list(CAST(floor(d2 * {PQERR_FP}) AS BIGINT) ORDER BY s)
+        FROM encoded GROUP BY vec_id ORDER BY vec_id"""
+    ).fetchall()
+    assert [(c.tolist(), e.tolist()) for c, e in zip(codes, errs)] == want
+    tables = pq.tables(x[:7])
+    assert con.execute(
+        f"""WITH {ctes} SELECT list(dfp ORDER BY s, j) FROM qtab
+        GROUP BY q_id ORDER BY q_id"""
+    ).fetchall() == [(t.ravel().tolist(),) for t in tables]
+    adc = con.execute(
+        f"""WITH {ctes} SELECT t.q_id, e.vec_id, SUM(t.dfp)
+        FROM encoded e JOIN qtab t ON t.s = e.s AND t.j = e.code
+        GROUP BY ALL"""
+    ).fetchall()
+    ids = np.arange(len(x))
+    row, col, got = pq.shortlist(
+        ids, codes, tables[None], np.zeros(len(x), np.int64),
+        np.zeros((len(x), 7), bool),
+    )
+    sums = {(q, v): s for q, v, s in adc}
+    assert all(sums[(c, r)] == s for r, c, s in zip(row, col, got))
+    # each query's shortlist is its least sums, ties by vec_id
+    for q in range(7):
+        best = sorted((s, v) for (qq, v), s in sums.items() if qq == q)
+        assert list(row[col == q]) == [v for _, v in best[: len(row[col == q])]]
+
+
+def test_arrow_kernel_modules_do_not_import_pandas():
+    """A Python worker that runs only Arrow kernels imports these modules
+    and no pandas (about half a second of CPU per worker)."""
+    import os
+    import subprocess
+    import sys
+
+    mods = [
+        "functions.pairscore",
+        "functions.tokens",
+        "operators.dedup",
+        "operators.text",
+        "operators.similarity",
+        "operators.curation",
+    ]
+    code = (
+        "import sys\n"
+        + "".join(
+            f"import blog_snapshotbackup_azuredatalake_spark.{m}\n" for m in mods
+        )
+        + "print('pandas' in sys.modules)"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        capture_output=True,
+        text=True,
+        check=True,
+        cwd=root,
+    )
+    assert out.stdout.strip() == "False", out.stdout

@@ -49,8 +49,6 @@ ALLOW = {
     ("operators/text.py", "text_source_tv_divergence", "counts"):
         "agg-derived vocab grid",
     # calibration truth sets: grams_cached is checkpoint-backed
-    ("operators/dedup.py", "dedup_substring", "ex"):
-        "checkpoint-backed grams, capped cal set",
     ("operators/dedup.py", "dedup_lsh_calibration", "ex"):
         "checkpoint-backed grams, capped cal set",
     # chunked substrate is localCheckpoint'ed; cdc/fixed are per-source aggs
@@ -63,9 +61,6 @@ ALLOW = {
         "agg-derived adjacency",
     ("operators/graph.py", "graph_clustering_coefficient", "nv"):
         "agg-derived adjacency",
-    # qdf is the bounded query set (each site audited per-function)
-    ("operators/similarity.py", "ann_topk_ivfpq", "probes"):
-        "bounded query probe set",
     # SCD2 dim is dimension-scale by contract
     ("operators/snapshot.py", "snap_scd2_asof_join", "dim"):
         "dimension-scale SCD2 relation",
@@ -492,20 +487,6 @@ def test_no_unbarriered_derived_array_joins():
     )
 
 
-def test_derived_array_lint_covers_the_pq_encode():
-    """The coded index every PQ entry scans is built in one place; the
-    lint must see that encode there, pass it with its barrier, and
-    flag the same source with the barrier taken out."""
-    v, found = _scan_derived()
-    assert ("functions/pq.py", "coded_index", "coded") in found, sorted(found)
-    assert not [x for x in v if x.startswith("functions/pq.py")], v
-    src = open(os.path.join(BASE, "functions", "pq.py")).read()
-    barrier = ".localCheckpoint(eager=False)"
-    assert src.count(barrier) == 1, src.count(barrier)
-    v, _ = _scan_derived({"functions/pq.py": src.replace(barrier, "")})
-    assert len(v) == 1 and "coded_index" in v[0], v
-
-
 def _stale_derived(allow, sources=None):
     """The ``allow`` keys whose site is no unbarriered join or return."""
     hits, _ = _derived_hits(sources)
@@ -532,3 +513,138 @@ def test_derived_array_allowance_is_stale_once_its_join_is_gone():
     assert _stale_derived({key: "r"}, {"repro.py": _REPRO_BARRIERED}) == [key]
     _, found = _derived_hits({"repro.py": _REPRO_BARRIERED})
     assert key in found
+
+
+# ---------------------------------------------------------------------------
+# Interpreted-fold lint: a higher-order function (F.transform, F.aggregate,
+# F.zip_with, F.filter, F.exists, F.forall, or a SQL `x -> ...` lambda in
+# an F.expr / selectExpr string) is CodegenFallback in Spark 4.x — one
+# boxed lambda call per element. The vector scorers, the centroid and
+# codeword searches and the token kernels moved to numpy on Arrow batches
+# (functions/pairscore.py, functions/tokens.py); every site still folding
+# in Spark is listed here, so a new one is a test failure, and an entry
+# whose site is gone fails as stale.
+# ---------------------------------------------------------------------------
+
+_FOLD_CALLS = {"transform", "aggregate", "zip_with", "filter", "exists", "forall"}
+
+# (path-suffix, enclosing function): why the site still folds in Spark
+FOLD_ALLOW = {
+    ("functions/vectors.py", "dot_product"):
+        "the probe-join cosine fold (ROADMAP item 3, step 2)",
+    ("functions/vectors.py", "l2_norm"):
+        "the probe-join row norms (ROADMAP item 3, step 2)",
+    ("operators/clustering.py", "emb_pca_power"):
+        "one projection per power iteration, against a literal vector",
+    ("operators/curation.py", "doc_chunk"):
+        "chunk slicing of the token array, no arithmetic fold",
+    ("operators/dedup.py", "dedup_anchor_calibration"):
+        "pre-normalised anchor vectors (ROADMAP item 3)",
+    ("operators/dedup.py", "dot"):
+        "pre-normalised dot of the anchor calibration",
+    ("operators/quality.py", "dq_embeddings"):
+        "per-row norm and NaN check of the embeddings audit",
+    ("operators/similarity.py", "emb_quantize_sq8"):
+        "int8 reconstruction of the second vector column",
+    ("operators/text.py", "_count_in"):
+        "stopword counts of the language-ID entries",
+    ("operators/text.py", "text_cooccurrence"):
+        "window pairs of the token array",
+    ("operators/text.py", "text_fingerprint"):
+        "token hashes of the fingerprint entry",
+    ("operators/text.py", "text_quality_classifier"):
+        "feature extraction over the token array",
+    ("operators/text.py", "text_repetition"):
+        "repeated-token counts over the token array",
+    ("operators/text.py", "text_tokencount"):
+        "token-length sum",
+    ("plans/analytics_ext.py", "q_basket_affinity"):
+        "item pairs of one basket array",
+}
+
+
+def _fold_sites(sources=None):
+    """{(rel, func): sorted call names} of every interpreted fold in the
+    package (or in ``sources``, {rel_path: src}); module level is func
+    None."""
+    if sources is None:
+        sources = {}
+        for root, _, files in os.walk(BASE):
+            for f in files:
+                if f.endswith(".py"):
+                    p = os.path.join(root, f)
+                    sources[os.path.relpath(p, BASE)] = open(p).read()
+    sites = {}
+
+    def visit(rel, node, func):
+        for ch in ast.iter_child_nodes(node):
+            inner = func
+            if isinstance(ch, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                inner = ch.name
+            if isinstance(ch, ast.Call) and isinstance(ch.func, ast.Attribute):
+                at = ch.func
+                on_f = isinstance(at.value, ast.Name) and at.value.id == "F"
+                sql = (on_f and at.attr == "expr") or at.attr == "selectExpr"
+                if on_f and at.attr in _FOLD_CALLS:
+                    sites.setdefault((rel, func), set()).add(at.attr)
+                elif sql and any(
+                    isinstance(n, ast.Constant)
+                    and isinstance(n.value, str)
+                    and "->" in n.value
+                    for n in ast.walk(ch)
+                ):
+                    sites.setdefault((rel, func), set()).add(f"{at.attr} lambda")
+            visit(rel, ch, inner)
+
+    for rel, src in sources.items():
+        visit(rel, ast.parse(src), None)
+    return {k: sorted(v) for k, v in sites.items()}
+
+
+_REPRO_FOLDS = """
+def scorer(df):
+    return df.select(F.aggregate(F.zip_with("a", "b", mul), zero, add))
+
+
+def sql_scorer(df):
+    return df.selectExpr(f"transform(xs, x -> x * {K})")
+
+
+def clean(df):
+    return df.select(F.expr("a + 1"), F.col("x")).filter(F.col("a") > 0)
+"""
+
+
+def test_fold_lint_finds_calls_and_sql_lambdas():
+    sites = _fold_sites({"repro.py": _REPRO_FOLDS})
+    assert sites == {
+        ("repro.py", "scorer"): ["aggregate", "zip_with"],
+        ("repro.py", "sql_scorer"): ["selectExpr lambda"],
+    }, sites
+
+
+def test_no_unlisted_interpreted_folds():
+    new = {k: v for k, v in _fold_sites().items() if k not in FOLD_ALLOW}
+    assert not new, (
+        "interpreted higher-order function (CodegenFallback, one boxed "
+        "lambda call per element) outside FOLD_ALLOW — score on Arrow "
+        "batches in numpy (functions/pairscore.py, functions/tokens.py) "
+        "or list the site with its reason:\n"
+        + "\n".join(f"{k}: {v}" for k, v in sorted(new.items(), key=str))
+    )
+
+
+def test_fold_allowlist_not_stale():
+    sites = _fold_sites()
+    stale = [k for k in FOLD_ALLOW if k not in sites]
+    assert not stale, (
+        "FOLD_ALLOW entries whose fold is gone — delete them:\n"
+        + "\n".join(map(str, stale))
+    )
+    # the searches and token kernels that moved to numpy stay there
+    assert not [
+        k
+        for k in sites
+        if k[0] in ("functions/centroids.py", "functions/pq.py")
+        or k == ("operators/dedup.py", "_span_grams")
+    ]

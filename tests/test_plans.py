@@ -109,13 +109,14 @@ def test_ivf_centroids_broadcast_corpus_never_shuffles_for_assign(
     assert "BroadcastHashJoin" in plan, plan[:800]
     assert "SortMergeJoin" not in plan, plan[:800]
     assert "BroadcastNestedLoopJoin" not in plan, plan[:800]
-    assert "array_min" in plan
+    assert "MapInArrow" in plan and "array_min" not in plan
 
-    # every entry the nearest-centroid primitive serves searches MAP-ONLY
-    # (literal centroid array argmin / sorted probe list): the operator
-    # that evaluates array_min/array_sort reads straight from the scan —
-    # no join, crossJoin or exchange below it. The localCheckpoint
-    # barriers are lifted so the coded-index assign stays in the plan.
+    # every entry the nearest-centroid search serves assigns MAP-ONLY:
+    # each Arrow batch scan (Centroids.assign, the PQ panel scan) reads
+    # straight from the scan — no join, crossJoin or exchange below it —
+    # and no plan sorts or takes the minimum of a literal centroid array
+    # (the array_sort/array_min search it replaces). The
+    # localCheckpoint barriers are lifted so every scan stays in the plan.
     monkeypatch.setattr(
         type(spark.range(1)), "localCheckpoint", lambda self, eager=True: self
     )
@@ -127,16 +128,11 @@ def test_ivf_centroids_broadcast_corpus_never_shuffles_for_assign(
         "emb_kmeans", "emb_centroid_assign", "emb_cluster_purity",
         "emb_silhouette_lite",
     ):
-        root = qs[name](spark, SF_DIR)._jdf.queryExecution()
-        root = root.executedPlan().executedPlan()  # inside AdaptiveSparkPlan
-        searches = [
-            n
-            for n in _plan_nodes(root)
-            if any(
-                f in n.expressions().toString()
-                for f in ("array_min(", "array_sort(")
-            )
-        ]
+        df = qs[name](spark, SF_DIR)
+        plan = _plan(df)
+        assert "array_min(" not in plan and "array_sort(" not in plan, name
+        root = df._jdf.queryExecution().executedPlan().executedPlan()
+        searches = [n for n in _plan_nodes(root) if "MapInArrow" in n.nodeName()]
         assert searches, name
         for n in searches:
             below = [m.nodeName() for m in _plan_nodes(n)][1:]
@@ -216,34 +212,23 @@ def test_q9_part_filter_before_join(spark):
     ), plan[:800]
 
 
-def test_pq_encode_is_map_only_scan_is_integer(spark):
-    from blog_snapshotbackup_azuredatalake_spark.functions.pq import (
-        ProductQuantizer,
-    )
+def test_pq_entries_scan_arrow_batches(spark):
+    """Each PQ entry encodes, sums its ADC tables and shortlists in one
+    Arrow batch scan with the query tables in its closure: MapInArrow fed
+    by the scan, and no pair relation (cartesian product or nested-loop
+    join) anywhere in the plan."""
     from blog_snapshotbackup_azuredatalake_spark.operators import similarity
 
-    from pyspark.sql import functions as F
-
-    plan = _plan(similarity.emb_pq_adc(spark, SF_DIR))
-    # codebook argmin rides as a literal (array_min over bound structs):
-    # encoding must never join or shuffle the corpus. The ADC tables
-    # crossJoin as a broadcast one-row-per-query frame (the intended
-    # every-query-scores-every-row scan), never a shuffled cartesian.
-    # Since round 9 the coded index is materialized behind a
-    # localCheckpoint (derived-array-under-join barrier), so the encode
-    # is audited on its own un-checkpointed projection: a map-only
-    # literal argmin with no Exchange of any kind.
-    assert "CartesianProduct" not in plan
-    assert "SortMergeJoin" not in plan
-    emb = similarity.load_table(spark, SF_DIR, "embeddings").select(
-        "vec_id", "embedding"
-    )
-    pq = ProductQuantizer(emb)
-    eplan = _plan(
-        emb.select("vec_id", F.expr(pq.encode_sql()).alias("codes"))
-    )
-    assert "array_min" in eplan
-    assert "Exchange" not in eplan
+    for entry in (
+        similarity.emb_pq_adc,
+        similarity.emb_pq_residual_audit,
+        similarity.ann_topk_ivfpq,
+        similarity.ann_topk_ivfpq_residual,
+        similarity.ann_ivfpq_recall,
+    ):
+        plan = _plan(entry(spark, SF_DIR))
+        _scan_feeds_map_in_arrow(plan)
+        assert "BroadcastNestedLoopJoin" not in plan, plan
 
 
 def test_lm_passes_scan_arrow_batches(spark):

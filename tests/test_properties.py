@@ -10,6 +10,7 @@ import hashlib
 import math
 
 import duckdb
+import numpy as np
 import pytest
 from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
@@ -52,7 +53,6 @@ from blog_snapshotbackup_azuredatalake_spark.functions.changeset import (
 )
 from blog_snapshotbackup_azuredatalake_spark.functions.centroids import (
     Centroids,
-    neg_cosine,
     sql_centroid_ctes,
     sql_neg_cosine,
 )
@@ -61,10 +61,10 @@ from blog_snapshotbackup_azuredatalake_spark.functions.vectors import (
     cosine_with_norms,
     dot_product,
     l2_norm,
-    l2_sq,
     sql_cosine,
     sql_l2_sq,
 )
+from blog_snapshotbackup_azuredatalake_spark.functions import pairscore
 from blog_snapshotbackup_azuredatalake_spark.functions.pq import (
     PQ_K,
     PQ_M,
@@ -72,12 +72,23 @@ from blog_snapshotbackup_azuredatalake_spark.functions.pq import (
     PQ_SUBDIM,
     PQERR_FP,
     ProductQuantizer,
-    py_l2_sq,
-    refine,
+    seeds,
     sql_adc_refine,
     sql_pq_ctes,
-    subvector,
 )
+
+
+def py_l2_sq(a: list, b: list) -> float:
+    """The engines' squared-L2 fold, one element at a time from the
+    left, in Python doubles."""
+    acc = 0.0
+    for x, y in zip(a, b):
+        acc += (x - y) * (x - y)
+    return acc
+
+
+def subvector(v: list, s: int) -> list:
+    return v[s * PQ_SUBDIM : (s + 1) * PQ_SUBDIM]
 
 # no control chars (SEP itself excluded by design contract), ASCII-ish
 _txt = st.text(
@@ -323,7 +334,6 @@ def test_dot_and_cosine_match_python(spark, ab):
         dot_product("a", "b").alias("dot"),
         cosine_similarity("a", "b").alias("cos"),
         cosine_with_norms("a", "b", l2_norm("a"), l2_norm("b")).alias("pre"),
-        l2_sq("a", "b").alias("l2"),
     ).collect()[0]
     # identical fold: left-to-right double accumulation over float32 values
     import struct
@@ -333,10 +343,12 @@ def test_dot_and_cosine_match_python(spark, ab):
     for x, y in zip(a, b):
         dot += f32(x) * f32(y)
     assert row["dot"] == dot
-    # the squared-L2 fold: Spark, DuckDB and the driver-side Python
-    # mirror the residual-IVFPQ probes use are the same double
+    # the squared-L2 fold: the numpy kernel the Spark side runs, DuckDB
+    # and a Python left fold are the same double
     l2 = py_l2_sq([f32(x) for x in a], [f32(y) for y in b])
-    assert row["l2"] == l2
+    assert pairscore.l2_sq(
+        np.array([f32(x) for x in a]), np.array([f32(y) for y in b])
+    ) == l2
     ddb_l2 = duckdb.execute(
         f"SELECT {sql_l2_sq('a', 'b')} FROM "
         "(SELECT CAST(? AS FLOAT[]) AS a, CAST(? AS FLOAT[]) AS b)",
@@ -359,12 +371,13 @@ def test_dot_and_cosine_match_python(spark, ab):
 
 
 @pytest.mark.parametrize(
-    "fold,sql_fold", [(l2_sq, sql_l2_sq), (neg_cosine, sql_neg_cosine)]
+    "fold,sql_fold", [("l2_sq", sql_l2_sq), ("neg_cosine", sql_neg_cosine)]
 )
 def test_centroid_ties_go_to_the_lower_id(spark, fold, sql_fold):
     """Seeds 0 and 1 are the same vector: every row nearer to it than to
-    seed 2 assigns to centroid 0 and probes 0 before 1, with the same
-    distances, in both engines."""
+    seed 2 assigns to centroid 0 (the Spark assign scan) and probes 0
+    before 1 (the driver-side search), with the same distances, in both
+    engines."""
     rows = [
         (0, [1.0, 0.0]),
         (1, [1.0, 0.0]),
@@ -374,16 +387,17 @@ def test_centroid_ties_go_to_the_lower_id(spark, fold, sql_fold):
     ]
     emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
     cents = Centroids.first(emb, 3, fold)
-    got = sorted(
-        (r["vec_id"], r["best"], [tuple(p) for p in r["probes"]])
-        for r in cents.bind(emb)
-        .select(
-            "vec_id",
-            cents.nearest(F.col("embedding"))["centroid_id"].alias("best"),
-            cents.probes(F.col("embedding"), 3).alias("probes"),
-        )
-        .collect()
+    assigned = sorted(
+        (r["vec_id"], r["centroid_id"], r["d2"])
+        for r in cents.assign(emb).collect()
     )
+    ids, d = cents.search(
+        np.array([[float(np.float32(x)) for x in v] for _, v in rows]), 3
+    )
+    got = [
+        (i, best, list(zip(dd.tolist(), ii.tolist())))
+        for (i, best, _), ii, dd in zip(assigned, ids, d)
+    ]
     con = duckdb.connect()
     con.execute(
         "CREATE TABLE embeddings AS SELECT v.* FROM (VALUES "
@@ -393,12 +407,13 @@ def test_centroid_ties_go_to_the_lower_id(spark, fold, sql_fold):
     want = con.execute(
         f"""WITH {sql_centroid_ctes(3, "TRUE", 3, sql_fold)}
         SELECT a.vec_id, a.list_id,
-               list({{'d': p.d, 'id': p.list_id}} ORDER BY p.p)
+               list({{'d': p.d, 'id': p.list_id}} ORDER BY p.p), a.d
         FROM assigned a JOIN probes p ON p.q_id = a.vec_id
-        GROUP BY a.vec_id, a.list_id ORDER BY a.vec_id"""
+        GROUP BY a.vec_id, a.list_id, a.d ORDER BY a.vec_id"""
     ).fetchall()
     assert got == [(i, best, [tuple(p.values()) for p in ps])
-                   for i, best, ps in want]
+                   for i, best, ps, _ in want]
+    assert [d2 for _, _, d2 in assigned] == [dd for *_, dd in want]
     assert [(i, best) for i, best, _ in got] == [
         (0, 0), (1, 0), (2, 2), (3, 0), (4, 2)
     ]
@@ -426,11 +441,16 @@ _pq_corpus = st.lists(
                [0.5] * _PQ_DIMS, [-1.0] * _PQ_DIMS])
 @_SLOW
 def test_pq_forms_agree_and_ties_go_to_the_lower_code(spark, resid, vecs):
-    """The Spark encode and errors, the Python ADC tables and the DuckDB
-    CTEs agree with a Python model on codes (ties to the lower j),
-    errors, tables and ADC sums, and the two refine forms return the
-    same rows. ``resid`` quantizes engine-computed residuals against
-    vector 0 in list 0, as the residual IVFPQ entry does."""
+    """The numpy encode, errors and ADC tables, the Spark panel scan
+    (``_pq_search``) and the DuckDB CTEs agree with a Python model on
+    codes (ties to the lower j), errors, tables, ADC sums and the
+    refined top-k. ``resid`` quantizes residuals against vector 0 as the
+    one list's centroid, as the residual IVFPQ entry does."""
+    from blog_snapshotbackup_azuredatalake_spark.operators.similarity import (
+        TOP_K,
+        _pq_search,
+    )
+
     n = len(vecs)
     emb = spark.createDataFrame(
         list(enumerate(vecs)), "vec_id bigint, embedding array<float>"
@@ -441,17 +461,10 @@ def test_pq_forms_agree_and_ties_go_to_the_lower_code(spark, resid, vecs):
         + ", ".join(f"({i}, {v}::FLOAT[])" for i, v in enumerate(vecs))
         + ") v(vec_id, embedding)"
     )
+    x = np.array(vecs, dtype=np.float32).astype(np.float64)
+    cents = None
     if resid:
         c = vecs[0]
-        frame = emb.select(
-            "vec_id",
-            F.lit(0).cast("bigint").alias("list_id"),
-            F.zip_with(
-                "embedding",
-                F.array(*[F.lit(x) for x in c]),
-                lambda x, y: x.cast("double") - y,
-            ).alias("r"),
-        )
         for name, key in (("resid", "vec_id"), ("qres", "q_id")):
             con.execute(
                 f"CREATE TABLE {name} AS SELECT vec_id AS {key}, "
@@ -460,39 +473,34 @@ def test_pq_forms_agree_and_ties_go_to_the_lower_code(spark, resid, vecs):
                 f" - CAST(({c}::FLOAT[])[i] AS DOUBLE)) AS r FROM embeddings"
             )
         ctes = sql_pq_ctes("resid", "r", ("qres", "r"), by_list=True)
-        qvecs = [[a - b for a, b in zip(v, c)] for v in vecs]
+        cents = Centroids.first(emb, 1)
+        coded = x - x[0]
     else:
-        frame = emb.withColumnRenamed("embedding", "r")
         con.execute(
             "CREATE TABLE queries AS "
             "SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings"
         )
         ctes = sql_pq_ctes(queries=("queries", "q_emb"))
-        qvecs = vecs
-    pq = ProductQuantizer(frame, "r")
-    got = frame.select(
-        "vec_id",
-        F.expr(pq.encode_sql()).alias("codes"),
-        F.expr(pq.error_sql()).alias("errs"),
-        "r",
-    ).collect()
-    got = sorted(got, key=lambda r: r["vec_id"])
+        coded = x
+    pq = ProductQuantizer(coded[:PQ_K])
+    assert (seeds(emb) == x[:PQ_K]).all()
+    got_codes, got_errs = pq.encode(coded)
 
-    # the model: nearest codeword by (d2, j), over the engine's vectors
-    cb = [list(r["r"]) for r in got[:PQ_K]]
+    # the model: nearest codeword by (d2, j), over the engine's doubles
+    cb = [list(r) for r in coded[:PQ_K]]
     codes, errs = [], []
-    for r in got:
+    for r in coded.tolist():
         best = [
             min(
-                (py_l2_sq(subvector(r["r"], s), subvector(w, s)), j)
+                (py_l2_sq(subvector(r, s), subvector(w, s)), j)
                 for j, w in enumerate(cb)
             )
             for s in range(PQ_M)
         ]
         codes.append([j for _, j in best])
         errs.append([math.floor(d * PQERR_FP) for d, _ in best])
-    assert [list(r["codes"]) for r in got] == codes
-    assert [list(r["errs"]) for r in got] == errs
+    assert got_codes.tolist() == codes
+    assert got_errs.tolist() == errs
     assert con.execute(
         f"""WITH {ctes}
         SELECT list(code ORDER BY s),
@@ -500,7 +508,7 @@ def test_pq_forms_agree_and_ties_go_to_the_lower_code(spark, resid, vecs):
         FROM encoded GROUP BY vec_id ORDER BY vec_id"""
     ).fetchall() == list(zip(codes, errs))
 
-    tables = [pq.table(q) for q in qvecs]
+    tables = pq.tables(coded).reshape(n, -1).tolist()
     assert con.execute(
         f"""WITH {ctes}
         SELECT list(dfp ORDER BY s, j) FROM qtab
@@ -508,38 +516,22 @@ def test_pq_forms_agree_and_ties_go_to_the_lower_code(spark, resid, vecs):
     ).fetchall() == [(t,) for t in tables]
 
     # with n ≤ PQ_SHORTLIST every pair survives the shortlist, so the
-    # refine's top-n holds every pair's ADC sum and exact distance
+    # refine's top-TOP_K holds each pair's ADC sum and exact distance
     want = []
     for q in range(n):
         pairs = sorted(
             (py_l2_sq(vecs[q], vecs[v]), v) for v in range(n) if v != q
         )
-        for rnk, (d2, v) in enumerate(pairs, start=1):
+        for rnk, (d2, v) in enumerate(pairs[:TOP_K], start=1):
             adc = sum(
                 tables[q][s * len(cb) + codes[v][s]] for s in range(PQ_M)
             )
             want.append((q, v, adc, d2, rnk))
     want.sort()
-    tabs = [(q, 0, t) for q, t in enumerate(tables)]
-    if resid:
-        qdf = spark.createDataFrame(
-            tabs, "q_id bigint, list_id bigint, t array<bigint>"
-        )
-        coded = pq.coded_index(frame, "vec_id", "list_id")
-        scan = coded.join(F.broadcast(qdf), "list_id")
-    else:
-        qdf = spark.createDataFrame(
-            [(q, t) for q, _, t in tabs], "q_id bigint, t array<bigint>"
-        )
-        coded = pq.coded_index(frame, "vec_id")
-        scan = coded.crossJoin(F.broadcast(qdf))
-    queries = emb.select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    out = refine(pq.adc_shortlist(scan), emb, queries, n)
+    out = _pq_search(spark, emb, cents, resid)
     assert sorted(map(tuple, out.collect())) == want
     assert sorted(
-        con.execute(f"WITH {ctes}, {sql_adc_refine(n, resid)}").fetchall()
+        con.execute(f"WITH {ctes}, {sql_adc_refine(TOP_K, resid)}").fetchall()
     ) == want
 
 

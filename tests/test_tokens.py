@@ -243,3 +243,27 @@ def test_empty_batch():
     model = tokens.BigramModel(_summed([batch]))
     assert model.v == 0
     assert model.scores(batch, ["doc_id", "lang"]).num_rows == 0
+
+
+@pytest.mark.parametrize("texts", [EDGE_TEXTS, None], ids=["edges", "corpus"])
+def test_span_grams_are_the_oracles_positional_grams(texts):
+    """``span_grams`` at SPAN_K tokens against ``dedup_substring``'s
+    DuckDB form: every window in token order, repeats kept, documents of
+    fewer than SPAN_K tokens (and NULL text) with none."""
+    docs = _docs(texts) if texts else _corpus()
+    con = _con(docs)
+    want = con.execute(
+        f"""WITH th_t AS (SELECT doc_id, {dedup.SQL_TOKH} AS th FROM documents)
+        SELECT doc_id, {dedup._span_gram_sql()} AS g FROM th_t ORDER BY doc_id"""
+    ).fetchall()
+    got = {i: [] for i in range(docs.num_rows)}
+    for b in _batches(docs):
+        g, doc = tokens.span_grams(b.column("text"), dedup.SPAN_K)
+        ids = b.column("doc_id").to_pylist()
+        for v, d in zip(g.tolist(), doc.tolist()):
+            got[ids[d]].append(v)
+    assert [(i, got[i]) for i in range(docs.num_rows)] == [
+        (i, g or []) for i, g in want
+    ]
+    if texts:  # "a b c d e" three times over: its windows repeat, kept
+        assert any(len(g) > len(set(g)) for g in got.values())
