@@ -12,7 +12,8 @@ Three pipeline staples beyond dedup/similarity/text-analysis:
 - ``emb_centroid_assign`` — nearest-centroid assignment of every
   embedding against a fixed centroid set (one Lloyd/k-means assignment
   step, the building block of clustering-based data curation). The
-  centroid set broadcasts; the corpus side never shuffles.
+  centroid set rides in the assign scan's closure; the corpus side never
+  shuffles.
 
 All three are single-pass, shuffle only for their final group-by stats,
 and mirror bit-for-bit in the DuckDB oracle.
@@ -161,8 +162,9 @@ FROM exploded
 def emb_centroid_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nearest-centroid assignment: centroids are the embeddings of
     vec_id < N_CENTROIDS (a deterministic seed set — in a real pipeline,
-    the previous Lloyd iteration's output). Centroids broadcast; the
-    corpus scans once with no shuffle until the final stats group-by."""
+    the previous Lloyd iteration's output). The centroids ride in the
+    scan's closure; the corpus scans once with no shuffle until the final
+    stats group-by."""
     emb = load_table(spark, sf_dir, "embeddings")
     # MAP-ONLY argmax (functions/centroids.py): one Arrow batch scan
     # picks each row's best centroid as the argmin of (-cos,

@@ -975,12 +975,11 @@ def _pq_search(
     )
     codebook = seeds(emb)
     if residual:
-        lists = cents.search(codebook)[0][:, 0]
-        codebook = codebook - cents.vecs[np.searchsorted(cents.ids, lists)]
-    pq = ProductQuantizer(codebook)
-    if residual:
+        at = np.searchsorted(cents.ids, cents.search(codebook)[0][:, 0])
+        pq = ProductQuantizer(codebook - cents.vecs[at])
         tables = np.stack([pq.tables(q_vecs - c) for c in cents.vecs])
     else:
+        pq = ProductQuantizer(codebook)
         tables = pq.tables(q_vecs)[None]
     if cents is not None:
         probes = cents.search(q_vecs, IVF_NPROBE)[0]
